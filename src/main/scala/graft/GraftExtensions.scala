@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{AsOfJoinStrategy, BandJoinRule, FloatVecDot, HashEmbed, LongVecDot, LongVecSqDist, MinHashSig, SelfIntersectRule, ShingleHash60P, SimHash32, SortedLongIntersectCount}
+import graft.plans.{AsOfJoinStrategy, BandJoinRule, FloatVecDot, HashEmbed, LongVecDot, LongVecNearest, LongVecNearestCell, LongVecSqDist, MinHashSig, SelfIntersectRule, ShingleHash60P, SimHash32, SortedLongIntersectCount}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -49,6 +49,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_dot_l"),
       new ExpressionInfo(classOf[LongVecDot].getName, null, "graft_dot_l"),
       (children: Seq[Expression]) => LongVecDot(children.head, children(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_nearest_l"),
+      new ExpressionInfo(classOf[LongVecNearest].getName, null, "graft_nearest_l"),
+      (children: Seq[Expression]) => LongVecNearest(children.head, children(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_nearest_cell_l"),
+      new ExpressionInfo(classOf[LongVecNearestCell].getName, null,
+        "graft_nearest_cell_l"),
+      (children: Seq[Expression]) =>
+        LongVecNearestCell(children.head, children(1), children(2))))
     ext.injectFunction((
       new FunctionIdentifier("graft_minhash_sig"),
       new ExpressionInfo(classOf[MinHashSig].getName, null, "graft_minhash_sig"),

@@ -49,6 +49,8 @@ object Preflight {
           "graft_intersect_count(array(1L,2L), array(2L,3L))" -> "1",
           "graft_dot_l(array(2L,3L), array(4L,5L))" -> "23",
           "graft_sqdist_l(array(1L), array(4L))" -> "9",
+          "graft_nearest_l(array(1L), array(array(4L), array(2L)))" -> "1",
+          "graft_nearest_cell_l(array(1L), array(array(4L)), array(1L))" -> "0",
           "graft_simhash32('a b')" -> null,
           "size(graft_shingle_hashes('a b c'))" -> "2",
           "size(graft_minhash_sig(array(1L,2L), 4))" -> "4",

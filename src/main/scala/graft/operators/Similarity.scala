@@ -3568,6 +3568,31 @@ object Similarity {
     FROM s5 ORDER BY query_id, rank"""
   }
 
+  /** Run `builds` on a pool of `threads`, results in input order. Waits
+    * in COMPLETION order, so the first failure surfaces as soon as it
+    * happens; it then cancels every outstanding build (interrupting the
+    * running ones, dropping the queued ones) and stops the pool before
+    * rethrowing the build's own exception — no orphaned build keeps
+    * submitting Spark jobs after the caller has seen the error (r15
+    * ADVICE). */
+  private[graft] def runPooled[T](threads: Int, builds: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val done = new java.util.concurrent.ExecutorCompletionService[T](pool)
+    val futures = builds.map(b =>
+      done.submit(new java.util.concurrent.Callable[T] { def call(): T = b() }))
+    try {
+      builds.foreach { _ =>
+        try done.take().get()
+        catch {
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+        }
+      }
+      futures.map(_.get())
+    } catch {
+      case t: Throwable => futures.foreach(_.cancel(true)); throw t
+    } finally pool.shutdownNow()
+  }
+
   def annRecall(s: SparkSession, dir: String): DataFrame = {
     // The rung inventory, in the output's method order. Notable pairs the
     // table is built to expose: vec_pq ↔ vec_opq (what the B22
@@ -3593,43 +3618,21 @@ object Similarity {
     // r15 (§2.6 "overlap independent jobs"): the 15 memoRung builds (truth
     // + 14 rungs) are independent eager-checkpoint jobs that previously
     // ran strictly serially, leaving most cores idle in each job's tail.
-    // They now run through a bounded thread pool — Spark's scheduler
-    // happily interleaves jobs submitted from several driver threads, and
-    // SessionMemo is single-flight (see its scaladoc), so rungs that
-    // share an artifact (vec_pq/ann_pq_rerank's plain-PQ codes,
+    // They now run through a bounded thread pool ([[runPooled]]) — Spark's
+    // scheduler happily interleaves jobs submitted from several driver
+    // threads, and SessionMemo is single-flight (see its scaladoc), so
+    // rungs that share an artifact (vec_pq/ann_pq_rerank's plain-PQ codes,
     // vec_pq_lloyd/ann_ivfpq_lloyd's trained codebook, the IVF cell maps)
-    // wait for one build instead of duplicating it. Build errors are
-    // unwrapped so callers see the builder's own exception. The pool is
-    // bounded by `graft.recall.buildThreads` (default 4 — enough to fill
-    // job tails, not enough to thrash the scheduler); 1 = the old serial
-    // behavior.
+    // wait for one build instead of duplicating it. The pool is bounded by
+    // `graft.recall.buildThreads` (default 4 — enough to fill job tails,
+    // not enough to thrash the scheduler); 1 = the old serial behavior.
     val threads = math.max(1, s.conf.getOption("graft.recall.buildThreads")
       .map(_.toInt).getOrElse(4))
-    def unwrap[T](f: java.util.concurrent.Future[T]): T =
-      try f.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-    val (truth, rungs) =
-      if (threads == 1) {
-        (memoRung(s, dir, "truth")(
-          annBrute(s, dir).select("query_id", "rank", "neighbor_id")),
-          rungDefs.map { case (m, k, b) => (m, k, memoRung(s, dir, m)(b())) })
-      } else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-        try {
-          val fTruth = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame = memoRung(s, dir, "truth")(
-              annBrute(s, dir).select("query_id", "rank", "neighbor_id"))
-          })
-          val fRungs = rungDefs.map { case (m, k, b) =>
-            (m, k, pool.submit(new java.util.concurrent.Callable[DataFrame] {
-              override def call(): DataFrame = memoRung(s, dir, m)(b())
-            }))
-          }
-          (unwrap(fTruth), fRungs.map { case (m, k, f) => (m, k, unwrap(f)) })
-        } finally pool.shutdown()
-      }
+    val built = runPooled(threads, (() => memoRung(s, dir, "truth")(
+      annBrute(s, dir).select("query_id", "rank", "neighbor_id"))) +:
+      rungDefs.map { case (m, _, b) => () => memoRung(s, dir, m)(b()) })
+    val truth = built.head
+    val rungs = rungDefs.zip(built.tail).map { case ((m, k, _), df) => (m, k, df) }
     // r15 grading composition: ONE join + ONE aggregation for all 14
     // rungs. The old shape ran a left-semi join, a per-query aggregation
     // and a queriesSet attach PER RUNG — 14 aggregation exchanges and 14

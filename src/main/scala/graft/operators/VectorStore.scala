@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{Hashing, Text}
+import graft.sources.ParquetFooters
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -139,10 +140,31 @@ object VectorStore {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(p)))
-      Some(spark.read.parquet(p).orderBy("p")
-        .collect().map(_.getInt(1)).toSeq)
+      Some(ParquetFooters.rows(spark, p)
+        .map(g => (g.getInteger("p", 0), g.getInteger("src", 0)))
+        .sortBy(_._1).map(_._2))
     else None
   }
+
+  /** The frozen K-row cell summary (cell, Σ raw, members), read on the
+    * driver — every cell-probed read and every append uses this one
+    * reader; no Spark job. */
+  private[graft] def readCells(spark: SparkSession, indexDir: String)
+      : Array[(Int, Array[Long], Long)] =
+    ParquetFooters.rows(spark, s"$indexDir/$CellsDir/centroids.parquet")
+      .map(g => (g.getInteger("cell", 0), ParquetFooters.longs(g, "csum"),
+        g.getLong("n", 0))).toArray
+
+  /** A frozen (j, m, cent) codebook sidecar, read on the driver. */
+  private def readCodebook(spark: SparkSession, path: String)
+      : Seq[(Int, Int, Array[Long])] =
+    ParquetFooters.rows(spark, path).map(g => (g.getInteger("j", 0),
+      g.getInteger("m", 0), ParquetFooters.longs(g, "cent")))
+
+  /** A codebook trained at creation, as the same driver rows. */
+  private def codebookRows(cb: DataFrame): Seq[(Int, Int, Array[Long])] =
+    cb.select("j", "m", "cent").collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
 
   /** Gather `v` along the frozen permutation — literal indices, codegen. */
   private def permuteRaw(v: Column, perm: Seq[Int]): Column =
@@ -231,8 +253,12 @@ object VectorStore {
       val spark = embedded.sparkSession
       val cbPath = s"$indexDir/$PqDir/codebook.parquet"
       val permPath = s"$indexDir/$PqDir/$PermFile"
+      val cellPath = s"$indexDir/$CellsDir/centroids.parquet"
+      val resCbPath = s"$indexDir/$PqDir/$ResCbFile"
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
+      def frozen(p: String): Boolean =
+        mode == "append" && fs.exists(new org.apache.hadoop.fs.Path(p))
       // the OPQ permutation freezes FIRST: the codebook's subspaces are
       // defined over the permuted layout, so perm reuse gates like the
       // codebook's (append → frozen; creation → trained on this batch).
@@ -242,19 +268,18 @@ object VectorStore {
       // would encode the batch against subspaces the frozen codebook
       // never saw and then permute every future query, corrupting ADC
       // distances for all previously-ingested rows.
-      val reuse = mode == "append" &&
-        fs.exists(new org.apache.hadoop.fs.Path(cbPath))
-      val reusePerm = mode == "append" &&
-        fs.exists(new org.apache.hadoop.fs.Path(permPath))
+      val reuse = frozen(cbPath)
+      val reusePerm = frozen(permPath)
       val legacyIdentity = reuse && !reusePerm
       val perm: Seq[Int] =
         if (reusePerm) readPerm(spark, indexDir).get
         else if (legacyIdentity) 0 until Dim
         else trainPerm(embedded)
-      val codebook = if (reuse) {
-        // materialize NOW: the lazy plan must not race a sidecar rewrite
-        spark.read.parquet(cbPath).localCheckpoint(true)
-      } else {
+      // Every frozen artifact is read ONCE on the driver (parquet-hadoop,
+      // no Spark job) and every trained one collected once: the encode
+      // below is row-local codegen over these literals, and driver arrays
+      // cannot race the sidecar rewrites at the end of this method.
+      val trainedCb = if (reuse) None else {
         // seed = first PqK chunks' subvectors (the k-means|| seeding
         // step), then ONE exact Lloyd round over the creation batch
         // (r11) — trained centroids instead of raw samples close most
@@ -265,9 +290,10 @@ object VectorStore {
           .withColumn("j", row_number().over(wj) - 1)
           .select(col("j"), posexplode(subvecs(permuteRaw(col("raw"), perm))))
           .select(col("j"), col("pos").as("m"), col("col").as("cent"))
-        lloydRefine(subRows(embedded, permuteRaw(col("raw"), perm)), seeds)
-          .localCheckpoint(true)
+        Some(lloydRefine(subRows(embedded, permuteRaw(col("raw"), perm)), seeds)
+          .localCheckpoint(true))
       }
+      val codebook = trainedCb.fold(readCodebook(spark, cbPath))(codebookRows)
       // Cell centroids: same freezing discipline as the codebook — one
       // Lloyd round over the creation batch (seed = first `cells` chunks
       // — a creation-time knob (r11): cell count should scale with the
@@ -276,12 +302,8 @@ object VectorStore {
       // assignment by exact int64 sqdist, centroid = exact sum + count),
       // appends assign against the frozen summary so cell ids stay
       // comparable across batches.
-      val cellPath = s"$indexDir/$CellsDir/centroids.parquet"
-      val reuseCells = mode == "append" &&
-        fs.exists(new org.apache.hadoop.fs.Path(cellPath))
-      val centroids = if (reuseCells) {
-        spark.read.parquet(cellPath).localCheckpoint(true)
-      } else {
+      val reuseCells = frozen(cellPath)
+      val trainedCells = if (reuseCells) None else {
         val wj = Window.orderBy("doc_id", "chunk_ix")
         val seeds = embedded.select("doc_id", "chunk_ix", "raw")
           .orderBy("doc_id", "chunk_ix").limit(cells)
@@ -289,7 +311,7 @@ object VectorStore {
           .select(col("cell"), col("raw").as("sq"))
         val wMin = Window.partitionBy("doc_id", "chunk_ix")
           .orderBy(col("d2"), col("cell"))
-        embedded.select(col("doc_id"), col("chunk_ix"), col("raw"))
+        Some(embedded.select(col("doc_id"), col("chunk_ix"), col("raw"))
           .join(broadcast(seeds))
           .withColumn("d2", call_function("graft_sqdist_l", col("raw"), col("sq")))
           .withColumn("rk", row_number().over(wMin))
@@ -300,25 +322,18 @@ object VectorStore {
           .agg(transform(array_sort(collect_list(struct(col("pos"), col("cs")))),
             e => e.getField("cs")).as("csum"),
             (max("cnt")).as("n"))
-          .localCheckpoint(true)
+          .localCheckpoint(true))
       }
+      val centroids = trainedCells.fold(readCells(spark, indexDir))(
+        _.collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2))))
       // residual-PQ codes (r10): each chunk's rres against its FROZEN
       // cell centroid (scaled means computed driver-side from the K-row
       // summary), coded against one GLOBAL residual codebook — frozen at
       // creation like the raw-layout codebook, reused by appends
-      import spark.implicits._
-      val cmeans = centroids.collect()
-        .map(r => (r.getInt(0),
-          cmeanScaled(r.getSeq[Long](1), r.getLong(2))))
-        .toSeq.toDF("cell", "cmean")
-      val celled = embedded
-        .join(cellAssign(centroids, embedded), Seq("doc_id", "chunk_ix"))
-      val withRes = celled.join(broadcast(cmeans), "cell")
-        .withColumn("rres", scaledResidual(col("raw"), col("cmean")))
-        .drop("cmean")
-      val resCbPath = s"$indexDir/$PqDir/$ResCbFile"
-      val reuseRes = mode == "append" &&
-        fs.exists(new org.apache.hadoop.fs.Path(resCbPath))
+      val celled = embedded.withColumn("cell", cellOf(col("raw"), centroids))
+      val rres = scaledResidual(col("raw"), element_at(typedLit(centroids
+        .map { case (c, csum, m) => c -> cmeanScaled(csum.toSeq, m) }.toMap),
+        col("cell")))
       // A store whose codebook predates the residual sidecar (pre-r10)
       // carries no `rcodes` column: training a fresh residual codebook
       // from an APPEND batch and coding only the new rows would leave a
@@ -328,26 +343,25 @@ object VectorStore {
       // store keeps appending WITHOUT residual codes and writes no
       // rescb sidecar — [[searchCompressedCellsBatch]] refuses loudly
       // until a full re-ingest upgrades the store.
+      val reuseRes = frozen(resCbPath)
       val legacyRes = reuse && !reuseRes
-      val rescbOpt: Option[DataFrame] =
+      val trainedRes = if (legacyRes || reuseRes) None else {
+        // same seeding + one exact Lloyd round as the raw codebook
+        // (r11): the residual codebook trains on the creation batch's
+        // scaled residuals instead of carrying its first-K samples
+        val withRes = celled.withColumn("rres", rres)
+        val wj = Window.orderBy("doc_id", "chunk_ix")
+        val seeds = withRes.select("doc_id", "chunk_ix", "rres")
+          .orderBy("doc_id", "chunk_ix").limit(PqK)
+          .withColumn("j", row_number().over(wj) - 1)
+          .select(col("j"), posexplode(subvecs(col("rres"))))
+          .select(col("j"), col("pos").as("m"), col("col").as("cent"))
+        Some(lloydRefine(subRows(withRes, col("rres")), seeds)
+          .localCheckpoint(true))
+      }
+      val rescb =
         if (legacyRes) None
-        else if (reuseRes)
-          Some(spark.read.parquet(resCbPath).localCheckpoint(true))
-        else {
-          // same seeding + one exact Lloyd round as the raw codebook
-          // (r11): the residual codebook trains on the creation batch's
-          // scaled residuals instead of carrying its first-K samples
-          val wj = Window.orderBy("doc_id", "chunk_ix")
-          val seeds = withRes.select("doc_id", "chunk_ix", "rres")
-            .orderBy("doc_id", "chunk_ix").limit(PqK)
-            .withColumn("j", row_number().over(wj) - 1)
-            .select(col("j"), posexplode(subvecs(col("rres"))))
-            .select(col("j"), col("pos").as("m"), col("col").as("cent"))
-          Some(lloydRefine(subRows(withRes, col("rres")), seeds)
-            .localCheckpoint(true))
-        }
-      val coded = withRes.drop("rres")
-        .join(pqEncode(codebook, embedded, perm), Seq("doc_id", "chunk_ix"))
+        else Some(trainedRes.fold(readCodebook(spark, resCbPath))(codebookRows))
       // SQ8 codes (G44, r12): per-chunk symmetric int8 quantization of
       // the exact raw weights — the serving rung between the raw-vector
       // cell scan and the PQ/residual ADC. The per-chunk scale
@@ -356,20 +370,17 @@ object VectorStore {
       // and edits are consistent by construction. A store written
       // before this column existed stays scodes-free on append (the
       // perm/rescb legacy rule) and the sq8 read refuses it loudly.
+      // The field names come from one data file's footer (no job).
       val legacyFields: Set[String] =
-        if (reuse) spark.read.parquet(indexDir).schema.fieldNames.toSet
+        if (reuse) ParquetFooters.fieldNames(spark, indexDir).getOrElse(
+          throw new IllegalStateException(
+            s"store $indexDir has frozen sidecars but no index data files"))
         else Set.empty
       val sqLegacy = reuse && !legacyFields.contains("scodes")
-      val indexed0 = rescbOpt
-        .fold(coded)(cb =>
-          coded.join(resEncode(cb, withRes), Seq("doc_id", "chunk_ix")))
-        .withColumn("batch_tag", batchTagCol)
       // JL-projected codes (G47, r13): same legacy rule — a store written
       // before the pcodes column stays pcodes-free on append and the rp
       // read refuses it loudly
       val rpLegacy = reuse && !legacyFields.contains("pcodes")
-      val indexed1 = if (sqLegacy) indexed0 else sq8Cols(indexed0)
-      val indexed2 = if (rpLegacy) indexed1 else rpCols(indexed1)
       // meta legacy rules: a meta-carrying store REFUSES a meta-less
       // append (filtered reads would silently drop the new rows — worse
       // than failing loudly); a pre-meta store drops the batch's meta
@@ -380,30 +391,36 @@ object VectorStore {
         s"store $indexDir carries a `meta` column: append batches must " +
           "carry `meta` too, or filtered reads would silently drop them")
       val metaLegacy = reuse && hasMeta && !legacyFields.contains("meta")
-      val indexed = if (metaLegacy) indexed2.drop("meta") else indexed2
-      indexed.drop("orig_tag")
-        .write.mode(mode).partitionBy("bucket", "cell").parquet(indexDir)
-      // time-axis zone maps: incremental upkeep scans this batch's files
-      // only (an overwrite-mode write wiped the old sidecar with the rest
-      // of the dir, so it degenerates to a fresh full build there)
+      // one row-local projection, written column order = the store format
+      // (an input `orig_tag` feeds batchTagCol and is not written)
+      val indexed0 = celled.select((Seq(col("doc_id"), col("chunk_ix")) ++
+        (if (hasMeta && !metaLegacy) Seq(col("meta")) else Nil) ++
+        Seq(col("chunk"), col("raw"), col("bucket"), col("embedding"),
+          col("cell"), pqCodes(permuteRaw(col("raw"), perm), codebook).as("codes")) ++
+        rescb.map(cb => pqCodes(rres, cb).as("rcodes")) ++
+        Seq(batchTagCol.as("batch_tag"))): _*)
+      val indexed1 = if (sqLegacy) indexed0 else sq8Cols(indexed0)
+      val indexed = if (rpLegacy) indexed1 else rpCols(indexed1)
+      indexed.write.mode(mode).partitionBy("bucket", "cell").parquet(indexDir)
+      // time-axis zone maps: incremental upkeep reads this batch's files'
+      // footers only (an overwrite-mode write wiped the old sidecar with
+      // the rest of the dir, so it degenerates to a fresh full build there)
       graft.sources.ZoneMaps.appendSidecar(spark, indexDir, "batch_tag")
       // lexical/BM25 sidecar (G49): postings + doclog for the hybrid
       // read — fresh at creation, generation-append on append; a legacy
       // store without the sidecar stays lex-free (rule in VectorStoreLex)
       VectorStoreLex.appendFor(indexDir,
         embedded.select("doc_id", "chunk_ix", "chunk"), create = !reuse)
-      if (!reuse)
-        codebook.coalesce(1).write.mode("overwrite").parquet(cbPath)
+      trainedCb.foreach(_.coalesce(1).write.mode("overwrite").parquet(cbPath))
       if (!reusePerm && !legacyIdentity) {
         import spark.implicits._
         perm.zipWithIndex.map { case (src, p) => (p, src) }.toDF("p", "src")
           .coalesce(1).write.mode("overwrite").parquet(permPath)
       }
-      if (!reuseCells)
-        centroids.coalesce(1).write.mode("overwrite").parquet(cellPath)
-      if (!reuseRes)
-        rescbOpt.foreach(
-          _.coalesce(1).write.mode("overwrite").parquet(resCbPath))
+      trainedCells.foreach(
+        _.coalesce(1).write.mode("overwrite").parquet(cellPath))
+      trainedRes.foreach(
+        _.coalesce(1).write.mode("overwrite").parquet(resCbPath))
     }
     embedded.unpersist()
     n
@@ -464,7 +481,7 @@ object VectorStore {
     df.withColumn("pcodes", rpProject(col("raw")))
 
   /** Coarse cell probe (r11, metric-ALIGNED with assignment): rank cells
-    * by the same rule [[cellAssign]] assigns with — exact int64
+    * by the same rule [[cellOf]] assigns with — exact int64
     * numerator ‖S‖² − 2·(q·S)·n over an IEEE n² — so the probe order IS
     * the assignment order, and a stored chunk's own cell is always its
     * own query's top-1 probe (q = the chunk's raw makes its assigned
@@ -481,70 +498,44 @@ object VectorStore {
       while (i < csum.length) {
         ss += csum(i) * csum(i); dot += qraw(i) * csum(i); i += 1
       }
-      // (n·n as int64, then one cast — bit-identical to cellAssign's
-      // (col("n") * col("n")).cast("double") denominator)
+      // (n·n as int64, then one cast — bit-identical to the
+      // LongVecOps.nearestCell denominator that assigns cells)
       ((ss - 2L * dot * nMem).toDouble / (nMem * nMem).toDouble, cell)
     }.sortBy { case (s, cell) => (s, cell) }.take(nprobe).map(_._2).toSeq
 
-  /** Assign each batch chunk to its nearest frozen cell centroid S/n:
-    * argmin ‖x − S/n‖² restated division-free as
-    * (‖S‖² − 2·x·S·n)/n² — exact int64 numerator and denominator, one
-    * IEEE division per (chunk, cell), ties to the smaller cell id (the
-    * B12 assignment discipline). Broadcast K-row summary × narrow scan. */
-  private def cellAssign(centroids: DataFrame, batch: DataFrame): DataFrame = {
-    val wMin = Window.partitionBy("doc_id", "chunk_ix")
-      .orderBy(col("score"), col("cell"))
-    batch.select(col("doc_id"), col("chunk_ix"), col("raw"))
-      .join(broadcast(centroids))
-      .select(col("doc_id"), col("chunk_ix"), col("cell"),
-        ((call_function("graft_dot_l", col("csum"), col("csum"))
-          - lit(2) * call_function("graft_dot_l", col("raw"), col("csum")) * col("n"))
-          .cast("double") / (col("n") * col("n")).cast("double")).as("score"))
-      .withColumn("rk", row_number().over(wMin))
-      .filter(col("rk") === 1)
-      .select("doc_id", "chunk_ix", "cell")
+  /** Assign a chunk to its nearest frozen cell centroid S/n: argmin
+    * ‖x − S/n‖² restated division-free as (‖S‖² − 2·x·S·n)/n² — exact
+    * int64 numerator and denominator, one IEEE division per cell, ties
+    * to the smaller cell id (the B12 assignment discipline). One
+    * graft_nearest_cell_l loop per row over the literal K-row summary:
+    * no join, window or shuffle, and the plan does not grow with K. */
+  private def cellOf(raw: Column,
+      centroids: Array[(Int, Array[Long], Long)]): Column = {
+    val byId = centroids.sortBy(_._1)
+    element_at(typedLit(byId.map(_._1).toSeq),
+      call_function("graft_nearest_cell_l", raw,
+        typedLit(byId.map(_._2.toSeq).toSeq), typedLit(byId.map(_._3).toSeq))
+        + 1)
   }
 
-  /** PQ-encode a batch against a codebook: (doc_id, chunk_ix, codes) with
-    * `codes(m)` = nearest centroid id in subspace m (exact int64 sqdist,
-    * ties to the smaller id — deterministic). Broadcast codebook join +
-    * per-(chunk, subspace) argmin: the B7 encoding shape. */
-  private def pqEncode(codebook: DataFrame, batch: DataFrame,
-      perm: Seq[Int]): DataFrame = {
-    val wMin = Window.partitionBy("doc_id", "chunk_ix", "m")
-      .orderBy(col("dist"), col("j"))
-    batch.select(col("doc_id"), col("chunk_ix"),
-        posexplode(subvecs(permuteRaw(col("raw"), perm))))
-      .select(col("doc_id"), col("chunk_ix"), col("pos").as("m"), col("col").as("sub"))
-      .join(broadcast(codebook), "m")
-      .withColumn("dist", call_function("graft_sqdist_l", col("sub"), col("cent")))
-      .withColumn("rk", row_number().over(wMin))
-      .filter(col("rk") === 1)
-      .groupBy("doc_id", "chunk_ix")
-      .agg(transform(array_sort(collect_list(struct(col("m"), col("j")))),
-        e => e.getField("j")).as("codes"))
-  }
-
-  /** Residual twin of [[pqEncode]]: identity layout (the OPQ permutation
-    * serves the raw-layout ADC path; residuals are already centered, and
+  /** PQ codes of a vector against a (j, m, cent) codebook: `codes(m)` =
+    * the id of the nearest centroid in subspace m (exact int64 sqdist,
+    * ties to the smaller id — deterministic), one graft_nearest_l loop
+    * per subspace over literal centroids. Serves the raw-layout codes
+    * (vector = the permuted raw weights) and the residual codes (vector
+    * = the scaled residual, identity layout: the OPQ permutation serves
+    * the raw-layout ADC path; residuals are already centered, and
     * keeping the two sidecar families orthogonal keeps append reuse
-    * rules independent), argmin per (chunk, subspace) over the global
-    * residual codebook. */
-  private def resEncode(rescb: DataFrame, withRes: DataFrame): DataFrame = {
-    val wMin = Window.partitionBy("doc_id", "chunk_ix", "m")
-      .orderBy(col("dist"), col("j"))
-    withRes.select(col("doc_id"), col("chunk_ix"),
-        posexplode(subvecs(col("rres"))))
-      .select(col("doc_id"), col("chunk_ix"), col("pos").as("m"),
-        col("col").as("sub"))
-      .join(broadcast(rescb), "m")
-      .withColumn("dist", call_function("graft_sqdist_l", col("sub"), col("cent")))
-      .withColumn("rk", row_number().over(wMin))
-      .filter(col("rk") === 1)
-      .groupBy("doc_id", "chunk_ix")
-      .agg(transform(array_sort(collect_list(struct(col("m"), col("j")))),
-        e => e.getField("j")).as("rcodes"))
-  }
+    * rules independent). */
+  private def pqCodes(vec: Column,
+      codebook: Seq[(Int, Int, Array[Long])]): Column =
+    array((0 until PqM).map { m =>
+      val cents = codebook.filter(_._2 == m).sortBy(_._1)
+      element_at(typedLit(cents.map(_._1)),
+        call_function("graft_nearest_l",
+          slice(vec, m * PqSubDim + 1, PqSubDim),
+          typedLit(cents.map(_._3.toSeq))) + 1)
+    }: _*)
 
   /** Search: top-k chunks for a free-text query, probing the query's LSH
     * bucket and its Hamming-1 neighbors. Bucket pruning happens at the
@@ -938,8 +929,7 @@ object VectorStore {
     * don't. Output schema matches [[search]]. */
   def searchCells(spark: SparkSession, indexDir: String, query: String,
       k: Int = 5, nprobe: Int = 2): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/$CellsDir/centroids.parquet")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    val centroids = readCells(spark, indexDir)
     val qvec = { import spark.implicits._; Seq(query).toDF("qtext") }
     val qraw = qvec.select(rawWeights(col("qtext")).as("qraw"))
       .collect().head.getSeq[Long](0).toArray
@@ -1036,8 +1026,7 @@ object VectorStore {
     * every probe of it scan that fraction of the corpus). */
   private[graft] def probedCells(spark: SparkSession, indexDir: String,
       queries: Seq[String], nprobe: Int): Map[Long, Seq[Int]] = {
-    val centroids = spark.read.parquet(s"$indexDir/$CellsDir/centroids.parquet")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    val centroids = readCells(spark, indexDir)
     import spark.implicits._
     val qraws = queries.toDF("qtext")
       .select(rawWeights(col("qtext")).as("qraw"))
@@ -1056,8 +1045,7 @@ object VectorStore {
       queries: Seq[String], k: Int, nprobe: Int,
       pred: Option[Column]): DataFrame = {
     import spark.implicits._
-    val centroids = spark.read.parquet(s"$indexDir/$CellsDir/centroids.parquet")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    val centroids = readCells(spark, indexDir)
     val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("query_id", "qtext")
       .withColumn("qraw", rawWeights(col("qtext")))
@@ -1110,8 +1098,7 @@ object VectorStore {
       queries: Seq[String], k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 20, lambda: Double = 0.7): DataFrame = {
     import spark.implicits._
-    val centroids = spark.read.parquet(s"$indexDir/$CellsDir/centroids.parquet")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    val centroids = readCells(spark, indexDir)
     val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("query_id", "qtext")
       .withColumn("qraw", rawWeights(col("qtext")))
@@ -1220,8 +1207,7 @@ object VectorStore {
       s"searchCompressedCells needs the residual codebook sidecar at " +
         s"$resCbCheck — this store predates residual coding (no rcodes); " +
         "re-ingest it (mode=overwrite) to serve the compressed-cells path")
-    val centroids = spark.read.parquet(s"$indexDir/$CellsDir/centroids.parquet")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    val centroids = readCells(spark, indexDir)
     val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("query_id", "qtext")
       .withColumn("qraw", rawWeights(col("qtext")))
@@ -1324,8 +1310,7 @@ object VectorStore {
     require(spark.read.parquet(indexDir).schema.fieldNames.contains("scodes"),
       s"searchSq8Cells needs the scodes column — this store predates SQ8 " +
         "coding; re-ingest it (mode=overwrite) to serve the sq8 path")
-    val centroids = spark.read.parquet(s"$indexDir/$CellsDir/centroids.parquet")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    val centroids = readCells(spark, indexDir)
     val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("query_id", "qtext")
       .withColumn("qraw", rawWeights(col("qtext")))
@@ -1397,8 +1382,7 @@ object VectorStore {
     require(spark.read.parquet(indexDir).schema.fieldNames.contains("pcodes"),
       s"searchRpCells needs the pcodes column — this store predates JL " +
         "coding; re-ingest it (mode=overwrite) to serve the projected path")
-    val centroids = spark.read.parquet(s"$indexDir/$CellsDir/centroids.parquet")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    val centroids = readCells(spark, indexDir)
     val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("query_id", "qtext")
       .withColumn("qraw", rawWeights(col("qtext")))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 
+import scala.jdk.CollectionConverters._
+
 /** G49: store-plane HYBRID retrieval — the maintained index's BM25
   * inverted-list sidecar plus the RRF read that fuses it with the dense
   * LSH-bucket leg. The reference IS a Weaviate deployment and Weaviate's
@@ -82,14 +84,20 @@ object VectorStoreLex {
   private def tokenize(q: String): Seq[String] =
     q.split(" ", -1).toSeq.filter(_.nonEmpty)
 
-  private def nextGen(spark: SparkSession, indexDir: String): Long = {
-    spark.catalog.refreshByPath(doclogPath(indexDir))
-    // coalesce: a doclog created over an empty chunk batch has a schema
-    // but zero rows — max(gen) is NULL there, and a bare getLong would
-    // NPE the next append/delete (r13 advice); empty log ⇒ gen 1
-    spark.read.parquet(doclogPath(indexDir))
-      .agg(coalesce(max("gen"), lit(0L))).head().getLong(0) + 1L
-  }
+  /** max(gen) + 1 over the doclog, from its row groups' footer
+    * statistics (no Spark job). A doclog created over an empty chunk
+    * batch has a schema but zero rows — empty log ⇒ gen 1 (r13 advice). */
+  private def nextGen(spark: SparkSession, indexDir: String): Long =
+    graft.sources.ParquetFooters.files(spark, doclogPath(indexDir))
+      .flatMap(f => graft.sources.ParquetFooters.footer(spark, f).getBlocks
+        .asScala.filter(_.getRowCount > 0))
+      .map { g =>
+        val st = g.getColumns.asScala.find(_.getPath.toDotString == "gen")
+          .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue)
+        require(st.isDefined, s"doclog of $indexDir has a row group " +
+          "without `gen` statistics — cannot derive the next generation")
+        st.get.genericGetMax.asInstanceOf[Number].longValue
+      }.foldLeft(0L)(math.max) + 1L
 
   /** Ingest hook: index the batch's chunks into the sidecar. `create`
     * = the store was just (re)written in overwrite mode, so the sidecar
@@ -107,8 +115,10 @@ object VectorStoreLex {
     // files would serve null positions for old docs and phrase reads
     // would silently miss them) — such a store stays position-free and
     // searchPhrase refuses until re-ingest.
-    val hasPos = create || spark.read.parquet(postingsPath(indexDir))
-      .schema.fieldNames.contains("positions")
+    // The flag comes from one postings footer; postings compacted down
+    // to no file carry no legacy evidence, so they take positions.
+    val hasPos = create || graft.sources.ParquetFooters
+      .fieldNames(spark, postingsPath(indexDir)).forall(_.contains("positions"))
     val tok = chunks
       .select(col("doc_id"), col("chunk_ix"), Text.tokens(col("chunk")).as("toks"))
       .select(col("doc_id"), col("chunk_ix"),

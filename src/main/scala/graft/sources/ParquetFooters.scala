@@ -1,0 +1,89 @@
+package graft.sources
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
+
+/** Driver-side parquet access through parquet-hadoop: data-file listing,
+  * footers, and whole reads of small sidecars (the store's frozen K-row
+  * codebooks and cell summaries, the O(files) zone map). Nothing here
+  * starts a Spark job or infers a schema, where a `spark.read … collect()`
+  * of a sidecar costs an inference job plus a collect job each — the
+  * fixed cost that dominated a small store append. */
+object ParquetFooters {
+
+  // the session's own Hadoop conf throughout: the parquet-hadoop
+  // defaults build a fresh Configuration per file, which re-parses the
+  // default XML resources every time
+  private def conf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
+
+  /** Spark's file-index rule: `_`- and `.`-prefixed names are not data
+    * (a `_` name holding `=` is a partition directory). */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** The data files under `dir`, depth-first in name order, lazily —
+    * qualified paths whose `toUri.toString` is the `input_file_name()`
+    * spelling. A missing `dir` has none. */
+  def files(spark: SparkSession, dir: String): Iterator[Path] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf(spark))
+    def walk(p: Path): Iterator[Path] =
+      fs.listStatus(p).sortBy(_.getPath.getName).iterator
+        .filterNot(st => hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) walk(st.getPath)
+          else Iterator(st.getPath))
+    if (fs.exists(root)) walk(root) else Iterator.empty
+  }
+
+  def footer(spark: SparkSession, file: Path): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf(spark)),
+      HadoopReadOptions.builder(conf(spark)).build())
+    try r.getFooter finally r.close()
+  }
+
+  /** Top-level column names of the first data file under `dir` — the
+    * schema of a dataset whose writers keep one schema (a store's legacy
+    * rules guarantee that). None when `dir` holds no data file. */
+  def fieldNames(spark: SparkSession, dir: String): Option[Set[String]] =
+    files(spark, dir).nextOption().map(f =>
+      footer(spark, f).getFileMetaData.getSchema.getFields.asScala
+        .map(_.getName).toSet)
+
+  /** Every row of a small parquet dataset, in file order. Fails loudly
+    * when `dir` does not exist, as `spark.read.parquet` does. */
+  def rows(spark: SparkSession, dir: String): Seq[Group] = {
+    val root = new Path(dir)
+    require(root.getFileSystem(conf(spark)).exists(root),
+      s"parquet dataset $dir does not exist")
+    files(spark, dir).flatMap { f =>
+      val r = new ParquetReader.Builder[Group](
+          HadoopInputFile.fromPath(f, conf(spark)),
+          new HadoopParquetConfiguration(conf(spark))) {
+        override protected def getReadSupport(): ReadSupport[Group] =
+          new GroupReadSupport
+      }.build()
+      try Iterator.continually(r.read()).takeWhile(_ != null).toVector
+      finally r.close()
+    }.toVector
+  }
+
+  /** An array<bigint> column of a row: the LIST group's one repeated
+    * field, each entry's element (the three-level standard layout and
+    * both legacy layouts). */
+  def longs(g: Group, field: String): Array[Long] = {
+    val list = g.getGroup(field, 0)
+    val flat = list.getType.getType(0).isPrimitive
+    Array.tabulate(list.getFieldRepetitionCount(0))(i =>
+      if (flat) list.getLong(0, i) else list.getGroup(0, i).getLong(0, 0))
+  }
+}

@@ -1,7 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** G34: min/max zone-map data skipping — the file-pruning layer a table
   * format keeps in its manifests (Delta/Iceberg per-file column stats),
@@ -65,64 +71,133 @@ object ZoneMaps {
 
   /** Incrementally refresh the sidecar after files were APPENDED to (or
     * removed from — compaction, deletes) an already-mapped table: stats
-    * are computed for the files NOT yet in the sidecar only, so the scan
-    * cost is O(new files' rows), not O(table) — the difference between a
+    * are computed for the files NOT yet in the sidecar only, so the cost
+    * is O(new files), not O(table) — the difference between a
     * streaming/CDC append cadence (F26, F10) being able to keep zone maps
     * fresh and the sidecar rotting after the first append. Sidecar rows
     * for files that disappeared are dropped, so the refreshed sidecar
     * always equals what a full [[writeSidecar]] rebuild would produce on
-    * the current tree (spec-pinned). Returns (files scanned, files
-    * dropped); (0, 0) means the sidecar was already current and nothing
-    * was rewritten. A table never mapped before degenerates to the full
-    * build (every file is new). */
+    * the current tree (spec-pinned). Returns (new files, files dropped);
+    * (0, 0) means the sidecar was already current and nothing was
+    * rewritten. A table never mapped before degenerates to the full
+    * build (every file is new).
+    *
+    * Driver-side except for the one sidecar write: the tree is listed
+    * with the Hadoop FileSystem API, the old sidecar read with
+    * parquet-hadoop, and for a BIGINT/INT column each new file's
+    * n_rows/min/max come from its parquet footer (row-group counts and
+    * statistics) — no Spark job. Other column types, partition columns
+    * and files written without statistics keep the scan. */
   def appendSidecar(spark: SparkSession, path: String, byCol: String): (Int, Int) = {
-    // `inputFiles` and `input_file_name()` render the same file with
-    // different URI spellings (file:/ vs file:///) — compare on paths
+    // the sidecar holds the `input_file_name()` spelling (file:///…) —
+    // compare on URI paths so any spelling of one file matches
     def norm(f: String): String =
       try new java.net.URI(f).getPath catch { case _: Exception => f }
     spark.catalog.refreshByPath(path)
     // a table whose every file was deleted (full compaction, delete-all)
-    // no longer infers a schema — treat it as zero current files and let
-    // the merge drop every stale sidecar row
-    val current =
-      try spark.read.parquet(path).inputFiles.toSeq
-      catch { case _: org.apache.spark.sql.AnalysisException => Seq.empty[String] }
-    val currentNorm = current.map(norm).toSet
+    // lists no files — the merge then drops every stale sidecar row
+    val current = ParquetFooters.files(spark, path)
+      .map(f => f.toUri.toString -> f).toMap
+    val currentNorm = current.keySet.map(norm)
     val zdir = zonemapDir(path)
     // the old sidecar is O(files) rows — small enough to hold on the
     // driver, which also sidesteps overwrite-while-reading on zdir
-    val (oldSchema, old) =
-      try {
-        spark.catalog.refreshByPath(zdir)
-        val df = spark.read.parquet(zdir).select("file", "zmin", "zmax", "n_rows")
-        (Some(df.schema), df.collect())
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          (None, Array.empty[org.apache.spark.sql.Row])
-      }
-    val oldNorm = old.map(r => norm(r.getString(0))).toSet
-    val newFiles = current.filterNot(f => oldNorm.contains(norm(f))).sorted
-    val kept = old.filter(r => currentNorm.contains(norm(r.getString(0))))
-    val dropped = old.length - kept.length
+    val old = readZones(spark, zdir)
+    val oldRows = old.fold(Seq.empty[Row])(_._2)
+    val oldNorm = oldRows.map(r => norm(r.getString(0))).toSet
+    val newFiles = current.keys.filterNot(f => oldNorm.contains(norm(f)))
+      .toSeq.sorted
+    val kept = oldRows.filter(r => currentNorm.contains(norm(r.getString(0))))
+    val dropped = oldRows.length - kept.length
     if (newFiles.isEmpty && dropped == 0) return (0, 0)
-    val newStats =
-      if (newFiles.isEmpty) None
-      else Some(spark.read.option("basePath", path).parquet(newFiles: _*)
-        .select(input_file_name().as("file"), col(byCol))
-        .groupBy("file")
-        .agg(min(byCol).as("zmin"), max(byCol).as("zmax"),
-          count(lit(1)).as("n_rows")))
-    val keptDf = oldSchema.map(sc => spark.createDataFrame(
-      java.util.Arrays.asList(kept: _*), sc))
-    val merged = (newStats, keptDf) match {
-      case (Some(n), Some(k)) => n.unionByName(k)
-      case (Some(n), None) => n
-      case (None, Some(k)) => k
-      case (None, None) => return (0, 0) // unreachable: guarded above
-    }
+    val footed = newFiles.map(f => footerZone(spark, f, current(f), byCol))
+    val types = (footed.flatten.map(_._1) ++ old.map(_._1("zmin").dataType))
+      .distinct
+    val merged =
+      if (footed.forall(_.isDefined) && types.size <= 1) {
+        val schema = old.map(_._1).getOrElse(zoneSchema(types.head))
+        spark.createDataFrame(
+          (footed.flatMap(_.get._2) ++ kept).asJava, schema)
+      } else {
+        val scanned = spark.read.option("basePath", path).parquet(newFiles: _*)
+          .select(input_file_name().as("file"), col(byCol))
+          .groupBy("file")
+          .agg(min(byCol).as("zmin"), max(byCol).as("zmax"),
+            count(lit(1)).as("n_rows"))
+        old.fold(scanned)(o =>
+          scanned.unionByName(spark.createDataFrame(kept.asJava, o._1)))
+      }
     merged.coalesce(1).write.mode("overwrite").parquet(zdir)
     (newFiles.size, dropped)
   }
+
+  private def zoneSchema(t: DataType): StructType = StructType(Seq(
+    StructField("file", StringType), StructField("zmin", t),
+    StructField("zmax", t), StructField("n_rows", LongType)))
+
+  /** The Spark type of a plain (unannotated) INT64/INT32 parquet column —
+    * the only types whose footer statistics serve a zone. */
+  private def footerType(t: org.apache.parquet.schema.Type): Option[DataType] =
+    if (!t.isPrimitive || t.getLogicalTypeAnnotation != null ||
+        t.isRepetition(org.apache.parquet.schema.Type.Repetition.REPEATED)) None
+    else t.asPrimitiveType.getPrimitiveTypeName match {
+      case PrimitiveTypeName.INT64 => Some(LongType)
+      case PrimitiveTypeName.INT32 => Some(IntegerType)
+      case _ => None
+    }
+
+  /** One file's sidecar row from its footer: (type, row), the row absent
+    * for a zero-row file (a scan groups no rows for it) and its zone null
+    * when every value is null. None when the footer cannot serve the
+    * zone: not a top-level BIGINT/INT column of the file, or a row group
+    * without statistics. */
+  private def footerZone(spark: SparkSession, file: String, p: Path,
+      byCol: String): Option[(DataType, Option[Row])] = {
+    val f = ParquetFooters.footer(spark, p)
+    val schema = f.getFileMetaData.getSchema
+    if (!schema.containsField(byCol)) return None
+    footerType(schema.getType(schema.getFieldIndex(byCol))).flatMap { t =>
+      val blocks = f.getBlocks.asScala.toSeq
+      val stats = blocks.map(_.getColumns.asScala
+        .find(_.getPath.toArray.sameElements(Array(byCol)))
+        .map(_.getStatistics).filter(st => st != null && !st.isEmpty))
+      val rows = blocks.map(_.getRowCount).sum
+      if (rows == 0) Some((t, None))
+      else if (stats.exists(_.isEmpty)) None
+      else {
+        val vals = stats.flatten.filter(_.hasNonNullValue)
+        def box(v: Long): Any = if (t == IntegerType) v.toInt else v
+        val (lo, hi) =
+          if (vals.isEmpty) (null, null)
+          else (box(vals.map(_.genericGetMin.asInstanceOf[Number].longValue).min),
+            box(vals.map(_.genericGetMax.asInstanceOf[Number].longValue).max))
+        Some((t, Some(Row(file, lo, hi, rows))))
+      }
+    }
+  }
+
+  /** The current sidecar at `zdir` (schema, rows), or None when there is
+    * none. Integer zones decode on the driver; a sidecar keyed by another
+    * type is read through Spark. */
+  private def readZones(spark: SparkSession,
+      zdir: String): Option[(StructType, Seq[Row])] =
+    ParquetFooters.files(spark, zdir).nextOption().map { first =>
+      val zs = ParquetFooters.footer(spark, first).getFileMetaData.getSchema
+      val zt = zs.getType(zs.getFieldIndex("zmin"))
+      footerType(zt) match {
+        case Some(t) =>
+          def zone(g: Group, f: String): Any =
+            if (g.getFieldRepetitionCount(f) == 0) null
+            else if (t == IntegerType) g.getInteger(f, 0) else g.getLong(f, 0)
+          (zoneSchema(t), ParquetFooters.rows(spark, zdir).map(g =>
+            Row(g.getString("file", 0), zone(g, "zmin"), zone(g, "zmax"),
+              g.getLong("n_rows", 0))))
+        case None =>
+          spark.catalog.refreshByPath(zdir)
+          val df = spark.read.parquet(zdir).select("file", "zmin", "zmax", "n_rows")
+          (df.schema, df.collect().toSeq)
+      }
+    }
 
   /** The files whose [zmin, zmax] zone intersects [lo, hi], plus the
     * total file count — the pruning decision itself, exposed for specs

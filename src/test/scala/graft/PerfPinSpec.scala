@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Analytics, Dedup}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,33 +31,11 @@ class PerfPinSpec extends AnyFunSuite {
       s"pagerank plan lost the checkpointed adjacency scan:\n$plan")
   }
 
-  /** Runs `body` inside a fresh job group and returns (result, #jobs the
-    * group started). Polls until the async listener bus goes quiet so the
-    * count is complete; scoping by group keeps concurrent suites out.
-    */
+  /** (result, #jobs `body` started) — [[JobCounter]] scopes the count
+    * to a fresh job group and waits for the async listener bus. */
   private def countJobs[T](body: => T): (T, Int) = {
-    val group = s"perf-pin-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (group == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
-    s.sparkContext.addSparkListener(listener)
-    try {
-      s.sparkContext.setJobGroup(group, "perf pin", interruptOnCancel = false)
-      val out = try body finally s.sparkContext.clearJobGroup()
-      // listener bus is async: wait until the count is stable
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        val c = jobs.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-        Thread.sleep(100); waited += 1
-      }
-      (out, jobs.get())
-    } finally s.sparkContext.removeSparkListener(listener)
+    val (out, trace) = JobCounter(s)(body)
+    (out, trace.jobs)
   }
 
   // chain + clique: small enough for the driver gate, multi-round if
