@@ -2,9 +2,12 @@ package graft.operators
 
 import graft.functions.{Hashing, Text}
 import graft.sources.ParquetFooters
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Spark-native vector store — the engine-side analog of the reference's
   * VectorDatabase interface (VectorDatabase/VectorDatabase.py:13-33:
@@ -537,16 +540,161 @@ object VectorStore {
           typedLit(cents.map(_._3.toSeq))) + 1)
     }: _*)
 
+  // ------------------------------------------------------------ read core
+  //
+  // Every read route composes one core: [[queryFrame]] → a candidate
+  // route ([[bucketCands]] or [[cellRoute]]) → an optional approximate
+  // shortlist ([[shortlist]], keyed by the route's own score: PQ-ADC,
+  // residual-ADC, SQ8, RP or truncated) and its exact re-rank
+  // ([[rerank]]) → [[topK]] by exact cosine. A single-query read is the
+  // batch read of one query with `one = true`, which changes only how
+  // [[best]] plans its rankings.
+
+  /** (query_id, qraw): each query text's raw int64 weights, ids 0, 1, …
+    * in input order. */
+  private def queryFrame(spark: SparkSession, queries: Seq[String]): DataFrame = {
+    import spark.implicits._
+    queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("query_id", "qtext")
+      .select(col("query_id"), rawWeights(col("qtext")).as("qraw"))
+  }
+
+  /** Exact cosine of two int64 vectors: integer dot and norms through
+    * the codegen'd graft_dot_l kernel, one IEEE division, 0 when either
+    * vector is zero. The one scoring expression of every read, of the
+    * graph edges and of the MMR redundancy term. */
+  private def cosine(a: Column, b: Column): Column = {
+    val ssA = call_function("graft_dot_l", a, a)
+    val ssB = call_function("graft_dot_l", b, b)
+    when(ssA > 0 && ssB > 0, call_function("graft_dot_l", a, b).cast("double") /
+        (sqrt(ssA.cast("double")) * sqrt(ssB.cast("double"))))
+      .otherwise(lit(0.0d))
+  }
+
+  /** The LSH multiprobe: each query paired with its bucket and that
+    * bucket's Hamming-1 neighbours (9 distinct values), carrying qraw. */
+  private def bucketProbes(qf: DataFrame): DataFrame =
+    qf.withColumn("qbucket", bucketOf(col("qraw")))
+      .select(col("query_id"), col("qraw"), explode(array(
+        col("qbucket") +: (0 until Planes).map(p =>
+          col("qbucket").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
+
+  /** The cells a cell read probes, chosen on the driver: each query
+    * frame row with its top-`nprobe` cells by the assignment rule
+    * ([[probeCellsFor]]) over the frozen K-row summary. */
+  private def cellProbes(qf: DataFrame, nprobe: Int,
+      centroids: Array[(Int, Array[Long], Long)]): Seq[(Row, Seq[Int])] = {
+    val qraw = qf.schema.fieldIndex("qraw")
+    qf.collect().toSeq.map(r =>
+      r -> probeCellsFor(centroids, r.getSeq[Long](qraw).toArray, nprobe))
+  }
+
+  /** Bucket route: every probed index row paired with each query that
+    * probed its bucket, carrying qraw. The pruning is at the parquet
+    * partition level (`bucket` is the first partition column). */
+  private def bucketCands(index: DataFrame, qf: DataFrame): DataFrame =
+    index.join(broadcast(bucketProbes(qf)), "bucket")
+
+  /** A cell route: `region` is the union of the probed cells' rows,
+    * `probes` the (cell, query frame row) pairs; `cands` pairs every
+    * region row with each query that probed its cell. */
+  private final case class CellProbe(region: DataFrame, probes: DataFrame) {
+    def cands: DataFrame = region.join(broadcast(probes), "cell")
+  }
+
+  /** Cell route: the union of the probed cells' directories (a literal
+    * list, so the pruning is static), `pred` folded in below every
+    * ranking (the filtered read's pre-filter bar), and one broadcast
+    * (cell, query frame row) relation pairing each row with the queries
+    * that probed its cell. */
+  private def cellRoute(spark: SparkSession, indexDir: String, qf: DataFrame,
+      nprobe: Int, pred: Option[Column] = None,
+      centroids: Option[Array[(Int, Array[Long], Long)]] = None): CellProbe = {
+    val pairs = cellProbes(qf, nprobe,
+      centroids.getOrElse(readCells(spark, indexDir))).flatMap {
+        case (q, cells) => cells.map(c => Row.fromSeq(c +: q.toSeq))
+      }
+    val probes = spark.createDataFrame(pairs.asJava,
+      StructType(StructField("cell", IntegerType, nullable = false) +:
+        qf.schema.fields))
+    val scanned = spark.read.parquet(indexDir)
+      .filter(col("cell").isInCollection(pairs.map(_.getInt(0)).distinct))
+    CellProbe(pred.fold(scanned)(scanned.filter), probes)
+  }
+
+  /** Each candidate with its exact cosine to its query; `withRaw` keeps
+    * the raw vector for the MMR reads. */
+  private def scored(cands: DataFrame, withRaw: Boolean = false): DataFrame =
+    cands.select((Seq(col("query_id"), col("doc_id"), col("chunk_ix"),
+      col("chunk")) ++ (if (withRaw) Seq(col("raw")) else Nil) :+
+      cosine(col("raw"), col("qraw")).as("score")): _*)
+
+  /** Each query's `n` best rows by `key`, ties broken by `ties`, numbered
+    * 1..n in `rank`. One query plans as orderBy+limit — a
+    * TakeOrderedAndProject: per-partition heaps, one merge into a single
+    * partition emitted in sort order, so the ≤ n survivors are numbered
+    * in that order with no window. A batch ranks in a window partitioned
+    * by query_id, so queries rank in parallel and no partition has to
+    * hold every query's candidates. */
+  private def best(df: DataFrame, n: Int, one: Boolean, key: Column,
+      ties: Seq[Column] = Seq(col("doc_id"), col("chunk_ix"))): DataFrame =
+    if (one)
+      df.orderBy(key +: ties: _*).limit(n)
+        .withColumn("rank", (monotonically_increasing_id() + 1).cast("int"))
+    else
+      df.withColumn("rank", row_number().over(
+          Window.partitionBy("query_id").orderBy(key +: ties: _*)))
+        .filter(col("rank") <= n)
+
+  /** The output of every read: each query's top-k candidates by exact
+    * cosine, as (query_id, rank, doc_id, chunk_ix, chunk, score) in
+    * (query_id, rank) order. */
+  private def topK(cands: DataFrame, k: Int, one: Boolean): DataFrame =
+    best(scored(cands), k, one, col("score").desc)
+      .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "score")
+      .orderBy("query_id", "rank")
+
+  /** Shortlist stage: each query's `n` best candidate keys by a route's
+    * approximate score `key`. */
+  private def shortlist(approx: DataFrame, n: Int, one: Boolean,
+      key: Column): DataFrame =
+    best(approx, n, one, key).select("query_id", "doc_id", "chunk_ix")
+
+  /** Exact re-rank of a shortlist (the B9 tail): the survivors' raw
+    * vectors and text, fetched from the route's own candidates (the
+    * probed partitions only, qraw attached), then [[topK]]. */
+  private def rerank(cands: DataFrame, short: DataFrame, k: Int,
+      one: Boolean): DataFrame =
+    topK(cands.join(broadcast(short), Seq("query_id", "doc_id", "chunk_ix")),
+      k, one)
+
+  /** A frozen (j, m, cent) codebook sidecar as a local relation. */
+  private def codebookFrame(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    readCodebook(spark, path).toDF("j", "m", "cent")
+  }
+
+  /** A refusal for a store written before a read's code column existed
+    * (appends keep such a store without it): scanning the missing column
+    * would fail or silently drop the legacy rows. The field names come
+    * from one data file's footer (no job). */
+  private def requireColumn(spark: SparkSession, indexDir: String,
+      column: String, message: String): Unit =
+    require(ParquetFooters.fieldNames(spark, indexDir).exists(_.contains(column)),
+      message)
+
   /** Search: top-k chunks for a free-text query, probing the query's LSH
     * bucket and its Hamming-1 neighbors. Bucket pruning happens at the
     * parquet partition level (`bucket IN (…)` on the partition column).
     * Cosine ranking runs on the stored int64 weights through the
     * graft_dot_l codegen kernel — exact integer dot, two norms, one IEEE
     * division per candidate — instead of an interpreted per-element
-    * double fold (higher-order functions are CodegenFallback). */
+    * double fold (higher-order functions are CodegenFallback). Top-k is
+    * a TakeOrderedAndProject, never a global-window rank. */
   def search(spark: SparkSession, indexDir: String, query: String, k: Int = 5)
       : DataFrame =
-    searchIn(spark, spark.read.parquet(indexDir), query, k)
+    searchInBatch(spark, spark.read.parquet(indexDir), Seq(query), k, one = true)
+      .drop("query_id")
 
   /** Time-windowed serving read (r9): [[search]] restricted to ingest
     * batches whose `batch_tag` lies in [lo, hi]. The file list comes
@@ -557,47 +705,16 @@ object VectorStore {
     * residual row filter inside readRange keeps exactness. */
   def searchTagRange(spark: SparkSession, indexDir: String, query: String,
       lo: Long, hi: Long, k: Int = 5): DataFrame =
-    searchIn(spark,
+    searchInBatch(spark,
       graft.sources.ZoneMaps.readRange(spark, indexDir, "batch_tag", lo, hi),
-      query, k)
-
-  private def searchIn(spark: SparkSession, index: DataFrame, query: String,
-      k: Int): DataFrame = {
-    val qvec = { import spark.implicits._; Seq(query).toDF("qtext") }
-    val q = qvec
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .withColumn("qbucket", bucketOf(col("qraw")))
-      .select(col("qraw"), explode(array(
-        col("qbucket") +: (0 until Planes).map(p =>
-          col("qbucket").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    // top-k via orderBy+limit = TakeOrderedAndProject (per-partition
-    // heap + driver merge), NOT a global-window rank: a window with no
-    // partition key would funnel EVERY probed candidate into one
-    // partition. Only the k survivors get a rank (trivial by then).
-    val w = Window.orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index.join(broadcast(q), "bucket")
-      .select(col("doc_id"), col("chunk_ix"), col("chunk"), score.as("score"))
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-      .limit(k)
-      .withColumn("rank", row_number().over(w))
-      .select("rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("rank")
-  }
+      Seq(query), k, one = true).drop("query_id")
 
   /** Batch serving path: rank MANY queries through one plan. Each query
     * probes its own LSH buckets; candidates carry their `query_id`, so
     * the top-k window partitions BY QUERY — a thousand-query batch ranks
     * in parallel instead of funneling every query's candidates into the
-    * single partition an unpartitioned window would force. This is the
-    * shape a retrieval-eval or RAG-serving sweep needs; the single-query
-    * paths stay on TakeOrderedAndProject. Output schema = [[search]]
-    * plus a leading `query_id`. */
+    * single partition an unpartitioned window would force. Output schema
+    * = [[search]] plus a leading `query_id`. */
   def searchBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5): DataFrame =
     searchInBatch(spark, spark.read.parquet(indexDir), queries, k)
@@ -610,59 +727,36 @@ object VectorStore {
       graft.sources.ZoneMaps.readRange(spark, indexDir, "batch_tag", lo, hi),
       queries, k)
 
+  /** The exact bucket-probed read over an index frame — which may be
+    * pre-filtered (the hybrid read's dense leg). */
   private[operators] def searchInBatch(spark: SparkSession, index: DataFrame,
-      queries: Seq[String], k: Int): DataFrame = {
-    val qdf = { import spark.implicits._
-      queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("query_id", "qtext") }
-    val q = qdf
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .withColumn("qbucket", bucketOf(col("qraw")))
-      .select(col("query_id"), col("qraw"), explode(array(
-        col("qbucket") +: (0 until Planes).map(p =>
-          col("qbucket").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index.join(broadcast(q), "bucket")
-      .select(col("query_id"), col("doc_id"), col("chunk_ix"), col("chunk"),
-        score.as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("query_id", "rank")
-  }
+      queries: Seq[String], k: Int, one: Boolean = false): DataFrame =
+    topK(bucketCands(index, queryFrame(spark, queries)), k, one)
 
   /** Diversity-aware serving path: MMR (maximal marginal relevance,
     * Carbonell & Goldstein 1998) re-ranking over a relevance shortlist —
     * the standard RAG retrieval step plain top-k lacks: near-duplicate
     * chunks crowd out coverage, so each pick maximizes
-    * λ·rel(q,c) − (1−λ)·max sim(c, selected). The shortlist comes from
-    * [[search]] (distributed: bucket-pruned scan + TakeOrderedAndProject);
-    * the greedy selection runs on the driver over the ≤`shortlist`
-    * collected candidates — MMR is inherently sequential (each pick
-    * depends on the previous picks), and a k×shortlist greedy over a
-    * bounded set is exactly the industrial shape: distribute the scan,
-    * finish the tiny sequential tail locally (same reasoning as C6's
-    * gated union-find finish). All similarities are exact int64 dots of
-    * the stored quantized weights with IEEE division at the end;
-    * deterministic ties (score desc, doc_id, chunk_ix), so the result
-    * is reproducible run-to-run. */
+    * λ·rel(q,c) − (1−λ)·max sim(c, selected). The shortlist is
+    * [[search]]'s scored candidates (distributed: bucket-pruned scan +
+    * TakeOrderedAndProject) with their raw vectors kept, so no second
+    * index pass; the greedy selection runs on the driver over the
+    * ≤`shortlist` collected candidates — MMR is inherently sequential
+    * (each pick depends on the previous picks), and a k×shortlist greedy
+    * over a bounded set is exactly the industrial shape: distribute the
+    * scan, finish the tiny sequential tail locally (same reasoning as
+    * C6's gated union-find finish). All similarities are exact int64
+    * dots of the stored quantized weights with IEEE division at the end;
+    * deterministic ties (score desc, doc_id, chunk_ix), so the result is
+    * reproducible run-to-run. */
   def searchDiverse(spark: SparkSession, indexDir: String, query: String,
       k: Int = 5, shortlist: Int = 50, lambdaRel: Double = 0.7): DataFrame = {
     import spark.implicits._
-    val cands = search(spark, indexDir, query, shortlist)
-      .select("doc_id", "chunk_ix", "chunk", "score")
-    val index = spark.read.parquet(indexDir)
-      .select(col("doc_id"), col("chunk_ix"), col("raw"))
-    val rows = cands.join(index, Seq("doc_id", "chunk_ix"))
-      .select(col("doc_id"), col("chunk_ix"), col("chunk"), col("score"),
-        col("raw"))
+    val cands = bucketCands(spark.read.parquet(indexDir),
+      queryFrame(spark, Seq(query)))
+    val rows = best(scored(cands, withRaw = true), shortlist, one = true,
+        col("score").desc)
+      .select("doc_id", "chunk_ix", "chunk", "score", "raw")
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3),
         r.getSeq[Long](4).toArray))
@@ -679,15 +773,15 @@ object VectorStore {
       .empty[(Long, Int, String, Double, Array[Long])]
     val remaining = scala.collection.mutable.ArrayBuffer(rows: _*)
     while (selected.size < k && remaining.nonEmpty) {
-      val best = remaining.zipWithIndex.map { case (c, ix) =>
+      val pick = remaining.zipWithIndex.map { case (c, ix) =>
         val maxSim =
           if (selected.isEmpty) 0.0
           else selected.map(s => cos(c._5, s._5)).max
         val mmr = lambdaRel * c._4 - (1 - lambdaRel) * maxSim
         (mmr, c, ix)
       }.minBy { case (mmr, c, _) => (-mmr, c._1, c._2) }
-      selected += best._2
-      remaining.remove(best._3)
+      selected += pick._2
+      remaining.remove(pick._3)
     }
     selected.zipWithIndex
       .map { case ((d, cx, chunk, rel, _), i) => (i + 1, d, cx, chunk, rel) }
@@ -705,93 +799,36 @@ object VectorStore {
     * fetching their raw vectors from the same probed partitions. Output
     * schema matches [[search]]. */
   def searchCompressed(spark: SparkSession, indexDir: String, query: String,
-      k: Int = 5, shortlist: Int = 50): DataFrame = {
-    val index = spark.read.parquet(indexDir)
-    val codebook = spark.read.parquet(s"$indexDir/$PqDir/codebook.parquet")
-    val qvec = { import spark.implicits._; Seq(query).toDF("qtext") }
-    val q = qvec
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .withColumn("qbucket", bucketOf(col("qraw")))
-    val probes = q.select(col("qraw"), explode(array(
-      col("qbucket") +: (0 until Planes).map(p =>
-        col("qbucket").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
-    // ADC table: exact int64 subspace distances query ↔ every centroid,
-    // over the store's frozen OPQ layout (identity for pre-perm stores)
-    val perm = readPerm(spark, indexDir).getOrElse(0 until Dim)
-    val dtab = q
-      .select(posexplode(subvecs(permuteRaw(col("qraw"), perm))))
-      .select(col("pos").as("m"), col("col").as("qsub"))
-      .join(broadcast(codebook), "m")
-      .select(col("m").as("dm"), col("j").as("dj"),
-        call_function("graft_sqdist_l", col("qsub"), col("cent")).as("qdist"))
-    // shortlist via TakeOrderedAndProject, not a global-window rank —
-    // the ADC scan's candidate set is the whole probed region
-    val adcShortlist = index
-      .join(broadcast(probes.select("bucket")), "bucket")
-      .select(col("doc_id"), col("chunk_ix"), posexplode(col("codes")))
-      .select(col("doc_id"), col("chunk_ix"),
-        col("pos").as("m"), col("col").as("code"))
-      .join(broadcast(dtab),
-        col("m") === col("dm") && col("code") === col("dj"))
-      .groupBy("doc_id", "chunk_ix")
-      .agg(sum("qdist").as("adist"))
-      .orderBy(col("adist"), col("doc_id"), col("chunk_ix"))
-      .limit(shortlist)
-      .select("doc_id", "chunk_ix")
-    // exact re-rank of the shortlist only (B9): fetch raw + text by key
-    // from the probed partitions
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    // shortlist is ≤ `shortlist` rows — rank after the distributed top-k
-    val w = Window.orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index
-      .join(broadcast(probes), "bucket")
-      .join(broadcast(adcShortlist), Seq("doc_id", "chunk_ix"))
-      .select(col("doc_id"), col("chunk_ix"), col("chunk"), score.as("score"))
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-      .limit(k)
-      .withColumn("rank", row_number().over(w))
-      .select("rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("rank")
-  }
+      k: Int = 5, shortlist: Int = 50): DataFrame =
+    compressedRead(spark, indexDir, Seq(query), k, shortlist, one = true)
+      .drop("query_id")
 
   /** Batch twin of [[searchCompressed]]: MANY queries through ONE IVF-PQ
     * plan. The per-query ADC distance tables are one broadcast relation
     * keyed by `query_id` (nq·M·K small rows); the codes-only scan joins
     * it by (query_id, m, code), so the approximate ranking — and the
     * exact re-rank that follows — both window BY QUERY, never funneling
-    * the whole probed region into one partition. A RAG eval sweep over
-    * the compressed index is one job, not one plan per query. Output
-    * schema = [[searchCompressed]] plus a leading `query_id`. */
+    * the whole probed region into one partition. Output schema =
+    * [[searchCompressed]] plus a leading `query_id`. */
   def searchCompressedBatch(spark: SparkSession, indexDir: String,
-      queries: Seq[String], k: Int = 5, shortlist: Int = 50): DataFrame = {
-    val index = spark.read.parquet(indexDir)
-    val codebook = spark.read.parquet(s"$indexDir/$PqDir/codebook.parquet")
-    val qdf = { import spark.implicits._
-      queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("query_id", "qtext") }
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .withColumn("qbucket", bucketOf(col("qraw")))
-    val probes = qdf.select(col("query_id"), explode(array(
-      col("qbucket") +: (0 until Planes).map(p =>
-        col("qbucket").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
-    // per-query ADC tables, one broadcast relation keyed by query_id,
-    // over the store's frozen OPQ layout (identity for pre-perm stores)
+      queries: Seq[String], k: Int = 5, shortlist: Int = 50): DataFrame =
+    compressedRead(spark, indexDir, queries, k, shortlist, one = false)
+
+  private def compressedRead(spark: SparkSession, indexDir: String,
+      queries: Seq[String], k: Int, n: Int, one: Boolean): DataFrame = {
+    val qf = queryFrame(spark, queries)
+    val cands = bucketCands(spark.read.parquet(indexDir), qf)
+    // per-query ADC tables: exact int64 subspace distances query ↔ every
+    // centroid, over the store's frozen OPQ layout (identity for
+    // pre-perm stores), one broadcast relation keyed by query_id
     val perm = readPerm(spark, indexDir).getOrElse(0 until Dim)
-    val dtab = qdf
+    val dtab = qf
       .select(col("query_id"), posexplode(subvecs(permuteRaw(col("qraw"), perm))))
       .select(col("query_id"), col("pos").as("m"), col("col").as("qsub"))
-      .join(broadcast(codebook), "m")
+      .join(broadcast(codebookFrame(spark, s"$indexDir/$PqDir/codebook.parquet")), "m")
       .select(col("query_id").as("dq"), col("m").as("dm"), col("j").as("dj"),
         call_function("graft_sqdist_l", col("qsub"), col("cent")).as("qdist"))
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("doc_id"), col("chunk_ix"))
-    val adcShortlist = index
-      .join(broadcast(probes), "bucket")
+    val adc = cands
       .select(col("query_id"), col("doc_id"), col("chunk_ix"),
         posexplode(col("codes")))
       .select(col("query_id"), col("doc_id"), col("chunk_ix"),
@@ -800,29 +837,7 @@ object VectorStore {
         && col("m") === col("dm") && col("code") === col("dj"))
       .groupBy("query_id", "doc_id", "chunk_ix")
       .agg(sum("qdist").as("adist"))
-      .withColumn("ark", row_number().over(wAdc))
-      .filter(col("ark") <= shortlist)
-      .select("query_id", "doc_id", "chunk_ix")
-    // exact re-rank: fetch raw + text for the ≤ nq·shortlist survivors
-    // from the probed partitions only, attach each query's qraw by key
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index
-      .join(broadcast(probes.select("bucket").distinct()), "bucket")
-      .join(broadcast(adcShortlist), Seq("doc_id", "chunk_ix"))
-      .join(broadcast(qdf.select("query_id", "qraw")), "query_id")
-      .select(col("query_id"), col("doc_id"), col("chunk_ix"), col("chunk"),
-        score.as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("query_id", "rank")
+    rerank(cands, shortlist(adc, n, one, col("adist")), k, one)
   }
 
   /** B20 serving path: Matryoshka truncated-dimension search. The eval
@@ -834,8 +849,7 @@ object VectorStore {
     * survivors are re-ranked at FULL width (the B9 re-rank discipline,
     * same as [[searchCompressed]]'s ADC→exact tail). `dims = Dim`
     * degenerates to the exact ranking, spec-pinned rank-for-rank equal
-    * to [[search]]. Delegates to the batch twin (one machinery). Output
-    * schema = [[search]].
+    * to [[search]]. Output schema = [[search]].
     *
     * Truncation basis (r10, explicit): the PREFIX OF THE STORED RAW
     * LAYOUT — i.e. the pre-permutation order. MRL semantics live in the
@@ -853,7 +867,7 @@ object VectorStore {
     * verified non-identity permutation (VectorStoreSpec). */
   def searchTruncated(spark: SparkSession, indexDir: String, query: String,
       k: Int = 5, dims: Int = 16, shortlist: Int = 50): DataFrame =
-    searchTruncatedBatch(spark, indexDir, Seq(query), k, dims, shortlist)
+    truncatedRead(spark, indexDir, Seq(query), k, dims, shortlist, one = true)
       .drop("query_id")
 
   /** Batch twin of [[searchTruncated]] (the G23/G26/G31 shape): many
@@ -862,60 +876,24 @@ object VectorStore {
     * schema = [[searchBatch]]. */
   def searchTruncatedBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5, dims: Int = 16,
-      shortlist: Int = 50): DataFrame = {
+      shortlist: Int = 50): DataFrame =
+    truncatedRead(spark, indexDir, queries, k, dims, shortlist, one = false)
+
+  private def truncatedRead(spark: SparkSession, indexDir: String,
+      queries: Seq[String], k: Int, dims: Int, n: Int,
+      one: Boolean): DataFrame = {
     require(dims >= 1 && dims <= Dim, s"dims must be in [1, $Dim], got $dims")
-    val index = spark.read.parquet(indexDir)
-    val qdf = { import spark.implicits._
-      queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("query_id", "qtext") }
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .withColumn("qbucket", bucketOf(col("qraw")))
-    val probes = qdf.select(col("query_id"), col("qraw"), explode(array(
-      col("qbucket") +: (0 until Planes).map(p =>
-        col("qbucket").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
-    // phase 1: truncated scoring — prefix slices on both sides, exact
-    // int64 dot, cosine over the TRUNCATED norms (the score a dims-wide
-    // store would compute; ranking on it is what vec_mrl_recall grades)
-    val rawT = slice(col("raw"), 1, dims)
-    val qrawT = slice(col("qraw"), 1, dims)
-    val dotT = call_function("graft_dot_l", rawT, qrawT)
-    val ssCT = call_function("graft_dot_l", rawT, rawT)
-    val ssQT = call_function("graft_dot_l", qrawT, qrawT)
-    val scoreT = when(ssCT > 0 && ssQT > 0,
-      dotT.cast("double") / (sqrt(ssCT.cast("double")) * sqrt(ssQT.cast("double"))))
-      .otherwise(lit(0.0d))
-    val wT = Window.partitionBy("query_id")
-      .orderBy(col("tscore").desc, col("doc_id"), col("chunk_ix"))
-    val short = index
-      .join(broadcast(probes), "bucket")
-      .select(col("query_id"), col("doc_id"), col("chunk_ix"),
-        scoreT.as("tscore"))
-      // no distinct: a chunk lives in exactly one bucket partition and a
-      // query's 9 probe values are pairwise distinct, so each (query,
-      // chunk) scores once (same invariant as searchBatch)
-      .withColumn("trk", row_number().over(wT))
-      .filter(col("trk") <= shortlist)
-      .select("query_id", "doc_id", "chunk_ix")
-    // phase 2: full-width exact re-rank of the ≤ nq·shortlist survivors,
-    // fetched from the probed partitions only
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index
-      .join(broadcast(probes.select("bucket").distinct()), "bucket")
-      .join(broadcast(short), Seq("doc_id", "chunk_ix"))
-      .join(broadcast(qdf.select("query_id", "qraw")), "query_id")
-      .select(col("query_id"), col("doc_id"), col("chunk_ix"), col("chunk"),
-        score.as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("query_id", "rank")
+    val cands = bucketCands(spark.read.parquet(indexDir),
+      queryFrame(spark, queries))
+    // cosine over the TRUNCATED prefixes (the score a dims-wide store
+    // would compute; ranking on it is what vec_mrl_recall grades). No
+    // distinct: a chunk lives in exactly one bucket partition and a
+    // query's 9 probe values are pairwise distinct, so each (query,
+    // chunk) scores once
+    val approx = cands.select(col("query_id"), col("doc_id"),
+      col("chunk_ix"), cosine(slice(col("raw"), 1, dims),
+        slice(col("qraw"), 1, dims)).as("tscore"))
+    rerank(cands, shortlist(approx, n, one, col("tscore").desc), k, one)
   }
 
   /** Learned-cell IVF serving path: probe the query's top-`nprobe`
@@ -928,45 +906,20 @@ object VectorStore {
     * neighbors, recall clears the scan fraction; random partitions
     * don't. Output schema matches [[search]]. */
   def searchCells(spark: SparkSession, indexDir: String, query: String,
-      k: Int = 5, nprobe: Int = 2): DataFrame = {
-    val centroids = readCells(spark, indexDir)
-    val qvec = { import spark.implicits._; Seq(query).toDF("qtext") }
-    val qraw = qvec.select(rawWeights(col("qtext")).as("qraw"))
-      .collect().head.getSeq[Long](0).toArray
-    // cell ranking = the assignment rule itself ([[probeCellsFor]]):
-    // top-nprobe by exact min-sqdist score, ties to the smaller cell id
-    val probeCells = probeCellsFor(centroids, qraw, nprobe)
-    val index = spark.read.parquet(indexDir)
-      .filter(col("cell").isInCollection(probeCells))
-    val qdf = qvec.select(rawWeights(col("qtext")).as("qraw"))
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    // distributed top-k over the probed cells, rank the k survivors
-    val w = Window.orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index.join(broadcast(qdf))
-      .select(col("doc_id"), col("chunk_ix"), col("chunk"), score.as("score"))
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-      .limit(k)
-      .withColumn("rank", row_number().over(w))
-      .select("rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("rank")
-  }
+      k: Int = 5, nprobe: Int = 2): DataFrame =
+    cellsRead(spark, indexDir, Seq(query), k, nprobe, None, one = true)
+      .drop("query_id")
 
   /** Batch twin of [[searchCells]]: MANY queries through ONE cell-probed
     * plan. Probe selection stays driver-side (it is nq × K exact dots
-    * against the K-row frozen centroid sidecar — the same bounded
-    * arithmetic the single path does once); the scan then reads the
+    * against the K-row frozen centroid sidecar); the scan then reads the
     * UNION of all probed cell directories once, a broadcast
     * (query_id, cell) probe list restricts each candidate row to the
     * queries that probed its cell, and ranking windows by query. Output
     * schema = [[searchCells]] plus a leading `query_id`. */
   def searchCellsBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5, nprobe: Int = 2): DataFrame =
-    cellsBatchIn(spark, indexDir, queries, k, nprobe, None)
+    cellsRead(spark, indexDir, queries, k, nprobe, None, one = false)
 
   /** Metadata-filtered cell serving (r16 — Weaviate's `where`-filtered
     * search, the most-used store read after plain top-k; the reference's
@@ -977,18 +930,20 @@ object VectorStore {
     * `element_at(col("meta"), "channel") === "ops"`.
     *
     * B21's PRE-filter discipline: the predicate folds into the
-    * cell-probed scan BELOW the rank window — never a post-filter over
-    * an unfiltered top-k, so a selective predicate still fills all k
-    * slots from the probed cells' matching rows (post-filtering would
+    * cell-probed scan BELOW the ranking — never a post-filter over an
+    * unfiltered top-k, so a selective predicate still fills all k slots
+    * from the probed cells' matching rows (post-filtering would
     * under-fill). Semantics: exact top-k among the probed cells' rows
     * satisfying `pred` (the recall caveat vs a full scan is the same
     * cell-probing tradeoff every cells read documents). A store written
     * before metadata existed refuses a meta-referencing predicate
     * loudly — re-ingest to upgrade (the append-can't-backfill rule). */
   def searchCellsFiltered(spark: SparkSession, indexDir: String,
-      query: String, pred: Column, k: Int = 5, nprobe: Int = 2): DataFrame =
-    searchCellsFilteredBatch(spark, indexDir, Seq(query), pred, k, nprobe)
+      query: String, pred: Column, k: Int = 5, nprobe: Int = 2): DataFrame = {
+    requireFilterable(spark, indexDir, pred)
+    cellsRead(spark, indexDir, Seq(query), k, nprobe, Some(pred), one = true)
       .drop("query_id")
+  }
 
   /** Batch twin of [[searchCellsFiltered]] (the G23/G26 pattern): many
     * queries, one filtered cell-probed plan. Rank-for-rank identical to
@@ -997,8 +952,14 @@ object VectorStore {
       queries: Seq[String], pred: Column, k: Int = 5, nprobe: Int = 2)
       : DataFrame = {
     requireFilterable(spark, indexDir, pred)
-    cellsBatchIn(spark, indexDir, queries, k, nprobe, Some(pred))
+    cellsRead(spark, indexDir, queries, k, nprobe, Some(pred), one = false)
   }
+
+  private def cellsRead(spark: SparkSession, indexDir: String,
+      queries: Seq[String], k: Int, nprobe: Int, pred: Option[Column],
+      one: Boolean): DataFrame =
+    topK(cellRoute(spark, indexDir, queryFrame(spark, queries), nprobe,
+      pred).cands, k, one)
 
   /** Loud legacy gate for predicate-taking reads: every column the
     * predicate references must exist in the index schema. A pre-meta
@@ -1026,55 +987,8 @@ object VectorStore {
     * every probe of it scan that fraction of the corpus). */
   private[graft] def probedCells(spark: SparkSession, indexDir: String,
       queries: Seq[String], nprobe: Int): Map[Long, Seq[Int]] = {
-    val centroids = readCells(spark, indexDir)
-    import spark.implicits._
-    val qraws = queries.toDF("qtext")
-      .select(rawWeights(col("qtext")).as("qraw"))
-      .collect().map(_.getSeq[Long](0).toArray)
-    qraws.zipWithIndex.map { case (qraw, i) =>
-      i.toLong -> probeCellsFor(centroids, qraw, nprobe)
-    }.toMap
-  }
-
-  /** The shared cell-probed batch plan: probe selection driver-side
-    * against the K-row frozen centroid sidecar, directory-pruned scan of
-    * the probed cells' union, optional predicate folded in BELOW the
-    * per-query rank window (the filtered read's pre-filter bar), then
-    * broadcast (query_id, cell) restriction + per-query top-k. */
-  private def cellsBatchIn(spark: SparkSession, indexDir: String,
-      queries: Seq[String], k: Int, nprobe: Int,
-      pred: Option[Column]): DataFrame = {
-    import spark.implicits._
-    val centroids = readCells(spark, indexDir)
-    val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("query_id", "qtext")
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .select("query_id", "qraw")
-    val qraws = qdf.collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val probePairs = qraws.flatMap { case (qid, qraw) =>
-      probeCellsFor(centroids, qraw, nprobe).map(cell => (qid, cell))
-    }.toSeq
-    val probes = probePairs.toDF("query_id", "cell")
-    val scanned = spark.read.parquet(indexDir)
-      .filter(col("cell").isInCollection(probePairs.map(_._2).distinct))
-    val index = pred.fold(scanned)(scanned.filter)
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index.join(broadcast(probes), "cell")
-      .join(broadcast(qdf), "query_id")
-      .select(col("query_id"), col("doc_id"), col("chunk_ix"), col("chunk"),
-        score.as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("query_id", "rank")
+    cellProbes(queryFrame(spark, queries), nprobe, readCells(spark, indexDir))
+      .map { case (q, cells) => q.getLong(0) -> cells }.toMap
   }
 
   /** G46 (r13): MMR-diversified BATCH serving read — [[searchDiverse]]'s
@@ -1097,53 +1011,21 @@ object VectorStore {
   def searchDiverseBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 20, lambda: Double = 0.7): DataFrame = {
-    import spark.implicits._
-    val centroids = readCells(spark, indexDir)
-    val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("query_id", "qtext")
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .select("query_id", "qraw")
-    val qraws = qdf.collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val probePairs = qraws.flatMap { case (qid, qraw) =>
-      probeCellsFor(centroids, qraw, nprobe).map(cell => (qid, cell))
-    }.toSeq
-    val probes = probePairs.toDF("query_id", "cell")
-    val index = spark.read.parquet(indexDir)
-      .filter(col("cell").isInCollection(probePairs.map(_._2).distinct))
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val relScore = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    val cand = index.join(broadcast(probes), "cell")
-      .join(broadcast(qdf), "query_id")
-      .select(col("query_id"), col("doc_id"), col("chunk_ix"), col("chunk"),
-        col("raw"), relScore.as("score"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= shortlist)
-      .drop("rk")
+    val route = cellRoute(spark, indexDir, queryFrame(spark, queries), nprobe)
+    val cand = best(scored(route.cands, withRaw = true), shortlist,
+        one = false, col("score").desc)
+      .drop("rank")
       .localCheckpoint(true)
     val xs = cand.select(col("query_id"), col("doc_id").as("xd"),
       col("chunk_ix").as("xi"), col("raw").as("xr"))
     val ys = cand.select(col("query_id"), col("doc_id").as("yd"),
       col("chunk_ix").as("yi"), col("raw").as("yr"))
-    val dXY = call_function("graft_dot_l", col("xr"), col("yr"))
-    val ssX = call_function("graft_dot_l", col("xr"), col("xr"))
-    val ssY = call_function("graft_dot_l", col("yr"), col("yr"))
-    val cosXY = when(ssX > 0 && ssY > 0,
-      dXY.cast("double") / (sqrt(ssX.cast("double")) * sqrt(ssY.cast("double"))))
-      .otherwise(lit(0.0d))
     val sims = xs.join(ys, Seq("query_id"))
       .filter(col("xd") =!= col("yd") || col("xi") =!= col("yi"))
       .select(col("query_id"), col("xd"), col("xi"), col("yd"), col("yi"),
-        cosXY.as("cos"))
+        cosine(col("xr"), col("yr")).as("cos"))
       .localCheckpoint(true)
-    var sel = cand.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    var sel = best(cand, 1, one = false, col("score").desc)
       .select(col("query_id"), lit(1L).as("rank"), col("doc_id"),
         col("chunk_ix"), col("chunk"), col("score"),
         (lit(lambda) * col("score")).as("mmr"))
@@ -1154,16 +1036,13 @@ object VectorStore {
           col("chunk_ix").as("yi")), Seq("query_id", "yd", "yi"))
         .groupBy("query_id", "xd", "xi").agg(max("cos").as("pen"))
         .withColumnRenamed("xd", "doc_id").withColumnRenamed("xi", "chunk_ix")
-      val wM = Window.partitionBy("query_id")
-        .orderBy(col("mmr").desc, col("doc_id"), col("chunk_ix"))
-      val pick = cand
+      val scoredStep = cand
         .join(sel.select("query_id", "doc_id", "chunk_ix"),
           Seq("query_id", "doc_id", "chunk_ix"), "left_anti")
         .join(pen, Seq("query_id", "doc_id", "chunk_ix"))
         .withColumn("mmr",
           lit(lambda) * col("score") - lit(1.0 - lambda) * col("pen"))
-        .withColumn("rk", row_number().over(wM))
-        .filter(col("rk") === 1)
+      val pick = best(scoredStep, 1, one = false, col("mmr").desc)
         .select(col("query_id"), lit(step.toLong).as("rank"), col("doc_id"),
           col("chunk_ix"), col("chunk"), col("score"), col("mmr"))
       sel = sel.unionByName(pick).localCheckpoint(true)
@@ -1186,62 +1065,48 @@ object VectorStore {
   def searchCompressedCells(spark: SparkSession, indexDir: String,
       query: String, k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 50): DataFrame =
-    searchCompressedCellsBatch(spark, indexDir, Seq(query), k, nprobe,
-      shortlist).drop("query_id")
+    compressedCellsRead(spark, indexDir, Seq(query), k, nprobe, shortlist,
+      one = true).drop("query_id")
 
   /** Batch twin of [[searchCompressedCells]] (the G23/G26 shape): many
     * queries through ONE probed/ADC/re-rank plan, every ranking windowed
     * per query. Output schema = [[searchBatch]]. */
   def searchCompressedCellsBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5, nprobe: Int = 2,
-      shortlist: Int = 50): DataFrame = {
+      shortlist: Int = 50): DataFrame =
+    compressedCellsRead(spark, indexDir, queries, k, nprobe, shortlist,
+      one = false)
+
+  private def compressedCellsRead(spark: SparkSession, indexDir: String,
+      queries: Seq[String], k: Int, nprobe: Int, n: Int,
+      one: Boolean): DataFrame = {
     import spark.implicits._
-    // refuse loudly on a store with no residual sidecar (created before
-    // the rcodes column existed, and kept rcodes-free by appends — the
-    // ingest legacyRes rule): scanning a missing column would silently
-    // drop every legacy row from the ADC ranking instead
-    val resCbCheck = s"$indexDir/$PqDir/$ResCbFile"
+    val resCbPath = s"$indexDir/$PqDir/$ResCbFile"
     require(org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(resCbCheck)),
+        .exists(new org.apache.hadoop.fs.Path(resCbPath)),
       s"searchCompressedCells needs the residual codebook sidecar at " +
-        s"$resCbCheck — this store predates residual coding (no rcodes); " +
+        s"$resCbPath — this store predates residual coding (no rcodes); " +
         "re-ingest it (mode=overwrite) to serve the compressed-cells path")
     val centroids = readCells(spark, indexDir)
-    val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("query_id", "qtext")
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .select("query_id", "qraw")
-    val qraws = qdf.collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    // coarse probe: the assignment-aligned rule ([[probeCellsFor]]) over
-    // the K-row summary — exact int64 numerators, one IEEE division each
-    val probePairs = qraws.flatMap { case (qid, qraw) =>
-      probeCellsFor(centroids, qraw, nprobe).map(cell => (qid, cell))
-    }.toSeq
-    val probes = probePairs.toDF("query_id", "cell")
+    val route = cellRoute(spark, indexDir, queryFrame(spark, queries), nprobe,
+      centroids = Some(centroids))
     val cmeans = centroids
       .map { case (cell, csum, n) => (cell, cmeanScaled(csum, n)) }
       .toSeq.toDF("cell", "cmean")
-    val rescb = spark.read.parquet(s"$indexDir/$PqDir/$ResCbFile")
     // per probed (query, cell): the query's scaled residual against THAT
     // cell's frozen mean, tabled against the global residual codebook —
     // O(queries · nprobe · M · K) rows, broadcast
-    val dtab = qdf.join(broadcast(probes), "query_id")
-      .join(broadcast(cmeans), "cell")
+    val dtab = route.probes.join(broadcast(cmeans), "cell")
       .withColumn("qres", scaledResidual(col("qraw"), col("cmean")))
       .select(col("query_id"), col("cell"), posexplode(subvecs(col("qres"))))
       .select(col("query_id"), col("cell"), col("pos").as("m"),
         col("col").as("sub"))
-      .join(broadcast(rescb), "m")
+      .join(broadcast(codebookFrame(spark, resCbPath)), "m")
       .withColumn("qdist", call_function("graft_sqdist_l", col("sub"), col("cent")))
       .select("query_id", "cell", "m", "j", "qdist")
-    val index = spark.read.parquet(indexDir)
-      .filter(col("cell").isInCollection(probePairs.map(_._2).distinct))
-    // phase 1: ADC over stored codes — the scan reads (cell, ids, rcodes)
-    val wT = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("doc_id"), col("chunk_ix"))
-    val short = index
+    // ADC over stored codes — the scan reads (cell, ids, rcodes)
+    val adc = route.region
       .select(col("cell"), col("doc_id"), col("chunk_ix"),
         posexplode(col("rcodes")))
       .select(col("cell"), col("doc_id"), col("chunk_ix"),
@@ -1250,26 +1115,7 @@ object VectorStore {
       .filter(col("code") === col("j"))
       .groupBy("query_id", "doc_id", "chunk_ix")
       .agg(sum("qdist").as("adist"))
-      .withColumn("trk", row_number().over(wT))
-      .filter(col("trk") <= shortlist)
-      .select("query_id", "doc_id", "chunk_ix")
-    // phase 2: exact full-width cosine re-rank of the survivors
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index.join(broadcast(short), Seq("doc_id", "chunk_ix"))
-      .join(broadcast(qdf), "query_id")
-      .select(col("query_id"), col("doc_id"), col("chunk_ix"), col("chunk"),
-        score.as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("query_id", "rank")
+    rerank(route.cands, shortlist(adc, n, one, col("adist")), k, one)
   }
 
   /** G44 (r12): SQ8 serving read — the recall rung BETWEEN the
@@ -1294,66 +1140,29 @@ object VectorStore {
   def searchSq8Cells(spark: SparkSession, indexDir: String,
       query: String, k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 50): DataFrame =
-    searchSq8CellsBatch(spark, indexDir, Seq(query), k, nprobe, shortlist)
+    sq8Read(spark, indexDir, Seq(query), k, nprobe, shortlist, one = true)
       .drop("query_id")
 
   /** Batch twin of [[searchSq8Cells]] — many queries through ONE
     * probed/ADC/re-rank plan. Output schema = [[searchBatch]]. */
   def searchSq8CellsBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5, nprobe: Int = 2,
-      shortlist: Int = 50): DataFrame = {
-    import spark.implicits._
-    // refuse loudly on a pre-sq8 store (no scodes column — kept that way
-    // by appends): scanning the missing column would fail inference or
-    // silently drop legacy rows, the same failure mode the rescb rule
-    // guards against
-    require(spark.read.parquet(indexDir).schema.fieldNames.contains("scodes"),
+      shortlist: Int = 50): DataFrame =
+    sq8Read(spark, indexDir, queries, k, nprobe, shortlist, one = false)
+
+  private def sq8Read(spark: SparkSession, indexDir: String,
+      queries: Seq[String], k: Int, nprobe: Int, n: Int,
+      one: Boolean): DataFrame = {
+    requireColumn(spark, indexDir, "scodes",
       s"searchSq8Cells needs the scodes column — this store predates SQ8 " +
         "coding; re-ingest it (mode=overwrite) to serve the sq8 path")
-    val centroids = readCells(spark, indexDir)
-    val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("query_id", "qtext")
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .select("query_id", "qraw")
-    val qraws = qdf.collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val probePairs = qraws.flatMap { case (qid, qraw) =>
-      probeCellsFor(centroids, qraw, nprobe).map(cell => (qid, cell))
-    }.toSeq
-    val probes = probePairs.toDF("query_id", "cell")
-    val index = spark.read.parquet(indexDir)
-      .filter(col("cell").isInCollection(probePairs.map(_._2).distinct))
-    // phase 1: SQ8 ADC shortlist — the scan reads (cell, ids, scodes,
-    // sscale); the exact raw vector is NOT touched until the tail
-    val wT = Window.partitionBy("query_id")
-      .orderBy(col("adc").desc, col("doc_id"), col("chunk_ix"))
-    val short = index
-      .select(col("cell"), col("doc_id"), col("chunk_ix"),
-        col("scodes"), col("sscale"))
-      .join(broadcast(probes), "cell")
-      .join(broadcast(qdf), "query_id")
-      .withColumn("adc",
-        call_function("graft_dot_l", col("scodes"), col("qraw")) * col("sscale"))
-      .withColumn("trk", row_number().over(wT))
-      .filter(col("trk") <= shortlist)
-      .select("query_id", "doc_id", "chunk_ix")
-    // phase 2: exact full-width cosine re-rank of the survivors
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index.join(broadcast(short), Seq("doc_id", "chunk_ix"))
-      .join(broadcast(qdf), "query_id")
-      .select(col("query_id"), col("doc_id"), col("chunk_ix"), col("chunk"),
-        score.as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("query_id", "rank")
+    val route = cellRoute(spark, indexDir, queryFrame(spark, queries), nprobe)
+    // the scan reads (cell, ids, scodes, sscale); the exact raw vector
+    // is NOT touched until the re-rank
+    val adc = route.cands.select(col("query_id"), col("doc_id"),
+      col("chunk_ix"), (call_function("graft_dot_l", col("scodes"),
+        col("qraw")) * col("sscale")).as("adc"))
+    rerank(route.cands, shortlist(adc, n, one, col("adc").desc), k, one)
   }
 
   /** G47 (r13): the JL-projected cell read — B28's dimension-reduction
@@ -1370,61 +1179,30 @@ object VectorStore {
   def searchRpCells(spark: SparkSession, indexDir: String,
       query: String, k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 50): DataFrame =
-    searchRpCellsBatch(spark, indexDir, Seq(query), k, nprobe, shortlist)
+    rpRead(spark, indexDir, Seq(query), k, nprobe, shortlist, one = true)
       .drop("query_id")
 
   /** Batch twin of [[searchRpCells]] — many queries through ONE
     * probed/projected/re-rank plan. Output schema = [[searchBatch]]. */
   def searchRpCellsBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5, nprobe: Int = 2,
-      shortlist: Int = 50): DataFrame = {
-    import spark.implicits._
-    require(spark.read.parquet(indexDir).schema.fieldNames.contains("pcodes"),
+      shortlist: Int = 50): DataFrame =
+    rpRead(spark, indexDir, queries, k, nprobe, shortlist, one = false)
+
+  private def rpRead(spark: SparkSession, indexDir: String,
+      queries: Seq[String], k: Int, nprobe: Int, n: Int,
+      one: Boolean): DataFrame = {
+    requireColumn(spark, indexDir, "pcodes",
       s"searchRpCells needs the pcodes column — this store predates JL " +
         "coding; re-ingest it (mode=overwrite) to serve the projected path")
-    val centroids = readCells(spark, indexDir)
-    val qdf = queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("query_id", "qtext")
-      .withColumn("qraw", rawWeights(col("qtext")))
-      .withColumn("qp", rpProject(col("qraw")))
-      .select("query_id", "qraw", "qp")
-    val qraws = qdf.select("query_id", "qraw").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val probePairs = qraws.flatMap { case (qid, qraw) =>
-      probeCellsFor(centroids, qraw, nprobe).map(cell => (qid, cell))
-    }.toSeq
-    val probes = probePairs.toDF("query_id", "cell")
-    val index = spark.read.parquet(indexDir)
-      .filter(col("cell").isInCollection(probePairs.map(_._2).distinct))
-    // phase 1: projected-dot shortlist — the scan reads (cell, ids,
-    // pcodes); neither raw nor chunk is touched until the tail
-    val wT = Window.partitionBy("query_id")
-      .orderBy(col("pdot").desc, col("doc_id"), col("chunk_ix"))
-    val short = index
-      .select(col("cell"), col("doc_id"), col("chunk_ix"), col("pcodes"))
-      .join(broadcast(probes), "cell")
-      .join(broadcast(qdf.select("query_id", "qp")), "query_id")
-      .withColumn("pdot", call_function("graft_dot_l", col("pcodes"), col("qp")))
-      .withColumn("trk", row_number().over(wT))
-      .filter(col("trk") <= shortlist)
-      .select("query_id", "doc_id", "chunk_ix")
-    // phase 2: exact full-width cosine re-rank of the survivors
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_ix"))
-    index.join(broadcast(short), Seq("doc_id", "chunk_ix"))
-      .join(broadcast(qdf.select("query_id", "qraw")), "query_id")
-      .select(col("query_id"), col("doc_id"), col("chunk_ix"), col("chunk"),
-        score.as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "score")
-      .orderBy("query_id", "rank")
+    val route = cellRoute(spark, indexDir,
+      queryFrame(spark, queries).withColumn("qp", rpProject(col("qraw"))), nprobe)
+    // the scan reads (cell, ids, pcodes); neither raw nor chunk is
+    // touched until the re-rank
+    val approx = route.cands.select(col("query_id"), col("doc_id"),
+      col("chunk_ix"), call_function("graft_dot_l", col("pcodes"),
+        col("qp")).as("pdot"))
+    rerank(route.cands, shortlist(approx, n, one, col("pdot").desc), k, one)
   }
 
   /** Targeted delete — the engine-side analog of the reference's
@@ -1575,19 +1353,13 @@ object VectorStore {
     * the graph's edge metric IS the serving metric. */
   private def topEdges(spark: SparkSession, nodes: DataFrame,
       cand: DataFrame, degree: Int): DataFrame = {
-    val dot = call_function("graft_dot_l", col("sr"), col("dr"))
-    val ssS = call_function("graft_dot_l", col("sr"), col("sr"))
-    val ssD = call_function("graft_dot_l", col("dr"), col("dr"))
-    val cosSD = when(ssS > 0 && ssD > 0,
-      dot.cast("double") / (sqrt(ssS.cast("double")) * sqrt(ssD.cast("double"))))
-      .otherwise(lit(0.0d))
     val w = Window.partitionBy("src").orderBy(col("cos").desc,
       col("dst.doc_id"), col("dst.chunk_ix"))
     cand
       .join(nodes.select(col("nid").as("src"), col("bucket").as("sbucket"),
         col("raw").as("sr")), "src")
       .join(nodes.select(col("nid").as("dst"), col("raw").as("dr")), "dst")
-      .withColumn("cos", cosSD)
+      .withColumn("cos", cosine(col("sr"), col("dr")))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= degree)
       .select(col("src.doc_id").as("src_doc"), col("src.chunk_ix").as("src_ix"),
@@ -1804,8 +1576,9 @@ object VectorStore {
     * schema = [[search]]. */
   def searchGraph(spark: SparkSession, indexDir: String, query: String,
       k: Int = 5): DataFrame =
-    searchGraphBatch(spark, indexDir, Seq(query), k)
-      .drop("query_id")
+    graphWalk(spark, indexDir, Seq(query), k, GraphEntries, GraphBeam,
+      GraphHops, seedFromBuckets = true, countTouched = false,
+      one = true)._1.drop("query_id")
 
   /** G31 batch twin (the G23/G26 shape for the graph path): many queries
     * walk the edge sidecar through ONE plan. The frontier carries a
@@ -1854,7 +1627,9 @@ object VectorStore {
     * like [[searchSq8Cells]]. */
   def searchGraphSq8(spark: SparkSession, indexDir: String, query: String,
       k: Int = 5): DataFrame =
-    searchGraphSq8Batch(spark, indexDir, Seq(query), k).drop("query_id")
+    graphWalk(spark, indexDir, Seq(query), k, GraphEntries, GraphBeam,
+      GraphHops, seedFromBuckets = true, countTouched = false,
+      sq8Hops = true, one = true)._1.drop("query_id")
 
   /** Batch twin of [[searchGraphSq8]] — knobs as [[searchGraphBatch]]. */
   def searchGraphSq8Batch(spark: SparkSession, indexDir: String,
@@ -1867,25 +1642,29 @@ object VectorStore {
   /** The walk body behind [[searchGraphBatch]]; `countTouched = true`
     * additionally returns the number of (query, vector) score
     * evaluations the walk performed — the cost axis of the published
-    * tuning table (extra per-hop counts run only when asked). */
+    * tuning table (extra per-hop counts run only when asked). `one`
+    * marks a single-query read: every beam, entry pick and the final
+    * cut then rank through the read core's TakeOrderedAndProject form. */
   private[graft] def graphWalk(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int, entries: Int, beamIn: Int, hops: Int,
       seedFromBuckets: Boolean, countTouched: Boolean,
-      sq8Hops: Boolean = false): (DataFrame, Long) = {
+      sq8Hops: Boolean = false, one: Boolean = false): (DataFrame, Long) = {
     // the per-hop beam must cover the asked-for k: the final cut runs
     // over the LAST frontier, which holds at most `beam` rows per query
     val beam = math.max(beamIn, k)
+    // refuse a pre-sq8 store before any Spark work (the sq8 read rule)
+    if (sq8Hops) requireColumn(spark, indexDir, "scodes",
+      s"searchGraphSq8 needs the scodes column — this store predates " +
+        "SQ8 coding; re-ingest it (mode=overwrite) to walk on codes")
     spark.catalog.refreshByPath(indexDir)
-    val nodes = spark.read.parquet(indexDir)
-      .select(struct(col("doc_id"), col("chunk_ix")).as("nid"),
-        col("bucket"), col("chunk"), col("raw"))
+    val index = spark.read.parquet(indexDir)
+    val nid = struct(col("doc_id"), col("chunk_ix")).as("nid")
+    val nodes = index.select(nid, col("bucket"), col("chunk"), col("raw"))
     val edges = spark.read.parquet(s"$indexDir/$GraphDir/edges.parquet")
       .select(struct(col("src_doc"), col("src_ix")).as("src"),
         struct(col("dst_doc"), col("dst_ix")).as("dst"))
-    val qdf = { import spark.implicits._
-      queries.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("query_id", "qtext") }
-      .select(col("query_id"), rawWeights(col("qtext")).as("qraw"))
+    val qdf = queryFrame(spark, queries)
+    val nidTies = Seq(col("nid.doc_id"), col("nid.chunk_ix"))
     val entryH = md5(concat_ws(":",
       col("nid.doc_id").cast("string"), col("nid.chunk_ix").cast("string")))
     def globalStart(qs: DataFrame): DataFrame = {
@@ -1907,13 +1686,7 @@ object VectorStore {
         // legacy sidecars or wider-than-stored entry requests. Both
         // derivations pick the identical entry set: a per-query winner
         // is necessarily within its own bucket's md5-top-`width`.
-        val probes = qdf.select(col("query_id"),
-          bucketOf(col("qraw")).as("qbucket"))
-          .select(col("query_id"), explode(array(
-            col("qbucket") +: (0 until Planes).map(p =>
-              col("qbucket").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
-        val wE = Window.partitionBy("query_id")
-          .orderBy(col("h"), col("nid.doc_id"), col("nid.chunk_ix"))
+        val probes = bucketProbes(qdf).select("query_id", "bucket")
         val entPath = s"$indexDir/$GraphDir/$EntriesFile"
         val fs = org.apache.hadoop.fs.FileSystem.get(
           spark.sparkContext.hadoopConfiguration)
@@ -1927,20 +1700,11 @@ object VectorStore {
             else Some(ent.select(col("bucket"), col("h"),
               struct(col("doc_id"), col("chunk_ix")).as("nid")))
           }
-        val seeded = sidecar match {
-          case Some(ent) =>
-            ent.join(broadcast(probes), "bucket")
-              .withColumn("rk", row_number().over(wE))
-              .filter(col("rk") <= entries)
-              .select(col("query_id"), col("nid"))
-          case None =>
-            nodes.select(col("nid"), col("bucket"))
-              .join(broadcast(probes), "bucket")
-              .withColumn("h", entryH)
-              .withColumn("rk", row_number().over(wE))
-              .filter(col("rk") <= entries)
-              .select(col("query_id"), col("nid"))
-        }
+        val candidates = sidecar.getOrElse(
+          nodes.select(col("nid"), col("bucket")).withColumn("h", entryH))
+        val seeded = best(candidates.join(broadcast(probes), "bucket"),
+            entries, one, col("h"), nidTies)
+          .select(col("query_id"), col("nid"))
         // a query whose 9 probed buckets hold NO rows gets global
         // entries instead of an empty answer (bounded: the unseeded
         // query set is tiny by construction, and usually empty)
@@ -1949,34 +1713,13 @@ object VectorStore {
             Seq("query_id"), "left_anti")
         seeded.unionByName(globalStart(unseeded))
       } else globalStart(qdf.select(col("query_id")))
-    val dotQC = call_function("graft_dot_l", col("raw"), col("qraw"))
-    val ssC = call_function("graft_dot_l", col("raw"), col("raw"))
-    val ssQ = call_function("graft_dot_l", col("qraw"), col("qraw"))
-    val score = when(ssC > 0 && ssQ > 0,
-      dotQC.cast("double") / (sqrt(ssC.cast("double")) * sqrt(ssQ.cast("double"))))
-      .otherwise(lit(0.0d))
+    val score = cosine(col("raw"), col("qraw"))
     // sq8 hop metric (G45): the per-chunk scale d cancels from
     // d·Σq·c / (d·√Σc² · √Σq²), so hops rank by pure code arithmetic —
     // exact int64 inside, one IEEE division, no scale column read
-    val hopNodes =
-      if (!sq8Hops) nodes.select(col("nid"), col("raw"))
-      else {
-        val idx = spark.read.parquet(indexDir)
-        require(idx.schema.fieldNames.contains("scodes"),
-          s"searchGraphSq8 needs the scodes column — this store predates " +
-            "SQ8 coding; re-ingest it (mode=overwrite) to walk on codes")
-        idx.select(struct(col("doc_id"), col("chunk_ix")).as("nid"),
-          col("scodes"))
-      }
-    val dot8 = call_function("graft_dot_l", col("scodes"), col("qraw"))
-    val ss8 = call_function("graft_dot_l", col("scodes"), col("scodes"))
-    val hopScore =
-      if (!sq8Hops) score
-      else when(ss8 > 0 && ssQ > 0, dot8.cast("double") /
-          (sqrt(ss8.cast("double")) * sqrt(ssQ.cast("double"))))
-        .otherwise(lit(0.0d))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("nid.doc_id"), col("nid.chunk_ix"))
+    val (hopNodes, hopScore) =
+      if (!sq8Hops) (nodes.select(col("nid"), col("raw")), score)
+      else (index.select(nid, col("scodes")), cosine(col("scodes"), col("qraw")))
     var touched = 0L
     def hop(f: DataFrame): DataFrame = {
       val fc = f.select(col("query_id"), col("nid"))
@@ -1984,11 +1727,10 @@ object VectorStore {
         edges.join(broadcast(fc), col("nid") === col("src"))
           .select(col("query_id"), col("dst").as("nid"))).distinct()
       if (countTouched) touched += grown.count()
-      hopNodes.join(broadcast(grown), "nid")
-        .join(broadcast(qdf), "query_id")
-        .select(col("query_id"), col("nid"), hopScore.as("score"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= beam)
+      best(hopNodes.join(broadcast(grown), "nid")
+          .join(broadcast(qdf), "query_id")
+          .select(col("query_id"), col("nid"), hopScore.as("score")),
+        beam, one, col("score").desc, nidTies)
         .select(col("query_id"), col("nid"), col("score"))
     }
     val last = (1 to hops)
@@ -2001,9 +1743,7 @@ object VectorStore {
         .join(broadcast(last.select(col("query_id"), col("nid"))), Seq("nid"))
         .join(broadcast(qdf), "query_id")
         .select(col("query_id"), col("nid"), score.as("score"))
-    val out = finalScored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val out = best(finalScored, k, one, col("score").desc, nidTies)
       .join(nodes.select(col("nid"), col("chunk")), "nid")
       .select(col("query_id"), col("rank"), col("nid.doc_id").as("doc_id"),
         col("nid.chunk_ix").as("chunk_ix"), col("chunk"), col("score"))

@@ -204,19 +204,24 @@ object ZoneMaps {
     * and scan planning. O(files) work, no data read. */
   def planFiles(spark: SparkSession, path: String,
       lo: Long, hi: Long): (Seq[String], Int) = {
-    spark.catalog.refreshByPath(zonemapDir(path)) // sidecar may be rewritten
-    val zmDf = spark.read.parquet(zonemapDir(path))
-      .select("file", "zmin", "zmax")
-    // the long-range API needs long zones — a sidecar built on another
-    // type would otherwise surface as a bare ClassCastException per row
-    require(zmDf.schema("zmin").dataType ==
-        org.apache.spark.sql.types.LongType,
-      s"zone map at $path is keyed by ${zmDf.schema("zmin").dataType.sql}, " +
-        "not BIGINT — planFiles/readRange serve long ranges only")
-    val zm = zmDf.collect() // O(files) sidecar rows
+    val zm = longZones(spark, path, "planFiles/readRange serve long ranges only")
     val keep = zm.filter(r => !r.isNullAt(1) &&
       r.getLong(2) >= lo && r.getLong(1) <= hi)
-    (keep.map(_.getString(0)).toSeq, zm.length)
+    (keep.map(_.getString(0)), zm.length)
+  }
+
+  /** The sidecar's (file, zmin, zmax, n_rows) rows, O(files), read on the
+    * driver by [[readZones]] — no Spark job for BIGINT zones. The long
+    * APIs need long zones: a sidecar built on another type would
+    * otherwise surface as a bare ClassCastException per row. */
+  private def longZones(spark: SparkSession, path: String,
+      serves: String): Seq[Row] = {
+    val (schema, rows) = readZones(spark, zonemapDir(path)).getOrElse(
+      throw new IllegalArgumentException(s"no zone map at ${zonemapDir(path)}"))
+    require(schema("zmin").dataType == LongType,
+      s"zone map at $path is keyed by ${schema("zmin").dataType.sql}, " +
+        s"not BIGINT — $serves")
+    rows
   }
 
   /** Key-SET pruning (r10; join shape bin-decomposed r11): the files
@@ -240,15 +245,7 @@ object ZoneMaps {
     * tracking the corpus. Returns (kept files, total mapped files). */
   def planFilesForKeys(spark: SparkSession, path: String,
       keys: DataFrame): (Seq[String], Int) = {
-    spark.catalog.refreshByPath(zonemapDir(path))
-    val zmDf = spark.read.parquet(zonemapDir(path))
-      .select("file", "zmin", "zmax")
-    require(zmDf.schema("zmin").dataType ==
-        org.apache.spark.sql.types.LongType,
-      s"zone map at $path is keyed by ${zmDf.schema("zmin").dataType.sql}, " +
-        "not BIGINT — planFilesForKeys serves long keys only")
-    // O(files) sidecar rows on the driver — the planFiles discipline
-    val zm = zmDf.collect()
+    val zm = longZones(spark, path, "planFilesForKeys serves long keys only")
     val zones = zm.filter(!_.isNullAt(1))
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     if (zones.isEmpty) return (Seq.empty, zm.length)

@@ -200,4 +200,13 @@ class FilteredStoreSpec extends AnyFunSuite {
       .collect()
     assert(!gone.exists(_.getAs[Long]("doc_id") == 7L))
   }
+
+  test("golden reads: the filtered cell route, single and batch, hashes as recorded") {
+    import GoldenReads.Route
+    val d = indexDir
+    GoldenReads.check(spark, GoldenReads.queries(spark, d), Seq(
+      Route("cellsFiltered", VectorStore.searchCellsFiltered(spark, d, _, chan("ch3"), 5),
+        VectorStore.searchCellsFilteredBatch(spark, d, _, chan("ch3"), 5))),
+      Map("cellsFiltered" -> (("eb5a0d2b46996eda", "eb5a0d2b46996eda"))))
+  }
 }

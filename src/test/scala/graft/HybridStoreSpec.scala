@@ -447,4 +447,14 @@ class HybridStoreSpec extends AnyFunSuite {
         && l.contains("tbkt")),
       s"postings scan not partition-pruned on tbkt:\n$plan")
   }
+
+  test("golden reads: the dense leg over a pre-filtered index hashes as recorded") {
+    import GoldenReads.Route
+    import graft.operators.DenseLeg
+    val idx = spark.read.parquet(indexDir).filter(col("doc_id") % 2 === 1)
+    GoldenReads.check(spark, GoldenReads.queries(spark, indexDir), Seq(
+      Route("denseLeg", q => DenseLeg(spark, idx, Seq(q), 5).drop("query_id"),
+        DenseLeg(spark, idx, _, 5), topK = false)),
+      Map("denseLeg" -> (("52a755fd578c00bf", "52a755fd578c00bf"))))
+  }
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.collection.concurrent.TrieMap
 
-/** What `body` ran: its Spark jobs (scoped by a fresh job group, so
-  * concurrent suites stay out), the jobs per SQL execution, and each
-  * execution's initial physical plan text. */
+/** What `body` ran: its Spark jobs and SQL executions (scoped by a
+  * fresh job group, so concurrent work stays out), the jobs per SQL
+  * execution, and each execution's initial physical plan text. */
 final case class JobTrace(jobs: Int, jobsByExecution: Map[Long, Int],
     plans: Map[Long, String]) {
   /** The executions whose plan text matches `pattern`. */
@@ -33,7 +33,7 @@ object JobCounter {
               byExec.update(e, byExec.getOrElse(e, 0) + 1)))
         }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
           plans.update(s.executionId, s.physicalPlanDescription)
         case _ =>
       }

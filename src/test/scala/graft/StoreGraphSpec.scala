@@ -431,4 +431,16 @@ class StoreGraphSpec extends AnyFunSuite {
     val newSrc = edges.filter(col("src_doc") >= 50).count()
     assert(newSrc > 0, "rebuilt graph has no edges from appended chunks")
   }
+
+  test("golden reads: both graph walks, single and batch, hash as recorded") {
+    import GoldenReads.Route
+    val d = indexDir
+    GoldenReads.check(spark, GoldenReads.queries(spark, d), Seq(
+      Route("graph", VectorStore.searchGraph(spark, d, _, 5),
+        VectorStore.searchGraphBatch(spark, d, _, 5)),
+      Route("graphSq8", VectorStore.searchGraphSq8(spark, d, _, 5),
+        VectorStore.searchGraphSq8Batch(spark, d, _, 5))),
+      Map("graph" -> (("cbd05770a12d8188", "cbd05770a12d8188")),
+        "graphSq8" -> (("cbd05770a12d8188", "cbd05770a12d8188"))))
+  }
 }

@@ -127,4 +127,12 @@ class StoreRpSpec extends AnyFunSuite {
     assert(hits.nonEmpty && hits.head.getAs[Long]("doc_id") == row.getLong(0),
       s"appended chunk lost on the cell path: ${hits.headOption}")
   }
+
+  test("golden reads: the rp route, single and batch, hashes as recorded") {
+    import GoldenReads.Route
+    GoldenReads.check(spark, GoldenReads.queries(spark, dir), Seq(
+      Route("rp", VectorStore.searchRpCells(spark, dir, _, 5),
+        VectorStore.searchRpCellsBatch(spark, dir, _, 5))),
+      Map("rp" -> (("321f2da4d7d91c6d", "321f2da4d7d91c6d"))))
+  }
 }

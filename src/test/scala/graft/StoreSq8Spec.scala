@@ -174,4 +174,12 @@ class StoreSq8Spec extends AnyFunSuite {
     assert(hits.nonEmpty && hits.head.getAs[Long]("doc_id") == row.getLong(0),
       s"appended chunk lost on the cell path: ${hits.headOption}")
   }
+
+  test("golden reads: the sq8 route, single and batch, hashes as recorded") {
+    import GoldenReads.Route
+    GoldenReads.check(spark, GoldenReads.queries(spark, dir), Seq(
+      Route("sq8", VectorStore.searchSq8Cells(spark, dir, _, 5),
+        VectorStore.searchSq8CellsBatch(spark, dir, _, 5))),
+      Map("sq8" -> (("321f2da4d7d91c6d", "321f2da4d7d91c6d"))))
+  }
 }

@@ -830,4 +830,49 @@ class VectorStoreSpec extends AnyFunSuite {
     assert(after.count() == settledCount, "replay changed a settled index")
     assert(after.filter(col("doc_id") === 9).count() == 0)
   }
+
+  test("golden reads: every route, single and batch, hashes as recorded") {
+    import GoldenReads.Route
+    val d = indexDir
+    val qs = GoldenReads.queries(spark, d)
+    GoldenReads.check(spark, qs, Seq(
+      Route("search", VectorStore.search(spark, d, _, 5),
+        VectorStore.searchBatch(spark, d, _, 5)),
+      Route("tagRange", VectorStore.searchTagRange(spark, d, _, 0L, 0L, 5),
+        VectorStore.searchTagRangeBatch(spark, d, _, 0L, 0L, 5)),
+      Route("diverse", VectorStore.searchDiverse(spark, d, _, 5),
+        VectorStore.searchDiverseBatch(spark, d, _, 5)),
+      Route("compressed", VectorStore.searchCompressed(spark, d, _, 5),
+        VectorStore.searchCompressedBatch(spark, d, _, 5)),
+      Route("truncated", VectorStore.searchTruncated(spark, d, _, 5),
+        VectorStore.searchTruncatedBatch(spark, d, _, 5)),
+      Route("cells", VectorStore.searchCells(spark, d, _, 5),
+        VectorStore.searchCellsBatch(spark, d, _, 5)),
+      Route("compressedCells", VectorStore.searchCompressedCells(spark, d, _, 5),
+        VectorStore.searchCompressedCellsBatch(spark, d, _, 5))),
+      // recorded on the code before the read core was unified
+      Map(
+        "search" -> (("cbd05770a12d8188", "cbd05770a12d8188")),
+        "tagRange" -> (("cbd05770a12d8188", "cbd05770a12d8188")),
+        "diverse" -> (("2e82283573bbb29f", "5a25e80384a4093d")),
+        "compressed" -> (("5a2fe4dbb02e1589", "5a2fe4dbb02e1589")),
+        "truncated" -> (("cbd05770a12d8188", "cbd05770a12d8188")),
+        "cells" -> (("321f2da4d7d91c6d", "321f2da4d7d91c6d")),
+        "compressedCells" -> (("96941150742919f6", "96941150742919f6"))))
+  }
+
+  test("single search, searchCells and searchCompressed stay within their job counts") {
+    val q = GoldenReads.queries(spark, indexDir).head
+    // (read, the jobs it ran before the read core was unified)
+    val runs = Seq(
+      ("search", () => VectorStore.search(spark, indexDir, q, 5).collect(), 4),
+      ("searchCells", () => VectorStore.searchCells(spark, indexDir, q, 5).collect(), 4),
+      ("searchCompressed", () =>
+        VectorStore.searchCompressed(spark, indexDir, q, 5).collect(), 10))
+    runs.foreach { case (name, run, recorded) =>
+      val jobs = JobCounter(spark)(run())._2.jobs
+      info(s"$name: $jobs jobs (recorded $recorded)")
+      assert(jobs <= recorded, s"$name ran $jobs jobs, more than the recorded $recorded")
+    }
+  }
 }
