@@ -50,6 +50,10 @@ object IngestJob {
     val cfg = GraftConfig.load()
     val stateFile = s"$outDir/state.json"
     val indexDir = s"$outDir/index"
+    // store open, before any export or Spark work: a store of another
+    // format is refused here, not after this run's files are written
+    if (VectorStore.occupied(spark, indexDir))
+      VectorStore.requireFormat(spark, indexDir)
     val lastRun = GraftConfig.loadLastRun(stateFile)
     val lookbackS = cfg.threadMaxAgeDays * 86400L
     val startedAt = System.currentTimeMillis() / 1000

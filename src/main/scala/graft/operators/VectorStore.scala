@@ -119,8 +119,7 @@ object VectorStore {
     * codebook: appends reuse it, because codes cut along two different
     * permutations don't compare. Permutations preserve dot products, so
     * the exact re-rank tail of [[searchCompressed]] is untouched — only
-    * the ADC approximation sees the balanced subspaces. A store written
-    * before this sidecar existed serves with the identity permutation. */
+    * the ADC approximation sees the balanced subspaces. */
   private val PermFile = "perm.parquet"
 
   private def trainPerm(batch: DataFrame): Seq[Int] = {
@@ -138,16 +137,10 @@ object VectorStore {
     }
   }
 
-  private def readPerm(spark: SparkSession, indexDir: String): Option[Seq[Int]] = {
-    val p = s"$indexDir/$PqDir/$PermFile"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(p)))
-      Some(ParquetFooters.rows(spark, p)
-        .map(g => (g.getInteger("p", 0), g.getInteger("src", 0)))
-        .sortBy(_._1).map(_._2))
-    else None
-  }
+  private def readPerm(spark: SparkSession, indexDir: String): Seq[Int] =
+    ParquetFooters.rows(spark, s"$indexDir/$PqDir/$PermFile")
+      .map(g => (g.getInteger("p", 0), g.getInteger("src", 0)))
+      .sortBy(_._1).map(_._2)
 
   /** The frozen K-row cell summary (cell, Σ raw, members), read on the
     * driver — every cell-probed read and every append uses this one
@@ -194,6 +187,62 @@ object VectorStore {
   private def bucketOf(raw: Column): Column =
     element_at(call_function("graft_lsh_buckets", raw, lit(1), lit(Planes)), 1)
 
+  /** The store format this code writes and reads: every frozen artifact
+    * (OPQ perm, PQ codebook, cells, residual codebook) and every encoded
+    * column (codes, rcodes, scodes/sscale, pcodes) and the lexical
+    * sidecar with positions exist whenever the store does. Creation (an
+    * overwrite ingest, an append into a missing or empty dir, retrain
+    * staging) writes it last as the `_graft_store.json` marker — a `_`
+    * name, so Spark's file index and [[ParquetFooters.files]] skip it. */
+  private val FormatVersion = 1
+  private val FormatFile = "_graft_store.json"
+
+  private def fsOf(spark: SparkSession) = org.apache.hadoop.fs.FileSystem.get(
+    spark.sparkContext.hadoopConfiguration)
+
+  /** The format gate every operation on an existing store runs before any
+    * Spark work: a store without the marker, or with another version, is
+    * refused with one message. An overwrite ingest re-creates it. */
+  private[graft] def requireFormat(spark: SparkSession, indexDir: String): Unit = {
+    val fs = fsOf(spark)
+    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/$FormatFile")
+    val found = if (!fs.exists(marker)) "none (no format marker)" else {
+      val json = readText(fs, marker)
+      """"format":(\d+)""".r.findFirstMatchIn(json).fold(json)(_.group(1))
+    }
+    require(found == FormatVersion.toString,
+      s"store $indexDir has format version $found, but this code reads " +
+        s"format $FormatVersion only: re-ingest it with mode=overwrite")
+  }
+
+  /** The index frame of an existing store, after [[requireFormat]]. */
+  private[graft] def open(spark: SparkSession, indexDir: String): DataFrame = {
+    requireFormat(spark, indexDir)
+    spark.read.parquet(indexDir)
+  }
+
+  /** Does `indexDir` hold anything? An append into a missing or empty dir
+    * creates the store; into anything else it needs [[requireFormat]]. */
+  private[graft] def occupied(spark: SparkSession, indexDir: String): Boolean = {
+    val fs = fsOf(spark)
+    val dir = new org.apache.hadoop.fs.Path(indexDir)
+    fs.exists(dir) && fs.listStatus(dir).nonEmpty
+  }
+
+  /** Commit `json` at `fin` atomically: write a `.tmp` sibling, then
+    * rename it into place, so no reader sees a torn file; a failed rename
+    * fails the operation. Every manifest and the format marker commit
+    * here. */
+  private[operators] def commitJson(fs: org.apache.hadoop.fs.FileSystem,
+      fin: org.apache.hadoop.fs.Path, json: String): org.apache.hadoop.fs.Path = {
+    val tmp = new org.apache.hadoop.fs.Path(fin.getParent,
+      fin.getName.stripSuffix(".json") + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
+    require(fs.rename(tmp, fin), s"commit failed: $tmp -> $fin")
+    fin
+  }
+
   /** Ingest: documents(doc_id, text, …) → chunk → embed → bucket →
     * parquet index partitioned by bucket. `mode` "append" adds an
     * incremental batch to an existing index. Returns the batch's chunk
@@ -215,7 +264,6 @@ object VectorStore {
     // column on the docs batch (map<string,string> by convention) rides
     // every chunk row into the index, so serving reads can fold a
     // predicate BELOW their shortlists (B21's pre-filter discipline).
-    // Legacy rules below mirror perm/rescb/scodes.
     val hasMeta = docs.columns.contains("meta")
     val metaIn: Seq[Column] = if (hasMeta) Seq(col("meta")) else Nil
     val chunks = docs
@@ -237,6 +285,11 @@ object VectorStore {
     * the written schema is position-identical to a fresh creation. */
   private def ingestChunks(chunks: DataFrame, indexDir: String,
       mode: String, batchTagCol: Column, cells: Int): Long = {
+    val spark = chunks.sparkSession
+    // an append to an existing store reuses every frozen artifact; one
+    // into a missing or empty dir creates the store like an overwrite
+    val reuse = mode == "append" && occupied(spark, indexDir)
+    if (reuse) requireFormat(spark, indexDir)
     // `raw` (exact int64 weights) is kept in the index: search ranks with
     // the codegen'd graft_dot_l kernel over it — the interpreted
     // aggregate/zip_with double dot it replaces was the scan-time cost of
@@ -253,31 +306,14 @@ object VectorStore {
       // codes from two different codebooks don't compare. The sidecar is
       // written AFTER the index data: an overwrite-mode index write wipes
       // indexDir, sidecar included.
-      val spark = embedded.sparkSession
       val cbPath = s"$indexDir/$PqDir/codebook.parquet"
       val permPath = s"$indexDir/$PqDir/$PermFile"
       val cellPath = s"$indexDir/$CellsDir/centroids.parquet"
       val resCbPath = s"$indexDir/$PqDir/$ResCbFile"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      def frozen(p: String): Boolean =
-        mode == "append" && fs.exists(new org.apache.hadoop.fs.Path(p))
       // the OPQ permutation freezes FIRST: the codebook's subspaces are
-      // defined over the permuted layout, so perm reuse gates like the
-      // codebook's (append → frozen; creation → trained on this batch).
-      // A store whose codebook predates the perm sidecar was coded over
-      // the IDENTITY layout — appending to it must keep that layout (and
-      // must NOT write a sidecar): training a fresh permutation here
-      // would encode the batch against subspaces the frozen codebook
-      // never saw and then permute every future query, corrupting ADC
-      // distances for all previously-ingested rows.
-      val reuse = frozen(cbPath)
-      val reusePerm = frozen(permPath)
-      val legacyIdentity = reuse && !reusePerm
+      // defined over the permuted layout, so an append reuses both
       val perm: Seq[Int] =
-        if (reusePerm) readPerm(spark, indexDir).get
-        else if (legacyIdentity) 0 until Dim
-        else trainPerm(embedded)
+        if (reuse) readPerm(spark, indexDir) else trainPerm(embedded)
       // Every frozen artifact is read ONCE on the driver (parquet-hadoop,
       // no Spark job) and every trained one collected once: the encode
       // below is row-local codegen over these literals, and driver arrays
@@ -305,8 +341,7 @@ object VectorStore {
       // assignment by exact int64 sqdist, centroid = exact sum + count),
       // appends assign against the frozen summary so cell ids stay
       // comparable across batches.
-      val reuseCells = frozen(cellPath)
-      val trainedCells = if (reuseCells) None else {
+      val trainedCells = if (reuse) None else {
         val wj = Window.orderBy("doc_id", "chunk_ix")
         val seeds = embedded.select("doc_id", "chunk_ix", "raw")
           .orderBy("doc_id", "chunk_ix").limit(cells)
@@ -337,18 +372,7 @@ object VectorStore {
       val rres = scaledResidual(col("raw"), element_at(typedLit(centroids
         .map { case (c, csum, m) => c -> cmeanScaled(csum.toSeq, m) }.toMap),
         col("cell")))
-      // A store whose codebook predates the residual sidecar (pre-r10)
-      // carries no `rcodes` column: training a fresh residual codebook
-      // from an APPEND batch and coding only the new rows would leave a
-      // mixed-schema index where every legacy row silently vanishes from
-      // the compressed-cells read (or breaks its schema inference). The
-      // perm sidecar's legacyIdentity rule applies here too: such a
-      // store keeps appending WITHOUT residual codes and writes no
-      // rescb sidecar — [[searchCompressedCellsBatch]] refuses loudly
-      // until a full re-ingest upgrades the store.
-      val reuseRes = frozen(resCbPath)
-      val legacyRes = reuse && !reuseRes
-      val trainedRes = if (legacyRes || reuseRes) None else {
+      val trainedRes = if (reuse) None else {
         // same seeding + one exact Lloyd round as the raw codebook
         // (r11): the residual codebook trains on the creation batch's
         // scaled residuals instead of carrying its first-K samples
@@ -362,60 +386,50 @@ object VectorStore {
         Some(lloydRefine(subRows(withRes, col("rres")), seeds)
           .localCheckpoint(true))
       }
-      val rescb =
-        if (legacyRes) None
-        else Some(trainedRes.fold(readCodebook(spark, resCbPath))(codebookRows))
+      val rescb = trainedRes.fold(readCodebook(spark, resCbPath))(codebookRows)
       // SQ8 codes (G44, r12): per-chunk symmetric int8 quantization of
       // the exact raw weights — the serving rung between the raw-vector
       // cell scan and the PQ/residual ADC. The per-chunk scale
       // FACTORIZES out of the dot product (annSq8's B6 scheme), so the
       // rung needs NO trained artifact: every row self-scales, appends
-      // and edits are consistent by construction. A store written
-      // before this column existed stays scodes-free on append (the
-      // perm/rescb legacy rule) and the sq8 read refuses it loudly.
-      // The field names come from one data file's footer (no job).
-      val legacyFields: Set[String] =
+      // and edits are consistent by construction. JL-projected codes
+      // (G47, r13) likewise.
+      //
+      // meta rules (meta is optional per store): a meta-carrying store
+      // REFUSES a meta-less append (filtered reads would silently drop
+      // the new rows — worse than failing loudly); a meta-less store
+      // drops the batch's meta (backfilling only the new rows would
+      // serve a partial filter) and filtered reads refuse until
+      // re-ingest. The field names come from one data file's footer.
+      val storedFields: Set[String] =
         if (reuse) ParquetFooters.fieldNames(spark, indexDir).getOrElse(
           throw new IllegalStateException(
             s"store $indexDir has frozen sidecars but no index data files"))
         else Set.empty
-      val sqLegacy = reuse && !legacyFields.contains("scodes")
-      // JL-projected codes (G47, r13): same legacy rule — a store written
-      // before the pcodes column stays pcodes-free on append and the rp
-      // read refuses it loudly
-      val rpLegacy = reuse && !legacyFields.contains("pcodes")
-      // meta legacy rules: a meta-carrying store REFUSES a meta-less
-      // append (filtered reads would silently drop the new rows — worse
-      // than failing loudly); a pre-meta store drops the batch's meta
-      // (backfilling only the new rows would serve a partial filter —
-      // the G47 rule) and filtered reads refuse until re-ingest.
       val hasMeta = chunks.columns.contains("meta")
-      require(!(reuse && legacyFields.contains("meta")) || hasMeta,
+      require(!storedFields.contains("meta") || hasMeta,
         s"store $indexDir carries a `meta` column: append batches must " +
           "carry `meta` too, or filtered reads would silently drop them")
-      val metaLegacy = reuse && hasMeta && !legacyFields.contains("meta")
+      val dropMeta = reuse && hasMeta && !storedFields.contains("meta")
       // one row-local projection, written column order = the store format
       // (an input `orig_tag` feeds batchTagCol and is not written)
-      val indexed0 = celled.select((Seq(col("doc_id"), col("chunk_ix")) ++
-        (if (hasMeta && !metaLegacy) Seq(col("meta")) else Nil) ++
+      val indexed = rpCols(sq8Cols(celled.select((Seq(col("doc_id"),
+        col("chunk_ix")) ++
+        (if (hasMeta && !dropMeta) Seq(col("meta")) else Nil) ++
         Seq(col("chunk"), col("raw"), col("bucket"), col("embedding"),
-          col("cell"), pqCodes(permuteRaw(col("raw"), perm), codebook).as("codes")) ++
-        rescb.map(cb => pqCodes(rres, cb).as("rcodes")) ++
-        Seq(batchTagCol.as("batch_tag"))): _*)
-      val indexed1 = if (sqLegacy) indexed0 else sq8Cols(indexed0)
-      val indexed = if (rpLegacy) indexed1 else rpCols(indexed1)
+          col("cell"), pqCodes(permuteRaw(col("raw"), perm), codebook).as("codes"),
+          pqCodes(rres, rescb).as("rcodes"), batchTagCol.as("batch_tag"))): _*)))
       indexed.write.mode(mode).partitionBy("bucket", "cell").parquet(indexDir)
       // time-axis zone maps: incremental upkeep reads this batch's files'
       // footers only (an overwrite-mode write wiped the old sidecar with
       // the rest of the dir, so it degenerates to a fresh full build there)
       graft.sources.ZoneMaps.appendSidecar(spark, indexDir, "batch_tag")
       // lexical/BM25 sidecar (G49): postings + doclog for the hybrid
-      // read — fresh at creation, generation-append on append; a legacy
-      // store without the sidecar stays lex-free (rule in VectorStoreLex)
+      // read — fresh at creation, generation-append on append
       VectorStoreLex.appendFor(indexDir,
         embedded.select("doc_id", "chunk_ix", "chunk"), create = !reuse)
       trainedCb.foreach(_.coalesce(1).write.mode("overwrite").parquet(cbPath))
-      if (!reusePerm && !legacyIdentity) {
+      if (!reuse) {
         import spark.implicits._
         perm.zipWithIndex.map { case (src, p) => (p, src) }.toDF("p", "src")
           .coalesce(1).write.mode("overwrite").parquet(permPath)
@@ -424,6 +438,10 @@ object VectorStore {
         _.coalesce(1).write.mode("overwrite").parquet(cellPath))
       trainedRes.foreach(
         _.coalesce(1).write.mode("overwrite").parquet(resCbPath))
+      // the format marker commits LAST: a creation cut short leaves a
+      // dir the gate refuses, never a store missing an artifact
+      if (!reuse) commitJson(fsOf(spark), new org.apache.hadoop.fs.Path(
+        s"$indexDir/$FormatFile"), s"""{"format":$FormatVersion}""")
     }
     embedded.unpersist()
     n
@@ -596,9 +614,11 @@ object VectorStore {
     index.join(broadcast(bucketProbes(qf)), "bucket")
 
   /** A cell route: `region` is the union of the probed cells' rows,
-    * `probes` the (cell, query frame row) pairs; `cands` pairs every
-    * region row with each query that probed its cell. */
-  private final case class CellProbe(region: DataFrame, probes: DataFrame) {
+    * `probes` the (cell, query frame row) pairs, `centroids` the frozen
+    * K-row summary they were chosen from; `cands` pairs every region row
+    * with each query that probed its cell. */
+  private final case class CellProbe(region: DataFrame, probes: DataFrame,
+      centroids: Array[(Int, Array[Long], Long)]) {
     def cands: DataFrame = region.join(broadcast(probes), "cell")
   }
 
@@ -608,18 +628,18 @@ object VectorStore {
     * (cell, query frame row) relation pairing each row with the queries
     * that probed its cell. */
   private def cellRoute(spark: SparkSession, indexDir: String, qf: DataFrame,
-      nprobe: Int, pred: Option[Column] = None,
-      centroids: Option[Array[(Int, Array[Long], Long)]] = None): CellProbe = {
-    val pairs = cellProbes(qf, nprobe,
-      centroids.getOrElse(readCells(spark, indexDir))).flatMap {
-        case (q, cells) => cells.map(c => Row.fromSeq(c +: q.toSeq))
-      }
+      nprobe: Int, pred: Option[Column] = None): CellProbe = {
+    requireFormat(spark, indexDir)
+    val centroids = readCells(spark, indexDir)
+    val pairs = cellProbes(qf, nprobe, centroids).flatMap {
+      case (q, cells) => cells.map(c => Row.fromSeq(c +: q.toSeq))
+    }
     val probes = spark.createDataFrame(pairs.asJava,
       StructType(StructField("cell", IntegerType, nullable = false) +:
         qf.schema.fields))
     val scanned = spark.read.parquet(indexDir)
       .filter(col("cell").isInCollection(pairs.map(_.getInt(0)).distinct))
-    CellProbe(pred.fold(scanned)(scanned.filter), probes)
+    CellProbe(pred.fold(scanned)(scanned.filter), probes, centroids)
   }
 
   /** Each candidate with its exact cosine to its query; `withRaw` keeps
@@ -674,15 +694,6 @@ object VectorStore {
     readCodebook(spark, path).toDF("j", "m", "cent")
   }
 
-  /** A refusal for a store written before a read's code column existed
-    * (appends keep such a store without it): scanning the missing column
-    * would fail or silently drop the legacy rows. The field names come
-    * from one data file's footer (no job). */
-  private def requireColumn(spark: SparkSession, indexDir: String,
-      column: String, message: String): Unit =
-    require(ParquetFooters.fieldNames(spark, indexDir).exists(_.contains(column)),
-      message)
-
   /** Search: top-k chunks for a free-text query, probing the query's LSH
     * bucket and its Hamming-1 neighbors. Bucket pruning happens at the
     * parquet partition level (`bucket IN (…)` on the partition column).
@@ -693,7 +704,7 @@ object VectorStore {
     * a TakeOrderedAndProject, never a global-window rank. */
   def search(spark: SparkSession, indexDir: String, query: String, k: Int = 5)
       : DataFrame =
-    searchInBatch(spark, spark.read.parquet(indexDir), Seq(query), k, one = true)
+    searchInBatch(spark, open(spark, indexDir), Seq(query), k, one = true)
       .drop("query_id")
 
   /** Time-windowed serving read (r9): [[search]] restricted to ingest
@@ -705,9 +716,8 @@ object VectorStore {
     * residual row filter inside readRange keeps exactness. */
   def searchTagRange(spark: SparkSession, indexDir: String, query: String,
       lo: Long, hi: Long, k: Int = 5): DataFrame =
-    searchInBatch(spark,
-      graft.sources.ZoneMaps.readRange(spark, indexDir, "batch_tag", lo, hi),
-      Seq(query), k, one = true).drop("query_id")
+    searchInBatch(spark, tagRange(spark, indexDir, lo, hi), Seq(query), k,
+      one = true).drop("query_id")
 
   /** Batch serving path: rank MANY queries through one plan. Each query
     * probes its own LSH buckets; candidates carry their `query_id`, so
@@ -717,15 +727,20 @@ object VectorStore {
     * = [[search]] plus a leading `query_id`. */
   def searchBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5): DataFrame =
-    searchInBatch(spark, spark.read.parquet(indexDir), queries, k)
+    searchInBatch(spark, open(spark, indexDir), queries, k)
 
   /** Batch twin of [[searchTagRange]] (the G23/G26 pattern): many
     * queries against one time window, one zone-map-pruned plan. */
   def searchTagRangeBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], lo: Long, hi: Long, k: Int = 5): DataFrame =
-    searchInBatch(spark,
-      graft.sources.ZoneMaps.readRange(spark, indexDir, "batch_tag", lo, hi),
-      queries, k)
+    searchInBatch(spark, tagRange(spark, indexDir, lo, hi), queries, k)
+
+  /** The index rows of the batches tagged in [lo, hi], zone-map pruned. */
+  private def tagRange(spark: SparkSession, indexDir: String, lo: Long,
+      hi: Long): DataFrame = {
+    requireFormat(spark, indexDir)
+    graft.sources.ZoneMaps.readRange(spark, indexDir, "batch_tag", lo, hi)
+  }
 
   /** The exact bucket-probed read over an index frame — which may be
     * pre-filtered (the hybrid read's dense leg). */
@@ -752,8 +767,7 @@ object VectorStore {
   def searchDiverse(spark: SparkSession, indexDir: String, query: String,
       k: Int = 5, shortlist: Int = 50, lambdaRel: Double = 0.7): DataFrame = {
     import spark.implicits._
-    val cands = bucketCands(spark.read.parquet(indexDir),
-      queryFrame(spark, Seq(query)))
+    val cands = bucketCands(open(spark, indexDir), queryFrame(spark, Seq(query)))
     val rows = best(scored(cands, withRaw = true), shortlist, one = true,
         col("score").desc)
       .select("doc_id", "chunk_ix", "chunk", "score", "raw")
@@ -817,11 +831,11 @@ object VectorStore {
   private def compressedRead(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int, n: Int, one: Boolean): DataFrame = {
     val qf = queryFrame(spark, queries)
-    val cands = bucketCands(spark.read.parquet(indexDir), qf)
+    val cands = bucketCands(open(spark, indexDir), qf)
     // per-query ADC tables: exact int64 subspace distances query ↔ every
-    // centroid, over the store's frozen OPQ layout (identity for
-    // pre-perm stores), one broadcast relation keyed by query_id
-    val perm = readPerm(spark, indexDir).getOrElse(0 until Dim)
+    // centroid, over the store's frozen OPQ layout, one broadcast
+    // relation keyed by query_id
+    val perm = readPerm(spark, indexDir)
     val dtab = qf
       .select(col("query_id"), posexplode(subvecs(permuteRaw(col("qraw"), perm))))
       .select(col("query_id"), col("pos").as("m"), col("col").as("qsub"))
@@ -883,8 +897,7 @@ object VectorStore {
       queries: Seq[String], k: Int, dims: Int, n: Int,
       one: Boolean): DataFrame = {
     require(dims >= 1 && dims <= Dim, s"dims must be in [1, $Dim], got $dims")
-    val cands = bucketCands(spark.read.parquet(indexDir),
-      queryFrame(spark, queries))
+    val cands = bucketCands(open(spark, indexDir), queryFrame(spark, queries))
     // cosine over the TRUNCATED prefixes (the score a dims-wide store
     // would compute; ranking on it is what vec_mrl_recall grades). No
     // distinct: a chunk lives in exactly one bucket partition and a
@@ -961,13 +974,13 @@ object VectorStore {
     topK(cellRoute(spark, indexDir, queryFrame(spark, queries), nprobe,
       pred).cands, k, one)
 
-  /** Loud legacy gate for predicate-taking reads: every column the
-    * predicate references must exist in the index schema. A pre-meta
-    * store (or a typo'd key) fails HERE with the re-ingest message, not
-    * deep inside analysis. */
+  /** Loud gate for predicate-taking reads: every column the predicate
+    * references must exist in the index schema. A store without meta (or
+    * a typo'd key) fails HERE with the re-ingest message, not deep
+    * inside analysis. */
   private[operators] def requireFilterable(spark: SparkSession,
       indexDir: String, pred: Column): Unit = {
-    try spark.read.parquet(indexDir).filter(pred).schema
+    try open(spark, indexDir).filter(pred).schema
     catch {
       case e: org.apache.spark.sql.AnalysisException =>
         throw new IllegalArgumentException(
@@ -1058,10 +1071,7 @@ object VectorStore {
     * probed cells with NO per-candidate division) → exact full-width
     * re-rank of the ≤ shortlist survivors (the B9 tail, same as
     * [[searchCompressed]]). Every sidecar it reads froze at creation and
-    * is reused by appends, so codes from any batch compare. A store
-    * created before residual coding existed has no rcodes at all —
-    * appends keep it that way (ingest's legacyRes rule) and this read
-    * refuses it loudly rather than silently dropping the legacy rows. */
+    * is reused by appends, so codes from any batch compare. */
   def searchCompressedCells(spark: SparkSession, indexDir: String,
       query: String, k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 50): DataFrame =
@@ -1081,17 +1091,8 @@ object VectorStore {
       queries: Seq[String], k: Int, nprobe: Int, n: Int,
       one: Boolean): DataFrame = {
     import spark.implicits._
-    val resCbPath = s"$indexDir/$PqDir/$ResCbFile"
-    require(org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(resCbPath)),
-      s"searchCompressedCells needs the residual codebook sidecar at " +
-        s"$resCbPath — this store predates residual coding (no rcodes); " +
-        "re-ingest it (mode=overwrite) to serve the compressed-cells path")
-    val centroids = readCells(spark, indexDir)
-    val route = cellRoute(spark, indexDir, queryFrame(spark, queries), nprobe,
-      centroids = Some(centroids))
-    val cmeans = centroids
+    val route = cellRoute(spark, indexDir, queryFrame(spark, queries), nprobe)
+    val cmeans = route.centroids
       .map { case (cell, csum, n) => (cell, cmeanScaled(csum, n)) }
       .toSeq.toDF("cell", "cmean")
     // per probed (query, cell): the query's scaled residual against THAT
@@ -1102,7 +1103,7 @@ object VectorStore {
       .select(col("query_id"), col("cell"), posexplode(subvecs(col("qres"))))
       .select(col("query_id"), col("cell"), col("pos").as("m"),
         col("col").as("sub"))
-      .join(broadcast(codebookFrame(spark, resCbPath)), "m")
+      .join(broadcast(codebookFrame(spark, s"$indexDir/$PqDir/$ResCbFile")), "m")
       .withColumn("qdist", call_function("graft_sqdist_l", col("sub"), col("cent")))
       .select("query_id", "cell", "m", "j", "qdist")
     // ADC over stored codes — the scan reads (cell, ids, rcodes)
@@ -1129,10 +1130,9 @@ object VectorStore {
     * int64 (the per-chunk scale factorizes out — B6/B15's scheme), so
     * the shortlist order is deterministic. No trained sidecar: each row
     * self-scales, so codes from ANY batch compare and splice
-    * maintenance never touches them. A store written before the scodes
-    * column existed is refused loudly, mirroring the compressed-cells
-    * legacy rule. Honest cost scope (bench/store_sq8_r12.json): on this
-    * corpus the PARQUET-encoded codes column is byte-parity with raw
+    * maintenance never touches them. Honest cost scope
+    * (bench/store_sq8_r12.json): on this corpus the PARQUET-encoded
+    * codes column is byte-parity with raw
     * (both are low-entropy small ints) and at sf0.1 the extra
     * shortlist→re-rank phase costs more wall than the scan saves — the
     * rung pays in scan-bound regimes over high-entropy vectors; at toy
@@ -1153,9 +1153,6 @@ object VectorStore {
   private def sq8Read(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int, nprobe: Int, n: Int,
       one: Boolean): DataFrame = {
-    requireColumn(spark, indexDir, "scodes",
-      s"searchSq8Cells needs the scodes column — this store predates SQ8 " +
-        "coding; re-ingest it (mode=overwrite) to serve the sq8 path")
     val route = cellRoute(spark, indexDir, queryFrame(spark, queries), nprobe)
     // the scan reads (cell, ids, scodes, sscale); the exact raw vector
     // is NOT touched until the re-rank
@@ -1174,8 +1171,7 @@ object VectorStore {
     * exact full-width cosine re-ranks the ≤shortlist survivors — the
     * B9 refine tail, so served scores are exact. No trained artifact
     * (the sign matrix is a code literal): appends, edits and splices
-    * are consistent by construction, exactly the scodes discipline. A
-    * store written before the pcodes column is refused loudly. */
+    * are consistent by construction, exactly the scodes discipline. */
   def searchRpCells(spark: SparkSession, indexDir: String,
       query: String, k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 50): DataFrame =
@@ -1192,9 +1188,6 @@ object VectorStore {
   private def rpRead(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int, nprobe: Int, n: Int,
       one: Boolean): DataFrame = {
-    requireColumn(spark, indexDir, "pcodes",
-      s"searchRpCells needs the pcodes column — this store predates JL " +
-        "coding; re-ingest it (mode=overwrite) to serve the projected path")
     val route = cellRoute(spark, indexDir,
       queryFrame(spark, queries).withColumn("qp", rpProject(col("qraw"))), nprobe)
     // the scan reads (cell, ids, pcodes); neither raw nor chunk is
@@ -1251,7 +1244,7 @@ object VectorStore {
   def buildGraph(spark: SparkSession, indexDir: String,
       degree: Int = GraphDegree): Long = {
     spark.catalog.refreshByPath(indexDir)
-    val nodes = spark.read.parquet(indexDir)
+    val nodes = open(spark, indexDir)
       .select(struct(col("doc_id"), col("chunk_ix")).as("nid"),
         col("bucket"), col("raw"))
     val slim = nodes.select(col("nid"), col("bucket"))
@@ -1324,22 +1317,11 @@ object VectorStore {
     spark.catalog.refreshByPath(path)
   }
 
-  /** The degree [[buildGraph]] built the edge sidecar with: the degree
-    * sidecar if present, else (legacy sidecar) the max stored per-src
-    * list length — a lower bound that is exact whenever any bucket has
-    * ≥ degree+1 members, and conservative (smaller) otherwise. */
-  private def storedDegree(spark: SparkSession, indexDir: String): Int = {
-    val p = s"$indexDir/$GraphDir/$DegreeFile"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(p)))
-      spark.read.parquet(p).head().getInt(0)
-    else Option(spark.read.parquet(s"$indexDir/$GraphDir/edges.parquet")
-      .groupBy("src_doc", "src_ix").agg(count(lit(1)).as("n"))
-      .agg(max("n")).head().get(0))
-      .map(_.asInstanceOf[Long].toInt)
-      .getOrElse(0) // a fully-emptied legacy sidecar bounds nothing
-  }
+  /** The degree [[buildGraph]] built the edge sidecar with, read from
+    * its one-row sidecar with parquet-hadoop (no Spark job). */
+  private def storedDegree(spark: SparkSession, indexDir: String): Int =
+    ParquetFooters.rows(spark, s"$indexDir/$GraphDir/$DegreeFile")
+      .head.getInteger("degree", 0)
 
   /** Shared scoring tail of [[buildGraph]] and [[spliceGraph]]: attach
     * raw vectors to the candidate pair set, keep each src's top-`degree`
@@ -1391,10 +1373,9 @@ object VectorStore {
     * number of edges written (the touched region's new edge count). */
   def spliceGraph(spark: SparkSession, indexDir: String, docIds: Seq[Long],
       degree: Int = GraphDegree): Long = {
+    requireFormat(spark, indexDir)
     val edgePath = s"$indexDir/$GraphDir/edges.parquet"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(edgePath)),
+    require(fsOf(spark).exists(new org.apache.hadoop.fs.Path(edgePath)),
       s"spliceGraph needs an existing buildGraph sidecar at $edgePath")
     // bit-equal-to-rebuild relies on each stored list being the src's
     // true top-`degree`; splicing WIDER than the build degree would ask
@@ -1430,22 +1411,11 @@ object VectorStore {
     val newRegion = topEdges(spark, nodes, merged, degree)
       // materialize BEFORE the overwrite truncates its own input
       .localCheckpoint(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try newRegion.write.mode("overwrite").partitionBy("sbucket")
-      .parquet(edgePath)
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    newRegion.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("sbucket").parquet(edgePath)
     spark.catalog.refreshByPath(edgePath)
-    // maintain the per-bucket entry sidecar for the touched buckets (a
-    // legacy store without one keeps serving through the scan fallback)
-    if (fs.exists(new org.apache.hadoop.fs.Path(
-        s"$indexDir/$GraphDir/$EntriesFile")))
-      writeEntries(spark, indexDir, nodes, Some(touched))
+    // maintain the per-bucket entry sidecar for the touched buckets
+    writeEntries(spark, indexDir, nodes, Some(touched))
     newRegion.count()
   }
 
@@ -1480,9 +1450,9 @@ object VectorStore {
     * rewritten region's edge count. */
   def spliceGraphDelete(spark: SparkSession, indexDir: String,
       docIds: Seq[Long], degree: Int = GraphDegree): Long = {
+    requireFormat(spark, indexDir)
     val edgePath = s"$indexDir/$GraphDir/edges.parquet"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark)
     require(fs.exists(new org.apache.hadoop.fs.Path(edgePath)),
       s"spliceGraphDelete needs an existing buildGraph sidecar at $edgePath")
     val built = storedDegree(spark, indexDir)
@@ -1528,19 +1498,10 @@ object VectorStore {
       .select("src_doc", "src_ix", "dst_doc", "dst_ix", "sbucket")
     val newRegion = keep.unionByName(resolved)
       .localCheckpoint(true) // materialize BEFORE the overwrite
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      if (newRegion.isEmpty)
-        () // nothing to overwrite; stale partitions drop below
-      else newRegion.write.mode("overwrite").partitionBy("sbucket")
-        .parquet(edgePath)
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // (an empty region overwrites nothing; stale partitions drop below)
+    if (!newRegion.isEmpty)
+      newRegion.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("sbucket").parquet(edgePath)
     // touched buckets that re-solved to ZERO pairs: drop their stale
     // partitions outright (they would otherwise keep citing victims)
     val nonEmpty = newRegion.select("sbucket").distinct()
@@ -1551,9 +1512,7 @@ object VectorStore {
     spark.catalog.refreshByPath(edgePath)
     // entry sidecar: recompute the touched buckets from the post-delete
     // members (an emptied bucket simply loses its rows)
-    if (fs.exists(new org.apache.hadoop.fs.Path(
-        s"$indexDir/$GraphDir/$EntriesFile")))
-      writeEntries(spark, indexDir, nodes, Some(touched))
+    writeEntries(spark, indexDir, nodes, Some(touched))
     newRegion.count()
   }
 
@@ -1623,8 +1582,7 @@ object VectorStore {
     * byte-parity with raw here (parquet entropy-codes both), and at
     * sf0.1 the extra final re-rank join reads slightly slower than the
     * exact walk — the route-on-codes payoff is a decoded-working-set /
-    * scan-bound-regime property. Pre-sq8 stores are refused loudly,
-    * like [[searchSq8Cells]]. */
+    * scan-bound-regime property. */
   def searchGraphSq8(spark: SparkSession, indexDir: String, query: String,
       k: Int = 5): DataFrame =
     graphWalk(spark, indexDir, Seq(query), k, GraphEntries, GraphBeam,
@@ -1652,10 +1610,7 @@ object VectorStore {
     // the per-hop beam must cover the asked-for k: the final cut runs
     // over the LAST frontier, which holds at most `beam` rows per query
     val beam = math.max(beamIn, k)
-    // refuse a pre-sq8 store before any Spark work (the sq8 read rule)
-    if (sq8Hops) requireColumn(spark, indexDir, "scodes",
-      s"searchGraphSq8 needs the scodes column — this store predates " +
-        "SQ8 coding; re-ingest it (mode=overwrite) to walk on codes")
+    requireFormat(spark, indexDir)
     spark.catalog.refreshByPath(indexDir)
     val index = spark.read.parquet(indexDir)
     val nid = struct(col("doc_id"), col("chunk_ix")).as("nid")
@@ -1680,28 +1635,21 @@ object VectorStore {
         // deterministic md5-ranked members of the probed buckets, inside
         // the only components the same-bucket edge sidecar lets this
         // query's walk reach. Served from the per-bucket ENTRY sidecar
-        // when the graph build wrote one wide enough (O(buckets · width)
-        // rows, NO index scan — the 100 TB seeding path); falls back to
-        // a column-pruned directory read of the probed partitions for
-        // legacy sidecars or wider-than-stored entry requests. Both
-        // derivations pick the identical entry set: a per-query winner
-        // is necessarily within its own bucket's md5-top-`width`.
+        // when it is wide enough (O(buckets · width) rows, NO index scan
+        // — the 100 TB seeding path; its width is a footer statistic, no
+        // job); an entry request wider than the stored width, or a
+        // sidecar with no rows, seeds from a column-pruned directory read
+        // of the probed partitions. Both derivations pick the identical
+        // entry set: a per-query winner is necessarily within its own
+        // bucket's md5-top-`width`.
         val probes = bucketProbes(qdf).select("query_id", "bucket")
         val entPath = s"$indexDir/$GraphDir/$EntriesFile"
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val sidecar: Option[DataFrame] =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(entPath))) None
-          else {
+        val candidates =
+          if (ParquetFooters.maxLong(spark, entPath, "width").exists(_ >= entries)) {
             spark.catalog.refreshByPath(entPath)
-            val ent = spark.read.parquet(entPath)
-            val width = ent.select(max("width")).head()
-            if (width.isNullAt(0) || width.getInt(0) < entries) None
-            else Some(ent.select(col("bucket"), col("h"),
-              struct(col("doc_id"), col("chunk_ix")).as("nid")))
-          }
-        val candidates = sidecar.getOrElse(
-          nodes.select(col("nid"), col("bucket")).withColumn("h", entryH))
+            spark.read.parquet(entPath).select(col("bucket"), col("h"),
+              struct(col("doc_id"), col("chunk_ix")).as("nid"))
+          } else nodes.select(col("nid"), col("bucket")).withColumn("h", entryH)
         val seeded = best(candidates.join(broadcast(probes), "bucket"),
             entries, one, col("h"), nidTies)
           .select(col("query_id"), col("nid"))
@@ -1785,8 +1733,8 @@ object VectorStore {
   def edit(spark: SparkSession, indexDir: String, docIds: Seq[Long],
       newDocs: org.apache.spark.sql.DataFrame, chunkSize: Int = 20,
       overlap: Int = 5, batchTag: Long = 0L): (Long, Long) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    requireFormat(spark, indexDir)
+    val fs = fsOf(spark)
     val stamp = s"${System.currentTimeMillis()}_${docIds.hashCode.abs}"
     val staged = s"$indexDir/$EditStageDir/staged_$stamp"
     // meta rides the staged copy when present: a meta-carrying store's
@@ -1811,9 +1759,7 @@ object VectorStore {
   private def applyEdit(spark: SparkSession, indexDir: String,
       docIds: Seq[Long], staged: String, chunkSize: Int, overlap: Int,
       batchTag: Long): (Long, Long) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val hasGraph = fs.exists(new org.apache.hadoop.fs.Path(
+    val hasGraph = fsOf(spark).exists(new org.apache.hadoop.fs.Path(
       s"$indexDir/$GraphDir/edges.parquet"))
     // the sidecar's own build degree drives BOTH splices: hardcoding the
     // default would make edit() unusable on any buildGraph(degree != 8)
@@ -1841,13 +1787,12 @@ object VectorStore {
     // (or a concurrent writer) invalidates it, and a stale listing makes
     // reads fail on vanished part files
     spark.catalog.refreshByPath(indexDir)
-    val index = spark.read.parquet(indexDir)
+    val index = open(spark, indexDir)
     val victims = col("doc_id").isInCollection(docIds)
     val buckets = index.filter(victims).select("bucket").distinct()
       .collect().map(_.getInt(0)).toSeq
     if (buckets.isEmpty) return 0L
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark)
     val manifest = writeManifest(fs, indexDir, docIds, buckets)
     val removed = deleteFromBuckets(spark, indexDir, docIds, buckets)
     // lexical kill rows ride BEFORE the manifest retires: a crash in
@@ -1908,10 +1853,9 @@ object VectorStore {
 
   private[graft] def stageRetrain(spark: SparkSession, indexDir: String,
       cells: Int = KmCells): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark)
     spark.catalog.refreshByPath(indexDir)
-    val cur = spark.read.parquet(indexDir)
+    val cur = open(spark, indexDir)
     val metaIn: Seq[Column] =
       if (cur.columns.contains("meta")) Seq(col("meta")) else Nil
     // the chunk set + preserved tags; orig_tag is consumed (and dropped)
@@ -1922,11 +1866,7 @@ object VectorStore {
     val stage = retrainStage(indexDir)
     fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     val n = ingestChunks(chunks, stage, "overwrite", col("orig_tag"), cells)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$indexDir/$ManifestDir/retrain.tmp")
-    val out = fs.create(tmp, true)
-    try out.write("{}".getBytes("UTF-8")) finally out.close()
-    fs.rename(tmp, retrainManifest(indexDir))
+    commitJson(fs, retrainManifest(indexDir), "{}")
     n
   }
 
@@ -1934,15 +1874,16 @@ object VectorStore {
     * replay: each staged entry (bucket=* dirs, _graft_pq, _graft_cells,
     * _graft_lex) replaces its final twin; one already gone moved before
     * the crash. The staged zone-map sidecar is discarded and rebuilt
-    * over the final tree (it records absolute file paths). */
+    * over the final tree (it records absolute file paths); the staged
+    * format marker is discarded too, so the live one never goes away. */
   private[graft] def swapRetrain(spark: SparkSession,
       indexDir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark)
     val stage = new org.apache.hadoop.fs.Path(retrainStage(indexDir))
+    val discard = Set("_graft_zonemap", FormatFile, s".$FormatFile.crc")
     if (fs.exists(stage)) {
       fs.listStatus(stage).map(_.getPath).foreach { p =>
-        if (p.getName == "_graft_zonemap") fs.delete(p, true)
+        if (discard(p.getName)) fs.delete(p, true)
         else {
           val tgt = new org.apache.hadoop.fs.Path(s"$indexDir/${p.getName}")
           fs.delete(tgt, true)
@@ -1961,8 +1902,7 @@ object VectorStore {
     * pending; with NO manifest pending, a `_graft_retrain` dir is a
     * pre-commit orphan (crash during staging) and is swept. */
   private def recoverRetrain(spark: SparkSession, indexDir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark)
     if (fs.exists(retrainManifest(indexDir))) swapRetrain(spark, indexDir)
     else fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$RetrainDir"),
       true)
@@ -1980,11 +1920,11 @@ object VectorStore {
     * independently), then edits replay from their staged content, then
     * orphaned staging dirs (crash between manifest retire and stage
     * cleanup) are swept. Returns the number of manifests replayed. Safe
-    * to call any time: with no pending manifests it reads nothing but
-    * the manifest dir listing. */
+    * to call any time on a store of this format: with no pending
+    * manifests it reads nothing but the manifest dir listing. */
   def recover(spark: SparkSession, indexDir: String): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    requireFormat(spark, indexDir)
+    val fs = fsOf(spark)
     // a half-swapped retrain replays FIRST (it replaces whole planes —
     // anything appended to pre-swap dirs would be discarded), then a
     // half-swapped lexical compaction, BOTH before any manifest replay
@@ -2034,19 +1974,13 @@ object VectorStore {
 
   private[operators] val ManifestDir = "_graft_manifest"
 
-  /** Commit a delete intent atomically: write to a temp name, then rename
-    * into place — readers never observe a torn manifest. */
+  /** Commit a delete intent atomically ([[commitJson]]). */
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
       indexDir: String, docIds: Seq[Long], buckets: Seq[Int])
       : org.apache.hadoop.fs.Path = {
     val name = s"delete_${System.currentTimeMillis()}_${docIds.hashCode.abs}"
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/$ManifestDir/$name.tmp")
-    val fin = new org.apache.hadoop.fs.Path(s"$indexDir/$ManifestDir/$name.json")
-    val json = s"""{"docIds":[${docIds.mkString(",")}],"buckets":[${buckets.mkString(",")}]}"""
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    fs.rename(tmp, fin)
-    fin
+    commitJson(fs, new org.apache.hadoop.fs.Path(s"$indexDir/$ManifestDir/$name.json"),
+      s"""{"docIds":[${docIds.mkString(",")}],"buckets":[${buckets.mkString(",")}]}""")
   }
 
   private val EditStageDir = "_graft_edit"
@@ -2057,46 +1991,39 @@ object VectorStore {
   private def writeEditManifest(fs: org.apache.hadoop.fs.FileSystem,
       indexDir: String, stamp: String, docIds: Seq[Long], staged: String,
       chunkSize: Int, overlap: Int, batchTag: Long)
-      : org.apache.hadoop.fs.Path = {
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$indexDir/$ManifestDir/edit_$stamp.tmp")
-    val fin = new org.apache.hadoop.fs.Path(
-      s"$indexDir/$ManifestDir/edit_$stamp.json")
-    val json = s"""{"docIds":[${docIds.mkString(",")}],""" +
-      s""""staged":"$staged","knobs":[$chunkSize,$overlap,$batchTag]}"""
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    fs.rename(tmp, fin)
-    fin
+      : org.apache.hadoop.fs.Path =
+    commitJson(fs, new org.apache.hadoop.fs.Path(
+      s"$indexDir/$ManifestDir/edit_$stamp.json"),
+      s"""{"docIds":[${docIds.mkString(",")}],""" +
+        s""""staged":"$staged","knobs":[$chunkSize,$overlap,$batchTag]}""")
+
+  private def readText(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
+
+  /** A manifest's numeric array field `key`, as strings. */
+  private def nums(json: String, key: String): Seq[String] =
+    s""""$key":\\[([0-9,\\-]*)\\]""".r.findFirstMatchIn(json)
+      .map(_.group(1)).filter(_.nonEmpty).map(_.split(",").toSeq)
+      .getOrElse(Seq.empty)
 
   private def readEditManifest(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): (Seq[Long], String, Int, Int, Long) = {
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def nums(key: String): Seq[String] =
-      s""""$key":\\[([0-9,\\-]*)\\]""".r.findFirstMatchIn(json)
-        .map(_.group(1)).filter(_.nonEmpty).map(_.split(",").toSeq)
-        .getOrElse(Seq.empty)
+    val json = readText(fs, p)
     val staged = """"staged":"([^"]*)"""".r.findFirstMatchIn(json)
       .map(_.group(1)).getOrElse(
         throw new IllegalStateException(s"torn edit manifest $p: $json"))
-    val knobs = nums("knobs")
-    (nums("docIds").map(_.toLong), staged,
+    val knobs = nums(json, "knobs")
+    (nums(json, "docIds").map(_.toLong), staged,
       knobs(0).toInt, knobs(1).toInt, knobs(2).toLong)
   }
 
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): (Seq[Long], Seq[Int]) = {
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def nums(key: String): Seq[String] =
-      s""""$key":\\[([0-9,\\-]*)\\]""".r.findFirstMatchIn(json)
-        .map(_.group(1)).filter(_.nonEmpty).map(_.split(",").toSeq)
-        .getOrElse(Seq.empty)
-    (nums("docIds").map(_.toLong), nums("buckets").map(_.toInt))
+    val json = readText(fs, p)
+    (nums(json, "docIds").map(_.toLong), nums(json, "buckets").map(_.toInt))
   }
 
   /** The mutation body shared by [[delete]] and [[recover]]: remove
@@ -2113,16 +2040,9 @@ object VectorStore {
       // the partition column must be part of the written data, and the
       // rewrite must materialize BEFORE overwrite truncates its own input
       .localCheckpoint(true)
-    if (removed > 0) {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try survivors.write.mode("overwrite")
+    if (removed > 0)
+      survivors.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket", "cell").parquet(indexDir)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
     // dynamic overwrite only replaces partitions PRESENT in the output: a
     // (bucket, cell) dir whose every row was a victim has no survivors
     // and must be dropped explicitly (idempotent — a replay deletes a
@@ -2130,8 +2050,7 @@ object VectorStore {
     val survivingPairs = survivors.select("bucket", "cell").distinct()
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     val survivingBuckets = survivingPairs.map(_._1)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark)
     buckets.filterNot(survivingBuckets).foreach { b =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/bucket=$b"), true)
     }
@@ -2148,8 +2067,7 @@ object VectorStore {
     // bring the time-axis sidecar back in sync (incremental — scans only
     // the rewritten buckets' new files, drops the vanished rows; replay-
     // safe because appendSidecar is a no-op when already current)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/_graft_zonemap")))
-      graft.sources.ZoneMaps.appendSidecar(spark, indexDir, "batch_tag")
+    graft.sources.ZoneMaps.appendSidecar(spark, indexDir, "batch_tag")
     removed
   }
 }

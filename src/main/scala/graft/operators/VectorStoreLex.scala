@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 
-import scala.jdk.CollectionConverters._
-
 /** G49: store-plane HYBRID retrieval — the maintained index's BM25
   * inverted-list sidecar plus the RRF read that fuses it with the dense
   * LSH-bucket leg. The reference IS a Weaviate deployment and Weaviate's
@@ -41,11 +39,10 @@ import scala.jdk.CollectionConverters._
   *     integer arithmetic, identical after any edit history to a fresh
   *     ingest of the surviving docs.
   *
-  * Legacy rule (the G47/perm/rescb discipline): an APPEND to a store
-  * written before this sidecar existed must NOT create it (postings
-  * would cover only the new batch and silently drop every older doc
-  * from the lexical leg) — such a store stays lex-free and
-  * [[searchHybrid]] refuses loudly until a full re-ingest upgrades it.
+  * Format rule: the sidecar, positions included, is part of the store
+  * format — every store that passes the format gate
+  * ([[VectorStore.requireFormat]], the `_graft_store.json` marker)
+  * carries it, and every read and compaction here runs that gate first.
   * Re-appending an existing doc_id without `edit()` upserts the LEXICAL
   * plane (keep-latest) — use `edit()` to keep the dense plane in step.
   *
@@ -67,10 +64,6 @@ object VectorStoreLex {
   private def fs(spark: SparkSession) = org.apache.hadoop.fs.FileSystem.get(
     spark.sparkContext.hadoopConfiguration)
 
-  /** Does the store carry the lexical sidecar? (Pre-r13 stores don't.) */
-  def exists(spark: SparkSession, indexDir: String): Boolean =
-    fs(spark).exists(new org.apache.hadoop.fs.Path(doclogPath(indexDir)))
-
   /** Driver-side twin of the column-side bucket expression: first hex
     * char of md5(term) — both sides of the partition pruning MUST agree. */
   private def termBucket(term: String): String = {
@@ -88,37 +81,19 @@ object VectorStoreLex {
     * statistics (no Spark job). A doclog created over an empty chunk
     * batch has a schema but zero rows — empty log ⇒ gen 1 (r13 advice). */
   private def nextGen(spark: SparkSession, indexDir: String): Long =
-    graft.sources.ParquetFooters.files(spark, doclogPath(indexDir))
-      .flatMap(f => graft.sources.ParquetFooters.footer(spark, f).getBlocks
-        .asScala.filter(_.getRowCount > 0))
-      .map { g =>
-        val st = g.getColumns.asScala.find(_.getPath.toDotString == "gen")
-          .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue)
-        require(st.isDefined, s"doclog of $indexDir has a row group " +
-          "without `gen` statistics — cannot derive the next generation")
-        st.get.genericGetMax.asInstanceOf[Number].longValue
-      }.foldLeft(0L)(math.max) + 1L
+    graft.sources.ParquetFooters.maxLong(spark, doclogPath(indexDir), "gen")
+      .getOrElse(0L) + 1L
 
   /** Ingest hook: index the batch's chunks into the sidecar. `create`
-    * = the store was just (re)written in overwrite mode, so the sidecar
-    * starts fresh at gen 1; otherwise append at the next generation —
-    * UNLESS the store predates the sidecar (legacy rule above). */
+    * = the store was just created, so the sidecar starts fresh at gen 1;
+    * otherwise append at the next generation. */
   private[operators] def appendFor(indexDir: String, chunks: DataFrame,
       create: Boolean): Unit = {
     val spark = chunks.sparkSession
-    if (!create && !exists(spark, indexDir)) return
     val gen = if (create) 1L else nextGen(spark, indexDir)
     val mode = if (create) "overwrite" else "append"
     // positions (r16): 0-based token offsets within the chunk, sorted —
-    // the phrase/proximity plane ([[searchPhrase]]). Legacy rule: an
-    // append to a pre-positions store must NOT write the column (mixed
-    // files would serve null positions for old docs and phrase reads
-    // would silently miss them) — such a store stays position-free and
-    // searchPhrase refuses until re-ingest.
-    // The flag comes from one postings footer; postings compacted down
-    // to no file carry no legacy evidence, so they take positions.
-    val hasPos = create || graft.sources.ParquetFooters
-      .fieldNames(spark, postingsPath(indexDir)).forall(_.contains("positions"))
+    // the phrase/proximity plane ([[searchPhrase]])
     val tok = chunks
       .select(col("doc_id"), col("chunk_ix"), Text.tokens(col("chunk")).as("toks"))
       .select(col("doc_id"), col("chunk_ix"),
@@ -129,8 +104,7 @@ object VectorStoreLex {
         sort_array(collect_list(col("pos"))).as("positions"))
       .withColumn("gen", lit(gen))
       .withColumn("tbkt", substring(md5(col("term")), 1, 1))
-    (if (hasPos) posted else posted.drop("positions"))
-      .write.mode(mode).partitionBy("tbkt").parquet(postingsPath(indexDir))
+    posted.write.mode(mode).partitionBy("tbkt").parquet(postingsPath(indexDir))
     chunks
       .select(col("doc_id"), size(Text.tokens(col("chunk"))).cast("long").as("dl"))
       .groupBy("doc_id")
@@ -145,7 +119,7 @@ object VectorStoreLex {
     * stay on disk; the keep-latest read stops serving them. */
   private[operators] def logDelete(spark: SparkSession, indexDir: String,
       docIds: Seq[Long]): Unit = {
-    if (!exists(spark, indexDir) || docIds.isEmpty) return
+    if (docIds.isEmpty) return
     val gen = nextGen(spark, indexDir)
     import spark.implicits._
     docIds.map(id => (id, gen, false, 0L, 0L))
@@ -197,8 +171,7 @@ object VectorStoreLex {
 
   private[graft] def stageCompactLex(spark: SparkSession,
       indexDir: String): (Long, Long) = {
-    require(exists(spark, indexDir),
-      s"store $indexDir has no lexical sidecar ($LexDir) to compact")
+    VectorStore.requireFormat(spark, indexDir)
     val live = latestDoclog(spark, indexDir).filter(col("live"))
     spark.catalog.refreshByPath(postingsPath(indexDir))
     val posts = spark.read.parquet(postingsPath(indexDir))
@@ -214,12 +187,7 @@ object VectorStoreLex {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"${doclogPath(indexDir)}_tmp")
     val keptN = spark.read.parquet(s"${postingsPath(indexDir)}_tmp").count()
-    val f = fs(spark)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${VectorStore.ManifestDir}/lexcompact.tmp")
-    val out = f.create(tmp, true)
-    try out.write("{}".getBytes("UTF-8")) finally out.close()
-    f.rename(tmp, compactManifest(indexDir))
+    VectorStore.commitJson(fs(spark), compactManifest(indexDir), "{}")
     (keptN, total - keptN)
   }
 
@@ -268,10 +236,6 @@ object VectorStoreLex {
   private def lexLeg(spark: SparkSession, indexDir: String,
       queries: Seq[String], legK: Int,
       allowed: Option[DataFrame] = None): DataFrame = {
-    require(exists(spark, indexDir),
-      s"store $indexDir has no lexical sidecar ($LexDir): it was written " +
-        "before hybrid existed — re-ingest to upgrade (the sidecar cannot " +
-        "be backfilled from an append batch alone)")
     import spark.implicits._
     val qTermPairs: Seq[(Long, String)] = queries.zipWithIndex.flatMap {
       case (q, i) => tokenize(q).distinct.map(t => (i.toLong, t))
@@ -333,6 +297,7 @@ object VectorStoreLex {
   /** Pure-BM25 read, many queries through one plan. */
   def searchLexBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5): DataFrame = {
+    VectorStore.requireFormat(spark, indexDir)
     val ranked = lexLeg(spark, indexDir, queries, k)
       .select(col("query_id"), col("lex_rank").as("rank"),
         col("doc_id"), col("chunk_ix"), col("score"))
@@ -370,7 +335,7 @@ object VectorStoreLex {
     * entirely from matching rows (a post-filter over unfiltered legs
     * would under-fill AND mis-rank: RRF ranks would count excluded
     * rows). BM25 corpus stats stay index-wide (the Weaviate filtered
-    * semantics). A pre-meta store refuses loudly — re-ingest. */
+    * semantics). A store without meta refuses loudly — re-ingest. */
   def searchHybridFiltered(spark: SparkSession, indexDir: String,
       query: String, pred: org.apache.spark.sql.Column, k: Int = 5)
       : DataFrame =
@@ -404,19 +369,12 @@ object VectorStoreLex {
     * phrase work because each ord contributes its own row per position.
     * Liveness is the BM25 read's keep-latest gen discipline, so edits/
     * deletes/compaction serve phrases exactly like bag-of-words reads.
-    * A pre-positions store (r15 and earlier) refuses loudly: appends
-    * cannot backfill positions — re-ingest to upgrade. Single-term
-    * phrases degenerate to term lookup with n_matches = tf. */
+    * Single-term phrases degenerate to term lookup with n_matches = tf. */
   def searchPhraseBatch(spark: SparkSession, indexDir: String,
       phrases: Seq[String], k: Int = 5): DataFrame = {
-    require(exists(spark, indexDir),
-      s"store $indexDir has no lexical sidecar ($LexDir): re-ingest")
+    VectorStore.requireFormat(spark, indexDir)
     spark.catalog.refreshByPath(postingsPath(indexDir))
     val posts = spark.read.parquet(postingsPath(indexDir))
-    require(posts.schema.fieldNames.contains("positions"),
-      s"store $indexDir has no positional postings: it was written " +
-        "before positions existed — re-ingest to upgrade (an append " +
-        "cannot backfill positions for rows already on disk)")
     import spark.implicits._
     val qOrd: Seq[(Long, Int, String)] = phrases.zipWithIndex.flatMap {
       case (p, i) => tokenize(p).zipWithIndex.map {
@@ -465,7 +423,7 @@ object VectorStoreLex {
       queries: Seq[String], k: Int,
       pred: Option[org.apache.spark.sql.Column]): DataFrame = {
     spark.catalog.refreshByPath(indexDir)
-    val idx0 = spark.read.parquet(indexDir)
+    val idx0 = VectorStore.open(spark, indexDir)
     val idx = pred.fold(idx0)(idx0.filter)
     val lex = lexLeg(spark, indexDir, queries, LegK, pred.map(_ => idx))
       .select("query_id", "doc_id", "chunk_ix", "lex_rank")

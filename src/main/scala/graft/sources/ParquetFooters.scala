@@ -52,12 +52,26 @@ object ParquetFooters {
   }
 
   /** Top-level column names of the first data file under `dir` — the
-    * schema of a dataset whose writers keep one schema (a store's legacy
-    * rules guarantee that). None when `dir` holds no data file. */
+    * schema of a dataset whose writers keep one schema (a store's format
+    * version and its meta rule guarantee that). None when `dir` holds no
+    * data file. */
   def fieldNames(spark: SparkSession, dir: String): Option[Set[String]] =
     files(spark, dir).nextOption().map(f =>
       footer(spark, f).getFileMetaData.getSchema.getFields.asScala
         .map(_.getName).toSet)
+
+  /** The largest value of an integral `column` under `dir`, from the
+    * footer statistics of every non-empty row group. None when `dir`
+    * holds no rows; a row group without statistics for it fails loudly. */
+  def maxLong(spark: SparkSession, dir: String, column: String): Option[Long] =
+    files(spark, dir).flatMap(f => footer(spark, f).getBlocks.asScala)
+      .filter(_.getRowCount > 0).map { g =>
+        val st = g.getColumns.asScala.find(_.getPath.toDotString == column)
+          .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue)
+        require(st.isDefined,
+          s"a row group under $dir has no `$column` statistics")
+        st.get.genericGetMax.asInstanceOf[Number].longValue
+      }.reduceOption(_ max _)
 
   /** Every row of a small parquet dataset, in file order. Fails loudly
     * when `dir` does not exist, as `spark.read.parquet` does. */

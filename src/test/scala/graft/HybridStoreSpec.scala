@@ -11,7 +11,8 @@ import java.nio.file.Files
   * G47 discipline end to end: verbatim self-hit rank 1 on BOTH legs,
   * batch ≡ single, edit/append/delete keep the sidecar EXACTLY
   * consistent (edited store ≡ fresh ingest of the surviving content),
-  * the legacy refusal, and the postings scan's partition pruning. */
+  * the format-gate refusal of older stores, and the postings scan's
+  * partition pruning. */
 class HybridStoreSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
@@ -117,22 +118,21 @@ class HybridStoreSpec extends AnyFunSuite {
   }
 
   test("legacy store without the sidecar: append stays lex-free, read refuses") {
-    val dir = Files.createTempDirectory("graft_hyb_l").toString + "/index"
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    assert(VectorStore.ingest(docs.filter(col("doc_id") < 20), dir) > 0)
-    // simulate a pre-r13 store: drop the sidecar
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_graft_lex"), true))
-    assert(VectorStore.ingest(docs.filter(col("doc_id") >= 20
-      && col("doc_id") < 25), dir, mode = "append") > 0)
-    // the append must NOT have half-created the sidecar
-    assert(!VectorStoreLex.exists(spark, dir),
+    // a store written before the lexical sidecar also predates the format
+    // marker: its append is refused before any job (no partial sidecar
+    // over the new batch only), and so are the lexical reads
+    val dir = OldStore.unmarked(spark, indexDir, "nolex", "_graft_lex")
+    val more = Tables.documents(spark, sf)
+      .filter(col("doc_id") >= 100 && col("doc_id") < 105)
+      .select("doc_id", "text")
+    OldStore.assertRefused(spark, dir, "none")(
+      "append" -> (() => VectorStore.ingest(more, dir, mode = "append")),
+      "searchHybrid" -> (() => VectorStoreLex.searchHybrid(spark, dir,
+        "anything", k = 3)),
+      "searchLex" -> (() => VectorStoreLex.searchLex(spark, dir,
+        "anything", k = 3)))
+    assert(!new java.io.File(s"$dir/_graft_lex").exists,
       "append backfilled a partial lexical sidecar")
-    val ex = intercept[IllegalArgumentException] {
-      VectorStoreLex.searchHybrid(spark, dir, "anything", k = 3)
-    }
-    assert(ex.getMessage.contains("re-ingest"), ex.getMessage)
   }
 
   test("searchLex: verbatim self-hit rank 1, batch matches single") {
@@ -410,31 +410,25 @@ class HybridStoreSpec extends AnyFunSuite {
   }
 
   test("pre-positions store: append stays position-free, phrase read refuses") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_hyb_pl").toString + "/index"
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    assert(VectorStore.ingest(docs.filter(col("doc_id") < 10), dir) > 0)
-    // simulate an r15 store: strip the positions column from postings
-    val posts = spark.read.parquet(s"$dir/_graft_lex/postings")
-      .drop("positions").localCheckpoint(true)
-    posts.write.mode("overwrite").partitionBy("tbkt")
-      .parquet(s"$dir/_graft_lex/postings")
-    // an append must NOT reintroduce positions for only the new rows
-    assert(VectorStore.ingest(docs.filter(col("doc_id") === 11), dir,
-      mode = "append") > 0)
+    // a store written before positional postings also predates the format
+    // marker: its append cannot add positions for only the new rows (it
+    // is refused before any job), and the phrase and BM25 reads refuse
+    // too — re-ingest upgrades it
+    val dir = OldStore.unmarked(spark, indexDir, "nopos")
+    val postingCols = spark.read.parquet(s"$dir/_graft_lex/postings").columns.toSeq
+    val more = Tables.documents(spark, sf).filter(col("doc_id") === 111)
+      .select("doc_id", "text")
+    OldStore.assertRefused(spark, dir, "none")(
+      "append" -> (() => VectorStore.ingest(more, dir, mode = "append")),
+      "searchPhrase" -> (() => VectorStoreLex.searchPhrase(spark, dir,
+        "alpha beta")),
+      "searchPhraseBatch" -> (() => VectorStoreLex.searchPhraseBatch(spark,
+        dir, Seq("alpha beta"))),
+      "searchLex" -> (() => VectorStoreLex.searchLex(spark, dir,
+        "alpha beta", k = 3)))
     spark.catalog.refreshByPath(s"$dir/_graft_lex/postings")
-    assert(!spark.read.parquet(s"$dir/_graft_lex/postings")
-      .schema.fieldNames.contains("positions"),
-      "append backfilled positions for a subset of rows")
-    val ex = intercept[IllegalArgumentException] {
-      VectorStoreLex.searchPhrase(spark, dir, "alpha beta")
-    }
-    assert(ex.getMessage.contains("re-ingest"), ex.getMessage)
-    // bag-of-words BM25 still serves fine without positions
-    assert(VectorStoreLex.searchLex(spark, dir,
-      docs.filter(col("doc_id") === 3).select("text")
-        .collect().head.getString(0).split(" ").take(4).mkString(" "),
-      k = 3).count() > 0)
+    assert(spark.read.parquet(s"$dir/_graft_lex/postings").columns.toSeq ==
+      postingCols, "a refused append changed the postings schema")
   }
 
   test("postings scan prunes to the query terms' md5 partitions") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.VectorStore.{Dim, PqM, PqSubDim}
+import graft.operators.VectorStore.{PqM, PqSubDim}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,20 +58,13 @@ object JoinEncodeOracle {
 
   /** Every stored row of the store at `dir` re-encoded from its `raw`
     * against the store's own frozen sidecars: (doc_id, chunk_ix, cell,
-    * codes[, rcodes]) — rcodes only where the residual codebook exists;
-    * identity layout where the perm sidecar does not. */
+    * codes, rcodes). */
   def encodeStore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    def has(p: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$p"))
     spark.catalog.refreshByPath(dir)
     val rows = spark.read.parquet(dir).select("doc_id", "chunk_ix", "raw")
-    val perm =
-      if (has("_graft_pq/perm.parquet"))
-        spark.read.parquet(s"$dir/_graft_pq/perm.parquet").orderBy("p")
-          .collect().map(_.getInt(1)).toSeq
-      else 0 until Dim
+    val perm = spark.read.parquet(s"$dir/_graft_pq/perm.parquet").orderBy("p")
+      .collect().map(_.getInt(1)).toSeq
     val centroids = spark.read.parquet(s"$dir/_graft_cells/centroids.parquet")
     val cmeans = centroids.collect()
       .map(r => (r.getInt(0), cmeanScaled(r.getSeq[Long](1), r.getLong(2))))
@@ -80,14 +73,11 @@ object JoinEncodeOracle {
     val coded = celled.join(pqEncode(
       spark.read.parquet(s"$dir/_graft_pq/codebook.parquet"), rows,
       permuteRaw(col("raw"), perm), "codes"), Seq("doc_id", "chunk_ix"))
-    if (!has("_graft_pq/rescb.parquet")) coded.drop("raw")
-    else {
-      val withRes = celled.join(broadcast(cmeans), "cell")
-        .withColumn("rres",
-          zip_with(col("raw"), col("cmean"), (x, c) => x * ResScale - c))
-      coded.drop("raw").join(pqEncode(
-        spark.read.parquet(s"$dir/_graft_pq/rescb.parquet"), withRes,
-        col("rres"), "rcodes"), Seq("doc_id", "chunk_ix"))
-    }
+    val withRes = celled.join(broadcast(cmeans), "cell")
+      .withColumn("rres",
+        zip_with(col("raw"), col("cmean"), (x, c) => x * ResScale - c))
+    coded.drop("raw").join(pqEncode(
+      spark.read.parquet(s"$dir/_graft_pq/rescb.parquet"), withRes,
+      col("rres"), "rcodes"), Seq("doc_id", "chunk_ix"))
   }
 }

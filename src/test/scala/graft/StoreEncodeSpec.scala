@@ -10,8 +10,7 @@ import java.nio.file.Files
   * graft_nearest_l over driver-read frozen sidecars). Pins:
   *   - parity: the stored `cell`, `codes` and `rcodes` are bit-equal to
   *     the former join-based encoder ([[JoinEncodeOracle]]) on creation,
-  *     append, retrainCells, a 16-cell store, an identity-perm legacy
-  *     store and a pre-residual legacy store, with the written column
+  *     append, retrainCells and a 16-cell store, with the written column
   *     order unchanged;
   *   - job budget (ROADMAP D3b): a 5-doc append to a standing store runs
   *     at most 15 Spark jobs, and its index write is ONE job with no
@@ -28,17 +27,13 @@ class StoreEncodeSpec extends AnyFunSuite {
   private def ids(lo: Int, hi: Int) = docs.filter(col("doc_id") >= lo &&
     col("doc_id") < hi)
 
-  /** `rows` restricts the check to the rows a legacy store's append
-    * wrote (its older rows were coded under artifacts since removed). */
-  private def assertParity(dir: String, cols: Seq[String], what: String,
-      rows: org.apache.spark.sql.Column = lit(true)): Unit = {
+  private def assertParity(dir: String, cols: Seq[String], what: String): Unit = {
     spark.catalog.refreshByPath(dir)
     val stored = spark.read.parquet(dir)
     assert(stored.columns.toSeq == cols, s"$what: written column order")
-    val enc = Seq("doc_id", "chunk_ix", "cell", "codes") ++
-      cols.filter(_ == "rcodes")
-    def render(df: org.apache.spark.sql.DataFrame) = df.filter(rows)
-      .select(enc.map(col): _*).collect().map(_.toString).sorted.toSeq
+    val enc = Seq("doc_id", "chunk_ix", "cell", "codes", "rcodes")
+    def render(df: org.apache.spark.sql.DataFrame) =
+      df.select(enc.map(col): _*).collect().map(_.toString).sorted.toSeq
     val want = render(JoinEncodeOracle.encodeStore(spark, dir))
     val got = render(stored)
     assert(want.nonEmpty && got == want,
@@ -87,33 +82,5 @@ class StoreEncodeSpec extends AnyFunSuite {
     assert(VectorStore.ingest(ids(24, 29), dir, mode = "append",
       cells = 16) > 0)
     assertParity(dir, freshCols, "16-cell")
-  }
-
-  test("identity-perm legacy store: append bit-equal to the join oracle") {
-    val dir = fresh("leg", 20)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(
-      s"$dir/_graft_pq/perm.parquet"), true))
-    assert(VectorStore.ingest(ids(20, 25), dir, mode = "append") > 0)
-    assertParity(dir, freshCols, "identity-perm legacy", col("doc_id") >= 20)
-  }
-
-  test("pre-residual legacy store: append bit-equal to the join oracle") {
-    val src = fresh("preres_src", 20)
-    val dir = Files.createTempDirectory("graft_enc_preres").toString + "/index"
-    spark.read.parquet(src).drop("rcodes")
-      .write.partitionBy("bucket", "cell").parquet(dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    Seq("_graft_pq/codebook.parquet", "_graft_pq/perm.parquet",
-        "_graft_cells/centroids.parquet").foreach { p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new org.apache.hadoop.fs.Path(s"$src/$p"), fs,
-        new org.apache.hadoop.fs.Path(s"$dir/$p"), false,
-        spark.sparkContext.hadoopConfiguration)
-    }
-    assert(VectorStore.ingest(ids(20, 25), dir, mode = "append") > 0)
-    assertParity(dir, freshCols.filterNot(_ == "rcodes"), "pre-residual legacy")
   }
 }

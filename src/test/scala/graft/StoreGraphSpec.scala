@@ -165,27 +165,25 @@ class StoreGraphSpec extends AnyFunSuite {
   test("spliceGraph refuses a degree wider than the sidecar's build degree") {
     // the merge lemma top-d(old∪new) = top-d(top-d(old)∪new) only holds
     // for d <= build degree: a wider splice would need old peers the
-    // stored lists never kept, silently diverging from a rebuild
-    val dir = Files.createTempDirectory("graft_vsg4").toString + "/index"
-    val docs = Tables.documents(spark, sf).filter(col("doc_id") < 60)
-      .select("doc_id", "text")
-    assert(VectorStore.ingest(docs, dir) > 0)
-    assert(VectorStore.buildGraph(spark, dir) > 0) // build degree 8
-    val e = intercept[IllegalArgumentException] {
-      VectorStore.spliceGraph(spark, dir, Seq(3L), degree = 9)
+    // stored lists never kept, silently diverging from a rebuild. The
+    // build degree is read from its sidecar with parquet-hadoop, so the
+    // refusal runs no Spark job.
+    val dir = OldStore.copy(indexDir, "deg") // build degree 8
+    val (e, trace) = JobCounter(spark) {
+      intercept[IllegalArgumentException] {
+        VectorStore.spliceGraph(spark, dir, Seq(3L), degree = 9)
+      }
     }
     assert(e.getMessage.contains("build degree"), e.getMessage)
-    // legacy sidecar (no degree file): the bound is inferred from the
-    // stored lists (<= 8 here), so a degree-9 splice is still refused
-    val degFile = new java.io.File(s"$dir/_graft_graph/degree.parquet")
-    assert(degFile.isDirectory, "buildGraph did not persist its degree")
-    degFile.listFiles().foreach(_.delete()); degFile.delete()
-    val e2 = intercept[IllegalArgumentException] {
-      VectorStore.spliceGraph(spark, dir, Seq(3L), degree = 9)
-    }
-    assert(e2.getMessage.contains("build degree"), e2.getMessage)
+    assert(trace.jobs == 0, s"the refused splice ran ${trace.jobs} jobs")
+    // a sidecar without its degree file predates the format marker: the
+    // format gate refuses the splice before reading any sidecar
+    val old = OldStore.unmarked(spark, indexDir, "deg_old",
+      "_graft_graph/degree.parquet")
+    OldStore.assertRefused(spark, old, "none")(
+      "spliceGraph" -> (() => VectorStore.spliceGraph(spark, old, Seq(3L),
+        degree = 9)))
     // the refusals mutated nothing: a within-degree splice still works
-    // (degree 1 is <= any inferred legacy bound — edges exist, so >= 1)
     assert(VectorStore.spliceGraph(spark, dir, Seq(3L), degree = 1) > 0)
   }
 

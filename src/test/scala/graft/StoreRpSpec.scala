@@ -10,8 +10,8 @@ import java.nio.file.Files
   * ±1 projections of the 32 raw weights (literal sign matrix, no trained
   * artifact) + cell-probed projected-dot shortlist with exact re-rank.
   * Pins the code contract against an in-test md5 re-derivation, the
-  * self-hit, the codes-only phase-1 scan, and the pre-rp legacy
-  * refusal. */
+  * self-hit, the codes-only phase-1 scan, and the format-gate refusal
+  * of a store older than the pcodes column. */
 class StoreRpSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
@@ -93,39 +93,22 @@ class StoreRpSpec extends AnyFunSuite {
   }
 
   test("pre-rp legacy store: append keeps the schema uniform, read refuses") {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val src = Files.createTempDirectory("graft_rp_leg").toString + "/src"
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    assert(VectorStore.ingest(docs.filter(col("doc_id") < 40), src) > 0)
-    val leg = Files.createTempDirectory("graft_rp_leg").toString + "/index"
-    spark.read.parquet(src).drop("pcodes")
-      .write.partitionBy("bucket", "cell").parquet(leg)
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq("_graft_pq/codebook.parquet", "_graft_pq/perm.parquet",
-        "_graft_pq/rescb.parquet", "_graft_cells/centroids.parquet")
-      .foreach { p =>
-        org.apache.hadoop.fs.FileUtil.copy(fs,
-          new org.apache.hadoop.fs.Path(s"$src/$p"), fs,
-          new org.apache.hadoop.fs.Path(s"$leg/$p"), false, conf)
-      }
-    assert(VectorStore.ingest(docs.filter(col("doc_id") >= 40 &&
-      col("doc_id") < 60), leg, mode = "append") > 0)
+    // a store written before the pcodes column also predates the format
+    // marker: its append and the rp read are refused before any job
+    val leg = OldStore.unmarked(spark, dir, "rp")
+    val cols = spark.read.parquet(leg).columns.toSeq
+    val more = Tables.documents(spark, sf)
+      .filter(col("doc_id") >= 100 && col("doc_id") < 105)
+      .select("doc_id", "text")
+    OldStore.assertRefused(spark, leg, "none")(
+      "append" -> (() => VectorStore.ingest(more, leg, mode = "append")),
+      "searchRpCells" -> (() => VectorStore.searchRpCells(spark, leg,
+        "anything", k = 3)),
+      "searchRpCellsBatch" -> (() => VectorStore.searchRpCellsBatch(spark, leg,
+        Seq("anything"), k = 3)))
     spark.catalog.refreshByPath(leg)
-    assert(!spark.read.parquet(leg).columns.contains("pcodes"),
-      "mixed-schema index: appended rows carry pcodes the legacy rows lack")
-    val ex = intercept[IllegalArgumentException] {
-      VectorStore.searchRpCells(spark, leg, "anything", k = 3)
-    }
-    assert(ex.getMessage.contains("pcodes"), ex.getMessage)
-    // the other serving paths still cover the appended batch
-    val row = spark.read.parquet(leg).filter(col("doc_id") >= 40)
-      .orderBy("doc_id", "chunk_ix")
-      .select("doc_id", "chunk_ix", "chunk").limit(1).collect().head
-    val hits = VectorStore.searchCells(spark, leg, row.getString(2),
-      k = 3).collect()
-    assert(hits.nonEmpty && hits.head.getAs[Long]("doc_id") == row.getLong(0),
-      s"appended chunk lost on the cell path: ${hits.headOption}")
+    assert(spark.read.parquet(leg).columns.toSeq == cols,
+      "a refused append changed the schema")
   }
 
   test("golden reads: the rp route, single and batch, hashes as recorded") {

@@ -9,7 +9,7 @@ import java.nio.file.Files
 /** G44: the store's SQ8 serving rung — ingest-time per-chunk int8 codes
   * (self-scaled, no trained artifact) + cell-probed ADC read with exact
   * re-rank. Pins the code contract, the self-hit, append consistency,
-  * and the pre-sq8 legacy refusal. */
+  * and the format-gate refusal of a store older than the sq8 columns. */
 class StoreSq8Spec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
@@ -119,60 +119,33 @@ class StoreSq8Spec extends AnyFunSuite {
   }
 
   test("sq8 graph walk refuses a pre-sq8 store loudly") {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val leg = Files.createTempDirectory("graft_sq8_gleg").toString + "/index"
-    spark.read.parquet(graphDir).drop("scodes", "sscale")
-      .write.partitionBy("bucket", "cell").parquet(leg)
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq("_graft_graph/edges.parquet", "_graft_graph/degree.parquet",
-        "_graft_graph/entries.parquet").foreach { p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new org.apache.hadoop.fs.Path(s"$graphDir/$p"), fs,
-        new org.apache.hadoop.fs.Path(s"$leg/$p"), false, conf)
-    }
-    val ex = intercept[IllegalArgumentException] {
-      VectorStore.searchGraphSq8(spark, leg, "anything", k = 3).collect()
-    }
-    assert(ex.getMessage.contains("scodes"), ex.getMessage)
+    // a store written before the sq8 columns also predates the format
+    // marker: both graph walks refuse it before any job
+    val leg = OldStore.unmarked(spark, graphDir, "sq8g")
+    OldStore.assertRefused(spark, leg, "none")(
+      "searchGraphSq8" -> (() => VectorStore.searchGraphSq8(spark, leg,
+        "anything", k = 3)),
+      "searchGraphSq8Batch" -> (() => VectorStore.searchGraphSq8Batch(spark,
+        leg, Seq("anything"), k = 3)))
   }
 
   test("pre-sq8 legacy store: append keeps the schema uniform, read refuses") {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val src = Files.createTempDirectory("graft_sq8_leg").toString + "/src"
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    assert(VectorStore.ingest(docs.filter(col("doc_id") < 40), src) > 0)
-    // materialize a faithful pre-r12 store: same rows minus the sq8
-    // columns, same frozen sidecars
-    val leg = Files.createTempDirectory("graft_sq8_leg").toString + "/index"
-    spark.read.parquet(src).drop("scodes", "sscale")
-      .write.partitionBy("bucket", "cell").parquet(leg)
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq("_graft_pq/codebook.parquet", "_graft_pq/perm.parquet",
-        "_graft_pq/rescb.parquet", "_graft_cells/centroids.parquet")
-      .foreach { p =>
-        org.apache.hadoop.fs.FileUtil.copy(fs,
-          new org.apache.hadoop.fs.Path(s"$src/$p"), fs,
-          new org.apache.hadoop.fs.Path(s"$leg/$p"), false, conf)
-      }
-    assert(VectorStore.ingest(docs.filter(col("doc_id") >= 40 &&
-      col("doc_id") < 60), leg, mode = "append") > 0)
+    // the append is refused by the format gate, so no batch can land
+    // beside rows of another era: the schema stays as it was
+    val leg = OldStore.unmarked(spark, dir, "sq8")
+    val cols = spark.read.parquet(leg).columns.toSeq
+    val more = Tables.documents(spark, sf)
+      .filter(col("doc_id") >= 100 && col("doc_id") < 105)
+      .select("doc_id", "text")
+    OldStore.assertRefused(spark, leg, "none")(
+      "append" -> (() => VectorStore.ingest(more, leg, mode = "append")),
+      "searchSq8Cells" -> (() => VectorStore.searchSq8Cells(spark, leg,
+        "anything", k = 3)),
+      "searchCells" -> (() => VectorStore.searchCells(spark, leg,
+        "anything", k = 3)))
     spark.catalog.refreshByPath(leg)
-    assert(!spark.read.parquet(leg).columns.contains("scodes"),
-      "mixed-schema index: appended rows carry scodes the legacy rows lack")
-    val ex = intercept[IllegalArgumentException] {
-      VectorStore.searchSq8Cells(spark, leg, "anything", k = 3)
-    }
-    assert(ex.getMessage.contains("scodes"), ex.getMessage)
-    // the other serving paths still cover the appended batch
-    val row = spark.read.parquet(leg).filter(col("doc_id") >= 40)
-      .orderBy("doc_id", "chunk_ix")
-      .select("doc_id", "chunk_ix", "chunk").limit(1).collect().head
-    val hits = VectorStore.searchCells(spark, leg, row.getString(2),
-      k = 3).collect()
-    assert(hits.nonEmpty && hits.head.getAs[Long]("doc_id") == row.getLong(0),
-      s"appended chunk lost on the cell path: ${hits.headOption}")
+    assert(spark.read.parquet(leg).columns.toSeq == cols,
+      "a refused append changed the schema")
   }
 
   test("golden reads: the sq8 route, single and batch, hashes as recorded") {

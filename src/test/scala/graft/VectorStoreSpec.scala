@@ -464,104 +464,41 @@ class VectorStoreSpec extends AnyFunSuite {
 
   test("legacy store (codebook, no perm sidecar): append stays identity-coded, " +
       "writes no sidecar") {
-    // a store written before the perm sidecar existed is identity-coded
-    // end to end; an append that trained a fresh permutation would cut
-    // the batch's codes along subspaces the frozen codebook never saw
-    // AND start permuting queries, corrupting ADC for all legacy rows
-    val dir = Files.createTempDirectory("graft_vs_leg").toString + "/index"
-    val first = Tables.documents(spark, sf).filter(col("doc_id") < 40)
-      .select("doc_id", "text")
-    assert(VectorStore.ingest(first, dir) > 0)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val permPath = new org.apache.hadoop.fs.Path(s"$dir/_graft_pq/perm.parquet")
-    assert(fs.delete(permPath, true)) // simulate the pre-perm store
+    // a store written before the perm sidecar also predates the format
+    // marker: the gate refuses its append and its compressed read before
+    // any job, so no perm sidecar is written and no row is coded along a
+    // layout the frozen codebook never saw — re-ingest upgrades it
+    val dir = OldStore.unmarked(spark, indexDir, "preperm",
+      "_graft_pq/perm.parquet")
     val second = Tables.documents(spark, sf)
       .filter(col("doc_id") >= 40 && col("doc_id") < 60)
       .select("doc_id", "text")
-    assert(VectorStore.ingest(second, dir, mode = "append") > 0)
-    // 1) no sidecar appeared: the store keeps serving identity-permuted
-    assert(!fs.exists(permPath),
-      "append to a pre-perm store wrote a perm sidecar")
-    // 2) the appended codes are cut along the IDENTITY layout against
-    //    the frozen codebook — recompute one chunk's codes in-test
-    spark.catalog.refreshByPath(dir)
-    val row = spark.read.parquet(dir).filter(col("doc_id") >= 40)
-      .orderBy("doc_id", "chunk_ix")
-      .select("raw", "codes", "chunk").limit(1).collect().head
-    val raw = row.getSeq[Long](0)
-    val cb = spark.read.parquet(s"$dir/_graft_pq/codebook.parquet")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
-    val expected = (0 until VectorStore.PqM).map { m =>
-      val sub = raw.slice(m * VectorStore.PqSubDim, (m + 1) * VectorStore.PqSubDim)
-      cb.filter(_._2 == m).map { case (j, _, cent) =>
-        (sub.zip(cent).map { case (a, b) => (a - b) * (a - b) }.sum, j)
-      }.min._2
-    }
-    assert(row.getSeq[Int](1) == expected,
-      s"appended codes not identity-coded: got ${row.getSeq[Int](1)}, " +
-        s"identity encoding is $expected")
-    // 3) the appended chunk self-hits through the compressed path
-    val hits = VectorStore.searchCompressed(spark, dir,
-      row.getString(2), k = 3).collect()
-    assert(hits.nonEmpty && hits.head.getAs[Long]("doc_id") >= 40L,
-      s"appended chunk lost on the legacy identity path: ${hits.headOption}")
+    OldStore.assertRefused(spark, dir, "none")(
+      "append" -> (() => VectorStore.ingest(second, dir, mode = "append")),
+      "searchCompressed" -> (() => VectorStore.searchCompressed(spark, dir,
+        "anything", k = 3)))
+    assert(!new java.io.File(s"$dir/_graft_pq/perm.parquet").exists,
+      "a refused append wrote a perm sidecar")
   }
 
   test("pre-residual legacy store: append codes no rcodes, writes no rescb; " +
       "compressed-cells refuses loudly") {
-    // a store written before residual coding existed has neither the
-    // rescb sidecar nor an rcodes column; an append that trained a fresh
-    // residual codebook from its own batch would (a) freeze a sidecar the
-    // creation batch never saw and (b) leave a mixed-schema index whose
-    // legacy rows silently vanish from the compressed-cells ADC scan
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val src = Files.createTempDirectory("graft_vs_preres").toString + "/src"
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    assert(VectorStore.ingest(docs.filter(col("doc_id") < 40), src) > 0)
-    // materialize a faithful pre-r10 store: same rows minus rcodes, same
-    // frozen sidecars minus rescb
-    val dir = Files.createTempDirectory("graft_vs_preres").toString + "/index"
-    spark.read.parquet(src).drop("rcodes")
-      .write.partitionBy("bucket", "cell").parquet(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq("_graft_pq/codebook.parquet", "_graft_pq/perm.parquet",
-        "_graft_cells/centroids.parquet").foreach { p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new org.apache.hadoop.fs.Path(s"$src/$p"), fs,
-        new org.apache.hadoop.fs.Path(s"$dir/$p"), false, conf)
-    }
-    val more = docs.filter(col("doc_id") >= 40 && col("doc_id") < 60)
-    assert(VectorStore.ingest(more, dir, mode = "append") > 0)
-    // 1) no rescb sidecar appeared, and the schema stayed UNIFORM — the
-    //    appended rows carry no rcodes either
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$dir/_graft_pq/rescb.parquet")),
-      "append to a pre-residual store trained and froze a rescb sidecar")
-    spark.catalog.refreshByPath(dir)
-    assert(!spark.read.parquet(dir).columns.contains("rcodes"),
-      "mixed-schema index: appended rows carry rcodes the legacy rows lack")
-    // 2) the compressed-cells read refuses loudly instead of silently
-    //    dropping every legacy row
-    val ex = intercept[IllegalArgumentException] {
-      VectorStore.searchCompressedCells(spark, dir, "anything", k = 3)
-    }
-    assert(ex.getMessage.contains("residual codebook"), ex.getMessage)
-    // 3) every other serving path still covers the appended batch
-    val row = spark.read.parquet(dir).filter(col("doc_id") >= 40)
-      .orderBy("doc_id", "chunk_ix")
-      .select("doc_id", "chunk_ix", "chunk").limit(1).collect().head
-    val hits = VectorStore.searchCompressed(spark, dir,
-      row.getString(2), k = 3).collect()
-    assert(hits.nonEmpty &&
-      hits.head.getAs[Long]("doc_id") == row.getLong(0),
-      s"appended chunk lost on the raw-ADC path: ${hits.headOption}")
-    val cellHits = VectorStore.searchCells(spark, dir,
-      row.getString(2), k = 3).collect()
-    assert(cellHits.nonEmpty &&
-      cellHits.head.getAs[Long]("doc_id") == row.getLong(0),
-      s"appended chunk lost on the cell path: ${cellHits.headOption}")
+    // a store written before residual coding also predates the format
+    // marker: its append is refused (no rescb sidecar trained from the
+    // batch, no mixed-schema index) and so is the compressed-cells read
+    val dir = OldStore.unmarked(spark, indexDir, "preres",
+      "_graft_pq/rescb.parquet")
+    val more = Tables.documents(spark, sf)
+      .filter(col("doc_id") >= 40 && col("doc_id") < 60)
+      .select("doc_id", "text")
+    OldStore.assertRefused(spark, dir, "none")(
+      "append" -> (() => VectorStore.ingest(more, dir, mode = "append")),
+      "searchCompressedCells" -> (() => VectorStore.searchCompressedCells(
+        spark, dir, "anything", k = 3)),
+      "searchCells" -> (() => VectorStore.searchCells(spark, dir,
+        "anything", k = 3)))
+    assert(!new java.io.File(s"$dir/_graft_pq/rescb.parquet").exists,
+      "a refused append trained and froze a rescb sidecar")
   }
 
   test("time-axis zone maps: tag-range serve prunes to the matching batches' files") {
