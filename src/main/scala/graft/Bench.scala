@@ -54,15 +54,20 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
       val t0 = System.nanoTime()
-      try { materialize(fn(spark, dir)) } catch { case _: Throwable => () }
+      materialize(fn(spark, dir))
       (System.nanoTime() - t0) / 1e9
     }
     // diagnostics (forced-path rehearsals, the end-to-end corpus build)
     // are cost profiles, not regression-tracked operators — one shot each
-    // keeps the bench budget on the operator suite
-    def time(fn: (SparkSession, String) => DataFrame, dir: String,
-        once: Boolean = false): Double =
-      (1 to (if (once) 1 else reps)).map(_ => timeOnce(fn, dir)).min
+    // keeps the bench budget on the operator suite. A failed key is NaN
+    // (null in the JSON), not the time until it failed
+    def time(name: String, fn: (SparkSession, String) => DataFrame,
+        dir: String, once: Boolean = false): Double =
+      try (1 to (if (once) 1 else reps)).map(_ => timeOnce(fn, dir)).min
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed on $dir: $e")
+        Double.NaN
+      }
     // dedup_clusters with the driver union-find finish disabled: rehearses
     // the distributed pointer-jumping propagation a 100 TB contracted
     // graph would take (normal entry picks the path data-dependently).
@@ -84,7 +89,7 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val diagnostics = Set("dedup_clusters_distributed", "corpus_job")
     val results = selected.map { case (name, fn) =>
-      name -> time(fn, sfDir, once = diagnostics(name)) }
+      name -> time(name, fn, sfDir, once = diagnostics(name)) }
     // scale slope: re-time every query at a smaller SF and report the
     // big/small wall-clock ratio next to the data-size ratio, so any
     // pair-join whose candidate set grows super-linearly is visible.
@@ -95,7 +100,7 @@ object Bench {
       if (scaleDir.nonEmpty && new java.io.File(scaleDir).isDirectory
           && scaleDir != sfDir)
         Some(scaleDir -> selected.map { case (name, fn) =>
-          name -> time(fn, scaleDir, once = diagnostics(name)) }.toMap)
+          name -> time(name, fn, scaleDir, once = diagnostics(name)) }.toMap)
       else None
     def jnum(v: Double): String = if (v.isNaN || v.isInfinite) "null"
       else f"$v%.3f"
@@ -104,7 +109,7 @@ object Bench {
     // diagnostic lines are not part of the operator suite — keep the
     // headline total comparable across rounds
     val total = results.collect {
-      case (k, v) if !diagnostics(k) => v }.sum
+      case (k, v) if !diagnostics(k) && !v.isNaN => v }.sum
     val scaleJson = scale.map { case (dir, small) =>
       val ratios = results.collect { case (k, big) if small.contains(k) =>
         k -> (if (small(k) > 0) big / small(k) else Double.NaN) }

@@ -16,19 +16,19 @@ import org.apache.spark.sql.functions._
   *     look-back widens only the edit-flag sweep,
   *  3. resolve #EDIT-tagged thread replies (over the full look-back
   *     window, re-handled idempotently like the reference's per-run
-  *     _handle_edit_flags sweep) to their parent messages and
-  *     route those through the store's maintained-index edit lifecycle
+  *     _handle_edit_flags sweep) to their parent messages, which join
+  *     the batch so their CURRENT text is re-exported and re-indexed
   *     (the reference's `process_channel` → `_handle_edit_flags` loop,
-  *     KnowledgeBot.py:425-536 → 571-611 — wired end-to-end in r11),
+  *     KnowledgeBot.py:425-536 → 571-611),
   *  4. extract `#KNOWLEDGE … #END` blocks, enrich with author/mention
   *     metadata and deterministic keywords/summary,
   *  5. render header+body export files with the reference filename scheme
   *     (an edited parent re-renders to the SAME fname — the rewrite
   *     replaces the original export, as the reference's re-export does),
-  *  6. chunk + embed + LSH-bucket the blocks into a parquet vector index
-  *     (new messages append; edited parents go through
-  *     [[VectorStore.edit]] = delete + delete-splice + append +
-  *     insert-splice, so a graph sidecar stays rebuild-equal),
+  *  6. chunk + embed + LSH-bucket the batch into a parquet vector index
+  *     through one [[VectorStore.edit]] of the batch's ids, so an edited
+  *     parent swaps its chunks and a run replayed after a crash before
+  *     step 7 replaces its chunks instead of storing them twice,
   *  7. persist the new state timestamp.
   *
   * Usage: runMain graft.IngestJob <dataDir> <outDir>
@@ -50,10 +50,10 @@ object IngestJob {
     val cfg = GraftConfig.load()
     val stateFile = s"$outDir/state.json"
     val indexDir = s"$outDir/index"
-    // store open, before any export or Spark work: a store of another
-    // format is refused here, not after this run's files are written
+    // store open, before any export: recover refuses a store of another
+    // format, then replays any journal a crashed prior run left
     if (VectorStore.occupied(spark, indexDir))
-      VectorStore.requireFormat(spark, indexDir)
+      VectorStore.recover(spark, indexDir)
     val lastRun = GraftConfig.loadLastRun(stateFile)
     val lookbackS = cfg.threadMaxAgeDays * 86400L
     val startedAt = System.currentTimeMillis() / 1000
@@ -63,10 +63,10 @@ object IngestJob {
       (col("c_custkey") - 1).as("uid"), col("c_name"))
 
     // message stream = events; text payload synthesized deterministically
-    // (the test corpus carries no literal #KNOWLEDGE markers); shared by
-    // the window batch and the edit-parent re-derivation — the latter is
-    // how the reference "re-fetches the parent's CURRENT text" at edit
-    // time (a changed documents row flows into the re-export)
+    // (the test corpus carries no literal #KNOWLEDGE markers); re-deriving
+    // an edited parent here is how the reference "re-fetches the parent's
+    // CURRENT text" at edit time (a changed documents row flows into the
+    // re-export)
     def blocksOf(ev: DataFrame): DataFrame = {
       val msgs = ev
         .join(broadcast(Tables.documents(spark, dataDir)),
@@ -99,9 +99,7 @@ object IngestJob {
     // (KnowledgeBot.py:466-474), so a message is exported and ingested
     // once. (The look-back widens only the EDIT-flag sweep below; using
     // it here would re-append every recent message on every run.)
-    val winEv = events
-      .filter(unix_timestamp(col("ts")) > lit(lastRun))
-      .select(col("event_id"), col("ts"), col("user_id"))
+    val inWindow = unix_timestamp(col("ts")) > lit(lastRun)
 
     // #EDIT resolution (the A14 rule, kb_edit_resolve): a tag counts only
     // (volume bound: the resolved parent set is human-generated edit
@@ -132,50 +130,26 @@ object IngestJob {
         Seq("parent_id"), "left_semi")
       .collect().map(_.getLong(0)).toSeq.sorted
 
-    // new-message batch: everything in the window EXCEPT resolved edit
-    // parents — those reprocess through the edit lifecycle instead of a
-    // plain append (processing both ways would double-ingest them)
-    val newEv =
-      if (parentIds.isEmpty) winEv
-      else winEv.filter(!col("event_id").isInCollection(parentIds))
-    val blocks = blocksOf(newEv)
-    val nFiles = KnowledgeFiles.write(renderExport(blocks), s"$outDir/knowledge")
+    // the window's ids are one run's new messages, the same set the
+    // reference holds in memory
+    val ids = (events.filter(inWindow).select("event_id")
+      .collect().map(_.getLong(0)).toSeq ++ parentIds).distinct.sorted
 
-    // store open: replay any delete journal a crashed prior run left, so
-    // this batch appends to a consistent index
-    if (new java.io.File(indexDir).isDirectory)
-      VectorStore.recover(spark, indexDir)
-    val nChunks = VectorStore.ingest(
-      blocks.select(col("event_id").as("doc_id"), col("block").as("text")),
-      indexDir, cfg.chunkSize, cfg.chunkOverlap, mode = "append")
-
-    // edit lifecycle: re-derive each resolved parent's CURRENT content,
-    // re-export it (same fname ⇒ the file replaces the original), and
-    // swap its chunks through the maintained-index edit — delete +
-    // delete-splice + append + insert-splice, every frozen sidecar
-    // reused. A parent never ingested before (or a still-absent store)
-    // degenerates to a plain append, which is what edit() does when
-    // delete finds no victims.
-    var editFiles = 0L
-    var editChunks = 0L
-    if (parentIds.nonEmpty) {
-      val pBlocks = blocksOf(
-        events.filter(col("event_id").isInCollection(parentIds))
+    val (nFiles, nChunks) =
+      if (ids.isEmpty) (0L, 0L)
+      else {
+        val blocks = blocksOf(events
+          .filter(inWindow || col("event_id").isInCollection(parentIds))
           .select(col("event_id"), col("ts"), col("user_id")))
-      editFiles = KnowledgeFiles.write(renderExport(pBlocks),
-        s"$outDir/knowledge")
-      val pDocs = pBlocks.select(col("event_id").as("doc_id"),
-        col("block").as("text"))
-      editChunks =
-        if (new java.io.File(indexDir).isDirectory)
-          VectorStore.edit(spark, indexDir, parentIds, pDocs,
-            cfg.chunkSize, cfg.chunkOverlap)._2
-        else // fresh store: nothing to edit, the parents simply ingest
-          VectorStore.ingest(pDocs, indexDir, cfg.chunkSize,
-            cfg.chunkOverlap, mode = "append")
-    }
+        val files = KnowledgeFiles.write(renderExport(blocks),
+          s"$outDir/knowledge")
+        val (_, added) = VectorStore.edit(spark, indexDir, ids,
+          blocks.select(col("event_id").as("doc_id"), col("block").as("text")),
+          cfg.chunkSize, cfg.chunkOverlap)
+        (files, added)
+      }
 
     GraftConfig.saveLastRun(stateFile, startedAt)
-    (nFiles + editFiles, nChunks + editChunks, lastRun)
+    (nFiles, nChunks, lastRun)
   }
 }

@@ -400,11 +400,11 @@ object VectorStore {
       // the new rows — worse than failing loudly); a meta-less store
       // drops the batch's meta (backfilling only the new rows would
       // serve a partial filter) and filtered reads refuse until
-      // re-ingest. The field names come from one data file's footer.
+      // re-ingest. The field names come from one data file's footer (a
+      // store emptied by a delete has no rows to disagree with).
       val storedFields: Set[String] =
-        if (reuse) ParquetFooters.fieldNames(spark, indexDir).getOrElse(
-          throw new IllegalStateException(
-            s"store $indexDir has frozen sidecars but no index data files"))
+        if (reuse) ParquetFooters.fieldNames(spark, indexDir)
+          .getOrElse(chunks.columns.toSet)
         else Set.empty
       val hasMeta = chunks.columns.contains("meta")
       require(!storedFields.contains("meta") || hasMeta,
@@ -1712,9 +1712,8 @@ object VectorStore {
     * appended region in. Each splice is bit-equal to a rebuild, so the
     * composition ends bit-equal to `buildGraph` over the final index
     * (spec-pinned). A store without a graph sidecar just skips the
-    * splices. Returns (chunks removed, chunks added). */
-  /** Replace `docIds` with `newDocs` across every plane of the store
-    * (index rows, graph splices, lexical sidecar, zone maps).
+    * splices. A missing or empty `indexDir` is created from `newDocs`.
+    * Returns (chunks removed, chunks added).
     *
     * Crash-safe (r15, the r12 verdict's item #4): the new content is
     * STAGED durably first and an edit-intent manifest committed (temp +
@@ -1733,6 +1732,9 @@ object VectorStore {
   def edit(spark: SparkSession, indexDir: String, docIds: Seq[Long],
       newDocs: org.apache.spark.sql.DataFrame, chunkSize: Int = 20,
       overlap: Int = 5, batchTag: Long = 0L): (Long, Long) = {
+    if (!occupied(spark, indexDir))
+      return (0L, ingest(newDocs, indexDir, chunkSize, overlap,
+        mode = "append", batchTag = batchTag))
     requireFormat(spark, indexDir)
     val fs = fsOf(spark)
     val stamp = s"${System.currentTimeMillis()}_${docIds.hashCode.abs}"

@@ -239,10 +239,11 @@ object Streams {
   /** F10: streaming vector-index maintenance — the reference's realtime
     * loop (poll → chunk → embed → upsert index, KnowledgeBot.main +
     * VectorDatabase.ingest_documents) as a Structured Streaming sink:
-    * each micro-batch of documents runs the SAME batch ingest
-    * (chunk → embed → LSH bucket → partitioned parquet, append mode), so
-    * batch and streaming share one code path and one index layout.
-    * Checkpointing gives effectively-once appends per batch. Returns the
+    * each micro-batch of documents runs the SAME store write as
+    * IngestJob, an `edit` over the batch's doc ids, so batch and streaming
+    * share one code path and one index layout. `foreachBatch` is
+    * at-least-once: a batch replayed after a crash deletes the chunks its
+    * first delivery wrote before appending them again. Returns the
     * started query; stop it or `processAllAvailable()` in the caller. */
   def indexMaintenance(docs: DataFrame, indexDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -250,7 +251,9 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.VectorStore.ingest(batch, indexDir, mode = "append")
+        val ids = batch.select("doc_id").distinct().collect().map(_.getLong(0))
+        if (ids.nonEmpty)
+          graft.operators.VectorStore.edit(batch.sparkSession, indexDir, ids, batch)
         ()
       }
       .start()
@@ -959,13 +962,13 @@ object Streams {
     * ingest both), then EVERY surviving doc routes through the G42 edit
     * lifecycle — delete + delete-splice + append + insert-splice with
     * all frozen sidecars reused — which degenerates to a plain append
-    * for never-seen docs (delete finds no victims), so new docs and
-    * edits need no separate code path, exactly like IngestJob's batch
-    * loop. Replay-idempotent: re-running a batch deletes the chunks it
-    * just added and re-appends identical content. The collected id list
-    * is the bounded-sidecar discipline (edits per micro-batch are
-    * human-generated, the IngestJob volume note). Returns (removed,
-    * added) chunk counts. */
+    * for never-seen docs (delete finds no victims) and creates a missing
+    * store, so new docs and edits need no separate code path, exactly
+    * like IngestJob's batch. Replay-idempotent: re-running a batch
+    * deletes the chunks it just added and re-appends identical content.
+    * The collected id list is the bounded-sidecar discipline (edits per
+    * micro-batch are human-generated, the IngestJob volume note). Returns
+    * (removed, added) chunk counts. */
   def applyEditBatch(batch: DataFrame, indexDir: String,
       chunkSize: Int = 20, overlap: Int = 5): (Long, Long) = {
     val spark = batch.sparkSession
@@ -977,13 +980,12 @@ object Streams {
       .localCheckpoint(true)
     val ids = latest.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
     if (ids.isEmpty) (0L, 0L)
-    else if (new java.io.File(indexDir).isDirectory) {
-      graft.operators.VectorStore.recover(spark, indexDir)
+    else {
+      if (graft.operators.VectorStore.occupied(spark, indexDir))
+        graft.operators.VectorStore.recover(spark, indexDir)
       graft.operators.VectorStore.edit(spark, indexDir, ids, latest,
         chunkSize, overlap)
-    } else
-      (0L, graft.operators.VectorStore.ingest(latest, indexDir, chunkSize,
-        overlap, mode = "append"))
+    }
   }
 
   /** F34: streaming #EDIT lifecycle — the reference's per-run

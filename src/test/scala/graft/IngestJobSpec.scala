@@ -9,6 +9,38 @@ import org.scalatest.funsuite.AnyFunSuite
   * (with no newer events) exports nothing. */
 class IngestJobSpec extends AnyFunSuite {
   import TestSpark.{sf, spark}
+  import org.apache.spark.sql.functions._
+  import spark.implicits._
+
+  // a controlled dataDir: documents 12, 30 and 35 over a 10-row customer
+  // dimension, the events written per test
+  private def controlledData(): String = {
+    val data = Files.createTempDirectory("graft_ij_data").toString
+    graft.sources.Tables.customer(spark, sf).limit(10)
+      .coalesce(1).write.mode("overwrite").parquet(s"$data/customer.parquet")
+    data
+  }
+  private def writeEvents(data: String,
+      rows: Seq[(Long, java.sql.Timestamp, Long)]): Unit = {
+    rows.toDF("event_id", "ts", "user_id")
+      .coalesce(1).write.mode("overwrite").parquet(s"$data/events.parquet")
+    spark.catalog.refreshByPath(s"$data/events.parquet")
+  }
+  private def writeDocs(data: String, doc30: String): Unit = {
+    Seq(
+      (12L, (0 until 30).map(i => s"noteA$i").mkString(" "), "en", "s1"),
+      (30L, doc30, "en", "s1"),
+      (35L, (0 until 30).map(i => s"replyB$i").mkString(" "), "en", "s1"))
+      .toDF("doc_id", "text", "lang", "source")
+      .withColumn("n_chars", length(col("text")))
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$data/documents.parquet")
+    spark.catalog.refreshByPath(s"$data/documents.parquet")
+  }
+  // distinct per-message timestamps: the reference fname scheme keys on
+  // the message ts, so same-second messages would collide on disk
+  private val oldTs = java.sql.Timestamp.valueOf("2024-01-15 10:30:00")
+  private val oldTs2 = java.sql.Timestamp.valueOf("2024-01-15 10:31:00")
 
   test("fresh run exports files and indexes chunks; incremental run is a no-op") {
     val out = Files.createTempDirectory("graft_ingest").toString
@@ -36,37 +68,13 @@ class IngestJobSpec extends AnyFunSuite {
     // controlled dataDir: run 1 ingests the parent; the documents table
     // then changes under it (the "Slack-side edit"); run 2 sees only the
     // new #EDIT reply and must propagate the changed text everywhere.
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val data = Files.createTempDirectory("graft_ij_data").toString
+    val data = controlledData()
     val out = Files.createTempDirectory("graft_ij_out").toString
-    // distinct per-message timestamps: the reference fname scheme keys on
-    // the message ts, so same-second messages would collide on disk
-    val oldTs = java.sql.Timestamp.valueOf("2024-01-15 10:30:00")
-    val oldTs2 = java.sql.Timestamp.valueOf("2024-01-15 10:31:00")
-    def writeEvents(rows: Seq[(Long, java.sql.Timestamp, Long)]): Unit = {
-      rows.toDF("event_id", "ts", "user_id")
-        .coalesce(1).write.mode("overwrite").parquet(s"$data/events.parquet")
-      spark.catalog.refreshByPath(s"$data/events.parquet")
-    }
-    def writeDocs(doc30: String): Unit = {
-      Seq(
-        (12L, (0 until 30).map(i => s"noteA$i").mkString(" "), "en", "s1"),
-        (30L, doc30, "en", "s1"),
-        (35L, (0 until 30).map(i => s"replyB$i").mkString(" "), "en", "s1"))
-        .toDF("doc_id", "text", "lang", "source")
-        .withColumn("n_chars", length(col("text")))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$data/documents.parquet")
-      spark.catalog.refreshByPath(s"$data/documents.parquet")
-    }
-    graft.sources.Tables.customer(spark, sf).limit(10)
-      .coalesce(1).write.mode("overwrite").parquet(s"$data/customer.parquet")
 
     // run 1: two old messages (parent 30 among them), no replies
-    writeEvents(Seq((30L, oldTs, 3L), (12L, oldTs2, 4L)))
+    writeEvents(data, Seq((30L, oldTs, 3L), (12L, oldTs2, 4L)))
     val origText = (0 until 30).map(i => s"orig$i").mkString(" ")
-    writeDocs(origText)
+    writeDocs(data, origText)
     val (files1, chunks1, _) = IngestJob.run(spark, data, out)
     assert(files1 == 2 && chunks1 > 0, s"run 1: $files1 files, $chunks1 chunks")
     val exports = new java.io.File(s"$out/knowledge").listFiles().map(_.getName)
@@ -78,14 +86,22 @@ class IngestJobSpec extends AnyFunSuite {
     // tagged #EDIT lands (id 35: %7==0 ⇒ tagged, %10!=0 ⇒ genuine reply,
     // rounds to parent 30)
     val editedText = (0 until 30).map(i => s"edited$i").mkString(" ")
-    writeDocs(editedText)
+    writeDocs(data, editedText)
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    writeEvents(Seq((30L, oldTs, 3L), (12L, oldTs2, 4L), (35L, now, 5L)))
-    val (files2, chunks2, _) = IngestJob.run(spark, data, out)
-    // reply 35 exports + appends as a normal message; parent 30
-    // re-exports through the edit path
+    writeEvents(data, Seq((30L, oldTs, 3L), (12L, oldTs2, 4L), (35L, now, 5L)))
+    val ((files2, chunks2, _), trace2) = JobCounter(spark) {
+      IngestJob.run(spark, data, out)
+    }
+    // reply 35 and parent 30 are one batch: one export, one store write
     assert(files2 == 2, s"run 2 exported $files2 files (reply + re-export)")
     assert(chunks2 > 0)
+    // the batch's chunks reach the index in ONE append (the edit's delete
+    // rewrites the victims' buckets in overwrite mode, staging and
+    // sidecars write elsewhere)
+    val indexWrites = trace2.executions("Arguments: file:" +
+      java.util.regex.Pattern.quote(s"$out/index") + ", .*, Append, ")
+    assert(indexWrites.size == 1,
+      s"run 2 appended index data in ${indexWrites.size} executions")
     // the re-export REPLACED the original file (same fname, new content)
     val after = scala.io.Source.fromFile(s"$out/knowledge/${parentFile.get}").mkString
     assert(after.contains("edited0") && !after.contains("orig0"),
@@ -124,5 +140,30 @@ class IngestJobSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/index")
       .filter(col("doc_id") === 30L).count() == doc30,
       "edit re-handling duplicated the parent's chunks")
+  }
+
+  test("a run replayed from its pre-run state stores each chunk once") {
+    // a crash after the store write but before the state save leaves the
+    // old last-run timestamp: the next run re-handles the same window,
+    // and its delete-before-append must replace, not duplicate, the
+    // chunks the crashed run wrote
+    val data = controlledData()
+    val out = Files.createTempDirectory("graft_ij_rerun").toString
+    writeEvents(data, Seq((30L, oldTs, 3L), (12L, oldTs2, 4L)))
+    writeDocs(data, (0 until 30).map(i => s"orig$i").mkString(" "))
+    val (files1, chunks1, _) = IngestJob.run(spark, data, out)
+    assert(files1 == 2 && chunks1 > 0, s"run 1: $files1 files, $chunks1 chunks")
+    // restore the pre-run state: no state file, so the window reopens
+    Files.delete(java.nio.file.Paths.get(s"$out/state.json"))
+    val (files2, chunks2, since2) = IngestJob.run(spark, data, out)
+    assert(since2 == 0L, "the replay must start from the pre-run state")
+    assert(files2 == files1 && chunks2 == chunks1,
+      s"replay: $files2 files/$chunks2 chunks vs run 1's $files1/$chunks1")
+    spark.catalog.refreshByPath(s"$out/index")
+    val idx = spark.read.parquet(s"$out/index")
+    val twice = idx.groupBy("doc_id", "chunk_ix").count()
+      .filter(col("count") > 1).collect()
+    assert(twice.isEmpty, s"replay stored chunks twice: ${twice.toSeq}")
+    assert(idx.count() == chunks1, "replay changed the chunk count")
   }
 }

@@ -291,6 +291,23 @@ class StreamingSpec extends AnyFunSuite {
         .search(spark, indexDir, "zeta eta theta iota kappa", 1).collect()
       assert(hit.head.getLong(1) == 2L)
     } finally q.stop()
+    // a crash after the store write but before the commit-log entry:
+    // restart re-delivers the last micro-batch, which must replace its
+    // chunks, not store them twice
+    val commits = new java.io.File(s"$ckpt/commits")
+    val last = commits.listFiles().map(_.getName)
+      .filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    Seq(last, s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+    spark.catalog.refreshByPath(indexDir)
+    val before = spark.read.parquet(indexDir).count()
+    val q2 = Streams.indexMaintenance(docs, indexDir, ckpt)
+    try q2.processAllAvailable() finally q2.stop()
+    spark.catalog.refreshByPath(indexDir)
+    val idx = spark.read.parquet(indexDir)
+    val twice = idx.groupBy("doc_id", "chunk_ix").count()
+      .filter(col("count") > 1).collect()
+    assert(twice.isEmpty, s"replayed batch stored chunks twice: ${twice.toSeq}")
+    assert(idx.count() == before, "replayed batch changed the chunk count")
   }
 
   test("F19: streaming quantile monitor folds micro-batches, matches batch") {
