@@ -26,9 +26,11 @@ import org.apache.spark.sql.functions._
   *     (an edited parent re-renders to the SAME fname — the rewrite
   *     replaces the original export, as the reference's re-export does),
   *  6. chunk + embed + LSH-bucket the batch into a parquet vector index
-  *     through one [[VectorStore.edit]] of the batch's ids, so an edited
-  *     parent swaps its chunks and a run replayed after a crash before
-  *     step 7 replaces its chunks instead of storing them twice,
+  *     through one [[VectorStore.edit]] of the batch's ids — one rewrite
+  *     of the partitions the batch touches, so an edited parent swaps its
+  *     chunks and a run replayed after a crash before step 7 replaces its
+  *     chunks instead of storing them twice (the batch's blocks are
+  *     materialized once; steps 5 and 6 read that copy),
   *  7. persist the new state timestamp.
   *
   * Usage: runMain graft.IngestJob <dataDir> <outDir>
@@ -141,6 +143,7 @@ object IngestJob {
         val blocks = blocksOf(events
           .filter(inWindow || col("event_id").isInCollection(parentIds))
           .select(col("event_id"), col("ts"), col("user_id")))
+          .localCheckpoint(true)
         val files = KnowledgeFiles.write(renderExport(blocks),
           s"$outDir/knowledge")
         val (_, added) = VectorStore.edit(spark, indexDir, ids,

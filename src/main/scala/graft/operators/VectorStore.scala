@@ -5,7 +5,8 @@ import graft.sources.ParquetFooters
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.hadoop.fs.Path
 
 import scala.jdk.CollectionConverters._
 
@@ -218,7 +219,39 @@ object VectorStore {
   /** The index frame of an existing store, after [[requireFormat]]. */
   private[graft] def open(spark: SparkSession, indexDir: String): DataFrame = {
     requireFormat(spark, indexDir)
-    spark.read.parquet(indexDir)
+    readIndex(spark, indexDir)
+  }
+
+  /** The index frame at `indexDir`, with no schema-inference job: the
+    * schema is the one a data file's footer records, plus the `bucket`
+    * and `cell` partition columns. `only` scans just those data files
+    * (listed by [[ParquetFooters.files]]). A store with no data file —
+    * every row deleted — reads as the empty frame of [[storeRows]]'s
+    * layout, so its reads return no rows. Every index read goes through
+    * here. */
+  private[operators] def readIndex(spark: SparkSession, indexDir: String,
+      only: Option[Seq[Path]] = None): DataFrame =
+    only.fold(ParquetFooters.files(spark, indexDir).nextOption())(_.headOption)
+      .fold(emptyIndex(spark)) { first =>
+        val reader = spark.read.schema(StructType(
+          ParquetFooters.sparkSchema(spark, first).fields ++ Seq(
+            StructField("bucket", IntegerType), StructField("cell", IntegerType))))
+        only.fold(reader.parquet(indexDir))(files =>
+          reader.option("basePath", indexDir).parquet(files.map(_.toString): _*))
+      }
+
+  /** [[storeRows]]'s layout with no rows, partition columns last as a
+    * scan reads them (no meta: a store with no data file records none). */
+  private def emptyIndex(spark: SparkSession): DataFrame = {
+    val none = java.util.Collections.emptyList[Row]()
+    val chunks = spark.createDataFrame(none, StructType(Seq(
+      StructField("doc_id", LongType), StructField("chunk_ix", IntegerType),
+      StructField("chunk", StringType))))
+    val layout = storeRows(embed(chunks), Frozen(0 until Dim, Nil, Array.empty,
+      Nil), meta = false, lit(0L)).schema.fields
+    val (parts, data) = layout.partition(f => Set("bucket", "cell")(f.name))
+    spark.createDataFrame(none,
+      ParquetFooters.nullable(StructType(data ++ parts)).asInstanceOf[StructType])
   }
 
   /** Does `indexDir` hold anything? An append into a missing or empty dir
@@ -264,14 +297,91 @@ object VectorStore {
     // column on the docs batch (map<string,string> by convention) rides
     // every chunk row into the index, so serving reads can fold a
     // predicate BELOW their shortlists (B21's pre-filter discipline).
-    val hasMeta = docs.columns.contains("meta")
-    val metaIn: Seq[Column] = if (hasMeta) Seq(col("meta")) else Nil
-    val chunks = docs
+    ingestChunks(chunksOf(docs, chunkSize, overlap), indexDir, mode,
+      lit(batchTag), cells)
+  }
+
+  /** docs(doc_id, text[, meta]) → (doc_id[, meta], chunk_ix, chunk), one
+    * row per chunk (TextProcessor.chunk_text semantics, chunk_ix from 1). */
+  private def chunksOf(docs: DataFrame, chunkSize: Int,
+      overlap: Int): DataFrame = {
+    val metaIn: Seq[Column] =
+      if (docs.columns.contains("meta")) Seq(col("meta")) else Nil
+    docs
       .select((Seq(col("doc_id")) ++ metaIn ++ Seq(
         posexplode(Text.chunks(col("text"), chunkSize, overlap)))): _*)
       .select((Seq(col("doc_id")) ++ metaIn ++ Seq(
         (col("pos") + 1).as("chunk_ix"), col("col").as("chunk"))): _*)
-    ingestChunks(chunks, indexDir, mode, lit(batchTag), cells)
+  }
+
+  /** The learned artifacts every encoded column is cut against, as driver
+    * values: OPQ permutation, PQ codebook, cell summary, residual
+    * codebook. */
+  private final case class Frozen(perm: Seq[Int],
+      codebook: Seq[(Int, Int, Array[Long])],
+      centroids: Array[(Int, Array[Long], Long)],
+      rescb: Seq[(Int, Int, Array[Long])])
+
+  /** A store's frozen artifacts, read on the driver (no Spark job). */
+  private def readFrozen(spark: SparkSession, indexDir: String): Frozen =
+    Frozen(readPerm(spark, indexDir),
+      readCodebook(spark, s"$indexDir/$PqDir/codebook.parquet"),
+      readCells(spark, indexDir),
+      readCodebook(spark, s"$indexDir/$PqDir/$ResCbFile"))
+
+  /** Each chunk row's raw int64 weights, LSH bucket and embedding. */
+  private def embed(chunks: DataFrame): DataFrame = chunks
+    .withColumn("raw", rawWeights(col("chunk")))
+    .withColumn("bucket", bucketOf(col("raw")))
+    .withColumn("embedding", embedFromRaw(col("raw")))
+
+  /** The scaled residual of a celled row's raw weights against its cell's
+    * frozen mean (scaled means computed driver-side from the K-row
+    * summary). */
+  private def residual(centroids: Array[(Int, Array[Long], Long)]): Column =
+    scaledResidual(col("raw"), element_at(typedLit(centroids
+      .map { case (c, csum, m) => c -> cmeanScaled(csum.toSeq, m) }.toMap),
+      col("cell")))
+
+  /** The store's row layout, stated once: an [[embed]]ded chunk frame →
+    * every stored column, in the written order, as one row-local
+    * projection over the driver-literal artifacts `f` (cell, PQ codes of
+    * the permuted raw weights, residual codes, `batchTag`, SQ8 and RP
+    * codes). `meta` keeps the input's `meta` column; any other input
+    * column (retrain's `orig_tag`) is not written. Every index write
+    * encodes through here, and a store with no data file reads as its
+    * empty frame ([[readIndex]]). */
+  private def storeRows(embedded: DataFrame, f: Frozen, meta: Boolean,
+      batchTag: Column): DataFrame = {
+    val celled = embedded.withColumn("cell", cellOf(col("raw"), f.centroids))
+    rpCols(sq8Cols(celled.select((Seq(col("doc_id"), col("chunk_ix")) ++
+      (if (meta) Seq(col("meta")) else Nil) ++
+      Seq(col("chunk"), col("raw"), col("bucket"), col("embedding"),
+        col("cell"), pqCodes(permuteRaw(col("raw"), f.perm), f.codebook).as("codes"),
+        pqCodes(residual(f.centroids), f.rescb).as("rcodes"),
+        batchTag.as("batch_tag"))): _*)))
+  }
+
+  /** The meta rule of a batch with `columns` (meta is optional per
+    * store): a store's creation keeps the batch's meta; a meta-carrying
+    * store REFUSES a meta-less batch (filtered reads would silently drop
+    * the new rows — worse than failing loudly); a meta-less store drops
+    * the batch's meta (backfilling only the new rows would serve a
+    * partial filter) and filtered reads refuse until re-ingest. The
+    * stored field names come from one data file's footer (a store with no
+    * data file has no rows to disagree with). Returns whether `meta` is
+    * written. */
+  private def keepsMeta(spark: SparkSession, indexDir: String,
+      columns: Seq[String], reuse: Boolean): Boolean = {
+    val hasMeta = columns.contains("meta")
+    if (!reuse) hasMeta else {
+      val stored = ParquetFooters.fieldNames(spark, indexDir)
+        .getOrElse(columns.toSet)
+      require(!stored.contains("meta") || hasMeta,
+        s"store $indexDir carries a `meta` column: append batches must " +
+          "carry `meta` too, or filtered reads would silently drop them")
+      hasMeta && stored.contains("meta")
+    }
   }
 
   /** The encode-and-write core shared by [[ingest]] (which chunks docs
@@ -294,11 +404,7 @@ object VectorStore {
     // the codegen'd graft_dot_l kernel over it — the interpreted
     // aggregate/zip_with double dot it replaces was the scan-time cost of
     // every probe. `embedding` stays for float-vector consumers.
-    val embedded = chunks
-      .withColumn("raw", rawWeights(col("chunk")))
-      .withColumn("bucket", bucketOf(col("raw")))
-      .withColumn("embedding", embedFromRaw(col("raw")))
-      .cache()
+    val embedded = embed(chunks).cache()
     val n = embedded.count()
     if (n > 0) {
       // PQ codebook: frozen at store creation (k-means|| seeding sampled
@@ -310,14 +416,14 @@ object VectorStore {
       val permPath = s"$indexDir/$PqDir/$PermFile"
       val cellPath = s"$indexDir/$CellsDir/centroids.parquet"
       val resCbPath = s"$indexDir/$PqDir/$ResCbFile"
-      // the OPQ permutation freezes FIRST: the codebook's subspaces are
-      // defined over the permuted layout, so an append reuses both
-      val perm: Seq[Int] =
-        if (reuse) readPerm(spark, indexDir) else trainPerm(embedded)
       // Every frozen artifact is read ONCE on the driver (parquet-hadoop,
       // no Spark job) and every trained one collected once: the encode
       // below is row-local codegen over these literals, and driver arrays
       // cannot race the sidecar rewrites at the end of this method.
+      val frozen = if (reuse) Some(readFrozen(spark, indexDir)) else None
+      // the OPQ permutation freezes FIRST: the codebook's subspaces are
+      // defined over the permuted layout, so an append reuses both
+      val perm: Seq[Int] = frozen.fold(trainPerm(embedded))(_.perm)
       val trainedCb = if (reuse) None else {
         // seed = first PqK chunks' subvectors (the k-means|| seeding
         // step), then ONE exact Lloyd round over the creation batch
@@ -332,7 +438,7 @@ object VectorStore {
         Some(lloydRefine(subRows(embedded, permuteRaw(col("raw"), perm)), seeds)
           .localCheckpoint(true))
       }
-      val codebook = trainedCb.fold(readCodebook(spark, cbPath))(codebookRows)
+      val codebook = trainedCb.fold(frozen.get.codebook)(codebookRows)
       // Cell centroids: same freezing discipline as the codebook — one
       // Lloyd round over the creation batch (seed = first `cells` chunks
       // — a creation-time knob (r11): cell count should scale with the
@@ -362,21 +468,18 @@ object VectorStore {
             (max("cnt")).as("n"))
           .localCheckpoint(true))
       }
-      val centroids = trainedCells.fold(readCells(spark, indexDir))(
+      val centroids = trainedCells.fold(frozen.get.centroids)(
         _.collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2))))
       // residual-PQ codes (r10): each chunk's rres against its FROZEN
       // cell centroid (scaled means computed driver-side from the K-row
       // summary), coded against one GLOBAL residual codebook — frozen at
       // creation like the raw-layout codebook, reused by appends
-      val celled = embedded.withColumn("cell", cellOf(col("raw"), centroids))
-      val rres = scaledResidual(col("raw"), element_at(typedLit(centroids
-        .map { case (c, csum, m) => c -> cmeanScaled(csum.toSeq, m) }.toMap),
-        col("cell")))
       val trainedRes = if (reuse) None else {
         // same seeding + one exact Lloyd round as the raw codebook
         // (r11): the residual codebook trains on the creation batch's
         // scaled residuals instead of carrying its first-K samples
-        val withRes = celled.withColumn("rres", rres)
+        val withRes = embedded.withColumn("cell", cellOf(col("raw"), centroids))
+          .withColumn("rres", residual(centroids))
         val wj = Window.orderBy("doc_id", "chunk_ix")
         val seeds = withRes.select("doc_id", "chunk_ix", "rres")
           .orderBy("doc_id", "chunk_ix").limit(PqK)
@@ -386,7 +489,7 @@ object VectorStore {
         Some(lloydRefine(subRows(withRes, col("rres")), seeds)
           .localCheckpoint(true))
       }
-      val rescb = trainedRes.fold(readCodebook(spark, resCbPath))(codebookRows)
+      val rescb = trainedRes.fold(frozen.get.rescb)(codebookRows)
       // SQ8 codes (G44, r12): per-chunk symmetric int8 quantization of
       // the exact raw weights — the serving rung between the raw-vector
       // cell scan and the PQ/residual ADC. The per-chunk scale
@@ -394,31 +497,8 @@ object VectorStore {
       // rung needs NO trained artifact: every row self-scales, appends
       // and edits are consistent by construction. JL-projected codes
       // (G47, r13) likewise.
-      //
-      // meta rules (meta is optional per store): a meta-carrying store
-      // REFUSES a meta-less append (filtered reads would silently drop
-      // the new rows — worse than failing loudly); a meta-less store
-      // drops the batch's meta (backfilling only the new rows would
-      // serve a partial filter) and filtered reads refuse until
-      // re-ingest. The field names come from one data file's footer (a
-      // store emptied by a delete has no rows to disagree with).
-      val storedFields: Set[String] =
-        if (reuse) ParquetFooters.fieldNames(spark, indexDir)
-          .getOrElse(chunks.columns.toSet)
-        else Set.empty
-      val hasMeta = chunks.columns.contains("meta")
-      require(!storedFields.contains("meta") || hasMeta,
-        s"store $indexDir carries a `meta` column: append batches must " +
-          "carry `meta` too, or filtered reads would silently drop them")
-      val dropMeta = reuse && hasMeta && !storedFields.contains("meta")
-      // one row-local projection, written column order = the store format
-      // (an input `orig_tag` feeds batchTagCol and is not written)
-      val indexed = rpCols(sq8Cols(celled.select((Seq(col("doc_id"),
-        col("chunk_ix")) ++
-        (if (hasMeta && !dropMeta) Seq(col("meta")) else Nil) ++
-        Seq(col("chunk"), col("raw"), col("bucket"), col("embedding"),
-          col("cell"), pqCodes(permuteRaw(col("raw"), perm), codebook).as("codes"),
-          pqCodes(rres, rescb).as("rcodes"), batchTagCol.as("batch_tag"))): _*)))
+      val indexed = storeRows(embedded, Frozen(perm, codebook, centroids, rescb),
+        keepsMeta(spark, indexDir, chunks.columns, reuse), batchTagCol)
       indexed.write.mode(mode).partitionBy("bucket", "cell").parquet(indexDir)
       // time-axis zone maps: incremental upkeep reads this batch's files'
       // footers only (an overwrite-mode write wiped the old sidecar with
@@ -637,7 +717,7 @@ object VectorStore {
     val probes = spark.createDataFrame(pairs.asJava,
       StructType(StructField("cell", IntegerType, nullable = false) +:
         qf.schema.fields))
-    val scanned = spark.read.parquet(indexDir)
+    val scanned = readIndex(spark, indexDir)
       .filter(col("cell").isInCollection(pairs.map(_.getInt(0)).distinct))
     CellProbe(pred.fold(scanned)(scanned.filter), probes, centroids)
   }
@@ -1386,7 +1466,7 @@ object VectorStore {
         s"$built — top-d(old∪new)=top-d(top-d(old)∪new) only holds for " +
         "d <= build degree; rebuild with buildGraph(degree) instead")
     spark.catalog.refreshByPath(indexDir)
-    val nodes = spark.read.parquet(indexDir)
+    val nodes = readIndex(spark, indexDir)
       .select(struct(col("doc_id"), col("chunk_ix")).as("nid"),
         col("bucket"), col("raw"))
     val touched = nodes.filter(col("nid.doc_id").isInCollection(docIds))
@@ -1475,7 +1555,7 @@ object VectorStore {
         col("src_ix").as("chunk_ix")).as("nid"))
       .distinct()
     spark.catalog.refreshByPath(indexDir)
-    val nodes = spark.read.parquet(indexDir) // post-delete: victims gone
+    val nodes = readIndex(spark, indexDir) // post-merge: old victim rows gone
       .filter(col("bucket").isInCollection(touched))
       .select(struct(col("doc_id"), col("chunk_ix")).as("nid"),
         col("bucket"), col("raw"))
@@ -1612,7 +1692,7 @@ object VectorStore {
     val beam = math.max(beamIn, k)
     requireFormat(spark, indexDir)
     spark.catalog.refreshByPath(indexDir)
-    val index = spark.read.parquet(indexDir)
+    val index = readIndex(spark, indexDir)
     val nid = struct(col("doc_id"), col("chunk_ix")).as("nid")
     val nodes = index.select(nid, col("bucket"), col("chunk"), col("raw"))
     val edges = spark.read.parquet(s"$indexDir/$GraphDir/edges.parquet")
@@ -1699,36 +1779,40 @@ object VectorStore {
     (out, touched)
   }
 
-  /** The #EDIT lifecycle op, composed (r10): the reference re-exports an
-    * edited message by removing its old chunks and re-ingesting the new
-    * text (KnowledgeBot.py:351-379 → `_delete_knowledge_chunks` then the
-    * export path; this engine's README spelled it "delete then append"
-    * — this method IS that spelling, with the graph sidecar maintained
-    * through BOTH splices instead of a rebuild): [[delete]] the old
-    * docs' chunks (partition-scoped, journaled), [[spliceGraphDelete]]
-    * the victims' buckets out of the edge sidecar, [[ingest]] the
-    * re-exported docs as an append (every frozen sidecar — codebook,
-    * perm, cells, residual codebook — reused), [[spliceGraph]] the
-    * appended region in. Each splice is bit-equal to a rebuild, so the
-    * composition ends bit-equal to `buildGraph` over the final index
-    * (spec-pinned). A store without a graph sidecar just skips the
-    * splices. A missing or empty `indexDir` is created from `newDocs`.
-    * Returns (chunks removed, chunks added).
+  /** The #EDIT lifecycle op: the reference re-exports an edited message
+    * by removing its old chunks and re-ingesting the new text
+    * (KnowledgeBot.py:351-379 → `_delete_knowledge_chunks` then the
+    * export path). Here that is ONE store write ([[merge]]): the old
+    * docs' chunks leave and the re-exported docs' chunks — encoded once,
+    * row-locally over the frozen sidecars (codebook, perm, cells,
+    * residual codebook), as an append encodes — enter in one rewrite of
+    * the touched (bucket, cell) partitions, with one zone-map update and
+    * one lexical generation. A store with a graph sidecar then splices it
+    * through [[spliceGraphDelete]] (the victims' lists) and
+    * [[spliceGraph]] (the new chunks' region); each splice is bit-equal
+    * to a rebuild, so the edit ends bit-equal to `buildGraph` over the
+    * final index (spec-pinned). A missing or empty `indexDir` is created
+    * from `newDocs`. Returns (chunks removed, chunks added).
     *
     * Crash-safe (r15, the r12 verdict's item #4): the new content is
     * STAGED durably first and an edit-intent manifest committed (temp +
-    * rename, like delete's), THEN the delete + append sub-steps run. A
-    * kill at ANY point — mid-delete, between delete and append,
-    * mid-append, between append and graph splice — leaves the manifest
-    * pending, and [[recover]] replays [[applyEdit]] from the staged
-    * copy. The replay converges to EXACTLY the post-edit state because
-    * its first step, delete(docIds), removes the old rows AND any
-    * partially-appended new rows (they carry the same doc_ids), and
-    * every sub-step is individually replay-safe (delete re-derives from
-    * current state, spliceGraphDelete no-ops when nothing cites a
-    * victim, the lexical doclog is keep-latest). A crash BEFORE the
-    * manifest commits leaves the store bit-identical to pre-edit (the
-    * orphaned staging dir is swept by recover). Never a partial state. */
+    * rename, like delete's), THEN [[applyEdit]] runs. A kill at ANY point
+    * — before, during or after the merged overwrite (which replaces its
+    * partitions one by one at commit), before the zone map, before the
+    * lexical generation, before a graph splice — leaves the manifest
+    * pending, and [[recover]] replays [[applyEdit]] from the staged copy.
+    * The replay converges to EXACTLY the post-edit state because the
+    * merge re-derives from current state: rows a partial run already
+    * wrote carry the edit's doc_ids, so they are removed and re-added
+    * like the old ones; a partition whose live dir the commit deleted
+    * before renaming its staged content in gets that content back first
+    * (recover's [[finishOverwrite]]); the zone map re-syncs from the
+    * files' footers; the lexical generation of a replay is above any
+    * postings a cut run left, and the doclog is keep-latest;
+    * spliceGraphDelete no-ops when nothing cites a victim. A crash BEFORE
+    * the manifest commits leaves the store bit-identical to pre-edit
+    * (the orphaned staging dir is swept by recover). Readers between the
+    * crash and `recover` can see a partial state; `recover` leaves none. */
   def edit(spark: SparkSession, indexDir: String, docIds: Seq[Long],
       newDocs: org.apache.spark.sql.DataFrame, chunkSize: Int = 20,
       overlap: Int = 5, batchTag: Long = 0L): (Long, Long) = {
@@ -1739,8 +1823,8 @@ object VectorStore {
     val fs = fsOf(spark)
     val stamp = s"${System.currentTimeMillis()}_${docIds.hashCode.abs}"
     val staged = s"$indexDir/$EditStageDir/staged_$stamp"
-    // meta rides the staged copy when present: a meta-carrying store's
-    // append sub-step requires it (and the replay must see it too)
+    // meta rides the staged copy when present: a meta-carrying store
+    // requires it (and the replay must see it too)
     val stageCols =
       if (newDocs.columns.contains("meta")) Seq("doc_id", "text", "meta")
       else Seq("doc_id", "text")
@@ -1751,56 +1835,154 @@ object VectorStore {
     val res = applyEdit(spark, indexDir, docIds, staged, chunkSize, overlap,
       batchTag)
     fs.delete(manifest, false) // retire the intent — edit is complete
-    fs.delete(new org.apache.hadoop.fs.Path(staged), true)
+    fs.delete(new Path(staged), true)
     res
   }
 
-  /** The edit body shared by [[edit]] and [[recover]] — every sub-step
+  /** The edit body shared by [[edit]] and [[recover]]: encode the staged
+    * docs once, [[merge]] them in, then the graph splices — every step
     * re-derives from CURRENT state, so replaying after any partial
     * failure converges to the post-edit state. */
   private def applyEdit(spark: SparkSession, indexDir: String,
       docIds: Seq[Long], staged: String, chunkSize: Int, overlap: Int,
       batchTag: Long): (Long, Long) = {
-    val hasGraph = fsOf(spark).exists(new org.apache.hadoop.fs.Path(
-      s"$indexDir/$GraphDir/edges.parquet"))
+    val hasGraph = fsOf(spark).exists(new Path(s"$indexDir/$GraphDir/edges.parquet"))
     // the sidecar's own build degree drives BOTH splices: hardcoding the
     // default would make edit() unusable on any buildGraph(degree != 8)
     // store (spliceGraphDelete requires degree == built)
     val deg = if (hasGraph) storedDegree(spark, indexDir) else GraphDegree
-    val removed = delete(spark, indexDir, docIds)
+    val newDocs = spark.read.schema(ParquetFooters.sparkSchema(spark,
+      ParquetFooters.files(spark, staged).next())).parquet(staged)
+    val fresh = encodeFresh(spark, indexDir, newDocs, chunkSize, overlap,
+      batchTag)
+    val removed = merge(spark, indexDir, docIds, Some(fresh))
     // unconditional (not gated on removed > 0): a replay may find the
-    // index rows already deleted while the graph still cites the victims
+    // index rows already replaced while the graph still cites the victims
     // — spliceGraphDelete no-ops when nothing does
     if (hasGraph)
       spliceGraphDelete(spark, indexDir, docIds, deg)
-    val newDocs = spark.read.parquet(staged)
-    val added = ingest(newDocs, indexDir, chunkSize, overlap,
-      mode = "append", batchTag = batchTag)
-    if (hasGraph && added > 0) {
-      val newIds = newDocs.select("doc_id").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      spliceGraph(spark, indexDir, newIds, deg)
-    }
-    (removed, added)
+    if (hasGraph && fresh.keys.nonEmpty)
+      spliceGraph(spark, indexDir, fresh.keys.map(_._3).distinct.toSeq, deg)
+    (removed, fresh.keys.length.toLong)
   }
 
-  def delete(spark: SparkSession, indexDir: String, docIds: Seq[Long]): Long = {
-    // drop any cached file listing for this path — a previous overwrite
-    // (or a concurrent writer) invalidates it, and a stale listing makes
-    // reads fail on vanished part files
+  /** An edit's new chunk rows in the store layout, materialized, and each
+    * row's (bucket, cell, doc_id, token count) on the driver. */
+  private final case class Fresh(rows: DataFrame,
+      keys: Array[(Int, Int, Long, Long)])
+
+  /** Encode `docs` once: chunk, then [[storeRows]] over the frozen
+    * artifacts read on the driver — row-local, as an append encodes. The
+    * one job that collects the rows' keys also materializes the rows
+    * (a lazy local checkpoint), so the merge's write and the postings
+    * read them without a second encode. */
+  private def encodeFresh(spark: SparkSession, indexDir: String,
+      docs: DataFrame, chunkSize: Int, overlap: Int, batchTag: Long): Fresh = {
+    val chunks = chunksOf(docs, chunkSize, overlap)
+    val rows = storeRows(embed(chunks), readFrozen(spark, indexDir),
+      keepsMeta(spark, indexDir, chunks.columns, reuse = true), lit(batchTag))
+      .localCheckpoint(false)
+    Fresh(rows, rows.select(col("bucket"), col("cell"), col("doc_id"),
+        size(Text.tokens(col("chunk"))).cast("long"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3))))
+  }
+
+  /** The one store write of a delete or an edit batch: every row whose
+    * `doc_id` is in `ids` leaves the index and `fresh`'s rows enter it —
+    * the REPOSE shape (partition-local work, then one merge):
+    *
+    *  - victims: only the data files whose footer `doc_id` range covers
+    *    an id are scanned, once, for each victim row's (bucket, cell); a
+    *    batch of new ids scans nothing;
+    *  - touched = the victims' partitions ∪ `fresh`'s. Their rows whose
+    *    doc_id ∉ ids, with `fresh`'s rows, are hash-partitioned by
+    *    (bucket, cell) — the shuffle reads every input row before any
+    *    output commits — and written in ONE dynamic-partition overwrite,
+    *    so each rewritten partition lands as one file. A touched
+    *    partition left with no row is not replaced by the overwrite; it
+    *    still holds only files listed before it, and is deleted here (its
+    *    bucket dir too, once no cell is left);
+    *  - the zone map updates once, from the new files' footers
+    *    ([[graft.sources.ZoneMaps.appendSidecar]]);
+    *  - one lexical generation: postings for `fresh`'s chunks, a live
+    *    doclog row per re-added doc and a kill row per other id.
+    *
+    * Every step re-derives from current state, so a replay after a crash
+    * anywhere in here converges: rows a partial run already wrote carry
+    * `ids`, so they are removed and re-added (a cut inside the
+    * overwrite's commit is first finished by [[finishOverwrite]]).
+    * Returns the rows removed. */
+  private def merge(spark: SparkSession, indexDir: String, ids: Seq[Long],
+      fresh: Option[Fresh]): Long = {
     spark.catalog.refreshByPath(indexDir)
-    val index = open(spark, indexDir)
-    val victims = col("doc_id").isInCollection(docIds)
-    val buckets = index.filter(victims).select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    if (buckets.isEmpty) return 0L
     val fs = fsOf(spark)
-    val manifest = writeManifest(fs, indexDir, docIds, buckets)
-    val removed = deleteFromBuckets(spark, indexDir, docIds, buckets)
-    // lexical kill rows ride BEFORE the manifest retires: a crash in
-    // between replays through recover(), which re-logs (an extra kill
-    // row at a later gen is idempotent — still dead, stats carry zeros)
-    VectorStoreLex.logDelete(spark, indexDir, docIds)
+    val files = ParquetFooters.files(spark, indexDir).toVector
+    val scanned = covering(spark, files, ids)
+    val victims = if (scanned.isEmpty) Array.empty[(Int, Int)]
+      else readIndex(spark, indexDir, Some(scanned))
+        .filter(col("doc_id").isInCollection(ids)).select("bucket", "cell")
+        .collect().map(r => (r.getInt(0), r.getInt(1)))
+    val touched = victims.toSet ++
+      fresh.toSeq.flatMap(_.keys.map(k => (k._1, k._2)))
+    def partDir(b: Int, c: Int) = s"$indexDir/bucket=$b/cell=$c"
+    if (touched.nonEmpty) {
+      val rewritten = files.filter(f => touched((
+        f.getParent.getParent.getName.stripPrefix("bucket=").toInt,
+        f.getParent.getName.stripPrefix("cell=").toInt)))
+      val survivors = if (rewritten.isEmpty) None
+        else Some(readIndex(spark, indexDir, Some(rewritten))
+          .filter(!col("doc_id").isInCollection(ids)))
+      (survivors ++ fresh.map(_.rows)).reduce(_ unionByName _)
+        .repartition(col("bucket"), col("cell"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket", "cell").parquet(indexDir)
+      val before = rewritten.map(_.toString).toSet
+      touched.foreach { case (b, c) =>
+        if (ParquetFooters.files(spark, partDir(b, c)).forall(f => before(f.toString)))
+          fs.delete(new Path(partDir(b, c)), true)
+      }
+      touched.map(_._1).foreach { b =>
+        val bDir = new Path(s"$indexDir/bucket=$b")
+        if (fs.exists(bDir) &&
+            !fs.listStatus(bDir).exists(_.getPath.getName.startsWith("cell=")))
+          fs.delete(bDir, true)
+      }
+      spark.catalog.refreshByPath(indexDir)
+    }
+    graft.sources.ZoneMaps.appendSidecar(spark, indexDir, "batch_tag")
+    val live = fresh.toSeq.flatMap(_.keys).groupBy(_._3).map { case (d, ks) =>
+      (d, true, ks.length.toLong, ks.map(_._4).sum) }.toSeq
+    val liveIds = live.map(_._1).toSet
+    VectorStoreLex.logGeneration(spark, indexDir,
+      fresh.filter(_.keys.nonEmpty).map(_.rows),
+      live ++ ids.distinct.filterNot(liveIds).map(d => (d, false, 0L, 0L)))
+    victims.length.toLong
+  }
+
+  /** The data `files` whose footer `doc_id` range covers one of `ids` —
+    * the only files that can hold an id's rows. */
+  private def covering(spark: SparkSession, files: Seq[Path],
+      ids: Seq[Long]): Seq[Path] = {
+    val sorted = ids.distinct.sorted.toArray
+    files.filter(f => ParquetFooters.longBounds(spark, f, "doc_id").exists {
+      case (lo, hi) =>
+        val i = java.util.Arrays.binarySearch(sorted, lo)
+        val at = if (i >= 0) i else -i - 1
+        at < sorted.length && sorted(at) <= hi
+    })
+  }
+
+  /** Remove `docIds`' chunks: the [[merge]] with no new rows, journaled by
+    * a delete manifest that [[recover]] replays. Returns the chunks
+    * removed; ids that no data file's footer range covers are not in the
+    * store, and a delete of only those writes nothing. */
+  def delete(spark: SparkSession, indexDir: String, docIds: Seq[Long]): Long = {
+    requireFormat(spark, indexDir)
+    if (covering(spark, ParquetFooters.files(spark, indexDir).toSeq, docIds).isEmpty)
+      return 0L
+    val fs = fsOf(spark)
+    val manifest = writeManifest(fs, indexDir, docIds)
+    val removed = merge(spark, indexDir, docIds, None)
     fs.delete(manifest, false) // retire the intent — delete is complete
     removed
   }
@@ -1918,10 +2100,15 @@ object VectorStore {
     * must land on the POST-swap dirs — replaying ops first and swapping
     * last would silently discard those appends under the stale staged
     * state (r13 advice: a deleted doc could resurrect in the lexical
-    * leg). Then deletes replay (an edit's own delete sub-step journals
-    * independently), then edits replay from their staged content, then
+    * leg). Then deletes replay, then edits replay from their staged
+    * content — each is its one [[merge]] run again from current state,
+    * which converges from any point the crash left (see [[edit]]) — then
     * orphaned staging dirs (crash between manifest retire and stage
-    * cleanup) are swept. Returns the number of manifests replayed. Safe
+    * cleanup) are swept. Before any replay, an overwrite cut inside its
+    * commit is finished ([[finishOverwrite]]): a partition whose live dir
+    * the commit had already deleted gets its staged content back, since
+    * its surviving rows exist nowhere else and the replay re-derives from
+    * current state. Returns the number of manifests replayed. Safe
     * to call any time on a store of this format: with no pending
     * manifests it reads nothing but the manifest dir listing. */
   def recover(spark: SparkSession, indexDir: String): Int = {
@@ -1941,17 +2128,14 @@ object VectorStore {
       .filter(_.getName.endsWith(".json")).sortBy(_.getName)
     val edits = listed.filter(_.getName.startsWith("edit_"))
     val deletes = listed.filter(_.getName.startsWith("delete_"))
+    if (listed.nonEmpty) finishOverwrite(spark, indexDir)
     deletes.foreach { p =>
-      val (docIds, buckets) = readManifest(fs, p)
-      spark.catalog.refreshByPath(indexDir)
-      deleteFromBuckets(spark, indexDir, docIds, buckets)
-      VectorStoreLex.logDelete(spark, indexDir, docIds)
+      merge(spark, indexDir, nums(readText(fs, p), "docIds").map(_.toLong), None)
       fs.delete(p, false)
     }
     edits.foreach { p =>
       val (docIds, staged, chunkSize, overlap, batchTag) =
         readEditManifest(fs, p)
-      spark.catalog.refreshByPath(indexDir)
       applyEdit(spark, indexDir, docIds, staged, chunkSize, overlap, batchTag)
       fs.delete(p, false)
       fs.delete(new org.apache.hadoop.fs.Path(staged), true)
@@ -1974,15 +2158,41 @@ object VectorStore {
     listed.length
   }
 
+  /** Finish a [[merge]] overwrite cut inside its commit. Spark's
+    * dynamic-partition commit stages every written partition under
+    * `.spark-staging-<job>/` and only then, one partition at a time,
+    * deletes the live dir and renames the staged one into place. A cut
+    * between that delete and that rename leaves a partition whose live
+    * dir is gone — its survivors with it — and whose complete new
+    * content (survivors plus the edit's rows) sits in the staging dir:
+    * that staged dir is renamed into place. A staged partition whose
+    * live dir still exists was not swapped yet and the live one stands
+    * (the replayed merge rewrites it). The staging dirs then go. */
+  private def finishOverwrite(spark: SparkSession, indexDir: String): Unit = {
+    val fs = fsOf(spark)
+    def dirs(p: Path, prefix: String) = fs.listStatus(p)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .map(_.getPath)
+    dirs(new Path(indexDir), ".spark-staging-").foreach { stage =>
+      for (b <- dirs(stage, "bucket="); c <- dirs(b, "cell=")) {
+        val live = new Path(s"$indexDir/${b.getName}/${c.getName}")
+        if (!fs.exists(live)) {
+          fs.mkdirs(live.getParent)
+          require(fs.rename(c, live), s"overwrite recovery failed: $c -> $live")
+        }
+      }
+      fs.delete(stage, true)
+    }
+  }
+
   private[operators] val ManifestDir = "_graft_manifest"
 
   /** Commit a delete intent atomically ([[commitJson]]). */
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      indexDir: String, docIds: Seq[Long], buckets: Seq[Int])
-      : org.apache.hadoop.fs.Path = {
+      indexDir: String, docIds: Seq[Long]): Path = {
     val name = s"delete_${System.currentTimeMillis()}_${docIds.hashCode.abs}"
-    commitJson(fs, new org.apache.hadoop.fs.Path(s"$indexDir/$ManifestDir/$name.json"),
-      s"""{"docIds":[${docIds.mkString(",")}],"buckets":[${buckets.mkString(",")}]}""")
+    commitJson(fs, new Path(s"$indexDir/$ManifestDir/$name.json"),
+      s"""{"docIds":[${docIds.mkString(",")}]}""")
   }
 
   private val EditStageDir = "_graft_edit"
@@ -2020,56 +2230,5 @@ object VectorStore {
     val knobs = nums(json, "knobs")
     (nums(json, "docIds").map(_.toLong), staged,
       knobs(0).toInt, knobs(1).toInt, knobs(2).toLong)
-  }
-
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): (Seq[Long], Seq[Int]) = {
-    val json = readText(fs, p)
-    (nums(json, "docIds").map(_.toLong), nums(json, "buckets").map(_.toInt))
-  }
-
-  /** The mutation body shared by [[delete]] and [[recover]]: remove
-    * `docIds` from the recorded `buckets`, re-deriving everything from the
-    * CURRENT index state so a replay after any partial failure converges
-    * to the same result. */
-  private def deleteFromBuckets(spark: SparkSession, indexDir: String,
-      docIds: Seq[Long], buckets: Seq[Int]): Long = {
-    val index = spark.read.parquet(indexDir)
-    val victims = col("doc_id").isInCollection(docIds)
-    val affected = index.filter(col("bucket").isInCollection(buckets))
-    val removed = affected.filter(victims).count()
-    val survivors = affected.filter(!victims)
-      // the partition column must be part of the written data, and the
-      // rewrite must materialize BEFORE overwrite truncates its own input
-      .localCheckpoint(true)
-    if (removed > 0)
-      survivors.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "cell").parquet(indexDir)
-    // dynamic overwrite only replaces partitions PRESENT in the output: a
-    // (bucket, cell) dir whose every row was a victim has no survivors
-    // and must be dropped explicitly (idempotent — a replay deletes a
-    // missing dir). Whole-bucket drops cover their cell subdirs.
-    val survivingPairs = survivors.select("bucket", "cell").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    val survivingBuckets = survivingPairs.map(_._1)
-    val fs = fsOf(spark)
-    buckets.filterNot(survivingBuckets).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/bucket=$b"), true)
-    }
-    buckets.filter(survivingBuckets).foreach { b =>
-      val bDir = new org.apache.hadoop.fs.Path(s"$indexDir/bucket=$b")
-      if (fs.exists(bDir)) fs.listStatus(bDir).map(_.getPath)
-        .filter(_.getName.startsWith("cell=")).foreach { cDir =>
-          val c = cDir.getName.stripPrefix("cell=").toInt
-          if (!survivingPairs((b, c))) fs.delete(cDir, true)
-        }
-    }
-    spark.catalog.refreshByPath(indexDir)
-    // the rewrite replaced the victims' files with fresh survivor files:
-    // bring the time-axis sidecar back in sync (incremental — scans only
-    // the rewritten buckets' new files, drops the vanished rows; replay-
-    // safe because appendSidecar is a no-op when already current)
-    graft.sources.ZoneMaps.appendSidecar(spark, indexDir, "batch_tag")
-    removed
   }
 }

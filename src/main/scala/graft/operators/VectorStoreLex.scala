@@ -28,8 +28,10 @@ import graft.functions.Text
   *     bar the r12 verdict set for B18's lexical leg).
   *   - `doclog/` — append-only (doc_id, gen, live, n_chunks, n_tokens),
   *     ONE row per (doc, write op). The latest-gen row per doc is the
-  *     doc's lexical state: ingest/append log (live, counts), delete
-  *     logs a kill row, edit = delete + append = two rows. Postings are
+  *     doc's lexical state: ingest/append log (live, counts); a delete or
+  *     an edit writes one generation ([[logGeneration]]) holding a live
+  *     row per re-added doc, a kill row per other id and the re-added
+  *     chunks' postings. Postings are
   *     NEVER rewritten by deletes — a read joins hit postings against
   *     the keep-latest doclog and keeps rows whose gen matches the
   *     doc's live gen (the tombstone/generation scheme Lucene-family
@@ -78,8 +80,12 @@ object VectorStoreLex {
     q.split(" ", -1).toSeq.filter(_.nonEmpty)
 
   /** max(gen) + 1 over the doclog, from its row groups' footer
-    * statistics (no Spark job). A doclog created over an empty chunk
-    * batch has a schema but zero rows — empty log ⇒ gen 1 (r13 advice). */
+    * statistics (no Spark job). Every writer lands its doclog rows
+    * before its postings, so a gen with postings always has doclog rows
+    * too: a write cut between the two leaves postings (if any) only at a
+    * gen the doclog already names, and a replay writes above it. A
+    * doclog created over an empty chunk batch has a schema but zero
+    * rows — empty log ⇒ gen 1 (r13 advice). */
   private def nextGen(spark: SparkSession, indexDir: String): Long =
     graft.sources.ParquetFooters.maxLong(spark, doclogPath(indexDir), "gen")
       .getOrElse(0L) + 1L
@@ -92,19 +98,6 @@ object VectorStoreLex {
     val spark = chunks.sparkSession
     val gen = if (create) 1L else nextGen(spark, indexDir)
     val mode = if (create) "overwrite" else "append"
-    // positions (r16): 0-based token offsets within the chunk, sorted —
-    // the phrase/proximity plane ([[searchPhrase]])
-    val tok = chunks
-      .select(col("doc_id"), col("chunk_ix"), Text.tokens(col("chunk")).as("toks"))
-      .select(col("doc_id"), col("chunk_ix"),
-        size(col("toks")).cast("long").as("dl"), posexplode(col("toks")))
-      .withColumnRenamed("col", "term")
-    val posted = tok.groupBy("doc_id", "chunk_ix", "term")
-      .agg(count(lit(1)).as("tf"), max("dl").as("dl"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-      .withColumn("gen", lit(gen))
-      .withColumn("tbkt", substring(md5(col("term")), 1, 1))
-    posted.write.mode(mode).partitionBy("tbkt").parquet(postingsPath(indexDir))
     chunks
       .select(col("doc_id"), size(Text.tokens(col("chunk"))).cast("long").as("dl"))
       .groupBy("doc_id")
@@ -113,19 +106,46 @@ object VectorStoreLex {
         col("n_chunks"), col("n_tokens"))
       .coalesce(1)
       .write.mode(mode).parquet(doclogPath(indexDir))
+    // positions (r16): 0-based token offsets within the chunk, sorted —
+    // the phrase/proximity plane ([[searchPhrase]])
+    postings(chunks, gen).write.mode(mode).partitionBy("tbkt")
+      .parquet(postingsPath(indexDir))
   }
 
-  /** Delete hook: one kill row per doc at the next generation. Postings
-    * stay on disk; the keep-latest read stops serving them. */
-  private[operators] def logDelete(spark: SparkSession, indexDir: String,
-      docIds: Seq[Long]): Unit = {
-    if (docIds.isEmpty) return
+  /** (doc_id, chunk_ix, term, tf, dl, positions, gen, tbkt) postings of
+    * `chunks` at generation `gen`, computed row-locally: all of a chunk's
+    * terms sit in its own row, so each distinct term's tf and sorted
+    * positions come from its token array — no groupBy shuffle. */
+  private def postings(chunks: DataFrame, gen: Long): DataFrame = {
+    val toks = col("toks")
+    chunks
+      .select(col("doc_id"), col("chunk_ix"), Text.tokens(col("chunk")).as("toks"))
+      .select(col("doc_id"), col("chunk_ix"), size(toks).cast("long").as("dl"),
+        explode(transform(array_distinct(toks), t => struct(t.as("term"),
+          filter(sequence(lit(0), size(toks) - 1),
+            i => element_at(toks, i + 1) === t).as("positions")))).as("p"))
+      .select(col("doc_id"), col("chunk_ix"), col("p.term").as("term"),
+        size(col("p.positions")).cast("long").as("tf"), col("dl"),
+        col("p.positions").as("positions"), lit(gen).as("gen"),
+        substring(md5(col("p.term")), 1, 1).as("tbkt"))
+  }
+
+  /** A delete's or an edit's lexical write: ONE generation at the next
+    * gen — the doclog rows `log` (doc_id, live, n_chunks, n_tokens) in
+    * one write, then the postings of `chunks` (doc_id, chunk_ix, chunk),
+    * if any ([[nextGen]] needs that order). A kill row leaves the doc's
+    * postings on disk; the keep-latest read stops serving them. */
+  private[operators] def logGeneration(spark: SparkSession, indexDir: String,
+      chunks: Option[DataFrame], log: Seq[(Long, Boolean, Long, Long)]): Unit = {
+    if (log.isEmpty) return
     val gen = nextGen(spark, indexDir)
     import spark.implicits._
-    docIds.map(id => (id, gen, false, 0L, 0L))
+    log.map { case (id, live, n, t) => (id, gen, live, n, t) }
       .toDF("doc_id", "gen", "live", "n_chunks", "n_tokens")
       .coalesce(1)
       .write.mode("append").parquet(doclogPath(indexDir))
+    chunks.foreach(c => postings(c, gen).write.mode("append")
+      .partitionBy("tbkt").parquet(postingsPath(indexDir)))
   }
 
   /** Keep-latest doclog state: (doc_id, lgen, live, n_chunks, n_tokens).
@@ -301,7 +321,7 @@ object VectorStoreLex {
     val ranked = lexLeg(spark, indexDir, queries, k)
       .select(col("query_id"), col("lex_rank").as("rank"),
         col("doc_id"), col("chunk_ix"), col("score"))
-    spark.read.parquet(indexDir).select("doc_id", "chunk_ix", "chunk")
+    VectorStore.readIndex(spark, indexDir).select("doc_id", "chunk_ix", "chunk")
       .join(broadcast(ranked), Seq("doc_id", "chunk_ix"))
       .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "score")
       .orderBy("query_id", "rank")
@@ -413,7 +433,7 @@ object VectorStoreLex {
     val ranked = matches
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-    spark.read.parquet(indexDir).select("doc_id", "chunk_ix", "chunk")
+    VectorStore.readIndex(spark, indexDir).select("doc_id", "chunk_ix", "chunk")
       .join(broadcast(ranked), Seq("doc_id", "chunk_ix"))
       .select("query_id", "rank", "doc_id", "chunk_ix", "chunk", "n_matches")
       .orderBy("query_id", "rank")
@@ -445,7 +465,7 @@ object VectorStoreLex {
           lit(1.0) / (lit(RrfK) + col("vec_rank"))).otherwise(lit(0.0)))
       .withColumn("rank", row_number().over(wF).cast("long"))
       .filter(col("rank") <= k)
-    spark.read.parquet(indexDir).select("doc_id", "chunk_ix", "chunk")
+    VectorStore.readIndex(spark, indexDir).select("doc_id", "chunk_ix", "chunk")
       .join(broadcast(fused), Seq("doc_id", "chunk_ix"))
       .select(col("query_id"), col("rank"), col("doc_id"), col("chunk_ix"),
         col("chunk"), col("fused"), col("lex_rank"), col("vec_rank"))

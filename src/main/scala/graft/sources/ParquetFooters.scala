@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -60,18 +61,45 @@ object ParquetFooters {
       footer(spark, f).getFileMetaData.getSchema.getFields.asScala
         .map(_.getName).toSet)
 
-  /** The largest value of an integral `column` under `dir`, from the
-    * footer statistics of every non-empty row group. None when `dir`
-    * holds no rows; a row group without statistics for it fails loudly. */
+  /** The (min, max) of an integral `column` in `file`, from the footer
+    * statistics of its non-empty row groups. None when the file holds no
+    * rows; a row group without statistics for it fails loudly. */
+  def longBounds(spark: SparkSession, file: Path,
+      column: String): Option[(Long, Long)] =
+    footer(spark, file).getBlocks.asScala.filter(_.getRowCount > 0).map { g =>
+      val st = g.getColumns.asScala.find(_.getPath.toDotString == column)
+        .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue)
+      require(st.isDefined, s"a row group of $file has no `$column` statistics")
+      (st.get.genericGetMin.asInstanceOf[Number].longValue,
+        st.get.genericGetMax.asInstanceOf[Number].longValue)
+    }.reduceOption((a, b) => (a._1 min b._1, a._2 max b._2))
+
+  /** The largest value of an integral `column` under `dir` ([[longBounds]]
+    * over every data file). None when `dir` holds no rows. */
   def maxLong(spark: SparkSession, dir: String, column: String): Option[Long] =
-    files(spark, dir).flatMap(f => footer(spark, f).getBlocks.asScala)
-      .filter(_.getRowCount > 0).map { g =>
-        val st = g.getColumns.asScala.find(_.getPath.toDotString == column)
-          .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue)
-        require(st.isDefined,
-          s"a row group under $dir has no `$column` statistics")
-        st.get.genericGetMax.asInstanceOf[Number].longValue
-      }.reduceOption(_ max _)
+    files(spark, dir).flatMap(longBounds(spark, _, column)).map(_._2)
+      .reduceOption(_ max _)
+
+  /** The Spark schema `file` was written with (the row metadata Spark
+    * stores in every parquet footer it writes), every field nullable as a
+    * file scan reads it — so a reader can declare it and skip the
+    * schema-inference job. */
+  def sparkSchema(spark: SparkSession, file: Path): StructType = {
+    val json = footer(spark, file).getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    require(json != null, s"$file carries no Spark schema in its footer")
+    nullable(DataType.fromJson(json)).asInstanceOf[StructType]
+  }
+
+  /** `t` with every field, element and map value nullable. */
+  def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(m.keyType, nullable(m.valueType),
+      valueContainsNull = true)
+    case o => o
+  }
 
   /** Every row of a small parquet dataset, in file order. Fails loudly
     * when `dir` does not exist, as `spark.read.parquet` does. */

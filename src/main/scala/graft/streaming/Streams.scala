@@ -242,8 +242,8 @@ object Streams {
     * each micro-batch of documents runs the SAME store write as
     * IngestJob, an `edit` over the batch's doc ids, so batch and streaming
     * share one code path and one index layout. `foreachBatch` is
-    * at-least-once: a batch replayed after a crash deletes the chunks its
-    * first delivery wrote before appending them again. Returns the
+    * at-least-once: a batch replayed after a crash replaces the chunks
+    * its first delivery wrote instead of adding them twice. Returns the
     * started query; stop it or `processAllAvailable()` in the caller. */
   def indexMaintenance(docs: DataFrame, indexDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{VectorStore, VectorStoreLex}
-import graft.sources.Tables
+import graft.sources.{ParquetFooters, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
@@ -13,7 +13,12 @@ import java.nio.file.{Files, Path, Paths}
   * point replays edit's real sub-steps up to the cut on a byte-copied
   * clone of the pre-edit store, then recovers and compares the full
   * SERVING state (index rows, graph edges, hybrid/lexical reads)
-  * against an uninterrupted reference edit. The lexical doclog is a log
+  * against an uninterrupted reference edit. P0–P4 cut between the
+  * steps an edit ran as delete then append; P5–P8 cut inside the one
+  * merge that replaced them (after its overwrite, halfway through the
+  * overwrite's commit, between the lexical doclog and postings writes,
+  * and between a partition's delete and its rename at commit). The
+  * lexical doclog is a log
   * by design — superseded history rows may differ across crash
   * replays; its keep-latest DERIVED state is what must (and does)
   * match, which the hybrid/lex reads pin. */
@@ -139,6 +144,94 @@ class EditCrashSpec extends AnyFunSuite {
       VectorStore.ingest(spark.read.parquet(staged), dir, mode = "append")
       VectorStore.recover(spark, dir)
       assert(servingState(dir, probes) == postState, "P4 not post-edit")
+    }
+
+    // the merge's own windows, built from the reference run's tree: its
+    // index data files by partition dir (bucket=b/cell=c)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    def partitions(dir: String): Map[String, Set[String]] =
+      ParquetFooters.files(spark, dir).toSeq.groupBy(f =>
+        s"${f.getParent.getParent.getName}/${f.getParent.getName}")
+        .view.mapValues(_.map(_.getName).toSet).toMap
+    def buckets(dir: String): Seq[String] =
+      new java.io.File(dir).list().toSeq.filter(_.startsWith("bucket="))
+
+    // P5: the merged overwrite has committed (the reference's index data,
+    // emptied partitions dropped); no zone map, lexical generation or
+    // graph splice yet
+    {
+      val dir = freshClone(pre)
+      commitManifest(dir, stage(dir))
+      buckets(dir).foreach(b =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$b"), true))
+      buckets(ref).foreach(b => copyDir(s"$ref/$b", s"$dir/$b"))
+      VectorStore.recover(spark, dir)
+      assert(servingState(dir, probes) == postState, "P5 not post-edit")
+    }
+    // P6: a partial overwrite — the commit replaced only half of the
+    // partitions the merge rewrote
+    {
+      val dir = freshClone(pre)
+      commitManifest(dir, stage(dir))
+      val before = partitions(dir)
+      val rewritten = partitions(ref).filter { case (p, files) =>
+        !before.get(p).contains(files) }.keys.toSeq.sorted
+      assert(rewritten.size >= 2, s"the edit rewrote $rewritten")
+      rewritten.indices.filter(_ % 2 == 0).map(rewritten).foreach { p =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$p"), true)
+        copyDir(s"$ref/$p", s"$dir/$p")
+      }
+      VectorStore.recover(spark, dir)
+      assert(servingState(dir, probes) == postState, "P6 not post-edit")
+    }
+    // P7: the overwrite committed and the lexical generation's doclog
+    // rows landed, but only some of its postings files did — the replay
+    // must write its postings above that generation, not beside them
+    {
+      val dir = freshClone(pre)
+      commitManifest(dir, stage(dir))
+      buckets(dir).foreach(b =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$b"), true))
+      buckets(ref).foreach(b => copyDir(s"$ref/$b", s"$dir/$b"))
+      val doclog = "_graft_lex/doclog"
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$doclog"), true)
+      copyDir(s"$ref/$doclog", s"$dir/$doclog")
+      def postings(d: String): Set[String] = ParquetFooters.files(spark,
+        s"$d/_graft_lex/postings").map(f => s"${f.getParent.getName}/${f.getName}").toSet
+      val landed = (postings(ref) -- postings(pre)).toSeq.sorted
+      assert(landed.size >= 2, s"the edit wrote postings files $landed")
+      landed.indices.filter(_ % 2 == 0).map(landed).foreach { f =>
+        val to = Paths.get(s"$dir/_graft_lex/postings/$f")
+        Files.createDirectories(to.getParent)
+        Files.copy(Paths.get(s"$ref/_graft_lex/postings/$f"), to)
+      }
+      VectorStore.recover(spark, dir)
+      assert(servingState(dir, probes) == postState, "P7 not post-edit")
+    }
+    // P8: cut inside the overwrite's commit. Spark staged every rewritten
+    // partition under .spark-staging-*, swapped the first ones in, and
+    // deleted the next live dir — one holding rows of other docs — but
+    // did not rename its staged content into place
+    {
+      val dir = freshClone(pre)
+      commitManifest(dir, stage(dir))
+      val before = partitions(dir)
+      val rewritten = partitions(ref).filter { case (p, files) =>
+        !before.get(p).contains(files) }.keys.toSeq.sorted
+      val cut = rewritten.indexWhere(p => before.contains(p) &&
+        spark.read.parquet(s"$pre/$p").filter(col("doc_id") =!= victim)
+          .count() > 0)
+      assert(cut >= 0, s"no rewritten partition of $rewritten keeps other docs")
+      val staging = s"$dir/.spark-staging-spec"
+      rewritten.zipWithIndex.foreach { case (p, i) =>
+        if (i >= cut) copyDir(s"$ref/$p", s"$staging/$p")
+        if (i <= cut) fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$p"), true)
+        if (i < cut) copyDir(s"$ref/$p", s"$dir/$p")
+      }
+      VectorStore.recover(spark, dir)
+      assert(servingState(dir, probes) == postState, "P8 not post-edit")
+      assert(!new java.io.File(staging).exists(), "P8 staging dir left")
     }
   }
 }

@@ -95,13 +95,13 @@ class IngestJobSpec extends AnyFunSuite {
     // reply 35 and parent 30 are one batch: one export, one store write
     assert(files2 == 2, s"run 2 exported $files2 files (reply + re-export)")
     assert(chunks2 > 0)
-    // the batch's chunks reach the index in ONE append (the edit's delete
-    // rewrites the victims' buckets in overwrite mode, staging and
-    // sidecars write elsewhere)
+    // the batch reaches the index data in ONE write, in any save mode
+    // (staging and sidecars write under their own `_graft_*` dirs)
     val indexWrites = trace2.executions("Arguments: file:" +
-      java.util.regex.Pattern.quote(s"$out/index") + ", .*, Append, ")
+      java.util.regex.Pattern.quote(s"$out/index") +
+      ", .*, (Append|Overwrite|ErrorIfExists|Ignore), ")
     assert(indexWrites.size == 1,
-      s"run 2 appended index data in ${indexWrites.size} executions")
+      s"run 2 wrote index data in ${indexWrites.size} executions")
     // the re-export REPLACED the original file (same fname, new content)
     val after = scala.io.Source.fromFile(s"$out/knowledge/${parentFile.get}").mkString
     assert(after.contains("edited0") && !after.contains("orig0"),
@@ -140,6 +140,25 @@ class IngestJobSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/index")
       .filter(col("doc_id") === 30L).count() == doc30,
       "edit re-handling duplicated the parent's chunks")
+  }
+
+  test("a run with one new message and no #EDIT reply runs at most 19 jobs") {
+    val data = controlledData()
+    val out = Files.createTempDirectory("graft_ij_one").toString
+    writeEvents(data, Seq((30L, oldTs, 3L), (12L, oldTs2, 4L)))
+    writeDocs(data, (0 until 30).map(i => s"orig$i").mkString(" "))
+    val (files1, _, _) = IngestJob.run(spark, data, out)
+    assert(files1 == 2)
+    // message 512 arrives (text: document 512 % 500 = 12; not a tagged
+    // reply: 512 % 7 != 0)
+    writeEvents(data, Seq((30L, oldTs, 3L), (12L, oldTs2, 4L),
+      (512L, new java.sql.Timestamp(System.currentTimeMillis()), 5L)))
+    val ((files2, chunks2, _), trace) = JobCounter(spark) {
+      IngestJob.run(spark, data, out)
+    }
+    assert(files2 == 1 && chunks2 > 0, s"run 2: $files2 files, $chunks2 chunks")
+    info(s"${trace.jobs} jobs")
+    assert(trace.jobs <= 19, s"one new message ran ${trace.jobs} jobs (budget 19)")
   }
 
   test("a run replayed from its pre-run state stores each chunk once") {

@@ -664,6 +664,46 @@ class VectorStoreSpec extends AnyFunSuite {
     assert(left == 0, s"victim rows still readable: $left")
   }
 
+  test("a store whose every doc was deleted reads as empty") {
+    val dir = Files.createTempDirectory("graft_vs_drain").toString + "/index"
+    val docs = Tables.documents(spark, sf).filter(col("doc_id") < 2)
+      .select("doc_id", "text")
+    assert(VectorStore.ingest(docs, dir) > 0)
+    assert(VectorStore.delete(spark, dir, Seq(0L, 1L)) > 0)
+    assert(VectorStore.search(spark, dir, "any query", k = 3).collect().isEmpty,
+      "a drained store served rows")
+    def tree() = {
+      val w = Files.walk(java.nio.file.Paths.get(dir))
+      try w.toArray.map(_.toString).toSet finally w.close()
+    }
+    val drained = tree()
+    assert(VectorStore.delete(spark, dir, Seq(0L, 1L)) == 0,
+      "a second delete of the drained docs removed rows")
+    assert(tree() == drained, "a delete of ids the store does not hold wrote files")
+  }
+
+  test("edit rounds leave every partition they touch as one data file") {
+    // a byte copy of the shared fixture: no further ingest
+    val dir = OldStore.copy(indexDir, "files")
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    def parts(): Map[String, Set[String]] =
+      graft.sources.ParquetFooters.files(spark, dir).toSeq
+        .groupBy(_.getParent.toString).view.mapValues(_.map(_.getName).toSet).toMap
+    var touched = Set.empty[String]
+    Seq((Seq(3L, 4L), 103), (Seq(4L, 50L), 150), (Seq(3L, 77L), 177))
+      .foreach { case (ids, src) =>
+        val before = parts()
+        VectorStore.edit(spark, dir, ids, docs.filter(col("doc_id") === src)
+          .select(lit(ids.head).as("doc_id"), col("text")))
+        val after = parts()
+        touched ++= after.keySet.filter(p => before.get(p) != after.get(p))
+      }
+    val now = parts()
+    val split = touched.filter(now.contains).filter(now(_).size != 1)
+    assert(touched.nonEmpty && split.isEmpty,
+      s"partitions an edit touched hold several files: ${split.map(p => p -> now(p).size)}")
+  }
+
   test("search scans only the probed buckets") {
     val q = VectorStore.search(spark, indexDir, "spark table merge join", k = 2)
     val scan = q.queryExecution.executedPlan.toString
