@@ -4,7 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped DataFrame memo for checkpointed artifacts (C6 cluster
-  * assignment, B7/B8/B9 PQ corpus codes). Keyed by (session, table dir);
+  * assignment, B12 k-means cells, the k-NN graph edges, B13 rung
+  * results). Keyed by (session, table dir);
   * the first use per session registers a listener that drops all of that
   * session's entries when its SparkContext ends, so a stopped session —
   * and the localCheckpoint blocks its entries pin — is never kept alive
@@ -12,8 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The memo cannot observe filesystem rewrites: rebuilding a corpus
   * under the SAME dir within one session requires an explicit
-  * [[clear]] (exposed per-operator as `invalidateClusterArtifacts` /
-  * `invalidatePqArtifacts`), otherwise the memo serves the stale
+  * [[clear]] (exposed per-operator as `invalidateClusterArtifacts`,
+  * `invalidateKmeansArtifacts`, `invalidateGraphArtifacts`,
+  * `invalidateRungResults`), otherwise the memo serves the stale
   * artifact.
   */
 final class SessionMemo {
@@ -28,8 +30,8 @@ final class SessionMemo {
 
   /** Thread-safety contract (r15, for the §2.6 rung-build thread pool):
     * NOT computeIfAbsent — an artifact's build may itself consult this
-    * memo for a DIFFERENT key (r12's PQ variant family — codes build →
-    * codebook build, same map), and a nested computeIfAbsent on one
+    * memo for a DIFFERENT key (an artifact built from another memoized
+    * artifact of the same family), and a nested computeIfAbsent on one
     * ConcurrentHashMap throws "Recursive update" whenever the two keys
     * share a bin — a hash-dependent landmine the NullInputSpec tripped.
     * Builds therefore run OUTSIDE any map lock. Concurrent first-callers
@@ -41,8 +43,8 @@ final class SessionMemo {
     * failed build completes the promise exceptionally (waiters see the
     * same error) and clears it, so the next caller retries. Nested
     * consultation of a DIFFERENT in-flight key simply blocks on that
-    * key's builder — artifact dependencies are acyclic (codes → codebook,
-    * one direction), so no cycle and no deadlock; a build that consulted
+    * key's builder — artifact dependencies are acyclic (one direction),
+    * so no cycle and no deadlock; a build that consulted
     * its OWN key would self-deadlock here, but that was already broken
     * (infinite recursion) under the old code. */
   def getOrElseUpdate(s: SparkSession, dir: String)(build: => DataFrame): DataFrame = {

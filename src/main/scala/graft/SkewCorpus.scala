@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * row counts, hostile key distributions:
   * `runMain graft.SkewCorpus <srcSfDir> <dstDir>`.
   *
-  * [[ScaleCorpus]] rehearses MORE data with the same statistics; this
+  * [[UpscaleCorpus]] rehearses MORE data with the same statistics; this
   * rehearses the statistics a 100 TB corpus actually throws at you. Every
   * skew fraction is a constant share of the table, so deriving skew twins
   * at two SFs and measuring the wall ratio answers the question the

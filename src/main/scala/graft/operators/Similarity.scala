@@ -1498,8 +1498,8 @@ object Similarity {
     * window; the update is one (cluster, dim) partial-agg shuffle of
     * K·64 rows. Nothing pairwise, nothing super-linear.
     *
-    * Like the C6 cluster artifact (G21) and the B7/B8/B9 PQ codes, the
-    * assignment is session-memoized ([[kmeansArtifact]]): at 100 TB the
+    * Like the C6 cluster artifact (G21), the assignment is
+    * session-memoized ([[kmeansArtifact]]): at 100 TB the
     * cell map is an ingest-time column written once (the B5k/G22 layout),
     * so its in-session consumers — B5k serving, B14 tuning, B13 recall,
     * B16 balanced sampling — share one checkpointed build instead of
@@ -1608,88 +1608,112 @@ object Similarity {
     * subspace| ≤ 8·(4·10⁴)² ≈ 1.3·10¹⁰, ADC sum ≤ 10¹¹ — far inside
     * int64), so codes, distance tables, and ranking hash-match DuckDB.
     *
-    * Scale shape: the codebook (M·K·8 longs) broadcasts; encoding is a
-    * broadcast join + (vec, subspace) argmin with map-side partial
-    * aggregation; the ADC scan joins the code table (the compressed
-    * corpus — the only per-vector state at search time) to a broadcast
-    * M×K query distance table and sums per (query, vector). */
+    * Scale shape: the codebook (M·K·8 longs) is a driver literal, and
+    * encoding is the row-local nearest-centroid loop
+    * ([[Quantizers.encode]]) over the corpus scan — no join, no shuffle;
+    * the ADC scan joins the code rows (the compressed corpus — the only
+    * per-vector state at search time) to a broadcast M×K query distance
+    * table and sums per (query, vector). Every PQ key encodes its own
+    * corpus pass: the encode is one narrow projection, cheaper than
+    * checkpointing and re-reading a shared code table. */
   private def q4vec(c: Column): Column = transform(c, x => q4(x))
 
-  /** (id, m, sub): q4-quantized subvectors, pinned repartition ahead of
-    * the K-way fan-out join (AQE would coalesce the small map side). */
+  /** (id, m, sub): q4-quantized subvectors of the query-side vectors. */
   private def pqSubvecs(df: DataFrame, idCol: String): DataFrame =
     df.select(col(idCol), posexplode(
         transform(sequence(lit(0), lit(PqM - 1)),
           m => slice(col("v"), m * lit(PqSub) + 1, lit(PqSub)))))
       .select(col(idCol), col("pos").as("m"), col("col").as("sub"))
 
-  private def pqCorpusSub(s: SparkSession, dir: String): DataFrame =
-    pqSubvecs(Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
-      .select(col("vec_id"), q4vec(col("embedding")).as("v"))
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id")), "vec_id")
+  /** (vec_id, label, v): the corpus's q4 vectors, gathered along `perm`
+    * when given (OPQ). A NULL embedding has no vector, so it neither
+    * trains nor gets a code. */
+  private def pqCorpus(s: SparkSession, dir: String,
+      perm: Option[Seq[Int]] = None): DataFrame =
+    Tables.embeddings(s, dir)
+      .filter(col("vec_id") >= 10 && col("embedding").isNotNull)
+      .select(col("vec_id"), col("label"), perm.foldLeft(q4vec(col("embedding")))(
+        Quantizers.permute).as("v"))
 
-  /** Sampled codebook: subvectors of corpus vectors 10..(10+K-1). */
-  private def pqCodebook(s: SparkSession, dir: String): DataFrame =
-    pqCorpusSub(s, dir).filter(col("vec_id") < 10 + PqK)
-      .select((col("vec_id") - 10).as("j"), col("m"), col("sub").as("cent"))
+  /** The trained quantizer artifacts of each corpus (driver values:
+    * codebooks, permutations, per-cell sums), kept per (dir, artifact) so
+    * a repeated PQ key re-encodes its corpus row-locally but does not
+    * re-train: without it the trained keys (vec_pq_lloyd, vec_opq,
+    * ann_ivfpq_lloyd/_opq/_res) ran their training collects on every
+    * repeat, 0.4–1 s per call at sf0.1 on 4 cores. Each entry carries the
+    * embeddings table's file fingerprint ([[Tables.fingerprint]]), so a
+    * corpus rewritten under the same dir trains afresh with no
+    * invalidation call. First callers racing on one artifact may each
+    * train it; training is deterministic, so they store the same value. */
+  private val trainedMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, AnyRef)]()
+
+  private def trained[T <: AnyRef](s: SparkSession, dir: String,
+      artifact: String)(train: => T): T = {
+    val fp = Tables.fingerprint(s, dir, "embeddings")
+    Option(trainedMemo.get((dir, artifact))).collect { case (`fp`, v) => v }
+      .getOrElse { val v = train; trainedMemo.put((dir, artifact), (fp, v)); v }
+      .asInstanceOf[T]
+  }
+
+  /** Sampled codebook: subvectors of corpus vectors 10..(10+K-1), as
+    * centroid j = vec_id − 10 — one bounded collect. */
+  private[graft] def pqSeeds(s: SparkSession, dir: String,
+      perm: Option[Seq[Int]] = None): Quantizers.Codebook =
+    trained(s, dir, s"seeds${perm.fold("")(_.mkString(":", ",", ""))}") {
+      Quantizers.seeds(pqCorpus(s, dir, perm).filter(col("vec_id") < 10 + PqK)
+        .select("vec_id", "v").collect().toSeq
+        .map(r => ((r.getLong(0) - 10).toInt, r.getSeq[Long](1).toArray)), PqM, PqSub)
+    }
+
+  /** (vec_id, m, code): the corpus encoded against `cb`. */
+  private[graft] def pqCodes(s: SparkSession, dir: String,
+      cb: Quantizers.Codebook, perm: Option[Seq[Int]] = None): DataFrame =
+    pqCorpus(s, dir, perm)
+      .select(col("vec_id"), posexplode(Quantizers.encode(col("v"), cb, PqM, PqSub)))
+      .select(col("vec_id"), col("pos").as("m"), col("col").as("code"))
 
   private def sq(a: Column, b: Column): Column =
     call_function("graft_sqdist_l", a, b)
 
-  /** Encode: per (vector, subspace) argmin over the K centroids. */
-  private def pqCodesRaw(s: SparkSession, dir: String): DataFrame =
-    pqCorpusSub(s, dir).join(broadcast(pqCodebook(s, dir)), Seq("m"))
-      .select(col("vec_id"), col("m"), col("j"),
-        sq(col("sub"), col("cent")).as("dist"))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("dist"), col("j"))).getField("j").as("code"))
-
-  /** Session-shared PQ code artifact — the corpus encoding computed once
-    * per (session, dir), eagerly checkpointed, consumed by B7 ADC
-    * ranking, B8 IVF-PQ and B9 re-rank. A pipeline encodes its corpus
-    * ONCE and every query ranks against the stored codes (exactly what
-    * the G20 store does by writing the codes column at ingest); the memo
-    * is the session-local equivalent, same pattern as C6's G21 cluster
-    * artifact. The checkpoint holds (vec_id, m, code) — M small ints per
-    * vector, the compressed representation whose tininess is PQ's whole
-    * point. */
-  private val pqCodesMemo = new graft.SessionMemo
-
-  private def pqCodes(s: SparkSession, dir: String): DataFrame =
-    pqCodesMemo.getOrElseUpdate(s, dir)(pqCodesRaw(s, dir).localCheckpoint(true))
-
-  /** Required after rewriting the parquet under a dir within one session —
-    * the memo cannot see filesystem rewrites (see [[graft.SessionMemo]]). */
-  def invalidatePqArtifacts(): Unit = {
-    pqCodesMemo.clear()
-    pqVariantMemo.clear()
-    opqSrcMemo.clear()
-  }
-
-  /** Query-side ADC distance table: M×K rows per query, broadcast. */
-  private def pqDistTab(s: SparkSession, dir: String): DataFrame =
+  /** Query-side ADC distance table against `cb`: M×K rows per query,
+    * broadcast. */
+  private def pqDistTab(s: SparkSession, dir: String,
+      cb: Quantizers.Codebook, perm: Option[Seq[Int]] = None): DataFrame =
     pqSubvecs(
       Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), q4vec(col("embedding")).as("v")),
+        .select(col("vec_id").as("query_id"),
+          perm.foldLeft(q4vec(col("embedding")))(Quantizers.permute).as("v")),
       "query_id")
-      .join(broadcast(pqCodebook(s, dir)), Seq("m"))
+      .join(broadcast(Quantizers.frame(s, cb)), Seq("m"))
       .select(col("query_id"), col("m"), col("j"),
         sq(col("sub"), col("cent")).as("qdist"))
 
-  def vecPq(s: SparkSession, dir: String): DataFrame = {
-    val codes = pqCodes(s, dir)
-    val dtab = pqDistTab(s, dir)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("neighbor_id"))
+  /** (query_id, neighbor_id, adist): every query's ADC distance to every
+    * corpus vector coded against `cb` — the body of B7, B22 and B25. */
+  private def pqAdc(s: SparkSession, dir: String, cb: Quantizers.Codebook,
+      perm: Option[Seq[Int]] = None): DataFrame = {
+    val codes = pqCodes(s, dir, cb, perm)
+    val dtab = pqDistTab(s, dir, cb, perm)
     codes.join(broadcast(dtab),
         codes("m") === dtab("m") && codes("code") === dtab("j"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(sum("qdist").as("adist"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adist"))
-      .orderBy("query_id", "rank")
   }
+
+  /** Each query's neighbors ranked by `dist`, ties to the smaller id. */
+  private def distRanked(df: DataFrame, dist: String): DataFrame =
+    df.withColumn("rank", row_number().over(Window.partitionBy("query_id")
+      .orderBy(col(dist), col("neighbor_id"))).cast("long"))
+
+  /** The output of every PQ key: each query's 5 nearest by `dist`. */
+  private def top5(df: DataFrame, dist: String = "adist"): DataFrame =
+    distRanked(df, dist).filter(col("rank") <= 5)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col(dist))
+      .orderBy("query_id", "rank")
+
+  def vecPq(s: SparkSession, dir: String): DataFrame =
+    top5(pqAdc(s, dir, pqSeeds(s, dir)))
 
   val vecPqSql: String = s"""
     WITH e4 AS (
@@ -1742,92 +1766,19 @@ object Similarity {
     * buys over sampling, the r10 rung analysis' top suspect for the
     * remaining PQ recall gap.
     *
-    * Scale shape: B7's plus one refinement pass — the assignment is the
-    * same broadcast-codebook O(vectors·M·K) join every encode does, the
-    * refinement a narrow mergeable (m, j, sd) aggregate (M·K·PqSub rows
-    * out), both map-side-combining. Nothing new shuffles at 100 TB. */
-  /** The B25 training pass: one exact Lloyd round per subspace over the
-    * sampled seeds → floor-divided integer centroids (m, j, cent).
-    * Shared by [[vecPqLloyd]] and [[annIvfPqLloyd]]. */
-  private def pqLloydCodebook(s: SparkSession, dir: String): DataFrame = {
-    val sub = pqCorpusSub(s, dir)
-    val seeds = pqCodebook(s, dir)
-    val a1 = sub.join(broadcast(seeds), Seq("m"))
-      .select(col("vec_id"), col("m"), col("j"),
-        sq(col("sub"), col("cent")).as("dist"))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("dist"), col("j"))).getField("j").as("j"))
-    sub.join(a1, Seq("vec_id", "m"))
-      .select(col("m"), col("j"), posexplode(col("sub")))
-      .groupBy("m", "j", "pos")
-      .agg(sum("col").as("cs"), count(lit(1)).as("n"))
-      // floorDiv via pmod: the numerator is exactly divisible, so the
-      // truncating `div` is exact in both engines regardless of sign
-      .select(col("m"), col("j"), col("pos"),
-        expr("(cs - pmod(cs, n)) div n").as("c2"))
-      .groupBy("m", "j")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c2")))),
-        e => e.getField("c2")).as("cent"))
-  }
+    * Scale shape: B7's plus one refinement pass ([[Quantizers.lloyd]]):
+    * the seeds are a driver literal, the assignment is the same row-local
+    * encode every PQ key runs, the refinement a narrow mergeable
+    * (m, j, sd) aggregate (M·K·PqSub rows to the driver). Nothing new
+    * shuffles at 100 TB. */
+  private[graft] def pqLloydCb(s: SparkSession, dir: String): Quantizers.Codebook =
+    trained(s, dir, "lloyd") {
+      Quantizers.means(Quantizers.lloyd(pqCorpus(s, dir), col("v"),
+        pqSeeds(s, dir), PqM, PqSub))
+    }
 
-  /** Session memo for the TRAINED-variant PQ artifacts (B22–B26): the
-    * Lloyd codebook + codes, the per-cell OPQ perm/codebook/codes, and
-    * the residual cell-sums/codebook/codes. The r11 bench's three
-    * slowest registry queries (ann_ivfpq_res 4.9 s, _opq 3.5 s, _lloyd
-    * 2.9 s) each re-derived their codebooks and re-encoded the corpus
-    * per query, and `ann_recall` re-ran all of them as rungs — at
-    * 100 TB these are ingest-time sidecars (exactly what the store's
-    * G20/G38/G41 columns are); this memo is the session-local
-    * equivalent, the same pattern as [[pqCodes]] for plain B7. Keys are
-    * `dir#artifact`, so one memo serves the family; cleared together
-    * with the plain-PQ memo by [[invalidatePqArtifacts]]. */
-  private val pqVariantMemo = new graft.SessionMemo
-  private def memoArtifact(s: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame =
-    pqVariantMemo.getOrElseUpdate(s, s"$dir#$tag")(build.localCheckpoint(true))
-
-  /** Corpus codes against an arbitrary (m, j, cent) codebook — B7's
-    * encode shape, codebook-agnostic. */
-  private def pqCodesFor(s: SparkSession, dir: String,
-      codebook: DataFrame): DataFrame =
-    pqCorpusSub(s, dir).join(broadcast(codebook), Seq("m"))
-      .select(col("vec_id"), col("m"), col("j"),
-        sq(col("sub"), col("cent")).as("dist"))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("dist"), col("j"))).getField("j").as("code"))
-
-  /** Per-query ADC distance table against an arbitrary codebook. */
-  private def pqDistTabFor(s: SparkSession, dir: String,
-      codebook: DataFrame): DataFrame =
-    pqSubvecs(
-      Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), q4vec(col("embedding")).as("v")),
-      "query_id")
-      .join(broadcast(codebook), Seq("m"))
-      .select(col("query_id"), col("m"), col("j"),
-        sq(col("sub"), col("cent")).as("qdist"))
-
-  /** Memoized Lloyd artifacts: the trained codebook (one exact
-    * refinement round) and the corpus encoded against it. */
-  private def pqLloydCb(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "lloyd_cb")(pqLloydCodebook(s, dir))
-  private def pqLloydCodes(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "lloyd_codes")(pqCodesFor(s, dir, pqLloydCb(s, dir)))
-
-  def vecPqLloyd(s: SparkSession, dir: String): DataFrame = {
-    val codes = pqLloydCodes(s, dir)
-    val dtab = pqDistTabFor(s, dir, pqLloydCb(s, dir))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("neighbor_id"))
-    codes.join(broadcast(dtab),
-        codes("m") === dtab("m") && codes("code") === dtab("j"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("qdist").as("adist"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adist"))
-      .orderBy("query_id", "rank")
-  }
+  def vecPqLloyd(s: SparkSession, dir: String): DataFrame =
+    top5(pqAdc(s, dir, pqLloydCb(s, dir)))
 
   /** B26 (r11): IVF-PQ with the LLOYD-TRAINED codebook — B8's exact
     * composition (coarse-cell probe prunes candidates, ADC ranks inside
@@ -1837,30 +1788,10 @@ object Similarity {
     * INSIDE the composed index, completing the judge-named family
     * (B7/B8 trained; the store's G41 rescb and raw codebook train at
     * creation). Same scale shape as B8: the probe is B5's broadcast
-    * ≤10-row query set, the codebook/table joins are M×K broadcasts,
-    * the scan reads codes only. */
-  def annIvfPqLloyd(s: SparkSession, dir: String): DataFrame = {
-    val probed = ivfProbed(s, dir).select("query_id", "label")
-    val members = Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
-      .select(col("vec_id"), col("label"))
-    val cand = members.join(broadcast(probed), Seq("label"))
-      .select(col("query_id"), col("vec_id"))
-    val codes = pqLloydCodes(s, dir)
-    val dt = pqDistTabFor(s, dir, pqLloydCb(s, dir))
-      .select(col("query_id").as("dq"),
-        col("m").as("dm"), col("j"), col("qdist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("neighbor_id"))
-    cand.join(codes, Seq("vec_id"))
-      .join(broadcast(dt), col("query_id") === col("dq")
-        && col("m") === col("dm") && col("code") === col("j"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("qdist").as("adist"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adist"))
-      .orderBy("query_id", "rank")
-  }
+    * ≤10-row query set, the table join is an M×K broadcast, the scan
+    * encodes row-locally. */
+  def annIvfPqLloyd(s: SparkSession, dir: String): DataFrame =
+    ivfPq(s, dir, pqLloydCb(s, dir))
 
   /** Oracle for B26: B8's probe CTEs + B25's trained-codebook CTEs. */
   val annIvfPqLloydSql: String = s"""
@@ -2005,85 +1936,19 @@ object Similarity {
     * deliverable: on real anisotropic embeddings (PCA-rotated, Matryoshka
     * -trained) the energy spread is orders of magnitude and this same
     * permutation is what closes most of the PQ→OPQ recall gap. */
-  private def opqSrcOrder(s: SparkSession, dir: String): Seq[Int] = {
-    // exact per-dim energy; one narrow pass, 64-row result to the driver
-    // (bounded collect — the same K-row-sidecar discipline as searchCells)
-    val stats = Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
-      .select(posexplode(q4vec(col("embedding"))))
-      .groupBy(col("pos").as("d"))
-      .agg((count(lit(1)) * sum(col("col") * col("col"))
-        - sum("col") * sum("col")).as("energy"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    // an empty (or degenerate) corpus trains nothing: identity layout,
-    // so the empty-input contract (empty result, no crash) holds
-    if (stats.length < VecDim) return 0 until VecDim
-    val dimOfRank = stats.sortBy { case (d, e) => (-e, d) }.map(_._1)
-    (0 until VecDim).map { p =>
-      val m = p / PqSub // target subspace
-      val g = p % PqSub // slot within the subspace = snake round
-      val i = if (g % 2 == 0) m else PqM - 1 - m
-      dimOfRank(g * PqM + i)
-    }
-  }
-
-  /** `v` permuted so that slice m of the result is subspace m's
-    * energy-balanced dim set — a literal-index gather, stays codegen. */
-  private def opqVec(v: Column, src: Seq[Int]): Column =
-    array(src.map(d => element_at(v, d + 1)): _*)
-
-  /** Memoized B22 training: the energy-ranked source order (a 64-int
-    * driver sidecar — one full-corpus narrow pass saved per reuse) and
-    * the permuted codebook + corpus codes. */
-  private val opqSrcMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Seq[Int]]()
-  private def opqSrc(s: SparkSession, dir: String): Seq[Int] =
-    opqSrcMemo.computeIfAbsent((s, dir), _ => opqSrcOrder(s, dir))
-
-  private def opqCorpusSub(s: SparkSession, dir: String): DataFrame =
-    pqSubvecs(
-      Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
-        .select(col("vec_id"),
-          opqVec(q4vec(col("embedding")), opqSrc(s, dir)).as("v"))
-        .repartition(s.sparkContext.defaultParallelism, col("vec_id")),
-      "vec_id")
-
-  private def opqCb(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "opq_cb") {
-      opqCorpusSub(s, dir).filter(col("vec_id") < 10 + PqK)
-        .select((col("vec_id") - 10).as("j"), col("m"), col("sub").as("cent"))
-    }
-
-  private def opqCodes(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "opq_codes") {
-      opqCorpusSub(s, dir).join(broadcast(opqCb(s, dir)), Seq("m"))
-        .select(col("vec_id"), col("m"), col("j"),
-          sq(col("sub"), col("cent")).as("dist"))
-        .groupBy("vec_id", "m")
-        .agg(min(struct(col("dist"), col("j"))).getField("j").as("code"))
+  private[graft] def opqPerm(s: SparkSession, dir: String): Seq[Int] =
+    trained(s, dir, "opq_perm") {
+      // exact per-dim energy: one narrow pass, 64 rows to the driver
+      val stats = Quantizers.energies(pqCorpus(s, dir), col("v")).getOrElse(0, Nil)
+      // an empty (or degenerate) corpus trains nothing: identity layout,
+      // so the empty-input contract (empty result, no crash) holds
+      if (stats.length < VecDim) 0 until VecDim
+      else Quantizers.snakeDeal(stats, PqM, PqSub)
     }
 
   def vecOpq(s: SparkSession, dir: String): DataFrame = {
-    val src = opqSrc(s, dir)
-    val codebook = opqCb(s, dir)
-    val codes = opqCodes(s, dir)
-    val dtab = pqSubvecs(
-      Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"),
-          opqVec(q4vec(col("embedding")), src).as("v")),
-      "query_id")
-      .join(broadcast(codebook), Seq("m"))
-      .select(col("query_id"), col("m"), col("j"),
-        sq(col("sub"), col("cent")).as("qdist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("neighbor_id"))
-    codes.join(broadcast(dtab),
-        codes("m") === dtab("m") && codes("code") === dtab("j"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("qdist").as("adist"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adist"))
-      .orderBy("query_id", "rank")
+    val perm = Some(opqPerm(s, dir))
+    top5(pqAdc(s, dir, pqSeeds(s, dir, perm), perm))
   }
 
   /** Oracle: the permutation is re-derived IN SQL (energy rank + snake
@@ -2149,25 +2014,25 @@ object Similarity {
     * Scale: candidate set = members of nprobe cells (shuffle on cell
     * id); codes join is co-keyed on vec_id; the query distance table
     * (Q·M·K rows) broadcasts. */
-  def annIvfPq(s: SparkSession, dir: String): DataFrame = {
+  def annIvfPq(s: SparkSession, dir: String): DataFrame =
+    ivfPq(s, dir, pqSeeds(s, dir))
+
+  /** B8's body over codebook `cb`: candidates are the members of each
+    * query's probed cells, ranked by ADC distance. */
+  private def ivfPq(s: SparkSession, dir: String,
+      cb: Quantizers.Codebook): DataFrame = {
     val probed = ivfProbed(s, dir).select("query_id", "label")
     val members = Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
       .select(col("vec_id"), col("label"))
     val cand = members.join(broadcast(probed), Seq("label"))
       .select(col("query_id"), col("vec_id"))
-    val dt = pqDistTab(s, dir).select(col("query_id").as("dq"),
+    val dt = pqDistTab(s, dir, cb).select(col("query_id").as("dq"),
       col("m").as("dm"), col("j"), col("qdist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("neighbor_id"))
-    cand.join(pqCodes(s, dir), Seq("vec_id"))
+    top5(cand.join(pqCodes(s, dir, cb), Seq("vec_id"))
       .join(broadcast(dt), col("query_id") === col("dq")
         && col("m") === col("dm") && col("code") === col("j"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("qdist").as("adist"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adist"))
-      .orderBy("query_id", "rank")
+      .agg(sum("qdist").as("adist")))
   }
 
   /** B23: OPQ inside IVF-PQ — the composition where OPQ pays in real
@@ -2176,17 +2041,19 @@ object Similarity {
     * exact energies (the B22 rank + snake deal, per cell) and codes
     * against a CELL-LOCAL codebook, because after coarse quantization
     * the residual energy profile differs cell to cell — a global
-    * rotation can't balance all of them at once. Everything is data, not
-    * driver literals: the permutation is a (label, d) → (m, sd) table
-    * (cells × Dim rows, broadcast), the codebook is (label, j, m, sd)
-    * rows, so the plan is pure equi-joins and the DuckDB oracle
-    * re-derives the per-cell training in SQL (window rank per label) —
-    * the training is oracle-checked, not just the coding.
+    * rotation can't balance all of them at once. The training is two
+    * bounded collects ([[opqCells]]): per-(cell, dim) energies and each
+    * cell's first PqK members. Codes are the row-local encode against
+    * the row's own cell's codebook (one label-keyed literal); the query
+    * side joins the same artifacts as (label, d) → (m, sd) and
+    * (label, j, m, sd) relations, and the DuckDB oracle re-derives the
+    * per-cell training in SQL (window rank per label) — the training is
+    * oracle-checked, not just the coding.
     *
-    * Scale: perm + codebook are O(cells · Dim · K) broadcastable
-    * sidecars; encode is the standard O(members · Dim · K) PQ pass keyed
-    * on (label, m, sd); serving touches only probed cells' members and
-    * the query-side distance table is O(q · nprobe · M · K), broadcast.
+    * Scale: perm + codebook are O(cells · Dim · K) driver values; the
+    * encode is one narrow pass over the members; serving touches only
+    * probed cells' members and the query-side distance table is
+    * O(q · nprobe · M · K), broadcast.
     * Measured vs the global-codebook B8 (bench/aniso_r10.json, the B13
     * rung table): +0.04 recall on the isotropic corpus, but a TIE on the
     * decay-0.85 anisotropic twin and a loss at decay 0.7 — an honest
@@ -2196,66 +2063,70 @@ object Similarity {
     * needs cells big enough to train on; this operator is the correct
     * SHAPE for that regime, and the rung table says so rather than
     * implying an uplift the test corpus cannot show. */
-  /** Corpus dims of the IVF cells — the shared scan under the B23/B24
-    * per-cell trainings. */
-  private def cellMembers(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
-      .select(col("vec_id"), col("label"),
-        posexplode(q4vec(col("embedding"))))
-      .select(col("vec_id"), col("label"), col("pos").as("d"),
-        col("col").as("x"))
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
+  /** Each IVF cell's first `PqK` members by vec_id with their q4 vectors
+    * (the global B7 sampling rule, per cell) — one bounded collect,
+    * label → (j, v). The seeds of the B23/B24 per-cell codebooks. */
+  private def cellSeeds(s: SparkSession, dir: String)
+      : Map[Int, Seq[(Int, Array[Long])]] =
+    pqCorpus(s, dir)
+      .withColumn("j", row_number().over(
+        Window.partitionBy("label").orderBy("vec_id")) - 1)
+      .filter(col("j") < PqK)
+      .select("label", "j", "v").collect().toSeq
+      .groupBy(_.getInt(0))
+      .map { case (label, rs) =>
+        label -> rs.map(r => (r.getInt(1), r.getSeq[Long](2).toArray))
+      }
 
-  /** Memoized B23 training artifacts: per-cell permutation, cell-local
-    * codebook, corpus codes — trained once per (session, dir). */
-  private def opqCellPerm(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "opqc_perm") {
-      // per-cell per-dim exact energy n·Σx²−(Σx)² → rank within the cell
-      // → snake deal: the B22 training rule, one permutation PER CELL
-      val wRank = Window.partitionBy("label")
-        .orderBy(col("energy").desc, col("d"))
-      cellMembers(s, dir).groupBy("label", "d")
-        .agg((count(lit(1)) * sum(col("x") * col("x"))
-          - sum("x") * sum("x")).as("energy"))
-        .withColumn("r", row_number().over(wRank) - 1)
-        .select(col("label"), col("d"),
-          when(expr(s"(r div $PqM) % 2") === 0, col("r") % PqM)
-            .otherwise(lit(PqM - 1) - col("r") % PqM).as("m"),
-          expr(s"r div $PqM").as("sd"))
+  /** Per-cell codebooks as (label, j, m, sd, `x`) rows for the query-side
+    * distance tables. */
+  private def cellCbFrame(s: SparkSession,
+      cbs: Map[Int, Quantizers.Codebook], x: String): DataFrame = {
+    import s.implicits._
+    cbs.toSeq.flatMap { case (label, cb) => cb.flatMap { case (j, m, c) =>
+      c.zipWithIndex.map { case (v, sd) => (label, j, m, sd, v) } } }
+      .toDF("label", "j", "m", "sd", x)
+  }
+
+  /** B23's training on the driver: each cell's permutation (the B22
+    * energy rank + snake deal over its members) and its cell-local
+    * codebook, cut from its seeds' permuted layout. */
+  private[graft] final case class CellOpq(perms: Map[Int, Seq[Int]],
+      cbs: Map[Int, Quantizers.Codebook])
+
+  private[graft] def opqCells(s: SparkSession, dir: String): CellOpq =
+    trained(s, dir, "opq_cells") {
+      val perms = Quantizers.energies(pqCorpus(s, dir), col("v"), col("label"))
+        .map { case (label, stats) => label -> Quantizers.snakeDeal(stats, PqM, PqSub) }
+      CellOpq(perms, cellSeeds(s, dir).map { case (label, vs) =>
+        label -> Quantizers.seeds(vs.map { case (j, v) =>
+          (j, perms(label).map(v(_)).toArray) }, PqM, PqSub)
+      })
     }
 
-  private def opqCellMemberSub(s: SparkSession, dir: String): DataFrame =
-    cellMembers(s, dir).join(broadcast(opqCellPerm(s, dir)), Seq("label", "d"))
-      .select(col("vec_id"), col("label"), col("m"), col("sd"), col("x"))
-
-  private def opqCellCb(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "opqc_cb") {
-      // cell-local codebook: the PqK lowest member ids of each cell (the
-      // same deterministic sampling rule as the global B7 codebook)
-      val wJ = Window.partitionBy("label").orderBy("vec_id")
-      val cbIds = cellMembers(s, dir).select("vec_id", "label").distinct()
-        .withColumn("j", row_number().over(wJ) - 1)
-        .filter(col("j") < PqK)
-      opqCellMemberSub(s, dir)
-        .join(broadcast(cbIds), Seq("vec_id", "label"))
-        .select(col("label"), col("j"), col("m"), col("sd"),
-          col("x").as("cx"))
-    }
-
-  private def opqCellCodes(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "opqc_codes") {
-      opqCellMemberSub(s, dir)
-        .join(broadcast(opqCellCb(s, dir)), Seq("label", "m", "sd"))
-        .groupBy(col("vec_id"), col("label"), col("m"), col("j"))
-        .agg(sum((col("x") - col("cx")) * (col("x") - col("cx"))).as("dist"))
-        .groupBy("vec_id", "label", "m")
-        .agg(min(struct(col("dist"), col("j"))).getField("j").as("code"))
-    }
+  /** (vec_id, label, m, code): every member in its own cell's permuted
+    * layout, coded against its cell's codebook. */
+  private[graft] def opqCellCodes(s: SparkSession, dir: String,
+      t: CellOpq): DataFrame =
+    pqCorpus(s, dir)
+      .select(col("vec_id"), col("label"), col("v"),
+        element_at(typedLit(t.perms), col("label")).as("src"))
+      // a literal-position gather, not a lambda over `v`: a lambda would
+      // let the optimizer inline v's q4 transform into every element
+      .select(col("vec_id"), col("label"), array((1 to VecDim).map(p =>
+        element_at(col("v"), element_at(col("src"), p) + 1)): _*).as("pv"))
+      .select(col("vec_id"), col("label"), posexplode(
+        Quantizers.encodeKeyed(col("pv"), col("label"), t.cbs, PqM, PqSub)))
+      .select(col("vec_id"), col("label"), col("pos").as("m"), col("col").as("code"))
 
   def annIvfPqOpq(s: SparkSession, dir: String): DataFrame = {
-    val perm = opqCellPerm(s, dir)
-    val codebook = opqCellCb(s, dir)
-    val codes = opqCellCodes(s, dir)
+    import s.implicits._
+    val t = opqCells(s, dir)
+    val perm = t.perms.toSeq.flatMap { case (label, src) =>
+      src.zipWithIndex.map { case (d, p) => (label, d, p / PqSub, p % PqSub) }
+    }.toDF("label", "d", "m", "sd")
+    val codebook = cellCbFrame(s, t.cbs, "cx")
+    val codes = opqCellCodes(s, dir, t)
     // query side: each probed (query, cell) pair permutes the query
     // along THAT cell's permutation and tables distances to its codebook
     val probed = ivfProbed(s, dir).select("query_id", "label")
@@ -2269,18 +2140,12 @@ object Similarity {
       .groupBy(col("query_id"), col("label"), col("m"), col("j"))
       .agg(sum((col("qx") - col("cx")) * (col("qx") - col("cx")))
         .as("qdist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("neighbor_id"))
-    codes.join(broadcast(probed), Seq("label"))
+    top5(codes.join(broadcast(probed), Seq("label"))
       .join(broadcast(dtab),
         Seq("query_id", "label", "m"))
       .filter(col("code") === col("j"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("qdist").as("adist"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adist"))
-      .orderBy("query_id", "rank")
+      .agg(sum("qdist").as("adist")))
   }
 
   /** Oracle: per-cell permutation training (window rank per label +
@@ -2400,51 +2265,59 @@ object Similarity {
     * the n-scaled form because its corpus cells are bounded and the
     * exact-arithmetic contract is the point being oracle-checked.
     *
-    * Scale: identical join shape to B23 — per-cell sums are a broadcast
-    * (cells × Dim) sidecar, encode is the standard O(members · Dim · K)
-    * pass, serving touches probed cells only. Measured in the rung
+    * Scale: identical shape to B23 — per-cell sums and codebooks are
+    * (cells × Dim) driver values, the encode is one narrow pass over the
+    * members, serving touches probed cells only. Measured in the rung
     * table (bench/aniso_r10.json): residual encoding is where IVF-PQ's
     * recall gap to the flat scan actually closes. */
-  /** Memoized B24 training artifacts: per-cell coarse sums (the exact
-    * rational centroid numerator/denominator — never a float centroid),
-    * the per-cell residual codebook, and the corpus residual codes. */
-  private def resCellSum(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "res_cellsum") {
-      cellMembers(s, dir).groupBy("label", "d")
-        .agg(sum("x").as("cs"), count(lit(1)).as("n"))
+  /** B24's training on the driver: each cell's coarse sums (Σx per dim
+    * and n — the exact rational centroid, never a float) and its
+    * codebook of its first PqK members' n-scaled residuals. */
+  private[graft] final case class CellRes(sums: Map[Int, (Array[Long], Long)],
+      cbs: Map[Int, Quantizers.Codebook])
+
+  private[graft] def resCells(s: SparkSession, dir: String): CellRes =
+    trained(s, dir, "res_cells") {
+      val sums = pqCorpus(s, dir).select(col("label"), posexplode(col("v")))
+        .groupBy(col("label"), col("pos").as("d"))
+        .agg(sum("col").as("cs"), count(lit(1)).as("n"))
+        .collect().toSeq.groupBy(_.getInt(0))
+        .map { case (label, rs) =>
+          val byDim = rs.sortBy(_.getInt(1))
+          label -> (byDim.map(_.getLong(2)).toArray, byDim.map(_.getLong(3)).max)
+        }
+      CellRes(sums, cellSeeds(s, dir).map { case (label, vs) =>
+        val (cs, n) = sums(label)
+        label -> Quantizers.seeds(vs.map { case (j, v) =>
+          (j, v.indices.map(d => v(d) * n - cs(d)).toArray) }, PqM, PqSub)
+      })
     }
 
-  private def resResid(s: SparkSession, dir: String): DataFrame =
-    cellMembers(s, dir).join(broadcast(resCellSum(s, dir)), Seq("label", "d"))
+  /** (vec_id, label, m, code): every member's n-scaled residual
+    * r = x·n − S against its own cell's sums, coded against its cell's
+    * codebook. */
+  private[graft] def resCellCodes(s: SparkSession, dir: String,
+      t: CellRes): DataFrame = {
+    val cs = element_at(typedLit(t.sums.map { case (l, (c, _)) => l -> c.toSeq }),
+      col("label"))
+    val n = element_at(typedLit(t.sums.map { case (l, (_, n)) => l -> n }),
+      col("label"))
+    pqCorpus(s, dir)
       .select(col("vec_id"), col("label"),
-        expr(s"d div $PqSub").as("m"), (col("d") % PqSub).as("sd"),
-        (col("x") * col("n") - col("cs")).as("r"))
-
-  private def resCellCb(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "res_cb") {
-      val wJ = Window.partitionBy("label").orderBy("vec_id")
-      val cbIds = cellMembers(s, dir).select("vec_id", "label").distinct()
-        .withColumn("j", row_number().over(wJ) - 1)
-        .filter(col("j") < PqK)
-      resResid(s, dir).join(broadcast(cbIds), Seq("vec_id", "label"))
-        .select(col("label"), col("j"), col("m"), col("sd"),
-          col("r").as("cr"))
-    }
-
-  private def resCellCodes(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "res_codes") {
-      resResid(s, dir)
-        .join(broadcast(resCellCb(s, dir)), Seq("label", "m", "sd"))
-        .groupBy(col("vec_id"), col("label"), col("m"), col("j"))
-        .agg(sum((col("r") - col("cr")) * (col("r") - col("cr"))).as("dist"))
-        .groupBy("vec_id", "label", "m")
-        .agg(min(struct(col("dist"), col("j"))).getField("j").as("code"))
-    }
+        zip_with(col("v"), cs, (x, c) => x * n - c).as("r"))
+      .select(col("vec_id"), col("label"), posexplode(
+        Quantizers.encodeKeyed(col("r"), col("label"), t.cbs, PqM, PqSub)))
+      .select(col("vec_id"), col("label"), col("pos").as("m"), col("col").as("code"))
+  }
 
   def annIvfPqRes(s: SparkSession, dir: String): DataFrame = {
-    val cellSum = resCellSum(s, dir)
-    val codebook = resCellCb(s, dir)
-    val codes = resCellCodes(s, dir)
+    import s.implicits._
+    val t = resCells(s, dir)
+    val cellSum = t.sums.toSeq.flatMap { case (label, (cs, n)) =>
+      cs.zipWithIndex.map { case (c, d) => (label, d, c, n) }
+    }.toDF("label", "d", "cs", "n")
+    val codebook = cellCbFrame(s, t.cbs, "cr")
+    val codes = resCellCodes(s, dir, t)
     val probed = ivfProbed(s, dir).select("query_id", "label")
     // scaled QUERY residual against each probed cell's own (S, n)
     val qres = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
@@ -2461,9 +2334,7 @@ object Similarity {
       .agg(sum((col("qr") - col("cr")) * (col("qr") - col("cr")))
         .as("qdist"))
     val cellN = cellSum.groupBy("label").agg(max("n").as("n"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("rdist"), col("neighbor_id"))
-    codes.join(broadcast(probed), Seq("label"))
+    top5(codes.join(broadcast(probed), Seq("label"))
       .join(broadcast(dtab), Seq("query_id", "label", "m"))
       .filter(col("code") === col("j"))
       .groupBy(col("query_id"), col("label"),
@@ -2473,12 +2344,8 @@ object Similarity {
       // the one division: scaled → true residual distance (÷ n²),
       // making scores comparable ACROSS probed cells
       .withColumn("rdist",
-        col("adist").cast("double") / (col("n") * col("n")).cast("double"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("rdist"))
-      .orderBy("query_id", "rank")
+        col("adist").cast("double") / (col("n") * col("n")).cast("double")),
+      "rdist")
   }
 
   /** Oracle: scaled-residual codes, per-cell codebooks, coarse probing,
@@ -2677,16 +2544,8 @@ object Similarity {
     * refine join is an equi-join on neighbor_id against the vector
     * store. Fully exact integer arithmetic end to end → hash-checked. */
   def annPqRerank(s: SparkSession, dir: String): DataFrame = {
-    val codes = pqCodes(s, dir)
-    val dtab = pqDistTab(s, dir)
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("neighbor_id"))
-    val shortlist = codes.join(broadcast(dtab),
-        codes("m") === dtab("m") && codes("code") === dtab("j"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("qdist").as("adist"))
-      .withColumn("ark", row_number().over(wAdc))
-      .filter(col("ark") <= RerankShortlist)
+    val shortlist = distRanked(pqAdc(s, dir, pqSeeds(s, dir)), "adist")
+      .filter(col("rank") <= RerankShortlist)
       .select("query_id", "neighbor_id")
     val wX = Window.partitionBy("query_id")
       .orderBy(col("dot").desc, col("neighbor_id"))
@@ -3016,8 +2875,8 @@ object Similarity {
     * against the k·|queries|-row truth table. */
   /** B13's rung-result memo: each rung's RESULT is bounded (queries × k
     * rows), so the recall harness materializes it once per (session,
-    * corpus) and re-grades from the memo — the rung ARTIFACTS (Lloyd
-    * cells, PQ codes, graph edges) were already session-memoized, but
+    * corpus) and re-grades from the memo — the rung ARTIFACTS that cost
+    * a job sequence (Lloyd cells, graph edges) are session-memoized, but
     * the rung queries themselves re-executed on every recall run
     * (measured 6.9 s at sf0.1: 2× the next-slowest registry query).
     * Registered rung queries (`ann_ivf`, …) are untouched — their bench
@@ -3211,23 +3070,14 @@ object Similarity {
 
   /** md5-derived ±1 sign matrix for the JL projection — sign(j,d) = bit 3
     * of h60("rp:j:d"), the same 60-bit md5 integer the oracle derives in
-    * SQL, computed once driver-side (16×64 literals, no lookup join). */
-  private lazy val rpSigns: Array[Array[Long]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Array.tabulate(RpDims, VecDim) { (j, d) =>
-      val hex = md.digest(s"rp:$j:$d".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.substring(0, 15)
-      ((java.lang.Long.parseLong(hex, 16) >> 3) & 1L) * 2L - 1L
-    }
-  }
+    * SQL (16×64 literals, no lookup join). */
+  private lazy val rpSigns = Quantizers.signs("rp", RpDims, VecDim)
 
   // Quantization for the projection path reuses the 1e4-scale q4 (the IVF
   // cell-assignment quantizer): the projected coordinate sums 64 signed
   // elements (≤ 2.6e6) and the 16-dim projected dot stays ≤ ~1e14 —
   // int64-exact; the 1e8 scale q8 uses would overflow the projected dot.
-  private def rpProject(v4: Column): Column =
-    array((0 until RpDims).map(j =>
-      dotExact(typedLit(rpSigns(j).toSeq), v4)): _*)
+  private def rpProject(v4: Column): Column = Quantizers.project(v4, rpSigns)
 
   /** B27: Johnson–Lindenstrauss ±1 random projection — every vector's 64
     * dims compressed to 16 via a seeded sign matrix (Achlioptas 2003: ±1
@@ -3235,7 +3085,9 @@ object Similarity {
     * multiplies and no trained artifact). The projection each downstream
     * rung (B28) scores in; exploded to scalar rows for the comparator.
     * Shuffle-free: 16 codegen'd int64 dot kernels per row against literal
-    * sign vectors — no lookup join, no explode of the input. */
+    * sign vectors ([[Quantizers.project]], the store's pcodes projection
+    * with another seed and width) — no lookup join, no explode of the
+    * input. */
   def vecRp(s: SparkSession, dir: String): DataFrame = {
     Tables.embeddings(s, dir)
       .select(col("vec_id"), transform(col("embedding"), x => q4(x)).as("v4"))
@@ -3593,6 +3445,8 @@ object Similarity {
     } finally pool.shutdownNow()
   }
 
+  private val RecallThreads = 4
+
   def annRecall(s: SparkSession, dir: String): DataFrame = {
     // The rung inventory, in the output's method order. Notable pairs the
     // table is built to expose: vec_pq ↔ vec_opq (what the B22
@@ -3616,19 +3470,13 @@ object Similarity {
       ("ann_ivfpq_lloyd", 5, () => annIvfPqLloyd(s, dir)),
       ("ann_rp", 5, () => annRp(s, dir)))
     // r15 (§2.6 "overlap independent jobs"): the 15 memoRung builds (truth
-    // + 14 rungs) are independent eager-checkpoint jobs that previously
-    // ran strictly serially, leaving most cores idle in each job's tail.
-    // They now run through a bounded thread pool ([[runPooled]]) — Spark's
-    // scheduler happily interleaves jobs submitted from several driver
-    // threads, and SessionMemo is single-flight (see its scaladoc), so
-    // rungs that share an artifact (vec_pq/ann_pq_rerank's plain-PQ codes,
-    // vec_pq_lloyd/ann_ivfpq_lloyd's trained codebook, the IVF cell maps)
-    // wait for one build instead of duplicating it. The pool is bounded by
-    // `graft.recall.buildThreads` (default 4 — enough to fill job tails,
-    // not enough to thrash the scheduler); 1 = the old serial behavior.
-    val threads = math.max(1, s.conf.getOption("graft.recall.buildThreads")
-      .map(_.toInt).getOrElse(4))
-    val built = runPooled(threads, (() => memoRung(s, dir, "truth")(
+    // + 14 rungs) are independent eager-checkpoint jobs, each with its own
+    // small driver-side trainings and a job tail that leaves most cores
+    // idle when run serially. They run through a pool of RecallThreads
+    // ([[runPooled]]): Spark's scheduler interleaves jobs submitted from
+    // several driver threads, and 4 in flight fill the job tails without
+    // thrashing the scheduler.
+    val built = runPooled(RecallThreads, (() => memoRung(s, dir, "truth")(
       annBrute(s, dir).select("query_id", "rank", "neighbor_id"))) +:
       rungDefs.map { case (m, _, b) => () => memoRung(s, dir, m)(b()) })
     val truth = built.head

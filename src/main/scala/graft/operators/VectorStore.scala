@@ -73,46 +73,6 @@ object VectorStore {
     transform(sequence(lit(0), lit(PqM - 1)),
       m => slice(v, m * lit(PqSubDim) + 1, lit(PqSubDim)))
 
-  /** One exact Lloyd refinement round over chunk subvectors (r11, the
-    * B25 rule applied to the store's frozen codebooks): assign every
-    * (chunk, subspace) of the CREATION batch to its nearest seed
-    * centroid (exact int64 sqdist, ties to the smaller j), then refine
-    * each surviving (m, j) centroid to the floor-divided integer mean —
-    * integer centroids keep the ADC scan in exact int64 with no
-    * per-candidate division, and the <1 rounding on the hash-weight axis
-    * is noise against centroid spreads. Seeds that win no members vanish
-    * (the codebook only shrinks — codes stay dense in [0, K)). Cost: one
-    * encode-shaped broadcast pass plus a narrow (m, j, sd) mergeable
-    * aggregate, paid once at store creation; appends still reuse the
-    * frozen result. `subs` = (doc_id, chunk_ix, m, sub). */
-  private def lloydRefine(subs: DataFrame, seeds: DataFrame): DataFrame = {
-    val wMin = Window.partitionBy("doc_id", "chunk_ix", "m")
-      .orderBy(col("dist"), col("j"))
-    val a1 = subs.join(broadcast(seeds), Seq("m"))
-      .withColumn("dist", call_function("graft_sqdist_l", col("sub"), col("cent")))
-      .withColumn("rk", row_number().over(wMin))
-      .filter(col("rk") === 1)
-      .select("doc_id", "chunk_ix", "m", "j")
-    subs.join(a1, Seq("doc_id", "chunk_ix", "m"))
-      .select(col("m"), col("j"), posexplode(col("sub")))
-      .groupBy("m", "j", "pos")
-      .agg(sum("col").as("cs"), count(lit(1)).as("n"))
-      // floorDiv via pmod: exactly-divisible numerator makes the
-      // truncating `div` exact regardless of sign
-      .select(col("m"), col("j"), col("pos"),
-        expr("(cs - pmod(cs, n)) div n").as("c2"))
-      .groupBy("m", "j")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c2")))),
-        e => e.getField("c2")).as("cent"))
-      .select("j", "m", "cent")
-  }
-
-  /** (doc_id, chunk_ix, m, sub) subvector rows of a vector column. */
-  private def subRows(df: DataFrame, vecCol: Column): DataFrame =
-    df.select(col("doc_id"), col("chunk_ix"), posexplode(subvecs(vecCol)))
-      .select(col("doc_id"), col("chunk_ix"),
-        col("pos").as("m"), col("col").as("sub"))
-
   /** B22 for the store: OPQ-style energy-balancing permutation ahead of
     * the PQ subspace split, trained on the CREATION batch (per-dim exact
     * int64 energy n·Σx²−(Σx)², snake deal — the Similarity.vecOpq rule)
@@ -122,21 +82,6 @@ object VectorStore {
     * the exact re-rank tail of [[searchCompressed]] is untouched — only
     * the ADC approximation sees the balanced subspaces. */
   private val PermFile = "perm.parquet"
-
-  private def trainPerm(batch: DataFrame): Seq[Int] = {
-    val stats = batch.select(posexplode(col("raw")))
-      .groupBy(col("pos").as("d"))
-      .agg((count(lit(1)) * sum(col("col") * col("col"))
-        - sum("col") * sum("col")).as("energy"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val dimOfRank = stats.sortBy { case (d, e) => (-e, d) }.map(_._1)
-    (0 until Dim).map { p =>
-      val m = p / PqSubDim // target subspace
-      val g = p % PqSubDim // slot within the subspace = snake round
-      val i = if (g % 2 == 0) m else PqM - 1 - m
-      dimOfRank(g * PqM + i)
-    }
-  }
 
   private def readPerm(spark: SparkSession, indexDir: String): Seq[Int] =
     ParquetFooters.rows(spark, s"$indexDir/$PqDir/$PermFile")
@@ -154,18 +99,9 @@ object VectorStore {
 
   /** A frozen (j, m, cent) codebook sidecar, read on the driver. */
   private def readCodebook(spark: SparkSession, path: String)
-      : Seq[(Int, Int, Array[Long])] =
+      : Quantizers.Codebook =
     ParquetFooters.rows(spark, path).map(g => (g.getInteger("j", 0),
       g.getInteger("m", 0), ParquetFooters.longs(g, "cent")))
-
-  /** A codebook trained at creation, as the same driver rows. */
-  private def codebookRows(cb: DataFrame): Seq[(Int, Int, Array[Long])] =
-    cb.select("j", "m", "cent").collect().toSeq
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
-
-  /** Gather `v` along the frozen permutation — literal indices, codegen. */
-  private def permuteRaw(v: Column, perm: Seq[Int]): Column =
-    array(perm.map(d => element_at(v, d + 1)): _*)
 
   /** Raw int64 hashing-trick weights of a chunk — one pass of the fused
     * graft_hash_embed kernel (the O(dim·tokens) per-slot filter/aggregate
@@ -318,9 +254,9 @@ object VectorStore {
     * values: OPQ permutation, PQ codebook, cell summary, residual
     * codebook. */
   private final case class Frozen(perm: Seq[Int],
-      codebook: Seq[(Int, Int, Array[Long])],
+      codebook: Quantizers.Codebook,
       centroids: Array[(Int, Array[Long], Long)],
-      rescb: Seq[(Int, Int, Array[Long])])
+      rescb: Quantizers.Codebook)
 
   /** A store's frozen artifacts, read on the driver (no Spark job). */
   private def readFrozen(spark: SparkSession, indexDir: String): Frozen =
@@ -353,12 +289,15 @@ object VectorStore {
     * empty frame ([[readIndex]]). */
   private def storeRows(embedded: DataFrame, f: Frozen, meta: Boolean,
       batchTag: Column): DataFrame = {
-    val celled = embedded.withColumn("cell", cellOf(col("raw"), f.centroids))
+    val celled = embedded.withColumn("cell",
+        Quantizers.nearestCell(col("raw"), f.centroids))
+      .withColumn("praw", Quantizers.permute(col("raw"), f.perm))
+      .withColumn("rres", residual(f.centroids))
     rpCols(sq8Cols(celled.select((Seq(col("doc_id"), col("chunk_ix")) ++
       (if (meta) Seq(col("meta")) else Nil) ++
       Seq(col("chunk"), col("raw"), col("bucket"), col("embedding"),
-        col("cell"), pqCodes(permuteRaw(col("raw"), f.perm), f.codebook).as("codes"),
-        pqCodes(residual(f.centroids), f.rescb).as("rcodes"),
+        col("cell"), pqCodes(col("praw"), f.codebook).as("codes"),
+        pqCodes(col("rres"), f.rescb).as("rcodes"),
         batchTag.as("batch_tag"))): _*)))
   }
 
@@ -384,6 +323,56 @@ object VectorStore {
     }
   }
 
+  /** Every learned artifact of a new store, trained on its creation
+    * batch (`embedded`, cached) and collected to the driver. The OPQ
+    * permutation freezes first: the codebook's subspaces are cut from the
+    * permuted layout. Then one exact Lloyd round each
+    * ([[Quantizers.lloyd]]) trains the PQ codebook, the `cells` k-means
+    * cells and the residual codebook, each seeded with the batch's first
+    * chunks by (doc_id, chunk_ix) — the k-means|| seeding step. Cell
+    * count is a creation-time knob: it should scale with the corpus, and
+    * every serving path reads the frozen K-row sidecar, so any K serves.
+    * The residual codebook trains on the scaled residuals against the
+    * trained cells. */
+  private def train(embedded: DataFrame, cells: Int): Frozen = {
+    def first(df: DataFrame, v: Column, n: Int): Seq[Array[Long]] =
+      df.orderBy("doc_id", "chunk_ix").limit(n).select(v).collect().toSeq
+        .map(_.getSeq[Long](0).toArray)
+    def seeds(vs: Seq[Array[Long]], m: Int, sub: Int): Quantizers.Codebook =
+      Quantizers.seeds(vs.zipWithIndex.map(_.swap), m, sub)
+    val perm = Quantizers.snakeDeal(
+      Quantizers.energies(embedded, col("raw"))(0), PqM, PqSubDim)
+    val raws = first(embedded, col("raw"), math.max(PqK, cells))
+    val permuted = Quantizers.permute(col("raw"), perm)
+    val codebook = Quantizers.means(Quantizers.lloyd(embedded, permuted,
+      seeds(raws.take(PqK).map(r => perm.map(r(_)).toArray), PqM, PqSubDim),
+      PqM, PqSubDim))
+    val centroids = Quantizers.lloyd(embedded, col("raw"),
+        seeds(raws.take(cells), 1, Dim), 1, Dim)
+      .map { case (cell, _, csum, n) => (cell, csum, n) }.toArray
+    val withRes = embedded.withColumn("cell",
+      Quantizers.nearestCell(col("raw"), centroids))
+    val rres = residual(centroids)
+    val rescb = Quantizers.means(Quantizers.lloyd(withRes, rres,
+      seeds(first(withRes, rres, PqK), PqM, PqSubDim), PqM, PqSubDim))
+    Frozen(perm, codebook, centroids, rescb)
+  }
+
+  /** A new store's frozen artifacts as its sidecars: PQ codebook, OPQ
+    * permutation, cell summary, residual codebook — one file each. */
+  private def writeFrozen(spark: SparkSession, indexDir: String,
+      f: Frozen): Unit = {
+    import spark.implicits._
+    def put(df: DataFrame, path: String): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/$path")
+    put(Quantizers.frame(spark, f.codebook), s"$PqDir/codebook.parquet")
+    put(f.perm.zipWithIndex.map { case (src, p) => (p, src) }.toDF("p", "src"),
+      s"$PqDir/$PermFile")
+    put(f.centroids.toSeq.map { case (c, csum, n) => (c, csum.toSeq, n) }
+      .toDF("cell", "csum", "n"), s"$CellsDir/centroids.parquet")
+    put(Quantizers.frame(spark, f.rescb), s"$PqDir/$ResCbFile")
+  }
+
   /** The encode-and-write core shared by [[ingest]] (which chunks docs
     * first) and [[retrainCells]] (which re-encodes the CURRENT chunk set
     * into a staging dir): trains-or-reuses every learned artifact (OPQ
@@ -407,89 +396,13 @@ object VectorStore {
     val embedded = embed(chunks).cache()
     val n = embedded.count()
     if (n > 0) {
-      // PQ codebook: frozen at store creation (k-means|| seeding sampled
-      // from the first PqK chunks, deterministic); appends MUST reuse it —
-      // codes from two different codebooks don't compare. The sidecar is
-      // written AFTER the index data: an overwrite-mode index write wipes
-      // indexDir, sidecar included.
-      val cbPath = s"$indexDir/$PqDir/codebook.parquet"
-      val permPath = s"$indexDir/$PqDir/$PermFile"
-      val cellPath = s"$indexDir/$CellsDir/centroids.parquet"
-      val resCbPath = s"$indexDir/$PqDir/$ResCbFile"
       // Every frozen artifact is read ONCE on the driver (parquet-hadoop,
-      // no Spark job) and every trained one collected once: the encode
-      // below is row-local codegen over these literals, and driver arrays
-      // cannot race the sidecar rewrites at the end of this method.
-      val frozen = if (reuse) Some(readFrozen(spark, indexDir)) else None
-      // the OPQ permutation freezes FIRST: the codebook's subspaces are
-      // defined over the permuted layout, so an append reuses both
-      val perm: Seq[Int] = frozen.fold(trainPerm(embedded))(_.perm)
-      val trainedCb = if (reuse) None else {
-        // seed = first PqK chunks' subvectors (the k-means|| seeding
-        // step), then ONE exact Lloyd round over the creation batch
-        // (r11) — trained centroids instead of raw samples close most
-        // of the sampled-codebook ADC gap (the B25 measurement)
-        val wj = Window.orderBy("doc_id", "chunk_ix")
-        val seeds = embedded.select("doc_id", "chunk_ix", "raw")
-          .orderBy("doc_id", "chunk_ix").limit(PqK)
-          .withColumn("j", row_number().over(wj) - 1)
-          .select(col("j"), posexplode(subvecs(permuteRaw(col("raw"), perm))))
-          .select(col("j"), col("pos").as("m"), col("col").as("cent"))
-        Some(lloydRefine(subRows(embedded, permuteRaw(col("raw"), perm)), seeds)
-          .localCheckpoint(true))
-      }
-      val codebook = trainedCb.fold(frozen.get.codebook)(codebookRows)
-      // Cell centroids: same freezing discipline as the codebook — one
-      // Lloyd round over the creation batch (seed = first `cells` chunks
-      // — a creation-time knob (r11): cell count should scale with the
-      // corpus (more Voronoi cells = finer directory pruning); every
-      // serving path reads the frozen K-row sidecar, so any K serves,
-      // assignment by exact int64 sqdist, centroid = exact sum + count),
-      // appends assign against the frozen summary so cell ids stay
-      // comparable across batches.
-      val trainedCells = if (reuse) None else {
-        val wj = Window.orderBy("doc_id", "chunk_ix")
-        val seeds = embedded.select("doc_id", "chunk_ix", "raw")
-          .orderBy("doc_id", "chunk_ix").limit(cells)
-          .withColumn("cell", row_number().over(wj) - 1)
-          .select(col("cell"), col("raw").as("sq"))
-        val wMin = Window.partitionBy("doc_id", "chunk_ix")
-          .orderBy(col("d2"), col("cell"))
-        Some(embedded.select(col("doc_id"), col("chunk_ix"), col("raw"))
-          .join(broadcast(seeds))
-          .withColumn("d2", call_function("graft_sqdist_l", col("raw"), col("sq")))
-          .withColumn("rk", row_number().over(wMin))
-          .filter(col("rk") === 1)
-          .select(col("cell"), posexplode(col("raw")))
-          .groupBy("cell", "pos").agg(sum("col").as("cs"), count(lit(1)).as("cnt"))
-          .groupBy("cell")
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("cs")))),
-            e => e.getField("cs")).as("csum"),
-            (max("cnt")).as("n"))
-          .localCheckpoint(true))
-      }
-      val centroids = trainedCells.fold(frozen.get.centroids)(
-        _.collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getLong(2))))
-      // residual-PQ codes (r10): each chunk's rres against its FROZEN
-      // cell centroid (scaled means computed driver-side from the K-row
-      // summary), coded against one GLOBAL residual codebook — frozen at
-      // creation like the raw-layout codebook, reused by appends
-      val trainedRes = if (reuse) None else {
-        // same seeding + one exact Lloyd round as the raw codebook
-        // (r11): the residual codebook trains on the creation batch's
-        // scaled residuals instead of carrying its first-K samples
-        val withRes = embedded.withColumn("cell", cellOf(col("raw"), centroids))
-          .withColumn("rres", residual(centroids))
-        val wj = Window.orderBy("doc_id", "chunk_ix")
-        val seeds = withRes.select("doc_id", "chunk_ix", "rres")
-          .orderBy("doc_id", "chunk_ix").limit(PqK)
-          .withColumn("j", row_number().over(wj) - 1)
-          .select(col("j"), posexplode(subvecs(col("rres"))))
-          .select(col("j"), col("pos").as("m"), col("col").as("cent"))
-        Some(lloydRefine(subRows(withRes, col("rres")), seeds)
-          .localCheckpoint(true))
-      }
-      val rescb = trainedRes.fold(frozen.get.rescb)(codebookRows)
+      // no Spark job) or trained and collected once: the encode below is
+      // row-local codegen over these literals, and driver values cannot
+      // race the sidecar rewrites at the end of this method. Appends MUST
+      // reuse them — codes from two codebooks or permutations, or cells
+      // from two centroid sets, don't compare.
+      val frozen = if (reuse) readFrozen(spark, indexDir) else train(embedded, cells)
       // SQ8 codes (G44, r12): per-chunk symmetric int8 quantization of
       // the exact raw weights — the serving rung between the raw-vector
       // cell scan and the PQ/residual ADC. The per-chunk scale
@@ -497,7 +410,7 @@ object VectorStore {
       // rung needs NO trained artifact: every row self-scales, appends
       // and edits are consistent by construction. JL-projected codes
       // (G47, r13) likewise.
-      val indexed = storeRows(embedded, Frozen(perm, codebook, centroids, rescb),
+      val indexed = storeRows(embedded, frozen,
         keepsMeta(spark, indexDir, chunks.columns, reuse), batchTagCol)
       indexed.write.mode(mode).partitionBy("bucket", "cell").parquet(indexDir)
       // time-axis zone maps: incremental upkeep reads this batch's files'
@@ -508,16 +421,9 @@ object VectorStore {
       // read — fresh at creation, generation-append on append
       VectorStoreLex.appendFor(indexDir,
         embedded.select("doc_id", "chunk_ix", "chunk"), create = !reuse)
-      trainedCb.foreach(_.coalesce(1).write.mode("overwrite").parquet(cbPath))
-      if (!reuse) {
-        import spark.implicits._
-        perm.zipWithIndex.map { case (src, p) => (p, src) }.toDF("p", "src")
-          .coalesce(1).write.mode("overwrite").parquet(permPath)
-      }
-      trainedCells.foreach(
-        _.coalesce(1).write.mode("overwrite").parquet(cellPath))
-      trainedRes.foreach(
-        _.coalesce(1).write.mode("overwrite").parquet(resCbPath))
+      // the sidecars are written AFTER the index data: an overwrite-mode
+      // index write wipes indexDir, sidecars included
+      if (!reuse) writeFrozen(spark, indexDir, frozen)
       // the format marker commits LAST: a creation cut short leaves a
       // dir the gate refuses, never a store missing an artifact
       if (!reuse) commitJson(fsOf(spark), new org.apache.hadoop.fs.Path(
@@ -552,22 +458,11 @@ object VectorStore {
   private val RpDims = 16
 
   /** md5-derived ±1 sign matrix for the store's JL projection (G47) —
-    * the B27 construction seeded "srp:" over the store's Dim, computed
-    * once driver-side. A LITERAL, never a sidecar: like the scodes
-    * rung, appends and edits are consistent by construction and splice
-    * maintenance never touches it. */
-  private lazy val rpSigns: Array[Array[Long]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Array.tabulate(RpDims, Dim) { (j, d) =>
-      val hex = md.digest(s"srp:$j:$d".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.substring(0, 15)
-      ((java.lang.Long.parseLong(hex, 16) >> 3) & 1L) * 2L - 1L
-    }
-  }
-
-  private def rpProject(raw: Column): Column =
-    array((0 until RpDims).map(j =>
-      call_function("graft_dot_l", typedLit(rpSigns(j).toSeq), raw)): _*)
+    * the B27 construction seeded "srp" over the store's Dim. A LITERAL,
+    * never a sidecar: like the scodes rung, appends and edits are
+    * consistent by construction and splice maintenance never touches
+    * it. */
+  private lazy val rpSigns = Quantizers.signs("srp", RpDims, Dim)
 
   /** JL-projected codes over `raw` (G47): 16 signed sums of the 32 raw
     * weights — the DIM-count compression rung next to scodes' element-
@@ -579,10 +474,10 @@ object VectorStore {
     * verbatim chunk's own row out of a 50-deep shortlist — half-width
     * keeps the self-hit and the recall rung serviceable. */
   private def rpCols(df: DataFrame): DataFrame =
-    df.withColumn("pcodes", rpProject(col("raw")))
+    df.withColumn("pcodes", Quantizers.project(col("raw"), rpSigns))
 
   /** Coarse cell probe (r11, metric-ALIGNED with assignment): rank cells
-    * by the same rule [[cellOf]] assigns with — exact int64
+    * by the same rule [[Quantizers.nearestCell]] assigns with — exact int64
     * numerator ‖S‖² − 2·(q·S)·n over an IEEE n² — so the probe order IS
     * the assignment order, and a stored chunk's own cell is always its
     * own query's top-1 probe (q = the chunk's raw makes its assigned
@@ -604,39 +499,14 @@ object VectorStore {
       ((ss - 2L * dot * nMem).toDouble / (nMem * nMem).toDouble, cell)
     }.sortBy { case (s, cell) => (s, cell) }.take(nprobe).map(_._2).toSeq
 
-  /** Assign a chunk to its nearest frozen cell centroid S/n: argmin
-    * ‖x − S/n‖² restated division-free as (‖S‖² − 2·x·S·n)/n² — exact
-    * int64 numerator and denominator, one IEEE division per cell, ties
-    * to the smaller cell id (the B12 assignment discipline). One
-    * graft_nearest_cell_l loop per row over the literal K-row summary:
-    * no join, window or shuffle, and the plan does not grow with K. */
-  private def cellOf(raw: Column,
-      centroids: Array[(Int, Array[Long], Long)]): Column = {
-    val byId = centroids.sortBy(_._1)
-    element_at(typedLit(byId.map(_._1).toSeq),
-      call_function("graft_nearest_cell_l", raw,
-        typedLit(byId.map(_._2.toSeq).toSeq), typedLit(byId.map(_._3).toSeq))
-        + 1)
-  }
-
-  /** PQ codes of a vector against a (j, m, cent) codebook: `codes(m)` =
-    * the id of the nearest centroid in subspace m (exact int64 sqdist,
-    * ties to the smaller id — deterministic), one graft_nearest_l loop
-    * per subspace over literal centroids. Serves the raw-layout codes
-    * (vector = the permuted raw weights) and the residual codes (vector
-    * = the scaled residual, identity layout: the OPQ permutation serves
-    * the raw-layout ADC path; residuals are already centered, and
-    * keeping the two sidecar families orthogonal keeps append reuse
-    * rules independent). */
-  private def pqCodes(vec: Column,
-      codebook: Seq[(Int, Int, Array[Long])]): Column =
-    array((0 until PqM).map { m =>
-      val cents = codebook.filter(_._2 == m).sortBy(_._1)
-      element_at(typedLit(cents.map(_._1)),
-        call_function("graft_nearest_l",
-          slice(vec, m * PqSubDim + 1, PqSubDim),
-          typedLit(cents.map(_._3.toSeq))) + 1)
-    }: _*)
+  /** PQ codes of a vector against a frozen codebook (the store's
+    * geometry): the raw-layout codes (vector = the permuted raw weights)
+    * and the residual codes (vector = the scaled residual, identity
+    * layout: the OPQ permutation serves the raw-layout ADC path;
+    * residuals are already centered, and keeping the two sidecar families
+    * orthogonal keeps append reuse rules independent). */
+  private def pqCodes(vec: Column, codebook: Quantizers.Codebook): Column =
+    Quantizers.encode(vec, codebook, PqM, PqSubDim)
 
   // ------------------------------------------------------------ read core
   //
@@ -769,10 +639,8 @@ object VectorStore {
       k, one)
 
   /** A frozen (j, m, cent) codebook sidecar as a local relation. */
-  private def codebookFrame(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    readCodebook(spark, path).toDF("j", "m", "cent")
-  }
+  private def codebookFrame(spark: SparkSession, path: String): DataFrame =
+    Quantizers.frame(spark, readCodebook(spark, path))
 
   /** Search: top-k chunks for a free-text query, probing the query's LSH
     * bucket and its Hamming-1 neighbors. Bucket pruning happens at the
@@ -793,7 +661,7 @@ object VectorStore {
     * — an O(files) pruning decision with no data read — so a "recent
     * batches only" query at 100 TB opens exactly the matching batches'
     * files, and the LSH bucket probe prunes further within them. The
-    * residual row filter inside readRange keeps exactness. */
+    * batch_tag row filter keeps exactness. */
   def searchTagRange(spark: SparkSession, indexDir: String, query: String,
       lo: Long, hi: Long, k: Int = 5): DataFrame =
     searchInBatch(spark, tagRange(spark, indexDir, lo, hi), Seq(query), k,
@@ -815,11 +683,16 @@ object VectorStore {
       queries: Seq[String], lo: Long, hi: Long, k: Int = 5): DataFrame =
     searchInBatch(spark, tagRange(spark, indexDir, lo, hi), queries, k)
 
-  /** The index rows of the batches tagged in [lo, hi], zone-map pruned. */
+  /** The index rows of the batches tagged in [lo, hi]: the kept files
+    * come from the zone-map sidecar, and they open like every other index
+    * read ([[readIndex]]) — no listing or inference job, and a range
+    * that keeps no file reads as empty. */
   private def tagRange(spark: SparkSession, indexDir: String, lo: Long,
       hi: Long): DataFrame = {
     requireFormat(spark, indexDir)
-    graft.sources.ZoneMaps.readRange(spark, indexDir, "batch_tag", lo, hi)
+    val (files, _) = graft.sources.ZoneMaps.planFiles(spark, indexDir, lo, hi)
+    readIndex(spark, indexDir, Some(files.map(new Path(_))))
+      .filter(col("batch_tag").between(lo, hi))
   }
 
   /** The exact bucket-probed read over an index frame — which may be
@@ -843,7 +716,8 @@ object VectorStore {
     * C6's gated union-find finish). All similarities are exact int64
     * dots of the stored quantized weights with IEEE division at the end;
     * deterministic ties (score desc, doc_id, chunk_ix), so the result is
-    * reproducible run-to-run. */
+    * reproducible run-to-run. The greedy is [[mmrGreedy]], shared with
+    * [[searchDiverseBatch]]. */
   def searchDiverse(spark: SparkSession, indexDir: String, query: String,
       k: Int = 5, shortlist: Int = 50, lambdaRel: Double = 0.7): DataFrame = {
     import spark.implicits._
@@ -851,10 +725,28 @@ object VectorStore {
     val rows = best(scored(cands, withRaw = true), shortlist, one = true,
         col("score").desc)
       .select("doc_id", "chunk_ix", "chunk", "score", "raw")
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3),
-        r.getSeq[Long](4).toArray))
-      .sortBy { case (d, cx, _, s, _) => (-s, d, cx) }
+      .collect().toSeq.map(mmrCand)
+    mmrGreedy(rows, k, lambdaRel).zipWithIndex
+      .map { case (((d, cx, chunk, rel, _), _), i) => (i + 1, d, cx, chunk, rel) }
+      .toDF("rank", "doc_id", "chunk_ix", "chunk", "score")
+  }
+
+  /** One MMR shortlist candidate: (doc_id, chunk_ix, chunk, relevance,
+    * raw). */
+  private[operators] type MmrCand = (Long, Int, String, Double, Array[Long])
+
+  /** A (doc_id, chunk_ix, chunk, score, raw) row as an [[MmrCand]]. */
+  private def mmrCand(r: Row): MmrCand =
+    (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3),
+      r.getSeq[Long](4).toArray)
+
+  /** The MMR greedy over ONE query's shortlist: up to `k` picks, each
+    * maximizing λ·rel(q,c) − (1−λ)·max cos(c, selected), ties to
+    * (doc_id, chunk_ix); each pick with its objective, in pick order.
+    * Cosines are exact int64 dots and norms with one IEEE division — the
+    * [[cosine]] expression's arithmetic. */
+  private[operators] def mmrGreedy(cands: Seq[MmrCand], k: Int,
+      lambda: Double): Seq[(MmrCand, Double)] = {
     def cos(a: Array[Long], b: Array[Long]): Double = {
       var dot = 0L; var na = 0L; var nb = 0L; var i = 0
       while (i < a.length) {
@@ -863,23 +755,18 @@ object VectorStore {
       if (na == 0L || nb == 0L) 0.0
       else dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
     }
-    val selected = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Int, String, Double, Array[Long])]
-    val remaining = scala.collection.mutable.ArrayBuffer(rows: _*)
+    val selected = scala.collection.mutable.ArrayBuffer.empty[(MmrCand, Double)]
+    val remaining = scala.collection.mutable.ArrayBuffer(cands: _*)
     while (selected.size < k && remaining.nonEmpty) {
-      val pick = remaining.zipWithIndex.map { case (c, ix) =>
+      val (mmr, pick, ix) = remaining.zipWithIndex.map { case (c, ix) =>
         val maxSim =
-          if (selected.isEmpty) 0.0
-          else selected.map(s => cos(c._5, s._5)).max
-        val mmr = lambdaRel * c._4 - (1 - lambdaRel) * maxSim
-        (mmr, c, ix)
+          if (selected.isEmpty) 0.0 else selected.map(s => cos(c._5, s._1._5)).max
+        (lambda * c._4 - (1 - lambda) * maxSim, c, ix)
       }.minBy { case (mmr, c, _) => (-mmr, c._1, c._2) }
-      selected += pick._2
-      remaining.remove(pick._3)
+      selected += ((pick, mmr))
+      remaining.remove(ix)
     }
-    selected.zipWithIndex
-      .map { case ((d, cx, chunk, rel, _), i) => (i + 1, d, cx, chunk, rel) }
-      .toSeq.toDF("rank", "doc_id", "chunk_ix", "chunk", "score")
+    selected.toSeq
   }
 
   /** Compressed serving path: IVF-PQ over the store (B8's machinery
@@ -917,7 +804,8 @@ object VectorStore {
     // relation keyed by query_id
     val perm = readPerm(spark, indexDir)
     val dtab = qf
-      .select(col("query_id"), posexplode(subvecs(permuteRaw(col("qraw"), perm))))
+      .select(col("query_id"),
+        posexplode(subvecs(Quantizers.permute(col("qraw"), perm))))
       .select(col("query_id"), col("pos").as("m"), col("col").as("qsub"))
       .join(broadcast(codebookFrame(spark, s"$indexDir/$PqDir/codebook.parquet")), "m")
       .select(col("query_id").as("dq"), col("m").as("dm"), col("j").as("dj"),
@@ -1085,62 +973,37 @@ object VectorStore {
   }
 
   /** G46 (r13): MMR-diversified BATCH serving read — [[searchDiverse]]'s
-    * semantics (λ·cos(q,c) − (1−λ)·max-cos(c, selected), λ a pure
-    * preference knob since relevance and redundancy share the cosine
-    * scale) with BOTH of that method's driver affinities removed: the
-    * shortlist is the CELL-probed scan (directory-pruned, the
-    * searchCellsBatch machinery, raw vectors kept in the shortlist so no
-    * second index pass), and the greedy runs as k bounded DataFrame
-    * steps — no vector ever reaches the driver, and MANY queries
-    * diversify through ONE plan (the G23/G26 batch discipline).
-    * Deterministic: every argmax breaks ties on (doc_id, chunk_ix).
-    *
-    * Scale shape: the greedy never touches the index — the shortlist
-    * (queries × `shortlist`) and its pair table (× shortlist−1)
-    * checkpoint once; each step is a keyed join + window over those
-    * bounded relations. Rank 1 always equals [[searchCellsBatch]]'s
-    * rank 1 (no penalty yet), so relevance-first callers lose nothing.
-    * Output schema = [[searchCellsBatch]] plus the `mmr` objective. */
+    * greedy ([[mmrGreedy]]: λ·cos(q,c) − (1−λ)·max-cos(c, selected), λ a
+    * pure preference knob since relevance and redundancy share the cosine
+    * scale) over the CELL-probed shortlist (directory-pruned, the
+    * searchCellsBatch machinery, raw vectors kept so no second index
+    * pass). The shortlist ranks in the window keyed by query_id; each
+    * query's ≤ `shortlist` candidates are then collected into one row by
+    * an aggregate on the same key (no second shuffle) and the greedy runs
+    * inside it — no vector reaches the driver, and MANY queries
+    * diversify through ONE plan with no per-step jobs. Deterministic:
+    * every argmax breaks ties on (doc_id, chunk_ix). Rank 1 is
+    * [[searchCellsBatch]]'s rank 1 (no penalty yet), so relevance-first
+    * callers lose nothing. Output schema = [[searchCellsBatch]] plus the
+    * `mmr` objective. */
   def searchDiverseBatch(spark: SparkSession, indexDir: String,
       queries: Seq[String], k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 20, lambda: Double = 0.7): DataFrame = {
     val route = cellRoute(spark, indexDir, queryFrame(spark, queries), nprobe)
-    val cand = best(scored(route.cands, withRaw = true), shortlist,
-        one = false, col("score").desc)
-      .drop("rank")
-      .localCheckpoint(true)
-    val xs = cand.select(col("query_id"), col("doc_id").as("xd"),
-      col("chunk_ix").as("xi"), col("raw").as("xr"))
-    val ys = cand.select(col("query_id"), col("doc_id").as("yd"),
-      col("chunk_ix").as("yi"), col("raw").as("yr"))
-    val sims = xs.join(ys, Seq("query_id"))
-      .filter(col("xd") =!= col("yd") || col("xi") =!= col("yi"))
-      .select(col("query_id"), col("xd"), col("xi"), col("yd"), col("yi"),
-        cosine(col("xr"), col("yr")).as("cos"))
-      .localCheckpoint(true)
-    var sel = best(cand, 1, one = false, col("score").desc)
-      .select(col("query_id"), lit(1L).as("rank"), col("doc_id"),
-        col("chunk_ix"), col("chunk"), col("score"),
-        (lit(lambda) * col("score")).as("mmr"))
-      .localCheckpoint(true)
-    for (step <- 2 to k) {
-      val pen = sims
-        .join(sel.select(col("query_id"), col("doc_id").as("yd"),
-          col("chunk_ix").as("yi")), Seq("query_id", "yd", "yi"))
-        .groupBy("query_id", "xd", "xi").agg(max("cos").as("pen"))
-        .withColumnRenamed("xd", "doc_id").withColumnRenamed("xi", "chunk_ix")
-      val scoredStep = cand
-        .join(sel.select("query_id", "doc_id", "chunk_ix"),
-          Seq("query_id", "doc_id", "chunk_ix"), "left_anti")
-        .join(pen, Seq("query_id", "doc_id", "chunk_ix"))
-        .withColumn("mmr",
-          lit(lambda) * col("score") - lit(1.0 - lambda) * col("pen"))
-      val pick = best(scoredStep, 1, one = false, col("mmr").desc)
-        .select(col("query_id"), lit(step.toLong).as("rank"), col("doc_id"),
-          col("chunk_ix"), col("chunk"), col("score"), col("mmr"))
-      sel = sel.unionByName(pick).localCheckpoint(true)
-    }
-    sel.orderBy("query_id", "rank")
+    val picks = udf((rows: Seq[Row]) =>
+      mmrGreedy(rows.map(mmrCand), k, lambda).zipWithIndex.map {
+        case (((d, cx, chunk, rel, _), mmr), i) => (i + 1L, d, cx, chunk, rel, mmr)
+      })
+    best(scored(route.cands, withRaw = true), shortlist, one = false,
+        col("score").desc)
+      .groupBy("query_id")
+      .agg(collect_list(struct("doc_id", "chunk_ix", "chunk", "score", "raw"))
+        .as("cands"))
+      .select(col("query_id"), explode(picks(col("cands"))).as("p"))
+      .select(col("query_id"), col("p._1").as("rank"), col("p._2").as("doc_id"),
+        col("p._3").as("chunk_ix"), col("p._4").as("chunk"),
+        col("p._5").as("score"), col("p._6").as("mmr"))
+      .orderBy("query_id", "rank")
   }
 
   /** r10: the store-side IVFPQ serving read — the full FAISS composition
@@ -1269,7 +1132,7 @@ object VectorStore {
       queries: Seq[String], k: Int, nprobe: Int, n: Int,
       one: Boolean): DataFrame = {
     val route = cellRoute(spark, indexDir,
-      queryFrame(spark, queries).withColumn("qp", rpProject(col("qraw"))), nprobe)
+      queryFrame(spark, queries).withColumn("qp", Quantizers.project(col("qraw"), rpSigns)), nprobe)
     // the scan reads (cell, ids, pcodes); neither raw nor chunk is
     // touched until the re-rank
     val approx = route.cands.select(col("query_id"), col("doc_id"),

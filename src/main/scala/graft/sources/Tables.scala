@@ -52,4 +52,21 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame     = normalizeTs(table(s, d, "events"))
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** The files of table `name` under `dir` as (path, size, mtime)
+    * triples, listed on the driver with no Spark job: an unchanged
+    * fingerprint means the table was not rewritten. */
+  def fingerprint(spark: SparkSession, dir: String, name: String): String = {
+    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = scala.collection.mutable.ArrayBuffer.empty[String]
+    if (fs.exists(root)) {
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val st = it.next()
+        files += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
+      }
+    }
+    files.sorted.mkString(";")
+  }
 }

@@ -287,6 +287,17 @@ class VectorStoreSpec extends AnyFunSuite {
     // distinct, and the served set is no more redundant than plain top-4
     val div = VectorStore.searchDiverseBatch(spark, indexDir, samples,
       k = 4, shortlist = 20, lambda = 0.5).collect()
+    // ...and picks the same rows, scores and objectives as the k-step
+    // DataFrame greedy it replaced
+    def picks(rs: Array[org.apache.spark.sql.Row]) = rs.map(r =>
+      Seq(r.getAs[Long]("query_id"), r.getAs[Number]("rank").longValue,
+        r.getAs[Long]("doc_id"), r.getAs[Int]("chunk_ix"), r.getAs[String]("chunk"),
+        java.lang.Double.doubleToRawLongBits(r.getAs[Double]("score")),
+        java.lang.Double.doubleToRawLongBits(r.getAs[Double]("mmr")))
+        .mkString("|")).sorted.toSeq
+    assert(picks(div) == picks(MmrStepOracle.searchDiverseBatch(spark, indexDir,
+      samples, k = 4, nprobe = 2, shortlist = 20, lambda = 0.5).collect()),
+      "lambda=0.5 diverse read diverged from the k-step oracle")
     val raws = spark.read.parquet(indexDir)
       .select("doc_id", "chunk_ix", "raw").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getSeq[Long](2).toArray)
@@ -314,6 +325,17 @@ class VectorStoreSpec extends AnyFunSuite {
       assert(meanPairSim(keys) <= meanPairSim(pKeys) + 1e-9,
         s"query $q diverse set MORE redundant than plain")
     }
+  }
+
+  test("searchDiverseBatch runs at most one job more than searchCellsBatch") {
+    val qs = GoldenReads.queries(spark, indexDir)
+    def jobs(read: => org.apache.spark.sql.DataFrame): Int =
+      JobCounter(spark)(read.collect())._2.jobs
+    val cells = jobs(VectorStore.searchCellsBatch(spark, indexDir, qs, 5))
+    val diverse = jobs(VectorStore.searchDiverseBatch(spark, indexDir, qs, 5))
+    info(s"searchCellsBatch $cells jobs, searchDiverseBatch $diverse jobs")
+    assert(diverse <= cells + 1,
+      s"searchDiverseBatch ran $diverse jobs against searchCellsBatch's $cells")
   }
 
   test("compressed ADC scan reads codes, not raw vectors or chunk text") {
@@ -672,6 +694,10 @@ class VectorStoreSpec extends AnyFunSuite {
     assert(VectorStore.delete(spark, dir, Seq(0L, 1L)) > 0)
     assert(VectorStore.search(spark, dir, "any query", k = 3).collect().isEmpty,
       "a drained store served rows")
+    assert(VectorStore.searchTagRange(spark, dir, "any query", 0L, 0L, k = 3)
+      .collect().isEmpty, "a drained store served tag-range rows")
+    assert(VectorStore.searchTagRangeBatch(spark, dir, Seq("any query", "more"),
+      0L, 0L, k = 3).collect().isEmpty, "a drained store served tag-range batch rows")
     def tree() = {
       val w = Files.walk(java.nio.file.Paths.get(dir))
       try w.toArray.map(_.toString).toSet finally w.close()
