@@ -9,15 +9,8 @@ object Bench {
     // code), so each query is timed REPS times and the minimum reported —
     // the stable statistic for regression detection.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(
+      GraftSession.builder("graft-bench", s"local[$cpus]", cpus))
     // SPARK_GRAFT_CONF="k=v,k=v" — session confs for mitigation-knob
     // rehearsals (e.g. graft.dedup.maxBucketFan for the skew bench).
     // Values may not contain ',' (the token separator); a token without

@@ -2,30 +2,54 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Tuned SparkSession factory.
+/** Tuned SparkSession factory, and the one session setup every graft entry
+  * point shares.
   *
-  * Defaults target the local[32] test rig but every knob is the one you'd
-  * set on a real cluster: AQE on (runtime coalescing + skew-join splitting),
-  * modest shuffle partition count for local mode, UTC session time.
+  * [[builder]] carries what every session needs whatever its master:
+  * graft's extensions, UTC session time, `nanosAsLong` (events.ts ships as
+  * TIMESTAMP(NANOS), see `Tables.events`), no UI, and the fork-free local
+  * filesystem ([[graft.sources.GraftLocalFileSystem]]). The mains, the
+  * test session and the benchmark add their own master, shuffle partitions
+  * and confs on top. [[build]] is the production session: AQE on (runtime
+  * coalescing + skew-join splitting), a modest shuffle partition count for
+  * local mode, every knob the one you'd set on a real cluster.
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  def build(appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
+  /** The confs every graft session carries. `fs.file.impl` binds when the
+    * JVM first opens a `file://` FileSystem (Hadoop caches it per scheme),
+    * so a session must be built before anything else touches local files
+    * through Hadoop. */
+  private val shared: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false",
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.sources.GraftLocalFileSystem].getName)
+
+  /** A builder with graft's extensions and [[shared]] confs at `master`
+    * with `partitions` shuffle partitions. */
+  def builder(appName: String, master: String,
+      partitions: String): SparkSession.Builder =
+    SparkSession.builder()
       .appName(appName)
       .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", partitions)
+      .config(shared)
+
+  /** `b`'s session, logging at WARN. */
+  def start(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  def build(appName: String = "graft"): SparkSession =
+    start(builder(appName, s"local[$cpus]", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024))
 }

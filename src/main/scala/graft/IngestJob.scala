@@ -3,7 +3,7 @@ package graft
 import graft.functions.Text
 import graft.operators.VectorStore
 import graft.sources.{KnowledgeFiles, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The end-to-end batch job a reference user runs: the engine-side
@@ -101,41 +101,9 @@ object IngestJob {
     // (KnowledgeBot.py:466-474), so a message is exported and ingested
     // once. (The look-back widens only the EDIT-flag sweep below; using
     // it here would re-append every recent message on every run.)
-    val inWindow = unix_timestamp(col("ts")) > lit(lastRun)
+    val inWindow = newerThan(lastRun)
 
-    // #EDIT resolution (the A14 rule, kb_edit_resolve): a tag counts only
-    // (volume bound: the resolved parent set is human-generated edit
-    // requests per window — the reference handles them one reply at a
-    // time — so the collected Seq and the isInCollection literals stay
-    // small; a pathological machine-generated flood should be chunked
-    // into multiple runs, not widened here)
-    // in a genuine thread REPLY (root id = event_id rounded to 10, tag
-    // when event_id % 7 == 0), each resolving to its parent message —
-    // which must itself exist in the stream. The sweep spans the full
-    // look-back window, not just the new batch: the reference re-runs
-    // _handle_edit_flags over every fetched message each run
-    // (KnowledgeBot.py:446-458) — re-handling is idempotent because the
-    // edit lifecycle is delete-then-reingest of the parent's CURRENT
-    // text. The resolved set is bounded by the window's reply count (the
-    // reference's per-channel edit list), so collecting it is the
-    // bounded-sidecar discipline; the parent re-read below is an
-    // isInCollection filter the scan pushes down, never a full-stream
-    // join.
-    val parentIds = events
-      .filter(unix_timestamp(col("ts")) > lit(lastRun - lookbackS))
-      .filter(pmod(col("event_id"), lit(7)) === 0 &&
-        pmod(col("event_id"), lit(10)) =!= 0)
-      .select((col("event_id") - pmod(col("event_id"), lit(10)))
-        .as("parent_id"))
-      .distinct()
-      .join(events.select(col("event_id").as("parent_id")),
-        Seq("parent_id"), "left_semi")
-      .collect().map(_.getLong(0)).toSeq.sorted
-
-    // the window's ids are one run's new messages, the same set the
-    // reference holds in memory
-    val ids = (events.filter(inWindow).select("event_id")
-      .collect().map(_.getLong(0)).toSeq ++ parentIds).distinct.sorted
+    val (ids, parentIds) = resolveIds(events, lastRun, lookbackS)
 
     val (nFiles, nChunks) =
       if (ids.isEmpty) (0L, 0L)
@@ -154,5 +122,48 @@ object IngestJob {
 
     GraftConfig.saveLastRun(stateFile, startedAt)
     (nFiles, nChunks, lastRun)
+  }
+
+  private def newerThan(t: Long): Column = unix_timestamp(col("ts")) > lit(t)
+
+  /** The batch's ids, sorted — the messages STRICTLY newer than
+    * `lastRun` plus the resolved #EDIT parents — and those parents alone,
+    * sorted; two driver collects at most. */
+  private[graft] def resolveIds(events: DataFrame, lastRun: Long,
+      lookbackS: Long): (Seq[Long], Seq[Long]) = {
+    val inWindow = newerThan(lastRun)
+    // #EDIT resolution (the A14 rule, kb_edit_resolve): a tag counts only
+    // in a genuine thread REPLY (root id = event_id rounded to 10, tag
+    // when event_id % 7 == 0), each resolving to its parent message —
+    // which must itself exist in the stream. The sweep spans the full
+    // look-back window, not just the new batch: the reference re-runs
+    // _handle_edit_flags over every fetched message each run
+    // (KnowledgeBot.py:446-458) — re-handling is idempotent because the
+    // edit lifecycle is delete-then-reingest of the parent's CURRENT
+    // text.
+    val editSweep = newerThan(lastRun - lookbackS) &&
+      pmod(col("event_id"), lit(7)) === 0 && pmod(col("event_id"), lit(10)) =!= 0
+
+    // one collect of the window's new messages (the same set the
+    // reference holds in memory) and the look-back's edit replies; then,
+    // when there are candidate parents, one pushed-down isInCollection
+    // read that keeps those that exist. (Volume bound: the replies are
+    // human-generated edit requests per window — the reference handles
+    // them one at a time — so the collected rows and the isInCollection
+    // literals stay small; a pathological machine-generated flood should
+    // be chunked into multiple runs, not widened here.)
+    val recent = events.filter(inWindow || editSweep)
+      .select(col("event_id"), inWindow.as("is_new"),
+        editSweep.as("is_edit_reply"))
+      .collect()
+    val candidates = recent.filter(_.getBoolean(2))
+      .map(r => r.getLong(0) - Math.floorMod(r.getLong(0), 10L)).distinct
+    val parentIds =
+      if (candidates.isEmpty) Seq.empty[Long]
+      else events.filter(col("event_id").isInCollection(candidates))
+        .select("event_id").collect().map(_.getLong(0)).toSeq.distinct.sorted
+    val ids = (recent.filter(_.getBoolean(1)).map(_.getLong(0)).toSeq ++
+      parentIds).distinct.sorted
+    (ids, parentIds)
   }
 }

@@ -56,14 +56,8 @@ object SkewCorpus {
       "usage: SkewCorpus <srcSfDir> <dstDir> [aniso|labelskew]")
     val src = args(0)
     val dst = args(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.builder("graft-skew-corpus",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]", "32"))
     // single-axis twin modes (r10): anisotropic per-dim energy, hot cell
     args.lift(2) match {
       case Some("aniso") =>

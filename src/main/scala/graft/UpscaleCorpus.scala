@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** sf1-twin generator (r15, the r12 verdict's item #7): a deterministic
@@ -51,14 +51,8 @@ object UpscaleCorpus {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: UpscaleCorpus <srcSfDir> <dstDir>")
     val (src, dst) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.builder("graft-upscale-corpus",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]", "32"))
     def load(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def save(df: DataFrame, t: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite").parquet(s"$dst/$t.parquet")

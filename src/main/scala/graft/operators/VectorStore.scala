@@ -359,12 +359,14 @@ object VectorStore {
   }
 
   /** A new store's frozen artifacts as its sidecars: PQ codebook, OPQ
-    * permutation, cell summary, residual codebook — one file each. */
+    * permutation, cell summary, residual codebook — one file each, each
+    * a driver-local frame written on the driver ([[ParquetFooters.write]],
+    * no Spark job). */
   private def writeFrozen(spark: SparkSession, indexDir: String,
       f: Frozen): Unit = {
     import spark.implicits._
-    def put(df: DataFrame, path: String): Unit =
-      df.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/$path")
+    def put(df: DataFrame, path: String): Unit = ParquetFooters.write(spark,
+      s"$indexDir/$path", df.schema, df.collect().toSeq, overwrite = true)
     put(Quantizers.frame(spark, f.codebook), s"$PqDir/codebook.parquet")
     put(f.perm.zipWithIndex.map { case (src, p) => (p, src) }.toDF("p", "src"),
       s"$PqDir/$PermFile")

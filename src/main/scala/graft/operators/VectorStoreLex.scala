@@ -140,10 +140,12 @@ object VectorStoreLex {
     if (log.isEmpty) return
     val gen = nextGen(spark, indexDir)
     import spark.implicits._
-    log.map { case (id, live, n, t) => (id, gen, live, n, t) }
+    // driver rows: one file written on the driver, the schema a Spark
+    // write of the same local frame records
+    val rows = log.map { case (id, live, n, t) => (id, gen, live, n, t) }
       .toDF("doc_id", "gen", "live", "n_chunks", "n_tokens")
-      .coalesce(1)
-      .write.mode("append").parquet(doclogPath(indexDir))
+    graft.sources.ParquetFooters.write(spark, doclogPath(indexDir),
+      rows.schema, rows.collect().toSeq, overwrite = false)
     chunks.foreach(c => postings(c, gen).write.mode("append")
       .partitionBy("tbkt").parquet(postingsPath(indexDir)))
   }

@@ -1,31 +1,42 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetToSparkSchemaConverter, ParquetUtils}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
 /** Driver-side parquet access through parquet-hadoop: data-file listing,
-  * footers, and whole reads of small sidecars (the store's frozen K-row
-  * codebooks and cell summaries, the O(files) zone map). Nothing here
-  * starts a Spark job or infers a schema, where a `spark.read … collect()`
-  * of a sidecar costs an inference job plus a collect job each — the
-  * fixed cost that dominated a small store append. */
+  * footers, the schema Spark's inference would give a table, whole reads
+  * of small sidecars (the store's frozen K-row codebooks and cell
+  * summaries, the O(files) zone map) and whole writes of rows already on
+  * the driver (those sidecars, a lexical generation's doclog rows).
+  * Nothing here starts a Spark job or infers a schema, where a
+  * `spark.read … collect()` of a sidecar costs an inference job plus a
+  * collect job each, and a `createDataFrame(rows).write` a write job —
+  * the fixed cost that dominated a small store append. */
 object ParquetFooters {
 
   // the session's own Hadoop conf throughout: the parquet-hadoop
   // defaults build a fresh Configuration per file, which re-parses the
   // default XML resources every time
   private def conf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
+
+  private def sqlConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
 
   /** Spark's file-index rule: `_`- and `.`-prefixed names are not data
     * (a `_` name holding `=` is a partition directory). */
@@ -60,6 +71,19 @@ object ParquetFooters {
     files(spark, dir).nextOption().map(f =>
       footer(spark, f).getFileMetaData.getSchema.getFields.asScala
         .map(_.getName).toSet)
+
+  /** The data schema `spark.read.parquet(path)` infers (summary files
+    * aside): Spark's rule reads the footer of the first data file in path
+    * order, through `ParquetFileFormat.readSchemaFromFooter` with a
+    * converter built from the session's SQL conf — so the Spark row
+    * metadata, `inferTimestampNTZ` and `nanosAsLong` apply exactly as
+    * they do there. A reader that declares it runs no inference job.
+    * None when `path` holds no data file. */
+  def inferredSchema(spark: SparkSession, path: String): Option[StructType] =
+    files(spark, path).minByOption(_.toString).map { f =>
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f, footer(spark, f)),
+        new ParquetToSparkSchemaConverter(sqlConf(spark)))
+    }
 
   /** The (min, max) of an integral `column` in `file`, from the footer
     * statistics of its non-empty row groups. None when the file holds no
@@ -117,6 +141,38 @@ object ParquetFooters {
       try Iterator.continually(r.read()).takeWhile(_ != null).toVector
       finally r.close()
     }.toVector
+  }
+
+  /** Write `rows` (of `schema`) as one parquet file under `dir`, on the
+    * driver — the write twin of [[rows]]. Spark's own parquet writer
+    * (`ParquetUtils.prepareWrite` over the session's SQL conf, then the
+    * factory's `OutputWriter`) writes it, so the file carries the encoding,
+    * codec, statistics and Spark row metadata a Spark write gives the
+    * same schema. It lands under a hidden `.`-prefixed name, which every
+    * reader ignores; then `overwrite` deletes everything else in `dir`
+    * (the old data files, a cut write's leftovers), and the file is
+    * renamed in. A cut write is never visible, and no reader sees two
+    * generations of an overwritten dataset. Returns the file. */
+  def write(spark: SparkSession, dir: String, schema: StructType,
+      rows: Seq[Row], overwrite: Boolean): Path = {
+    val job = Job.getInstance(conf(spark))
+    val factory = ParquetUtils.prepareWrite(sqlConf(spark), job, schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf(spark)))
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID)
+    val root = new Path(dir)
+    val fs = root.getFileSystem(job.getConfiguration)
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000" +
+      factory.getFileExtension(ctx)
+    val tmp = new Path(root, s".$name")
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    val out = factory.newInstance(tmp.toString, schema, ctx)
+    try rows.foreach(r => out.write(toInternal(r).asInstanceOf[InternalRow]))
+    finally out.close()
+    if (overwrite) fs.listStatus(root).map(_.getPath)
+      .filter(_.getName != tmp.getName).foreach(fs.delete(_, true))
+    val fin = new Path(root, name)
+    require(fs.rename(tmp, fin), s"could not rename $tmp to $fin")
+    fin
   }
 
   /** An array<bigint> column of a row: the LIST group's one repeated

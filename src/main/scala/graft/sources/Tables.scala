@@ -9,10 +9,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicates into the parquet reader (check `PushedFilters`/`ReadSchema`
   * in the formatted plan). At 100 TB these would be partitioned/bucketed
   * catalog tables; the call sites would not change.
+  *
+  * Each load declares the schema Spark's own inference would derive,
+  * read on the driver from the table's first data file
+  * ([[ParquetFooters.inferredSchema]]), so building a loader runs no
+  * schema-inference job; a table with no data file keeps the plain read.
+  * Nothing is memoized: every call reads the current footer.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    ParquetFooters.inferredSchema(spark, path)
+      .fold(spark.read)(s => spark.read.schema(s)).parquet(path)
+  }
 
   /** events.ts has shipped in three parquet encodings across testdata
     * generations: TIMESTAMP(NANOS) (read as long under

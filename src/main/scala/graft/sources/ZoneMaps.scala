@@ -82,12 +82,13 @@ object ZoneMaps {
     * rewritten. A table never mapped before degenerates to the full
     * build (every file is new).
     *
-    * Driver-side except for the one sidecar write: the tree is listed
-    * with the Hadoop FileSystem API, the old sidecar read with
-    * parquet-hadoop, and for a BIGINT/INT column each new file's
-    * n_rows/min/max come from its parquet footer (row-group counts and
-    * statistics) — no Spark job. Other column types, partition columns
-    * and files written without statistics keep the scan. */
+    * Driver-side, the sidecar write included, for a BIGINT/INT column:
+    * the tree is listed with the Hadoop FileSystem API, the old sidecar
+    * read with parquet-hadoop, each new file's n_rows/min/max come from
+    * its parquet footer (row-group counts and statistics), and the merged
+    * rows are written by [[ParquetFooters.write]] — no Spark job. Other
+    * column types, partition columns and files written without
+    * statistics keep the scan and a Spark write. */
   def appendSidecar(spark: SparkSession, path: String, byCol: String): (Int, Int) = {
     // the sidecar holds the `input_file_name()` spelling (file:///…) —
     // compare on URI paths so any spelling of one file matches
@@ -113,21 +114,20 @@ object ZoneMaps {
     val footed = newFiles.map(f => footerZone(spark, f, current(f), byCol))
     val types = (footed.flatten.map(_._1) ++ old.map(_._1("zmin").dataType))
       .distinct
-    val merged =
-      if (footed.forall(_.isDefined) && types.size <= 1) {
-        val schema = old.map(_._1).getOrElse(zoneSchema(types.head))
-        spark.createDataFrame(
-          (footed.flatMap(_.get._2) ++ kept).asJava, schema)
-      } else {
-        val scanned = spark.read.option("basePath", path).parquet(newFiles: _*)
-          .select(input_file_name().as("file"), col(byCol))
-          .groupBy("file")
-          .agg(min(byCol).as("zmin"), max(byCol).as("zmax"),
-            count(lit(1)).as("n_rows"))
-        old.fold(scanned)(o =>
-          scanned.unionByName(spark.createDataFrame(kept.asJava, o._1)))
-      }
-    merged.coalesce(1).write.mode("overwrite").parquet(zdir)
+    if (footed.forall(_.isDefined) && types.size <= 1) {
+      val schema = old.map(_._1).getOrElse(zoneSchema(types.head))
+      ParquetFooters.write(spark, zdir, schema, footed.flatMap(_.get._2) ++ kept,
+        overwrite = true)
+    } else {
+      val scanned = spark.read.option("basePath", path).parquet(newFiles: _*)
+        .select(input_file_name().as("file"), col(byCol))
+        .groupBy("file")
+        .agg(min(byCol).as("zmin"), max(byCol).as("zmax"),
+          count(lit(1)).as("n_rows"))
+      old.fold(scanned)(o =>
+        scanned.unionByName(spark.createDataFrame(kept.asJava, o._1)))
+        .coalesce(1).write.mode("overwrite").parquet(zdir)
+    }
     (newFiles.size, dropped)
   }
 

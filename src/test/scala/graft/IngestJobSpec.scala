@@ -185,4 +185,60 @@ class IngestJobSpec extends AnyFunSuite {
     assert(twice.isEmpty, s"replay stored chunks twice: ${twice.toSeq}")
     assert(idx.count() == chunks1, "replay changed the chunk count")
   }
+
+  /** The id resolution as it was: the look-back's edit replies mapped to
+    * parents, a distinct, a semi-join against the stream, then the new
+    * window's ids — the oracle [[IngestJob.resolveIds]] must match. */
+  private def oracleIds(events: org.apache.spark.sql.DataFrame, lastRun: Long,
+      lookbackS: Long): (Seq[Long], Seq[Long]) = {
+    val parents = events
+      .filter(unix_timestamp(col("ts")) > lit(lastRun - lookbackS))
+      .filter(pmod(col("event_id"), lit(7)) === 0 &&
+        pmod(col("event_id"), lit(10)) =!= 0)
+      .select((col("event_id") - pmod(col("event_id"), lit(10))).as("parent_id"))
+      .distinct()
+      .join(events.select(col("event_id").as("parent_id")), Seq("parent_id"),
+        "left_semi")
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val ids = (events.filter(unix_timestamp(col("ts")) > lit(lastRun))
+      .select("event_id").collect().map(_.getLong(0)).toSeq ++ parents)
+      .distinct.sorted
+    (ids, parents)
+  }
+
+  test("resolveIds matches the distinct + semi-join resolution") {
+    val day = 86400L
+    val now = 1700000000L
+    def at(s: Long) = new java.sql.Timestamp(s * 1000)
+    val lookback = 7 * day
+    val lastRun = now - day
+    val events = Seq(
+      (30L, at(now - 30 * day)),  // a parent outside the look-back
+      (35L, at(now)),             // new reply → 30
+      (49L, at(now - 2 * day)),   // old reply in the look-back → 40, absent
+      (60L, at(now)),             // a new parent ...
+      (63L, at(now)),             // ... and its new reply
+      (70L, at(now - 3 * day)),   // a parent in the look-back, not new
+      (77L, at(now - 3 * day)),   // old reply in the look-back → 70
+      (84L, at(now - 40 * day)),  // reply outside the look-back → 80
+      (80L, at(now - 50 * day)),
+      (91L, at(now)), (95L, at(now)))   // new, 91 → 90 absent
+      .toDF("event_id", "ts")
+    val dir = Files.createTempDirectory("graft_ij_ids").toString + "/events"
+    events.coalesce(1).write.parquet(dir)
+    val scanned = spark.read.parquet(dir)
+    val ((ids, parents), trace1) = JobCounter(spark)(
+      IngestJob.resolveIds(scanned, lastRun, lookback))
+    assert((ids, parents) == oracleIds(scanned, lastRun, lookback))
+    assert(trace1.jobs == 2, s"${trace1.jobs} jobs with edit replies")
+    assert(parents == Seq(30L, 60L, 70L), parents)
+    assert(ids == Seq(30L, 35L, 60L, 63L, 70L, 91L, 95L), ids)
+    // no edit reply at all: the new window alone, one collect
+    val plain = scanned.filter(!col("event_id").isin(35L, 49L, 63L, 77L, 84L, 91L))
+    val ((ids2, parents2), trace) = JobCounter(spark)(
+      IngestJob.resolveIds(plain, lastRun, lookback))
+    assert((ids2, parents2) == oracleIds(plain, lastRun, lookback))
+    assert(parents2.isEmpty && ids2 == Seq(60L, 95L))
+    assert(trace.jobs == 1, s"${trace.jobs} jobs without an edit reply")
+  }
 }

@@ -72,4 +72,33 @@ class PerfPinSpec extends AnyFunSuite {
     assert(buildJobs > 4,
       s"distributed pipeline only showed $buildJobs jobs — counter is blind")
   }
+
+  test("an incremental IngestJob batch with an #EDIT reply runs at most 12 jobs") {
+    val data = java.nio.file.Files.createTempDirectory("graft_pp_data").toString
+    graft.sources.Tables.customer(s, TestSpark.sf).limit(10).coalesce(1)
+      .write.parquet(s"$data/customer.parquet")
+    Seq(12L, 30L, 35L).map(d => (d, (0 until 30).map(i => s"w$d-$i").mkString(" "),
+        "en", "s1")).toDF("doc_id", "text", "lang", "source")
+      .withColumn("n_chars", org.apache.spark.sql.functions.length($"text"))
+      .coalesce(1).write.parquet(s"$data/documents.parquet")
+    def events(rows: (Long, java.sql.Timestamp, Long)*): Unit = {
+      rows.toDF("event_id", "ts", "user_id").coalesce(1).write.mode("overwrite")
+        .parquet(s"$data/events.parquet")
+      s.catalog.refreshByPath(s"$data/events.parquet")
+    }
+    val old = Seq((30L, java.sql.Timestamp.valueOf("2024-01-15 10:30:00"), 3L),
+      (12L, java.sql.Timestamp.valueOf("2024-01-15 10:31:00"), 4L))
+    events(old: _*)
+    val out = java.nio.file.Files.createTempDirectory("graft_pp_out").toString
+    assert(IngestJob.run(s, data, out)._1 == 2)
+    // the next batch: a new message (text of document 512 % 500 = 12) and
+    // an #EDIT reply (35 % 7 == 0, 35 % 10 != 0) to parent 30
+    val now = System.currentTimeMillis()
+    events(old ++ Seq((35L, new java.sql.Timestamp(now), 5L),
+      (512L, new java.sql.Timestamp(now + 1000), 6L)): _*)
+    val ((files, chunks, _), jobs) = countJobs(IngestJob.run(s, data, out))
+    assert(files == 3 && chunks > 0, s"$files files, $chunks chunks")
+    info(s"$jobs jobs")
+    assert(jobs <= 12, s"an incremental batch with an #EDIT ran $jobs jobs (budget 12)")
+  }
 }

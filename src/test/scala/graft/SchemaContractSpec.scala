@@ -51,4 +51,46 @@ class SchemaContractSpec extends AnyFunSuite {
     val c = fields(Tables.customer(spark, sf))
     assert(c("c_custkey") == LongType && c("c_nationkey") == IntegerType)
   }
+
+  /** A one-row `events.parquet` under a fresh dir whose ts column has the
+    * parquet type `tsType` and no Spark row metadata — as the corpus
+    * generator (pyarrow) writes it. */
+  private def eventsWith(tsType: String): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val dir = java.nio.file.Files.createTempDirectory("graft_ts").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      s"message m { required int64 event_id; optional int64 ts ($tsType); }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$dir/events.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 7L).append("ts", 1700000000000000L))
+    finally w.close()
+    dir
+  }
+
+  test("each events.ts encoding reads to exactly the schema inference gives") {
+    Seq("TIMESTAMP(NANOS,true)", "TIMESTAMP(MICROS,false)",
+        "TIMESTAMP(MICROS,true)").foreach { t =>
+      val dir = eventsWith(t)
+      val inferred = spark.read.parquet(s"$dir/events.parquet").schema
+      assert(Tables.table(spark, dir, "events").schema == inferred,
+        s"$t: footer schema != inferred $inferred")
+      assert(fields(Tables.events(spark, dir))("ts") == TimestampType, t)
+    }
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings").foreach { n =>
+      assert(Tables.table(spark, sf, n).schema ==
+        spark.read.parquet(s"$sf/$n.parquet").schema, n)
+    }
+  }
+
+  test("building Tables.events runs no Spark job") {
+    val (df, trace) = JobCounter(spark)(Tables.events(spark, sf))
+    assert(fields(df)("ts") == TimestampType)
+    assert(trace.jobs == 0, s"Tables.events ran ${trace.jobs} jobs")
+  }
 }

@@ -4,17 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (tests fork a single JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .appName("graft-test").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.start(GraftSession.builder("graft-test", "local[4]", "4"))
   val sf: String = "/root/testdata/sf0.001"
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ZoneMaps.appendSidecar serves BIGINT/INT zones from parquet footers
-  * (row counts + row-group statistics, no Spark job but the one sidecar
-  * write) and keeps the scan for other types. Either way the maintained
+  * (row counts + row-group statistics, the sidecar written on the
+  * driver: no Spark job) and keeps the scan for other types. Either way the maintained
   * sidecar must equal a full [[ZoneMaps.writeSidecar]] rebuild — the
   * `input_file_name()` spelling of each file (file:///…), the null zone
   * of an all-null file, and the scanned zones of a non-integer column. */
@@ -49,9 +49,9 @@ class ZoneMapFooterSpec extends AnyFunSuite {
     trace.jobs
   }
 
-  test("BIGINT and INT zones come from footers: one job, equal to a rebuild") {
-    assert(maintained("long", "l") == 1)
-    assert(maintained("int", "i") == 1)
+  test("BIGINT and INT zones come from footers: no job, equal to a rebuild") {
+    assert(maintained("long", "l") == 0)
+    assert(maintained("int", "i") == 0)
   }
 
   test("a non-integer column keeps the scan and still equals a rebuild") {
