@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.Text
 import graft.operators.VectorStore
-import graft.sources.{KnowledgeFiles, Tables}
+import graft.sources.{KnowledgeFiles, LocalFrames, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -21,16 +21,22 @@ import org.apache.spark.sql.functions._
   *     (the reference's `process_channel` → `_handle_edit_flags` loop,
   *     KnowledgeBot.py:425-536 → 571-611),
   *  4. extract `#KNOWLEDGE … #END` blocks, enrich with author/mention
-  *     metadata and deterministic keywords/summary,
+  *     metadata and deterministic keywords/summary — collected to the
+  *     driver once, in one Spark job plus its broadcasts (volume bound:
+  *     the batch's ids are already collected by [[resolveIds]], and each
+  *     message yields a few blocks), into a local relation that steps 5
+  *     and 6 read,
   *  5. render header+body export files with the reference filename scheme
   *     (an edited parent re-renders to the SAME fname — the rewrite
-  *     replaces the original export, as the reference's re-export does),
+  *     replaces the original export, as the reference's re-export does):
+  *     the same Spark expressions, folded on the driver over the local
+  *     relation (no job), and the files written from the driver,
   *  6. chunk + embed + LSH-bucket the batch into a parquet vector index
   *     through one [[VectorStore.edit]] of the batch's ids — one rewrite
   *     of the partitions the batch touches, so an edited parent swaps its
   *     chunks and a run replayed after a crash before step 7 replaces its
-  *     chunks instead of storing them twice (the batch's blocks are
-  *     materialized once; steps 5 and 6 read that copy),
+  *     chunks instead of storing them twice; the edit keeps the batch on
+  *     the driver from its staged copy to its merge,
   *  7. persist the new state timestamp.
   *
   * Usage: runMain graft.IngestJob <dataDir> <outDir>
@@ -108,10 +114,9 @@ object IngestJob {
     val (nFiles, nChunks) =
       if (ids.isEmpty) (0L, 0L)
       else {
-        val blocks = blocksOf(events
+        val blocks = LocalFrames.of(blocksOf(events
           .filter(inWindow || col("event_id").isInCollection(parentIds))
-          .select(col("event_id"), col("ts"), col("user_id")))
-          .localCheckpoint(true)
+          .select(col("event_id"), col("ts"), col("user_id"))))
         val files = KnowledgeFiles.write(renderExport(blocks),
           s"$outDir/knowledge")
         val (_, added) = VectorStore.edit(spark, indexDir, ids,

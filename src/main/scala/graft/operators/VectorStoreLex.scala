@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, StructField, StructType}
 import graft.functions.Text
 
 /** G49: store-plane HYBRID retrieval — the maintained index's BM25
@@ -98,56 +99,76 @@ object VectorStoreLex {
     val spark = chunks.sparkSession
     val gen = if (create) 1L else nextGen(spark, indexDir)
     val mode = if (create) "overwrite" else "append"
-    chunks
-      .select(col("doc_id"), size(Text.tokens(col("chunk"))).cast("long").as("dl"))
-      .groupBy("doc_id")
+    val perChunk = chunkPostings(chunks, gen)
+    perChunk.groupBy("doc_id")
       .agg(count(lit(1)).as("n_chunks"), sum("dl").as("n_tokens"))
       .select(col("doc_id"), lit(gen).as("gen"), lit(true).as("live"),
         col("n_chunks"), col("n_tokens"))
       .coalesce(1)
       .write.mode(mode).parquet(doclogPath(indexDir))
-    // positions (r16): 0-based token offsets within the chunk, sorted —
-    // the phrase/proximity plane ([[searchPhrase]])
-    postings(chunks, gen).write.mode(mode).partitionBy("tbkt")
-      .parquet(postingsPath(indexDir))
+    perChunk.select(explode(col("p")).as("p")).select("p.*")
+      .write.mode(mode).partitionBy("tbkt").parquet(postingsPath(indexDir))
   }
 
-  /** (doc_id, chunk_ix, term, tf, dl, positions, gen, tbkt) postings of
-    * `chunks` at generation `gen`, computed row-locally: all of a chunk's
-    * terms sit in its own row, so each distinct term's tf and sorted
-    * positions come from its token array — no groupBy shuffle. */
-  private def postings(chunks: DataFrame, gen: Long): DataFrame = {
+  /** Each chunk of `chunks` (doc_id, chunk_ix, chunk) as (doc_id, dl, p):
+    * its token count and its postings at generation `gen` — one
+    * (doc_id, chunk_ix, term, tf, dl, positions, gen, tbkt) struct per
+    * distinct term, `tbkt` last. Row-local: all of a chunk's terms sit in
+    * its own row, so each term's tf and sorted 0-based positions (r16,
+    * the phrase/proximity plane of [[searchPhrase]]) come from its token
+    * array — no groupBy shuffle. The one postings expression: a Spark
+    * write explodes `p` ([[appendFor]]); an edit's generation folds it on
+    * the driver ([[logGeneration]]). */
+  private def chunkPostings(chunks: DataFrame, gen: Long): DataFrame = {
     val toks = col("toks")
+    val dl = size(toks).cast("long")
     chunks
       .select(col("doc_id"), col("chunk_ix"), Text.tokens(col("chunk")).as("toks"))
-      .select(col("doc_id"), col("chunk_ix"), size(toks).cast("long").as("dl"),
-        explode(transform(array_distinct(toks), t => struct(t.as("term"),
+      .select(col("doc_id"), dl.as("dl"),
+        transform(transform(array_distinct(toks), t => struct(t.as("term"),
           filter(sequence(lit(0), size(toks) - 1),
-            i => element_at(toks, i + 1) === t).as("positions")))).as("p"))
-      .select(col("doc_id"), col("chunk_ix"), col("p.term").as("term"),
-        size(col("p.positions")).cast("long").as("tf"), col("dl"),
-        col("p.positions").as("positions"), lit(gen).as("gen"),
-        substring(md5(col("p.term")), 1, 1).as("tbkt"))
+            i => element_at(toks, i + 1) === t).as("positions"))),
+          p => struct(col("doc_id"), col("chunk_ix"), p("term").as("term"),
+            size(p("positions")).cast("long").as("tf"), dl.as("dl"),
+            p("positions").as("positions"), lit(gen).as("gen"),
+            substring(md5(p("term")), 1, 1).as("tbkt"))).as("p"))
   }
 
   /** A delete's or an edit's lexical write: ONE generation at the next
-    * gen — the doclog rows `log` (doc_id, live, n_chunks, n_tokens) in
-    * one write, then the postings of `chunks` (doc_id, chunk_ix, chunk),
-    * if any ([[nextGen]] needs that order). A kill row leaves the doc's
-    * postings on disk; the keep-latest read stops serving them. */
+    * gen, from the driver. `chunks` is the edit's driver-local frame of
+    * new rows (doc_id, chunk_ix, chunk, …), if any; its postings fold on
+    * the driver. The doclog rows — a live row per doc of `chunks`, a kill
+    * row per other id of `ids` — land in one file first, then the
+    * postings, one file per `tbkt` ([[nextGen]] needs that order). No
+    * Spark job. A kill row leaves the doc's postings on disk; the
+    * keep-latest read stops serving them. */
   private[operators] def logGeneration(spark: SparkSession, indexDir: String,
-      chunks: Option[DataFrame], log: Seq[(Long, Boolean, Long, Long)]): Unit = {
-    if (log.isEmpty) return
+      chunks: Option[DataFrame], ids: Seq[Long]): Unit = {
     val gen = nextGen(spark, indexDir)
-    import spark.implicits._
-    // driver rows: one file written on the driver, the schema a Spark
-    // write of the same local frame records
-    val rows = log.map { case (id, live, n, t) => (id, gen, live, n, t) }
-      .toDF("doc_id", "gen", "live", "n_chunks", "n_tokens")
+    val postings = chunks.map(chunkPostings(_, gen))
+    val perChunk = postings.toSeq.flatMap(graft.sources.LocalFrames.rows)
+    val live = perChunk.groupBy(_.getLong(0)).map { case (d, cs) =>
+      Row(d, gen, true, cs.length.toLong, cs.map(_.getLong(1)).sum) }.toSeq
+    val liveIds = live.map(_.getLong(0)).toSet
+    val log = live.sortBy(_.getLong(0)) ++
+      ids.distinct.filterNot(liveIds).map(d => Row(d, gen, false, 0L, 0L))
+    if (log.isEmpty) return
     graft.sources.ParquetFooters.write(spark, doclogPath(indexDir),
-      rows.schema, rows.collect().toSeq, overwrite = false)
-    chunks.foreach(c => postings(c, gen).write.mode("append")
-      .partitionBy("tbkt").parquet(postingsPath(indexDir)))
+      StructType(Seq("doc_id", "gen").map(StructField(_, LongType, false)) ++
+        Seq(StructField("live", BooleanType, false)) ++
+        Seq("n_chunks", "n_tokens").map(StructField(_, LongType, false))),
+      log, overwrite = false)
+    postings.foreach { pc =>
+      // the struct's fields, `tbkt` last: it names the directory
+      val fields = pc.schema("p").dataType.asInstanceOf[ArrayType]
+        .elementType.asInstanceOf[StructType].fields
+      perChunk.flatMap(_.getSeq[Row](2)).groupBy(_.getString(fields.length - 1))
+        .toSeq.sortBy(_._1).foreach { case (b, ps) =>
+          graft.sources.ParquetFooters.write(spark,
+            s"${postingsPath(indexDir)}/tbkt=$b", StructType(fields.init),
+            ps.map(p => Row.fromSeq(p.toSeq.init)), overwrite = false)
+        }
+    }
   }
 
   /** Keep-latest doclog state: (doc_id, lgen, live, n_chunks, n_tokens).

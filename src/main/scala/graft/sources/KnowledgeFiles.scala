@@ -19,10 +19,9 @@ import org.apache.spark.sql.functions._
   * filename: `<channel>_YYYYMMDD_<ts-with-underscore>_<NN>.txt`.
   *
   * Reading is fully distributed (`wholetext` per-file rows, header parsed
-  * with column expressions). Writing emits one file per row via
-  * `foreachPartition` — on a cluster the target must be a shared
-  * filesystem (or swap the body for an object-store client); the
-  * partition-wise structure is what matters at scale.
+  * with column expressions). Writing emits one file per row from the
+  * driver: an export is one ingest batch's blocks, already held there
+  * (IngestJob's volume bound), so the target is the driver's filesystem.
   */
 object KnowledgeFiles {
 
@@ -58,19 +57,17 @@ object KnowledgeFiles {
     concat(header, lit("\n---\n\n"), body)
   }
 
-  /** Write one file per row. Expects columns `fname` and `content`. */
+  /** Write one file per row from the driver; returns the files written.
+    * Expects columns `fname` and `content`. A frame folded on the driver
+    * (IngestJob renders its batch's blocks over a local relation) writes
+    * with no Spark job; any other frame is collected first. */
   def write(df: DataFrame, outDir: String): Long = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val written = df.sparkSession.sparkContext.longAccumulator("files_written")
-    df.select("fname", "content").foreachPartition {
-      (rows: Iterator[org.apache.spark.sql.Row]) =>
-        rows.foreach { r =>
-          val p = java.nio.file.Paths.get(outDir, r.getString(0))
-          java.nio.file.Files.write(p,
-            r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          written.add(1)
-        }
+    val rows = LocalFrames.rows(df.select("fname", "content"))
+    rows.foreach { r =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(outDir, r.getString(0)),
+        r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    written.value
+    rows.length.toLong
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.HadoopReadOptions
@@ -11,19 +11,23 @@ import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetToSparkSchemaConverter, ParquetUtils}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
-/** Driver-side parquet access through parquet-hadoop: data-file listing,
-  * footers, the schema Spark's inference would give a table, whole reads
-  * of small sidecars (the store's frozen K-row codebooks and cell
-  * summaries, the O(files) zone map) and whole writes of rows already on
-  * the driver (those sidecars, a lexical generation's doclog rows).
+/** Driver-side parquet access through parquet-hadoop: data-file listing
+  * (and scans built over that listing), footers, the schema Spark's
+  * inference would give a table, whole reads of small datasets (the
+  * store's frozen K-row codebooks and cell summaries, the O(files) zone
+  * map, an edit's staged docs) and whole writes of rows already on the
+  * driver (those sidecars, an edit's staged copy, a lexical generation's
+  * doclog rows and postings).
   * Nothing here starts a Spark job or infers a schema, where a
   * `spark.read … collect()` of a sidecar costs an inference job plus a
   * collect job each, and a `createDataFrame(rows).write` a write job —
@@ -35,26 +39,76 @@ object ParquetFooters {
   // default XML resources every time
   private def conf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
 
-  private def sqlConf(spark: SparkSession): SQLConf =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+  private def classic(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  private def sqlConf(spark: SparkSession): SQLConf = classic(spark).sessionState.conf
 
   /** Spark's file-index rule: `_`- and `.`-prefixed names are not data
     * (a `_` name holding `=` is a partition directory). */
   private def hidden(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
 
-  /** The data files under `dir`, depth-first in name order, lazily —
-    * qualified paths whose `toUri.toString` is the `input_file_name()`
-    * spelling. A missing `dir` has none. */
-  def files(spark: SparkSession, dir: String): Iterator[Path] = {
+  /** The statuses of the data files under `dir`, depth-first in name
+    * order, lazily — qualified paths whose `toUri.toString` is the
+    * `input_file_name()` spelling. A missing `dir` has none. */
+  def statuses(spark: SparkSession, dir: String): Iterator[FileStatus] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(conf(spark))
-    def walk(p: Path): Iterator[Path] =
+    def walk(p: Path): Iterator[FileStatus] =
       fs.listStatus(p).sortBy(_.getPath.getName).iterator
         .filterNot(st => hidden(st.getPath.getName))
-        .flatMap(st => if (st.isDirectory) walk(st.getPath)
-          else Iterator(st.getPath))
+        .flatMap(st => if (st.isDirectory) walk(st.getPath) else Iterator(st))
     if (fs.exists(root)) walk(root) else Iterator.empty
+  }
+
+  /** The paths of [[statuses]]. */
+  def files(spark: SparkSession, dir: String): Iterator[Path] =
+    statuses(spark, dir).map(_.getPath)
+
+  /** A parquet scan of exactly `files` (statuses already listed) under
+    * `basePath`, whose partition columns come from the directory names,
+    * declared with `schema` (data fields, then partition fields). The
+    * file index is built over the given statuses, so Spark lists nothing:
+    * no parallel-listing job past 32 paths, no existence checks. The
+    * statuses are this call's alone; nothing is cached across calls. */
+  def scan(spark: SparkSession, basePath: String, files: Seq[FileStatus],
+      schema: StructType): DataFrame = {
+    val listed = files.map(st => st.getPath -> Array(st)).toMap
+    val given = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        listed.get(path)
+      override def putLeafFiles(path: Path, leaves: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val options = Map("basePath" -> basePath)
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), options,
+      Some(schema), given)
+    val parts = index.partitionSchema
+    val data = StructType(schema.filterNot(f => parts.fieldNames.contains(f.name)))
+    classic(spark).baseRelationToDataFrame(HadoopFsRelation(index, parts, data,
+      None, new ParquetFileFormat, options)(spark))
+  }
+
+  /** Every row of a small parquet dataset as a driver-local frame (a
+    * `LocalRelation`), read on the driver by Spark's own parquet reader —
+    * the read twin of [[write]]: the schema is the one the first file's
+    * footer records, every field nullable as a scan reads it, and the
+    * values are what a scan returns. No Spark job; fails loudly when
+    * `dir` holds no data file. */
+  def local(spark: SparkSession, dir: String): DataFrame = {
+    val found = statuses(spark, dir).toVector
+    require(found.nonEmpty, s"parquet dataset $dir holds no data file")
+    val schema = sparkSchema(spark, found.head.getPath)
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+      schema, new StructType, schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf(spark))
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    val rows = found.flatMap(st => read(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty[String],
+        st.getModificationTime, st.getLen))
+      .map(r => toRow(r).asInstanceOf[Row]))
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   def footer(spark: SparkSession, file: Path): ParquetMetadata = {

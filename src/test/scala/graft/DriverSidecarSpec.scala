@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Sidecars whose rows are already on the driver — the zone map's footer
-  * branch, a lexical generation's doclog rows, a new store's frozen
-  * artifacts — are written on the driver by [[ParquetFooters.write]].
+/** Files whose rows are already on the driver — the zone map's footer
+  * branch, a lexical generation's doclog rows and postings, a new store's
+  * frozen artifacts, an edit's staged copy — are written on the driver by
+  * [[ParquetFooters.write]].
   * Each file must carry what a Spark write of the same frame gives it:
   * the parquet schema (required/optional included), the Spark row
   * metadata (nullability included), the codec and the footer keys. */
@@ -26,7 +27,7 @@ class DriverSidecarSpec extends AnyFunSuite {
     StructField("n_rows", LongType)))
 
   // creation writes the frozen sidecars and the zone map; the edit writes
-  // one doclog generation (gen 2) through logGeneration
+  // one lexical generation (gen 2) through logGeneration
   private lazy val store = {
     val dir = Files.createTempDirectory("graft_dsc").toString + "/index"
     VectorStore.ingest(Tables.documents(spark, sf).filter(col("doc_id") < 30), dir)
@@ -76,6 +77,25 @@ class DriverSidecarSpec extends AnyFunSuite {
     assert(gen2.size == 1, s"the edit's doclog generation: $gen2")
     assert(shape(gen2.head) == sparkShape(Seq((1L, 2L, true, 3L, 4L))
       .toDF("doc_id", "gen", "live", "n_chunks", "n_tokens")))
+  }
+
+  test("the edit's staged copy and postings files have the Spark write's schema") {
+    // postings: the creation's generation (gen 1) is a Spark write, the
+    // edit's (gen 2) is written on the driver, one file per tbkt
+    val (edit, created) = ParquetFooters.files(spark, s"$store/_graft_lex/postings")
+      .toSeq.partition(f => ParquetFooters.longBounds(spark, f, "gen").exists(_._1 == 2L))
+    assert(edit.nonEmpty && created.nonEmpty, s"postings: $edit / $created")
+    assert(edit.groupBy(_.getParent).values.forall(_.size == 1), edit)
+    val ref = shape(created.head)
+    edit.foreach(f => assert(shape(f) == ref, f))
+    // the staged copy, with and without meta
+    val docs = Tables.documents(spark, sf).filter(col("doc_id") < 5)
+      .select("doc_id", "text")
+    Seq(docs, docs.withColumn("meta", map(lit("k"), col("text")))).foreach { d =>
+      val staged = Files.createTempDirectory("graft_dsc_stage").toString + "/s"
+      VectorStore.stageDocs(spark, staged, graft.sources.LocalFrames.of(d))
+      assert(shape(only(staged)) == sparkShape(d), d.columns.toSeq)
+    }
   }
 
   test("the driver-written doclog serves the same next generation") {

@@ -142,7 +142,7 @@ class IngestJobSpec extends AnyFunSuite {
       "edit re-handling duplicated the parent's chunks")
   }
 
-  test("a run with one new message and no #EDIT reply runs at most 19 jobs") {
+  test("a run with one new message and no #EDIT reply runs at most 7 jobs") {
     val data = controlledData()
     val out = Files.createTempDirectory("graft_ij_one").toString
     writeEvents(data, Seq((30L, oldTs, 3L), (12L, oldTs2, 4L)))
@@ -158,7 +158,7 @@ class IngestJobSpec extends AnyFunSuite {
     }
     assert(files2 == 1 && chunks2 > 0, s"run 2: $files2 files, $chunks2 chunks")
     info(s"${trace.jobs} jobs")
-    assert(trace.jobs <= 19, s"one new message ran ${trace.jobs} jobs (budget 19)")
+    assert(trace.jobs <= 7, s"one new message ran ${trace.jobs} jobs (budget 7)")
   }
 
   test("a run replayed from its pre-run state stores each chunk once") {

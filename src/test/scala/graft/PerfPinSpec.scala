@@ -73,7 +73,7 @@ class PerfPinSpec extends AnyFunSuite {
       s"distributed pipeline only showed $buildJobs jobs — counter is blind")
   }
 
-  test("an incremental IngestJob batch with an #EDIT reply runs at most 12 jobs") {
+  test("an #EDIT IngestJob batch runs at most 9 jobs in at most 6 SQL executions") {
     val data = java.nio.file.Files.createTempDirectory("graft_pp_data").toString
     graft.sources.Tables.customer(s, TestSpark.sf).limit(10).coalesce(1)
       .write.parquet(s"$data/customer.parquet")
@@ -96,9 +96,17 @@ class PerfPinSpec extends AnyFunSuite {
     val now = System.currentTimeMillis()
     events(old ++ Seq((35L, new java.sql.Timestamp(now), 5L),
       (512L, new java.sql.Timestamp(now + 1000), 6L)): _*)
-    val ((files, chunks, _), jobs) = countJobs(IngestJob.run(s, data, out))
+    val ((files, chunks, _), trace) = JobCounter(s)(IngestJob.run(s, data, out))
     assert(files == 3 && chunks > 0, s"$files files, $chunks chunks")
-    info(s"$jobs jobs")
-    assert(jobs <= 12, s"an incremental batch with an #EDIT ran $jobs jobs (budget 12)")
+    // the executions: two id collects, the blocks collect, the encode,
+    // the victims scan and the merged overwrite — the export, the staged
+    // copy and the lexical generation run on the driver
+    val executions = trace.plans.size
+    info(s"${trace.jobs} jobs, $executions SQL executions")
+    assert(trace.jobs <= 9,
+      s"an incremental batch with an #EDIT ran ${trace.jobs} jobs (budget 9)")
+    assert(executions <= 6,
+      s"an incremental batch with an #EDIT ran $executions SQL executions " +
+        s"(budget 6):\n${trace.plans.toSeq.sortBy(_._1).map(_._2.take(400)).mkString("\n---\n")}")
   }
 }
